@@ -54,6 +54,10 @@ Release uses non-blocking ``unpersist`` (the CacheManager entry is
 dropped synchronously; block deletion proceeds in the background) and
 swallows errors from a stopped session / half-torn-down JVM at
 interpreter exit.
+
+:func:`own_checkpoint` applies the same lifetime rule to a
+``localCheckpoint`` frame, whose blocks belong to one RDD rather than
+to a plan-keyed CacheManager entry that an identical plan could share.
 """
 
 from __future__ import annotations
@@ -139,3 +143,27 @@ def release_caches(df: DataFrame) -> None:
     frames, fin = owned
     fin.detach()
     _release(frames)
+
+
+def _unpersist_rdd(jrdd) -> None:
+    try:
+        jrdd.unpersist(False)
+    except Exception:
+        # Session stopped or JVM gone: nothing left to release.
+        pass
+
+
+def own_checkpoint(checkpointed: DataFrame) -> DataFrame:
+    """Release the blocks of a ``localCheckpoint`` frame when the
+    Python object itself is collected, never earlier.
+
+    A local checkpoint cannot be recomputed: an action on it after its
+    blocks are gone fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+    So the release belongs to the frame's lifetime — a reader still
+    holding it keeps its blocks — rather than to the caller.  The
+    finalizer holds the JVM RDD, not the frame, which it would keep
+    alive forever.  Returns ``checkpointed`` (same object).
+    """
+    jrdd = checkpointed._jdf.logicalPlan().rdd()
+    weakref.finalize(checkpointed, _unpersist_rdd, jrdd)
+    return checkpointed

@@ -197,9 +197,11 @@ def incremental_disk_usage(
 def disk_usage_lookup(disk_usage_df: DataFrame, address: str) -> DataFrame:
     """O11 ``GetDiskUsage``: point lookup on the aggregate.
 
-    Over a cached aggregate this is a partition-local scan of a tiny
-    table; the serving path (streaming.refresh.DiskUsageHandler) keeps
-    a driver-side dict for O(1) probes matching handler.go:258.
+    Over a materialized aggregate (the checkpointed snapshot that
+    ``streaming.refresh.DiskUsageHandler(serving="dataframe")``
+    publishes) this is one job scanning the aggregate's rows, not the
+    inventory; the handler's default map serving probes a driver-side
+    dict in O(1) instead, matching handler.go:258.
     """
     return disk_usage_df.filter(F.col("address") == address)
 

@@ -160,6 +160,9 @@ _PARQUET_TO_SPARK = {
     "int64": "bigint",
 }
 
+# S3 Inventory's own types for the two columns the engine consumes.
+_INVENTORY_TYPES = {"key": "string", "size": "bigint"}
+
 
 class SchemaDriftError(ValueError):
     """Declared fileSchema and observed DataFrame schema disagree."""
@@ -183,6 +186,24 @@ def parse_file_schema(file_schema: str) -> dict[str, str]:
         else:
             cols[name] = _PARQUET_TO_SPARK.get(ptype.lower(), ptype.lower())
     return cols
+
+
+def inventory_read_schema(file_schema: str) -> str | None:
+    """DDL read schema (``key``, ``size``) for an inventory scan, typed
+    as the manifest's fileSchema declares; a column it leaves out gets
+    S3 Inventory's own type.  None when the manifest declares neither
+    column: the caller then infers the schema from a file footer.
+
+    A declared schema saves the footer-inference job.  A file whose
+    column type differs from the declaration is then skipped as corrupt
+    (``spark.sql.files.ignoreCorruptFiles``); under inference, the one
+    footer read decided which files counted as conforming."""
+    declared = parse_file_schema(file_schema)
+    if not declared.keys() & _INVENTORY_TYPES.keys():
+        return None
+    return ", ".join(
+        f"{col} {declared.get(col, typ)}" for col, typ in _INVENTORY_TYPES.items()
+    )
 
 
 def enforce_file_schema(

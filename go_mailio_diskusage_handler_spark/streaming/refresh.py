@@ -27,9 +27,24 @@ Spark design:
 * Serving: ``serving="map"`` collects the aggregate to a driver dict
   for O(1) probes (matches the reference; fine while the number of
   DISTINCT ADDRESSES is driver-sized — the aggregate is tiny even when
-  the inventory is 100 TB).  ``serving="dataframe"`` keeps a cached
-  DataFrame and answers lookups with a filter — the scale-out path if
-  address cardinality ever outgrows the driver.
+  the inventory is 100 TB).  ``serving="dataframe"`` is the scale-out
+  path if address cardinality ever outgrows the driver: each refresh
+  publishes an eager ``localCheckpoint`` of the aggregate, and a lookup
+  is a filter over that snapshot alone — one job over the aggregate's
+  rows, never over the inventory.  The snapshot owns its blocks: they
+  are released when the published Python object is collected
+  (``caching.own_checkpoint``), not at the swap, so a reader holding
+  the previous snapshot still answers from it.  A cached frame would
+  not do: an unchanged manifest yields a plan identical to the
+  published one, Spark's plan-keyed cache hands both the same entry,
+  and releasing the old snapshot dropped the new one's cache, so every
+  lookup rescanned the inventory.  The trade-off: a local checkpoint
+  cannot be recomputed, so after the loss of an executor holding its
+  blocks, lookups raise until the next refresh, where a cache would
+  silently rescan the inventory on every lookup.
+* The inventory is read with the ``key``/``size`` types the manifest's
+  ``fileSchema`` declares (schema inference only when it declares
+  neither), so no footer-inference job runs per refresh.
 * Scheduling uses a daemon timer thread (the cron analog).  On a real
   cluster you would run the same ``refresh()`` under an external
   scheduler or a Structured Streaming ``Trigger.AvailableNow`` — the
@@ -47,8 +62,9 @@ from datetime import datetime, timezone
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.core import disk_usage, disk_usage_observed
-from ..sources.manifest import Manifest, fetch_manifest
+from ..caching import own_checkpoint
+from ..operators.core import disk_usage, disk_usage_lookup, disk_usage_observed
+from ..sources.manifest import Manifest, fetch_manifest, inventory_read_schema
 
 log = logging.getLogger(__name__)
 
@@ -147,7 +163,9 @@ class DiskUsageHandler:
         if not paths:
             log.warning("manifest lists no data files; keeping previous snapshot")
             return
-        inv = self._spark.read.parquet(*paths).select("key", "size")
+        schema = inventory_read_schema(manifest.file_schema)
+        reader = self._spark.read if schema is None else self._spark.read.schema(schema)
+        inv = reader.parquet(*paths).select("key", "size")
         # The quality counters ride the aggregation's own scan
         # (df.observe) — per-refresh metrics with zero extra passes
         # over the inventory, the O9 invariant running in-flight.
@@ -176,18 +194,17 @@ class DiskUsageHandler:
                 self.last_refresh_metrics = metrics
                 self.last_rejection = None
         else:
-            new_df = agg.cache()
-            new_df.count()  # materialize before publishing
+            # Materialized before publishing; a rejected candidate's
+            # blocks go when it leaves scope, the replaced snapshot's
+            # when its last reader drops it.
+            new_df = own_checkpoint(agg.localCheckpoint(eager=True))
             metrics = dict(obs.get)
             if self._reject(metrics):
-                new_df.unpersist()
                 return
             with self._lock:
-                old, self._df = self._df, new_df
+                self._df = new_df
                 self.last_refresh_metrics = metrics
                 self.last_rejection = None
-            if old is not None:
-                old.unpersist()
 
     def _gate_violations(self, metrics: dict[str, int]) -> list[str]:
         """Evaluate the declared swap-gate thresholds over one
@@ -246,7 +263,7 @@ class DiskUsageHandler:
         df = self._df
         if df is None:
             raise NotFoundError(address)
-        rows = df.filter(df["address"] == address).collect()
+        rows = disk_usage_lookup(df, address).collect()
         if not rows:
             raise NotFoundError(address)
         r = rows[0]

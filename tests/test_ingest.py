@@ -4,12 +4,17 @@ for S3 (path scheme 'file')."""
 
 from __future__ import annotations
 
+import gc
 import json
+import os
+import sys
+import threading
 import time
 from datetime import datetime, timezone
 
 import pytest
 
+from go_mailio_diskusage_handler_spark.operators.core import disk_usage_lookup
 from go_mailio_diskusage_handler_spark.sources import manifest as m
 from go_mailio_diskusage_handler_spark.streaming.refresh import (
     DiskUsageHandler,
@@ -102,11 +107,21 @@ def inventory_dir(spark, tmp_path_factory):
     return base
 
 
-def make_handler(spark, inventory_dir, **kw):
+# A real S3 Inventory fileSchema for the two consumed columns, and the
+# schema-less manifest that makes the refresh fall back to inference.
+DECLARED_SCHEMA = (
+    "message s3.inventory { required binary key (STRING); optional int64 size; }"
+)
+MANIFEST_SCHEMAS = (None, DECLARED_SCHEMA)
+
+
+def make_handler(spark, inventory_dir, file_schema=None, **kw):
     manifest_doc = {
         "sourceBucket": str(inventory_dir),
         "files": [{"key": "f1.parquet"}, {"key": "f2.parquet"}],
     }
+    if file_schema is not None:
+        manifest_doc["fileSchema"] = file_schema
 
     def download(bucket, key):
         return json.dumps(manifest_doc)
@@ -122,35 +137,148 @@ def make_handler(spark, inventory_dir, **kw):
     )
 
 
+def persisted_rdds(spark) -> int:
+    gc.collect()  # run the finalizers of dropped snapshots first
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_refresh_aggregates_across_all_files(spark, inventory_dir):
     """Intended cross-file semantics — NOT the reference's
-    last-file-wins trap (SURVEY §2): alice spans both files."""
-    h = make_handler(spark, inventory_dir)
-    du = h.get_disk_usage("alice")
-    assert (du.size_bytes, du.number_files) == (16, 3)
-    assert h.get_disk_usage("carol").size_bytes == 3
-    with pytest.raises(NotFoundError):
-        h.get_disk_usage("noslash")  # malformed key filtered (O7)
-    with pytest.raises(NotFoundError):
-        h.get_disk_usage("nobody")
-    # O9 in-flight: the refresh scan itself observed 6 inventory rows,
-    # one of which ("noslash") the O7 guard dropped as malformed.
-    assert h.last_refresh_metrics == {
-        "total_rows": 6, "malformed_keys": 1,
-        "null_size_rows": 0, "negative_size_rows": 0,
-    }
-    h.stop()
+    last-file-wins trap (SURVEY §2): alice spans both files.  The
+    declared fileSchema and the schema-less manifest (inference
+    fallback) must give the same snapshot."""
+    for file_schema in MANIFEST_SCHEMAS:
+        h = make_handler(spark, inventory_dir, file_schema)
+        du = h.get_disk_usage("alice")
+        assert (du.size_bytes, du.number_files) == (16, 3)
+        assert h.get_disk_usage("carol").size_bytes == 3
+        with pytest.raises(NotFoundError):
+            h.get_disk_usage("noslash")  # malformed key filtered (O7)
+        with pytest.raises(NotFoundError):
+            h.get_disk_usage("nobody")
+        # O9 in-flight: the refresh scan itself observed 6 inventory rows,
+        # one of which ("noslash") the O7 guard dropped as malformed.
+        assert h.last_refresh_metrics == {
+            "total_rows": 6, "malformed_keys": 1,
+            "null_size_rows": 0, "negative_size_rows": 0,
+        }
+        h.stop()
 
 
 def test_dataframe_serving_mode(spark, inventory_dir):
-    h = make_handler(spark, inventory_dir, serving="dataframe")
+    """Re-refreshing an unchanged manifest leaves the handler owning
+    exactly one persisted snapshot, and a lookup reads that snapshot,
+    not the inventory.  (A cached snapshot failed both: the identical
+    plan shared one cache entry, which the swap released.)"""
+    for file_schema in MANIFEST_SCHEMAS:
+        before = persisted_rdds(spark)
+        h = make_handler(spark, inventory_dir, file_schema, serving="dataframe")
+        for _ in range(3):
+            h.execute_job()
+        assert persisted_rdds(spark) - before == 1
+        lookup = disk_usage_lookup(h._df, "bob")
+        assert "FileScan" not in lookup._jdf.queryExecution().executedPlan().toString()
+        assert h.get_disk_usage("bob").size_bytes == 7
+        with pytest.raises(NotFoundError):
+            h.get_disk_usage("nobody")
+        assert h.last_refresh_metrics == {
+            "total_rows": 6, "malformed_keys": 1,
+            "null_size_rows": 0, "negative_size_rows": 0,
+        }
+        h.stop()
+        del h, lookup
+        assert persisted_rdds(spark) == before
+
+
+def test_dataframe_snapshot_outlives_swap_for_its_reader(spark, inventory_dir):
+    """A reader that took the published snapshot just before a swap
+    still answers from it: a replaced snapshot's blocks are released
+    when its last holder drops it, not at the swap (a local checkpoint
+    cannot be recomputed once its blocks are gone)."""
+    before = persisted_rdds(spark)
+    h = make_handler(spark, inventory_dir, DECLARED_SCHEMA, serving="dataframe")
+    held = h._df
+    h.execute_job()
+    assert h._df is not held
+    assert persisted_rdds(spark) - before == 2
+    assert [tuple(r) for r in disk_usage_lookup(held, "alice").collect()] == [
+        ("alice", 16, 3)
+    ]
+    del held
+    assert persisted_rdds(spark) - before == 1
+    assert h.get_disk_usage("alice").number_files == 3
+    h.stop()
+
+
+def test_dataframe_lookups_race_refreshes(spark, inventory_dir):
+    """Lookups from more threads than cores while the snapshot is
+    swapped under them: every lookup answers correctly, and only the
+    served snapshot stays persisted afterwards."""
+    before = persisted_rdds(spark)
+    h = make_handler(spark, inventory_dir, DECLARED_SCHEMA, serving="dataframe")
+    done = threading.Event()
+    errors: list[BaseException] = []
+    answered = [0]
+
+    def reader():
+        try:
+            while not done.is_set():
+                assert h.get_disk_usage("alice").size_bytes == 16
+                answered[0] += 1
+        except BaseException as exc:  # reported by the main thread
+            errors.append(exc)
+
+    threads = [threading.Thread(target=reader) for _ in range((os.cpu_count() or 1) + 1)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for _ in range(3):
+            h.execute_job()
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    assert answered[0] > 0
+    assert persisted_rdds(spark) - before == 1
+    h.stop()
+
+
+def test_declared_schema_serves_conforming_file(spark, tmp_path):
+    """The manifest declares ``size`` int64; one listed file holds
+    int64 sizes, the other doubles.  The refresh reads with the
+    declared types, so the conforming file is served and the other is
+    skipped as corrupt.  The double file sorts first, so schema
+    inference would have read its footer and skipped the conforming
+    file instead."""
+    spark.createDataFrame(
+        [("alice/a", 10), ("bob/b", 7), ("noslash", 99)], "key string, size bigint"
+    ).write.parquet(str(tmp_path / "int64.parquet"))
+    spark.createDataFrame(
+        [("dave/d", 2.5), ("dave/e", 1.0)], "key string, size double"
+    ).write.parquet(str(tmp_path / "double.parquet"))
+    manifest_doc = {
+        "sourceBucket": str(tmp_path),
+        "fileSchema": DECLARED_SCHEMA,
+        "files": [{"key": "double.parquet"}, {"key": "int64.parquet"}],
+    }
+    h = DiskUsageHandler(
+        spark,
+        "s3://bkt/pfx",
+        refresh_period_seconds=3600,
+        download=lambda bucket, key: json.dumps(manifest_doc),
+        path_scheme="file",
+        autostart=False,
+    )
+    assert h.get_disk_usage("alice").size_bytes == 10
     assert h.get_disk_usage("bob").size_bytes == 7
     with pytest.raises(NotFoundError):
-        h.get_disk_usage("nobody")
-    assert h.last_refresh_metrics == {
-        "total_rows": 6, "malformed_keys": 1,
-        "null_size_rows": 0, "negative_size_rows": 0,
-    }
+        h.get_disk_usage("dave")
+    assert h.last_refresh_metrics["total_rows"] == 3
     h.stop()
 
 
@@ -316,22 +444,27 @@ def test_enforce_file_schema_detects_drift(spark):
 def test_quality_gate_passes_clean_refresh(spark, inventory_dir):
     """With a gate configured, a healthy inventory still swaps and
     records no rejection."""
-    h = make_handler(
-        spark,
-        inventory_dir,
-        quality_gate={"max_malformed_frac": 0.5, "max_negative_size_rows": 0,
-                      "min_rows": 1},
-    )
-    assert h.get_disk_usage("alice").number_files == 3
-    assert h.last_rejection is None
-    h.stop()
+    for file_schema in MANIFEST_SCHEMAS:
+        h = make_handler(
+            spark,
+            inventory_dir,
+            file_schema,
+            quality_gate={"max_malformed_frac": 0.5, "max_negative_size_rows": 0,
+                          "min_rows": 1},
+        )
+        assert h.get_disk_usage("alice").number_files == 3
+        assert h.last_rejection is None
+        h.stop()
 
 
-def test_quality_gate_refuses_bad_refresh_keeps_snapshot(spark, tmp_path):
+@pytest.mark.parametrize("serving", ["map", "dataframe"])
+def test_quality_gate_refuses_bad_refresh_keeps_snapshot(spark, tmp_path, serving):
     """A refresh whose inventory violates the gate must NOT replace
     the served snapshot: the handler keeps answering from the previous
     good data and records the violations — the posture upgrade over
-    the reference's log.Fatalf (handler.go:176)."""
+    the reference's log.Fatalf (handler.go:176).  In DataFrame serving
+    the rejected candidate's blocks are released; only the served
+    snapshot stays persisted."""
     import json as _json
 
     good = tmp_path / "good.parquet"
@@ -349,12 +482,14 @@ def test_quality_gate_refuses_bad_refresh_keeps_snapshot(spark, tmp_path):
             {"sourceBucket": str(tmp_path), "files": [{"key": state["file"]}]}
         )
 
+    before = persisted_rdds(spark)
     h = DiskUsageHandler(
         spark,
         "s3://bkt/pfx",
         refresh_period_seconds=3600,
         download=download,
         path_scheme="file",
+        serving=serving,
         autostart=False,
         quality_gate={"max_malformed_frac": 0.5, "max_negative_size_rows": 0},
     )
@@ -363,6 +498,7 @@ def test_quality_gate_refuses_bad_refresh_keeps_snapshot(spark, tmp_path):
     state["file"] = "bad.parquet"
     h.execute_job()
     assert h.last_rejection is not None
+    assert persisted_rdds(spark) - before == (serving == "dataframe")
     v = "; ".join(h.last_rejection["violations"])
     assert "max_malformed_frac" in v and "max_negative_size_rows" in v
     # previous snapshot still serves; carol never appeared
