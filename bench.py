@@ -1,133 +1,24 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times every registry query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+ONE JSON line on stdout:
 
-Each query is timed end-to-end (plan + execute + count-style action;
-results are consumed via a cheap aggregate so the full plan runs but
-no driver materialization dominates).
+    {"errors": {name: msg} (only if any failed), "queries": {name: sec},
+     "spread": {...}, "metric": "total_query_sec", "value": total_sec,
+     "unit": "sec", "sf": ...}
 
-Run-to-run comparability: the round-4 recording showed a uniform
-~1.4-1.5x slowdown across the whole SQL tier vs round 2 with unchanged
-plans.  A controlled re-run in round 5 — same code, same registration
-order, idle machine — reproduced the ROUND-2 numbers (e.g.
-sql_large_orders 1.90/2.96/1.88 s across r2/r4/now), so the drift was
-co-located load on the recording host, not code, warmup ordering, or
-registration position.  Treat cross-round per-query deltas under ~1.5x
-as environment noise unless they reproduce on a quiet machine.
+Each query is timed end-to-end (plan + execute + ``count()``) as the
+median of SPARK_GRAFT_BENCH_REPEATS runs (default 3), after one untimed
+warm-up pass that SPARK_GRAFT_BENCH_WARMUP=0 skips (it is always
+skipped at one repeat).  A failing query is charged ERROR_PENALTY_SEC
+and the process exits 2 after printing the line.  At sf0.1 the full
+record also goes to BENCH_SUMMARY.json, and SPARK_GRAFT_PIN_BASELINE=1
+writes the stdout record to BASELINE_QUERIES.json.
 
-Cross-round TOTALS are not comparable when the registry grows: round
-5 roughly doubled the query count, so compare the COMMON per-query
-subset instead.  End-of-round-5 reference: the 66 entries parsed from
-BENCH_r04's tail summed 68.0 s there and 50.5-76.9 s across round-5
-closing runs (spread = co-located load; the faster runs follow the
-LSH driver-probe rewrite, sim_lsh_ann_topk 3.65 -> ~1.5-2.1 s at 3x
-round 2's recall).  The one real added common-subset cost is
-curation_mixture's documented skew-guard aggregation (0.3 -> 1.0 s).
-
-Round-5-continuation reference (idle machine): 134 queries, 154.3 s
-total at sf0.1/local[32]; no query above ~6.2 s after the
-dedup_triangles edge-persist fix (its unpersisted edge plan had been
-re-running the whole Jaccard pipeline once per self-join branch,
-14.1 s -> ~5 s cold / ~3 s warm).  A concurrent pytest run inflates
-the same bench to ~674 s — co-located load dominates every cross-run
-comparison, reconfirming the round-4 drift diagnosis.
-
-End-of-continuation reference (idle): 153 queries, 150.8 s — 19 more
-queries than the prior reference at a LOWER total (run-to-run noise
-plus the triangle fix), heaviest query 8.3 s (curation_keep_best),
-zero errors.
-
-Second-continuation reference: 181 queries, 233.0 s idle (back-to-back
-runs spread 233-307 s on this box; a 3x repeat probe shows the spread
-is COLD-start variance, not regression — the r4-recorded heavies
-re-measure warm at their r4 values: dedup_clusters 14.6 s cold /
-~5.1 s warm vs r4's 4.78, dedup_ngram_jaccard 2.8/2.2 vs r4's 2.70).
-The 28 new queries together add ~24 s; every one is individually
-< 3.5 s at sf0.1.  Zero errors.
-
-End-of-second-continuation reference: 195 queries, 248.3 s idle,
-heaviest 6.5 s (curation_corpus), zero errors; the full 195-query
-oracle sweep at sf0.01 passed 195/195 the same session.
-
-Round-7 reference: 200 queries, 233.7 s idle — 227.0 s for the
-pre-addition 196, the four round-7 additions (span trim, weighted
-Jaccard, KLL, theta) add ~5 s, heaviest dedup_eval_pr ~7.6 s (it runs
-3rd in the r7 registration order and is charged the whole dedup
-family's codegen JIT; a warmup A/B measured 6.8 s of sf0.001 pre-warm
-buying back only 2 s, so the charge stays where it is), zero errors.
-Back-to-back idle runs this round spread 233.7-270.9 s with UNIFORM
-inflation on trivial queries (du_core 0.29 → 1.47 s in the slower
-runs) — treat the whole band as this box's idle variance and compare
-per-query, not totals, across rounds.  A /proc/stat sample taken
-DURING a full run shows <0.5% hypervisor steal and long sub-10%-user
-stretches: at sf0.1 the bench is scheduling-latency-bound (per-job
-setup and driver-executor round-trips over tiny stages), not
-CPU-bound, so totals jitter while plan shapes and the 10x-scaling
-probes in SCALE.md carry the real performance signal.  From round 7
-on the FULL per-query map of the latest sf0.1 run is committed as
-BASELINE_QUERIES.json — cross-round per-query comparisons should read
-that file's git history, not the truncated BENCH_r*.json tails.
-
-Round-8 reference: 207 queries, 267.0 s idle (back-to-back complete
-runs 267.7/267.0 — 0.3% apart; an earlier 205-query idle run measured
-249.9 s) — like-for-like ≈249 s for the prior 200 after subtracting
-the seven round-8 additions (~18 s: udtf_table_arg_changes ~8 s is
-the bulk — a Python UDTF's per-row eval over 100k events is the
-documented cost of the TABLE-argument API surface; the
-window-function events_* family is the production path for that
-shape).  Same-day idle runs this round spread 249.9-324.2 s (1.30x)
-with the >2x per-query outliers exactly the queries the r8 rotation
-moved to the FRONT of the run order — registration position decides
-who pays the JVM/codegen warmup tax, so cross-round per-query
-comparisons must account for rotation moves, not just load.
-
-Round-10 reference: 235 queries, 234.0 s idle pin.  Idle bands moved
-WITHIN the day: 192-204 s mid-round (232 queries, afternoon) vs
-234-262 s at close (235 queries, evening, load average 0.03 — the
-drift is host-level, invisible to guest load), re-proving that idle
-bands are per-day-per-hour and only >1.5x PER-QUERY movers mean
-anything.  The six round-10 additions (full-outer/semi attribution
-joins, Arrow cogroup stats, SQL-UDF bands, listagg, media shard plan)
-add ~2 s combined; the one structural mover vs the r9 pin is
-curation_ppl_buckets 0.86->1.34 s — the documented cost of its new
-unscored-bucket branch (one extra bounded scan+aggregate,
-plan-pinned); every other >1.5x delta is band noise on sub-second
-queries.
-
-Round-11 reference: 238 queries, 233.5 s idle pin — now MEDIAN-OF-3
-per query (round-10 verdict #3), so one loaded run can no longer cost
-a round of signal: the pin and every later driver run use the same
-repeats (per-run totals of the pin run: 275.2/231.5/215.4 s — run 1
-carries the cold tax, the median reads warm steady-state).  The three
-round-11 additions (transpose, variant_explode, lateral aliases) add
-~1 s combined.  sim_pca_project — round 10's single 2.00x watch item —
-re-measures at 1.21 s vs its 0.89 s old pin (1.36x, inside the band):
-the 2.00x was co-located load, as the uniform r10 inflation predicted.
-The >1.5x movers vs the old pin are all sub-second queries the r11
-rotation moved to the registry FRONT (events_bitmap_users 0.22->0.59 s
-etc.) — the round-8-documented warmup-position tax, now baked into the
-pin at the same positions the driver will run them.
-
-Round-12 reference: 258 queries, 256.1 s idle pin — now with a
-DISCARDED per-query warm-up pass before the median-of-3 repeats
-(round-11 verdict #6), so per-run totals read flat
-(259.6/261.0/254.7 s; the cold ramp that contaminated the r11 spread
-block is gone).  A midday pin of the same code measured the first
-254 queries at 207.3 s with per-run totals 210.3/213.2/203.5 and
-median_rel_spread 0.102 — the committed evening re-pin (which adds
-the last four additions) sits ~1.23x above it in aggregate, the same
-host-level per-day-per-hour idle band the round-10 notes document.
-Within-run spread stayed tight (max_rel_spread 1.05), and the
-cross-pin movers above 1.8x are all sub-1.4 s queries
-(profile_orders 0.37→0.95 s, dq_orders_constraints 0.50→1.34 s, …)
-— the scheduling-latency noise class the round-7 notes pin on small
-stages, with every multi-second heavy inside 1.5x of its midday
-value except sim_kmeans_stats (2.45→4.12 s, 1.68x, the same band).  The eight round-12 additions are all
-sub-second (~2.5 s combined); the heaviest queries are unchanged
-(graph_pagerank_brands, curation_corpus).  The 100x replicated-scale
-exponents for the five slowest live in SCALE.md (round-12 section):
-0.67-1.11, all near-linear.
+Queries run in registry order, which ``registry`` re-derives from the
+driver's record every round, so a query's position, and the JVM and
+codegen warm-up it is charged, can move between rounds: compare
+per-query times, not totals, and treat per-query deltas under ~1.5x as
+host noise unless they reproduce on a quiet machine.
 
 Baseline-refresh policy (round-7 verdict): COMMIT a BASELINE_QUERIES
 refresh only from an IDLE run — check nothing else is running (no

@@ -519,12 +519,15 @@ def connected_components(
         return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
 
     def _ckpt_lazy(df: DataFrame) -> DataFrame:
-        # Lazy in both modes (r16): every lazily-checkpointed frame
-        # here is followed immediately by the fixpoint SUM aggregate,
-        # which materializes the checkpoint blocks INSIDE the same
-        # action — one driver round-trip per loop iteration instead of
-        # two (guide §7: cut per-round actions).  Labels are reused
-        # from blocks afterwards exactly as with eager=True.
+        # localCheckpoint path (r16, measured): every lazily-checkpointed
+        # frame here is followed immediately by the fixpoint SUM
+        # aggregate, which materializes the checkpoint blocks INSIDE
+        # the same action — one driver round-trip per loop iteration
+        # instead of two (guide §7: cut per-round actions).  Labels are
+        # reused from blocks afterwards exactly as with eager=True.
+        # The reliable checkpoint_dir path is unmeasured: Spark writes
+        # a reliable checkpoint in a separate job after the action,
+        # which recomputes the unpersisted labels plan.
         return (
             df.checkpoint(eager=False)
             if checkpoint_dir is not None

@@ -1,4 +1,5 @@
-"""Per-family query modules (split from the round-5 monolithic
-registry.py).  Import order — and therefore registration order —
-is owned by ``..registry``; do not import these modules directly.
+"""Per-family query modules.  Each one registers its queries into
+``_base.QUERIES`` / ``_base.ORACLE_SQL`` on import; ``..registry``
+imports them all and then sorts the registry once into the driver's
+order (``freshness.driver_order``), so import them through it.
 """

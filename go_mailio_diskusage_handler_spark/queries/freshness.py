@@ -1,39 +1,21 @@
-"""Mechanical rotation-front derivation from the driver's CORRECTNESS
-record (round-9 verdict #7).
+"""Registry order derived from the driver's correctness record.
 
-The rotation policy has been hand-maintained prose since round 4; this
-module makes it executable so a test can FAIL when the hand-written
-front desyncs from the record:
+The driver checks the first ``WINDOW`` registry entries each round and
+writes one ``CORRECTNESS_r{N}.json`` per round; ``ORACLE_HASHES.json``
+(regenerated by ``tools_oracle_hashes.py``) records the round each
+oracle text last changed.  ``driver_order`` turns those two records
+into the registry order, so the window always holds the queries whose
+latest external check is missing, outdated, or oldest:
 
-* ``last_checked(repo_root, through_round)`` — for every query name
-  appearing in ``CORRECTNESS_r{N}.json`` (N ≤ through_round), the
-  latest round with a row.  Queries absent from every file are simply
-  absent from the map (never driver-checked).
-* ``derive_front(names, last, window, changed)`` — the policy as code:
+1. queries whose oracle changed after their latest driver row (the
+   in-repo oracle is edited in lockstep with the engine and cannot
+   arbitrate its own changes);
+2. queries the driver has never checked;
+3. the rest, oldest latest-check round first.
 
-  1. engine-changed queries first (the round-4 advisory: a query whose
-     semantics or oracle changed this round must meet the EXTERNAL
-     gate — the in-repo oracle is edited in lockstep with the engine
-     and cannot arbitrate its own changes), in the given order;
-  2. then every remaining query, stably sorted by staleness — never
-     checked first (they have no green row to hide behind), then
-     ascending last-checked round — with registration order breaking
-     ties inside each staleness group;
-  3. truncated to the driver's window.
-
-  ``deferred`` encodes the new-query deferral policy: queries ADDED
-  in the current round register at the registry tail, behind the
-  window, and meet the external gate in the NEXT round's front — the
-  front for round N is computed from the registry as it stood at the
-  end of round N-1, so current-round additions are excluded from the
-  derivation entirely (they are also never-checked, and without the
-  exclusion the staleness sort would front them a round early).
-  Callers derive the set mechanically from function module
-  provenance: ``fn.__module__`` of each registry callable.
-
-  The derivation is idempotent under its own rotation: fronting the
-  derived list preserves relative order within every staleness group,
-  so re-deriving from the rotated registry yields the same front.
+Registration order breaks ties inside each group.  The order is a
+stable sort on a per-name key, so applying it to its own output
+changes nothing.
 """
 
 from __future__ import annotations
@@ -41,61 +23,44 @@ from __future__ import annotations
 import json
 import os
 import re
-from collections.abc import Iterable, Mapping, Sequence
+from collections.abc import Mapping, Sequence
 
 WINDOW = 50  # the driver checks the first 50 registry entries per round
 
 _CORRECTNESS_RE = re.compile(r"^CORRECTNESS_r(\d+)\.json$")
 
 
-def last_checked(
-    repo_root: str, through_round: int | None = None
-) -> dict[str, int]:
-    """query name -> latest round (≤ ``through_round``) with a driver
-    CORRECTNESS row.  ``through_round`` pins the derivation to the
-    record that EXISTED when a front was computed, so the assertion
-    stays stable after the driver writes the next round's file."""
+def last_checked(repo_root: str) -> dict[str, int]:
+    """query name -> latest round with a driver CORRECTNESS row.
+    Queries absent from every file are absent from the map."""
     out: dict[str, int] = {}
-    for fname in sorted(os.listdir(repo_root)):
+    for fname in os.listdir(repo_root):
         m = _CORRECTNESS_RE.match(fname)
         if not m:
             continue
         rnd = int(m.group(1))
-        if through_round is not None and rnd > through_round:
-            continue
         with open(os.path.join(repo_root, fname)) as f:
-            rows = json.load(f)
-        for name in rows:
-            if out.get(name, -1) < rnd:
-                out[name] = rnd
+            for name in json.load(f):
+                if out.get(name, -1) < rnd:
+                    out[name] = rnd
     return out
 
 
-def derive_front(
+def driver_order(
     names: Sequence[str],
     last: Mapping[str, int],
-    window: int = WINDOW,
-    changed: Iterable[str] = (),
-    deferred: Iterable[str] = (),
+    oracle_round: Mapping[str, int],
 ) -> list[str]:
-    """The rotation policy as code; see module docstring."""
-    skip = set(deferred)
-    changed = [n for n in changed if n in set(names) and n not in skip]
-    rest = [n for n in names if n not in set(changed) and n not in skip]
-    # stable sort: never-checked (-1) first, then oldest round first;
-    # registration order (the input order) breaks ties.
-    rest.sort(key=lambda n: last.get(n, -1))
-    return (changed + rest)[:window]
+    """``names`` (in registration order) sorted into the registry order
+    described in the module docstring.  ``oracle_round`` maps a name to
+    the round its oracle text last changed."""
 
+    def key(name: str) -> tuple[int, int]:
+        checked = last.get(name)
+        if checked is None:
+            return (1, 0)
+        if oracle_round.get(name, -1) > checked:
+            return (0, 0)
+        return (2, checked)
 
-def stale_histogram(
-    names: Sequence[str], last: Mapping[str, int]
-) -> dict[int, int]:
-    """round -> how many queries' latest row is from that round
-    (-1 == never checked).  The bookkeeping the rotation comments
-    have maintained by hand."""
-    hist: dict[int, int] = {}
-    for n in names:
-        r = last.get(n, -1)
-        hist[r] = hist.get(r, 0) + 1
-    return dict(sorted(hist.items()))
+    return sorted(names, key=key)

@@ -1,10 +1,6 @@
 """Round-10 additions.
 
-Registered AFTER the round-10 rotation applies, so they land at the
-registry TAIL — behind the 50-slot driver window — per the rotation
-policy for brand-new queries (in-repo oracle-checked via the pytest
-parity tests in test_round10.py until the round-11 front picks them
-up).
+In-repo oracle parity: ``tests/test_round10.py``.
 """
 from __future__ import annotations
 

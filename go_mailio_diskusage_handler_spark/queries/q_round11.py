@@ -3,11 +3,7 @@ no registry query (round-10 verdict #7) — ``DataFrame.transpose``, the
 ``VARIANT_EXPLODE`` lateral table-valued generator, and lateral column
 aliases in SELECT.
 
-Registered AFTER the round-11 rotation applies, so they land at the
-registry TAIL — behind the 50-slot driver window — per the rotation
-policy for brand-new queries (in-repo oracle-checked via the pytest
-parity tests in test_round11.py until the round-12 front picks them
-up).
+In-repo oracle parity: ``tests/test_round11.py``.
 """
 from __future__ import annotations
 

@@ -6,10 +6,7 @@ median / max_by / regr_*, ``width_bucket``) plus two LLM-pipeline
 trainer-side operators (BPE first-merge pair statistics,
 hashed-feature linear quality classifier).
 
-Registered AFTER the round-11 rotation applies, so they land at the
-registry TAIL — behind the 50-slot driver window — per the rotation
-policy for brand-new queries (in-repo oracle-checked via the pytest
-parity tests in test_round11b.py until a later front picks them up).
+In-repo oracle parity: ``tests/test_round11b.py``.
 """
 from __future__ import annotations
 

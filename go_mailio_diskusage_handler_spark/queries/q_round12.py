@@ -5,10 +5,7 @@ canonicalization (the CommonCrawl-pipeline dedup key), null-guard
 function breadth, closed-form least squares by distributed normal
 equations, and the embeddings-table constraint suite.
 
-These register AFTER rotation_r12 — registry tail, behind the driver
-window, per the new-query deferral policy; in-repo oracle parity via
-tests/test_round12.py is their correctness gate until the round-13
-front.
+In-repo oracle parity: ``tests/test_round12.py``.
 """
 from __future__ import annotations
 

@@ -3,10 +3,7 @@ verdict (#7) — a pure RANGE interval join (no equi key) executed as a
 binned equi-join, and a VARIANT ingest gate over ragged JSON with its
 streaming twin (``streaming/variant_ingest.py``).
 
-These register AFTER rotation_r13 — registry tail, behind the driver
-window, per the new-query deferral policy; in-repo oracle parity via
-tests/test_round13.py is their correctness gate until the round-14
-front.
+In-repo oracle parity: ``tests/test_round13.py``.
 """
 from __future__ import annotations
 

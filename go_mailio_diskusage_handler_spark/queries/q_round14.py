@@ -4,10 +4,7 @@ of range-join capability; the point-in-interval join of round 13 is
 its degenerate instance), and the VARIANT shredded-write/read-back
 round trip (the storage half of the round-13 ingest gate).
 
-These register AFTER rotation_r14 — registry tail, behind the driver
-window, per the new-query deferral policy; in-repo oracle parity via
-tests/test_round14.py is their correctness gate until the round-15
-front.
+In-repo oracle parity: ``tests/test_round14.py``.
 """
 from __future__ import annotations
 

@@ -27,46 +27,7 @@ from ..operators import text  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
-# Round-5 continuation additions.  Registered AFTER the window rotation
-# on purpose: new queries append past the driver's first-50 prefix and
-# defer to the round-6 front under the same policy as the 20 deferred
-# additions listed above — a new query has no stale green row to hide
-# behind, and each one is oracle-parity-checked in pytest
-# (ORACLE_CHECKED lists) until its first driver gate pass.
-# Continuation additions (all below this line): text_pii,
-# dedup_span_coverage, sim_kmeans_train, curation_temperature_mix,
-# scalar_zorder_keys, curation_bloom_decontam, sql_top_supplier,
-# sql_small_qty_revenue, sql_waiting_suppliers, text_chunks,
-# curation_quality_gate, dedup_prefix_jaccard, events_transitions,
-# text_tfidf_cosine_pairs, percentile_mad_outliers, dedup_triangles,
-# join_bucketed_spend, sql_nation_volume, sql_market_share,
-# window_first_last, events_window_topk, events_value_deciles,
-# curation_shard_manifest, trend_daily_dense, profile_orders,
-# events_bounce_rate, events_gap_stats, trend_weekly_wow,
-# media_payload_dedup, scalar_try_parse, sim_kmeans_ivf_topk,
-# dedup_minhash_estimate, sim_range_search, du_top_growth,
-# sim_kmeans_stats, curation_dedup_report, sql_forecast_revenue,
-# sql_bracket_revenue, sql_important_nations, text_lang_confusion,
-# events_dau_wau, segment_rfm, sql_best_supplier,
-# sql_part_supplier_counts, events_funnel_window.
-#
-# Second-continuation additions (same deferral policy; all appended
-# below the window): events_anomaly_zscore, text_zipf_slope,
-# sql_excess_capacity, dedup_semantic, sim_pca_project,
-# text_bm25_topk, sim_matryoshka_topk, events_user_growth,
-# events_concentration, curation_semantic_decontam,
-# events_markov_stationary, curation_epoch_repeat, du_scd2_history,
-# sql_recursive_spine, events_seasonality, docs_index_coverage,
-# sim_embedding_stats, curation_stratified_split, du_quota_alerts,
-# events_ab_test, dedup_eval_pr, sim_eval_recall, events_user_features,
-# text_datacard, udf_arrow_tokens, sql_lateral_topn,
-# events_user_entropy, part_affinity_lift, events_retention_curve,
-# docs_length_histogram, sim_eval_recall_ivfpq, sql_group_by_all,
-# du_largest_files, events_funnel_rates.
-# The round-6 front should therefore cover: the 20 round-5-deferred
-# additions above, then these, then the first continuation batch —
-# ~50 per round keeps every query's driver row ≤2 rounds old at the
-# current registry size.
+# Round-5 continuation additions (all below this line).
 # ---------------------------------------------------------------------------
 
 # [EXT] PII detection + redaction.  The fixture text is synthetic word
@@ -1011,7 +972,9 @@ def sim_kmeans_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.kmeans_cluster_stats(load_table(spark, sf_dir, "embeddings"))
 
 
-# [EXT] One-row corpus dedup health report.
+# [EXT] One-row corpus dedup health report.  COUNT(DISTINCT) drops NULL
+# text, so the CASE term adds the NULL-text group back, as the engine's
+# n_uniq does.
 CURATION_REPORT_SQL = f"""
     WITH {_CAPPED_SHINGLE_CTES},
     cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -1031,10 +994,14 @@ CURATION_REPORT_SQL = f"""
                 UNION SELECT doc_b FROM near)
     SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
            (SELECT COUNT(*) FROM documents)
-               - (SELECT COUNT(DISTINCT md5(text)) FROM documents)
+               - (SELECT COUNT(DISTINCT md5(text))
+                         + CASE WHEN COUNT(*) > COUNT(text) THEN 1 ELSE 0 END
+                  FROM documents)
                AS n_exact_dupes,
            (SELECT COUNT(*) FROM members) AS n_near_dup_members,
-           ROUND(((SELECT COUNT(DISTINCT md5(text)) FROM documents) * 1.0)
+           ROUND(((SELECT COUNT(DISTINCT md5(text))
+                          + CASE WHEN COUNT(*) > COUNT(text) THEN 1 ELSE 0 END
+                   FROM documents) * 1.0)
                  / (SELECT COUNT(*) FROM documents), 4) AS unique_rate
 """
 

@@ -29,24 +29,6 @@ from .q_text import _LANGS
 from .q_text import _lang_scores_sql
 
 
-# ---------------------------------------------------------------------------
-# [SUPERSEDED in round 6 — the executed _R6_FRONT at the end of this
-# file follows exactly this priority rule; kept for the audit trail.]
-# ROUND-6 WINDOW PLAN (for the next session's _R6_FRONT): the driver
-# gate covers the first ~50 registrations.  Priority rule (round-4
-# advisory): (1) every query whose engine code changes in round 6,
-# (2) queries with NO driver row yet — the 20 round-5 additions
-# listed above plus the ~39 continuation additions below the
-# rotation, (3) oldest rows first.  The no-row pool alone (~59)
-# overflows one 50-slot window, so the r6 front takes the 50
-# highest-priority and round 7 sweeps the remainder — registry-order
-# rotation is builder-controlled, and every deferred query is
-# meanwhile oracle-green in pytest and in the in-repo full-contract
-# sweeps (verify_contract: 153/153 green at sf0.01 this round, rerun
-# per session).
-# ---------------------------------------------------------------------------
-
-
 # [EXT] Language-ID confusion matrix (row-normalized per label).
 TEXT_LANG_CONFUSION_SQL = f"""
     WITH scored AS (

@@ -2,12 +2,7 @@
 and the Spark-4 DataSketches tier (mergeable KLL quantiles + Theta
 set-operation retention).
 
-Registered AFTER the round-7 rotation applies, so all four entries
-land at the registry TAIL — behind the 50-slot driver window — per
-the rotation policy for brand-new queries (no stale green row to hide
-behind; in-repo oracle-checked via the pytest ORACLE_CHECKED lists
-until the round-8 front picks them up together with the 7 deferred
-backlog names listed in ``rotation_r7.py``).
+In-repo oracle parity: the pytest ORACLE_CHECKED lists.
 """
 from __future__ import annotations
 

@@ -1,11 +1,7 @@
 """Round-8 additions: polymorphic-output Python UDTF (``analyze()``)
 and the runtime-bloom-filter probe join.
 
-Registered AFTER the round-8 rotation applies, so both entries land at
-the registry TAIL — behind the 50-slot driver window — per the
-rotation policy for brand-new queries (no stale green row to hide
-behind; in-repo oracle-checked via the pytest ORACLE_CHECKED lists
-until the round-9 front picks them up).
+In-repo oracle parity: the pytest ORACLE_CHECKED lists.
 """
 from __future__ import annotations
 

@@ -2,10 +2,7 @@
 (compaction bin-packing, zone-map skipping audit), a scale-correct
 exact median, and content-defined-chunking dedup.
 
-Registered AFTER the round-8 rotation applies, so all four land at
-the registry TAIL — behind the 50-slot driver window — per the
-rotation policy for brand-new queries (in-repo oracle-checked via the
-pytest ORACLE_CHECKED lists until the round-9 front picks them up).
+In-repo oracle parity: the pytest ORACLE_CHECKED lists.
 """
 from __future__ import annotations
 

@@ -3,10 +3,7 @@ Deequ-style data-quality constraint suite, the Gopher fixed-threshold
 quality gate, a join-key skew report, GDPR deletion-vector planning,
 and watermark-delay sizing from observed lateness.
 
-Registered AFTER the round-8 rotation applies, so all six land at
-the registry TAIL — behind the 50-slot driver window — per the
-rotation policy for brand-new queries (in-repo oracle-checked via the
-pytest ORACLE_CHECKED lists until the round-9 front picks them up).
+In-repo oracle parity: the pytest ORACLE_CHECKED lists.
 """
 from __future__ import annotations
 

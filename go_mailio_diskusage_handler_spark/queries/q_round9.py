@@ -1,11 +1,7 @@
 """Round-9 additions: CCNet-style perplexity bucketing and the
 parameterized-SQL + IDENTIFIER surface.
 
-Registered AFTER the round-9 rotation applies, so both land at the
-registry TAIL — behind the 50-slot driver window — per the rotation
-policy for brand-new queries (in-repo oracle-checked via the pytest
-parity tests in test_round9.py until the round-10 front picks them
-up).
+In-repo oracle parity: ``tests/test_round9.py``.
 """
 from __future__ import annotations
 

@@ -6,130 +6,64 @@ This is the single source of truth consumed by ``__spark_entry__.py``,
 every computed column, and the oracle SQL uses the *same* aliases so
 the driver's order-insensitive value hash lines up.
 
-The query bodies live in per-family modules under ``queries/`` (split
-from the former 5k-line monolith in round 6).  IMPORT ORDER HERE IS
-LOAD-BEARING: it is the registration order, and the driver's
-correctness gate checks the first 50 registry entries each round.
-The sequence reproduces the monolith exactly — family modules in their
-original order, the round-4/5 rotations applied between the round-5
-additions and the continuation batches, then the round-6 rotation
-last (rotation policy and window history: ``queries/rotation_r45.py``
-and ``queries/rotation_r6.py``).
+The query bodies live in per-family modules under ``queries/``; each
+import below registers its queries.  After the last import the
+registry is sorted once by ``queries.freshness.driver_order`` from the
+driver's record at the repo root (``CORRECTNESS_r*.json`` and
+``ORACLE_HASHES.json``): the driver checks ``list(QUERIES)[:50]`` each
+round, so that window always holds the queries whose latest external
+check is missing, outdated by an oracle edit, or oldest.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 from .queries._base import ORACLE_SQL, QUERIES, register  # noqa: F401
+from .queries import freshness
+from .queries import (  # noqa: F401
+    q_du,
+    q_relational,
+    q_scalar,
+    q_text,
+    q_dedup,
+    q_curation,
+    q_similarity,
+    q_sessions,
+    q_relational2,
+    q_udf,
+    q_quality_ann,
+    q_sqltier,
+    q_round5,
+    q_round5_cont,
+    q_round5_cont2,
+    q_round7,
+    q_round8,
+    q_round8b,
+    q_round8c,
+    q_round9,
+    q_round10,
+    q_round11,
+    q_round11b,
+    q_round12,
+    q_round13,
+    q_round14,
+)
 
-# Family modules, in registration order (each import populates
-# QUERIES/ORACLE_SQL via the register decorator at import time).
-from .queries import q_du  # noqa: E402,F401
-from .queries import q_relational  # noqa: E402,F401
-from .queries import q_scalar  # noqa: E402,F401
-from .queries import q_text  # noqa: E402,F401
-from .queries import q_dedup  # noqa: E402,F401
-from .queries import q_curation  # noqa: E402,F401
-from .queries import q_similarity  # noqa: E402,F401
-from .queries import q_sessions  # noqa: E402,F401
-from .queries import q_relational2  # noqa: E402,F401
-from .queries import q_udf  # noqa: E402,F401
-from .queries import q_quality_ann  # noqa: E402,F401
-from .queries import q_sqltier  # noqa: E402,F401
-from .queries import q_round5  # noqa: E402,F401
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Round-4/5 window rotations (applied on import, BEFORE the
-# continuation batches register — the tail order depends on it).
-from .queries import rotation_r45  # noqa: E402,F401
 
-from .queries import q_round5_cont  # noqa: E402,F401
-from .queries import q_round5_cont2  # noqa: E402,F401
+def _apply_driver_order() -> None:
+    with open(os.path.join(_REPO_ROOT, "ORACLE_HASHES.json")) as fh:
+        oracle_round = {n: v["round"] for n, v in json.load(fh).items()}
+    order = freshness.driver_order(
+        list(QUERIES), freshness.last_checked(_REPO_ROOT), oracle_round
+    )
+    for d in (QUERIES, ORACLE_SQL):
+        snapshot = dict(d)
+        d.clear()
+        d.update({n: snapshot[n] for n in order if n in snapshot})
 
-# Round-6 window rotation (applied on import, superseded by r7's).
-from .queries import rotation_r6  # noqa: E402,F401
 
-# Round-7 window rotation (applied on import, last): the 7 oracle-cast
-# red re-checks first, then the 50-name backlog minus 7 deferrals.
-from .queries import rotation_r7  # noqa: E402,F401
-
-# Round-7 additions register AFTER the rotation — they land at the
-# registry tail, behind the driver window, per the new-query deferral
-# policy (fronted in round 8 alongside rotation_r7's 7 deferrals).
-from .queries import q_round7  # noqa: E402,F401
-
-# Round-8 window rotation (applied on import, last): the 11
-# never-driver-checked queries first, then this round's engine-changed
-# query, then the stalest r4 backlog.
-from .queries import rotation_r8  # noqa: E402,F401
-
-# Round-8 additions register AFTER the rotation — registry tail,
-# behind the driver window, per the new-query deferral policy.
-from .queries import q_round8  # noqa: E402,F401
-from .queries import q_round8b  # noqa: E402,F401
-from .queries import q_round8c  # noqa: E402,F401
-
-# Round-9 window rotation (applied on import, last): the 27 round-8
-# additions first (every round-9 engine-changed query is among them),
-# then du_lookup + the r4-stale backlog, then the 15 oldest r5 rows.
-from .queries import rotation_r9  # noqa: E402,F401
-
-# Round-9 additions register AFTER the rotation — registry tail,
-# behind the driver window, per the new-query deferral policy.
-from .queries import q_round9  # noqa: E402,F401
-
-# Round-10 window rotation (applied on import, last): the 2 round-9
-# tail additions first (curation_ppl_buckets is also round 10's
-# engine-changed query), then the 35 r5-stale rows, then the 13
-# oldest r6 rows.  This front is derivation-checked by
-# tests/test_rotation.py against queries/freshness.py.
-from .queries import rotation_r10  # noqa: E402,F401
-
-# Round-10 additions register AFTER the rotation — registry tail,
-# behind the driver window, per the new-query deferral policy.
-from .queries import q_round10  # noqa: E402,F401
-
-# Round-11 window rotation (applied on import, last): the 9
-# acknowledged round-10 oracle-text changes first, then the 6
-# round-10 tail additions (never driver-checked), then the r6-stale
-# backlog and the oldest r7 rows.  Derivation-checked by
-# tests/test_rotation.py against queries/freshness.py.
-from .queries import rotation_r11  # noqa: E402,F401
-
-# Round-11 additions register AFTER the rotation — registry tail,
-# behind the driver window, per the new-query deferral policy.
-from .queries import q_round11  # noqa: E402,F401
-from .queries import q_round11b  # noqa: E402,F401
-
-# Round-12 window rotation (applied on import, last): the 2
-# round-11-acknowledged oracle fixes + the 2 round-12 ADVICE oracle
-# edits first, then the 13 remaining never-driver-checked round-11
-# tail additions, then the 33 oldest r7-stale rows.
-# Derivation-checked by tests/test_rotation.py against
-# queries/freshness.py.
-from .queries import rotation_r12  # noqa: E402,F401
-
-# Round-12 additions register AFTER the rotation — registry tail,
-# behind the driver window, per the new-query deferral policy.
-from .queries import q_round12  # noqa: E402,F401
-
-# Round-13 window rotation (applied on import, last): the 1 round-13
-# ADVICE oracle edit first, then the 7 remaining never-driver-checked
-# round-12 tail additions, then the 4 r7-stale rows, then the 38
-# oldest r8-stale rows.  Derivation-checked by tests/test_rotation.py
-# against queries/freshness.py.
-from .queries import rotation_r13  # noqa: E402,F401
-
-# Round-13 additions register AFTER the rotation — registry tail,
-# behind the driver window, per the new-query deferral policy.
-from .queries import q_round13  # noqa: E402,F401
-
-# Round-14 window rotation (applied on import, last): the 1 round-14
-# ADVICE oracle edit (scalar_variant_ingest shape-closure) first, then
-# the remaining never-driver-checked round-13 tail addition, then the
-# 9 r8-stale rows (incl. the flagship du_core), then the 39 oldest
-# r9-stale rows.  Derivation-checked by tests/test_rotation.py
-# against queries/freshness.py.
-from .queries import rotation_r14  # noqa: E402,F401
-
-# Round-14 additions register AFTER the rotation — registry tail,
-# behind the driver window, per the new-query deferral policy.
-from .queries import q_round14  # noqa: E402,F401
+_apply_driver_order()

@@ -67,6 +67,35 @@ def test_oracle_parity(spark, ddb, name):
     compare_with_oracle(spark, ddb, name, registry.QUERIES, registry.ORACLE_SQL)
 
 
+def test_dedup_report_oracle_counts_null_text_group(spark, tmp_path):
+    """The fixtures carry no NULL text, so the oracle sweep cannot see
+    whether both engines count the NULL-text rows as one content group.
+    Run the registered query and its oracle over a corpus that has
+    two NULL-text rows next to an exact-duplicate pair."""
+    import duckdb
+
+    path = tmp_path / "documents.parquet"
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (SELECT * FROM (VALUES
+                (1::BIGINT, NULL::VARCHAR, 'en', 's', 0::BIGINT),
+                (2, NULL, 'en', 's', 0),
+                (3, 'alpha beta gamma delta epsilon', 'en', 's', 30),
+                (4, 'alpha beta gamma delta epsilon', 'en', 's', 30),
+                (5, 'zeta eta theta iota kappa', 'en', 't', 25))
+              AS t(doc_id, text, lang, source, n_chars))
+            TO '{path}' (FORMAT PARQUET)"""
+    )
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    try:
+        compare_with_oracle(
+            spark, con, "curation_dedup_report", registry.QUERIES,
+            registry.ORACLE_SQL, sf_dir=str(tmp_path),
+        )
+    finally:
+        con.close()
+
+
 def test_span_coverage_known_values(spark):
     """Hand fixtures: a shared 8-gram covers exactly its 8 tokens in
     each member; identical docs reach coverage 1.0; overlapping

@@ -225,7 +225,7 @@ def test_scratch_dir_env_override_wins(monkeypatch, tmp_path):
 def test_invalidate_view_memo_rebinds_dropped_view(spark):
     from go_mailio_diskusage_handler_spark import sql as sql_mod
 
-    sf = SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     sql_mod.register_views(spark, sf)
     assert spark.catalog.tableExists("documents")
     spark.catalog.dropTempView("documents")

@@ -1,157 +1,116 @@
-"""The rotation front is derivation-checked (round-9 verdict #7):
-the hand-written ``_R14_FRONT`` literal must equal the mechanical
-derivation of the rotation policy from the driver's CORRECTNESS
-record, and the staleness bookkeeping the rotation comments maintain
-by hand must match the files on disk.
-
-Round-11 rewrite (ADVICE r10): every derivation in this file is
-PINNED to the record the rotation was computed from
-(``through_round = _ROTATION_ROUND - 1``) instead of "whatever
-CORRECTNESS files exist on disk" — the un-pinned forms broke the
-moment the driver wrote the next round's file (the freshness floor
-went red on the by-then-stale window, and the oracle-change gate went
-vacuously green)."""
+"""The registry order is derived from the driver's record: the first
+``WINDOW`` entries are the ones the driver checks next, so they must be
+the queries whose latest external check is missing, outdated by an
+oracle edit, or oldest (``queries/freshness.py``).  Nothing here pins a
+round: every assertion reads the record as it stands on disk, so the
+suite stays green when the driver writes its next CORRECTNESS file."""
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
-# registry MUST be imported before any queries.rotation_* module:
-# importing a rotation module directly would execute its
-# _rotate_front against a not-yet-populated registry and turn the
-# real rotation (inside registry's import sequence) into a no-op.
+from go_mailio_diskusage_handler_spark.queries import freshness
 from go_mailio_diskusage_handler_spark.registry import ORACLE_SQL, QUERIES
-from go_mailio_diskusage_handler_spark.queries import freshness  # noqa: E402
-from go_mailio_diskusage_handler_spark.queries.rotation_r14 import (  # noqa: E402
-    _R14_CHANGED,
-    _R14_FRONT,
-)
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# The round this rotation was authored for.  Every assertion below
-# derives from the CORRECTNESS record as it stood ENTERING this round
-# (through_round = _ROTATION_ROUND - 1), so the suite stays green when
-# the driver writes CORRECTNESS_r14.json and only needs revisiting
-# when rotation_r15 is authored.
-_ROTATION_ROUND = 14
+
+def _oracle_hashes() -> dict[str, dict]:
+    with open(os.path.join(REPO_ROOT, "ORACLE_HASHES.json")) as fh:
+        return json.load(fh)
 
 
-def _r14_deferred():
-    """The new-query deferral set, derived mechanically: every registry
-    callable defined in this round's additions module(s) (q_round14*)
-    registers at the tail and meets the external gate in round 15."""
-    return [
-        n for n, fn in QUERIES.items()
-        if ".q_round14" in fn.__module__
-    ]
+def _oracle_round() -> dict[str, int]:
+    return {n: v["round"] for n, v in _oracle_hashes().items()}
 
 
-def test_r14_front_matches_mechanical_derivation():
-    """The literal _R14_FRONT == derive_front(registry, CORRECTNESS
-    r01–r13).  through_round pins the derivation to the record that
-    existed when the front was computed, so this stays green after the
-    driver writes CORRECTNESS_r14."""
-    last = freshness.last_checked(REPO_ROOT, through_round=_ROTATION_ROUND - 1)
-    derived = freshness.derive_front(
-        list(QUERIES),
-        last,
-        window=freshness.WINDOW,
-        changed=_R14_CHANGED,
-        deferred=_r14_deferred(),
-    )
-    assert derived == _R14_FRONT
-    # and the rotation was actually applied: the registry's first
-    # window IS the front, for both the queries and their oracles.
-    assert list(QUERIES)[: len(_R14_FRONT)] == _R14_FRONT
-    assert list(ORACLE_SQL)[: len(_R14_FRONT)] == _R14_FRONT
+def _changed(last: dict[str, int]) -> set[str]:
+    """Queries whose oracle changed after their latest driver row."""
+    rounds = _oracle_round()
+    return {n for n in QUERIES if n in last and rounds[n] > last[n]}
+
+
+def _window() -> list[str]:
+    return list(QUERIES)[: freshness.WINDOW]
 
 
 def test_derivation_is_idempotent_under_its_own_rotation():
-    """Fronting the derived list preserves relative order within every
-    staleness group, so re-deriving from the rotated registry yields
-    the same front — the property that lets the test run AFTER the
-    rotation is applied."""
-    last = freshness.last_checked(REPO_ROOT, through_round=_ROTATION_ROUND - 1)
-    names = list(QUERIES)  # already rotated by rotation_r14
-    assert (
-        freshness.derive_front(
-            names, last, changed=_R14_CHANGED, deferred=_r14_deferred()
-        )
-        == _R14_FRONT
-    )
+    """The registry is already in derived order, so deriving again from
+    it changes nothing, and the oracles follow the same order."""
+    names = list(QUERIES)
+    last = freshness.last_checked(REPO_ROOT)
+    assert freshness.driver_order(names, last, _oracle_round()) == names
+    assert list(ORACLE_SQL) == [n for n in names if n in ORACLE_SQL]
+
+
+def test_ordering_fronts_changed_then_never_checked_then_oldest():
+    names = ["fresh", "old", "never", "edited", "stale", "edited_old"]
+    last = {"fresh": 9, "old": 5, "edited": 8, "stale": 3, "edited_old": 2}
+    oracle_round = {"edited": 9, "edited_old": 3, "fresh": 4, "old": 5}
+    assert freshness.driver_order(names, last, oracle_round) == [
+        "edited",  # changed, in the given order
+        "edited_old",
+        "never",
+        "stale",  # then ascending latest-check round
+        "old",  # an oracle edited IN its check round is not changed
+        "fresh",
+    ]
+
+
+def test_ordering_breaks_ties_by_registration_order():
+    names = ["b", "a", "n2", "c", "n1", "x2", "x1"]
+    last = {"a": 4, "b": 4, "c": 2, "x1": 1, "x2": 1}
+    oracle_round = {"x1": 7, "x2": 7}
+    assert freshness.driver_order(names, last, oracle_round) == [
+        "x2", "x1", "n2", "n1", "c", "b", "a",
+    ]
+    # and a missing driver record leaves registration order intact
+    assert freshness.driver_order(names, {}, {}) == names
+
+
+def test_window_resamples_only_changed_queries():
+    """The window shares no query with the latest CORRECTNESS sample
+    unless that query's oracle has changed since its check, so
+    consecutive driver rounds sample different queries."""
+    last = freshness.last_checked(REPO_ROOT)
+    latest = max(last.values())
+    with open(os.path.join(REPO_ROOT, f"CORRECTNESS_r{latest:02d}.json")) as fh:
+        sampled = set(json.load(fh))
+    repeat = set(_window()) & sampled
+    assert repeat <= _changed(last), sorted(repeat - _changed(last))
 
 
 def test_no_query_left_behind():
-    """Freshness floor: every registry query either has a CORRECTNESS
-    row within the last 4 driver rounds or sits inside the upcoming
-    window — the invariant the rotation policy exists to maintain
-    (never-checked queries MUST be in the front; nothing may go stale
-    indefinitely while the window rotates past it).
-
-    The floor is ``latest_round - 4``: a 260+-query registry over a
-    50-slot window has a steady-state revisit period of just over 5
-    rounds, so age 4 between checks is the tightest SUSTAINABLE bound
-    (entering round 14: 2 never-checked + 9 r8 lead the front and the
-    39 oldest r9 rows fill it; the 10 leftover r9 rows are exactly
-    age 5 entering round 15 and must lead its front)."""
-    last = freshness.last_checked(REPO_ROOT, through_round=_ROTATION_ROUND - 1)
-    latest_round = _ROTATION_ROUND - 1
-    window = set(list(QUERIES)[: freshness.WINDOW])
-    deferred = set(_r14_deferred())
-    violations = [
-        n
-        for n in QUERIES
-        if last.get(n, -1) < latest_round - 4
-        and n not in window
-        and n not in deferred  # current-round additions gate next round
-    ]
-    assert violations == []
-    # and the capacity arithmetic itself: nothing outside the window
-    # may be older than the steady-state period allows, which means
-    # every sub-floor query IS in the window — restated so a future
-    # registry growth that breaks sustainability fails loudly here.
-    backlog = [n for n in QUERIES if n not in deferred]
+    """Freshness floor: a query is below the floor when its latest
+    driver row is older than ``latest_round - 4`` or missing.  A
+    260+-query registry over a 50-slot window has a revisit period of
+    just over 5 rounds, so age 4 is the tightest sustainable floor.
+    When the window cannot hold every sub-floor query, it must be
+    saturated: every non-changed query in it is below the floor."""
+    last = freshness.last_checked(REPO_ROOT)
+    floor = max(last.values()) - 4
+    window = _window()
+    below = {n for n in QUERIES if last.get(n, -1) < floor}
+    if below - set(window):
+        changed = _changed(last)
+        assert all(n in below for n in window if n not in changed)
+    # and the capacity arithmetic itself: restated so a future registry
+    # growth that breaks sustainability fails loudly here.
+    backlog = list(QUERIES)
     assert len(backlog) <= 5 * freshness.WINDOW + freshness.WINDOW, (
         "registry outgrew the 6-round revisit capacity; renegotiate "
         "the floor or the window"
     )
 
 
-def test_stale_histogram_matches_rotation_comment():
-    """The bookkeeping in rotation_r14.py's comment: entering round 14
-    the histogram is 2 never / 9 r8 / 49 r9 / 50 r10 / 50 r11 /
-    50 r12 / 50 r13."""
-    last = freshness.last_checked(REPO_ROOT, through_round=_ROTATION_ROUND - 1)
-    names = [n for n in QUERIES if n not in set(_r14_deferred())]
-    hist = freshness.stale_histogram(names, last)
-    assert hist == {-1: 2, 8: 9, 9: 49, 10: 50, 11: 50, 12: 50, 13: 50}
-
-
-# Round-14 oracle-text changes NOT inside the r14 window, each needing
-# an evidence trail (the round-4 advisory's acknowledgement path —
-# they take first priority in the round-15 front).  Empty this round:
-# the single round-14 edit to an EXISTING oracle (scalar_variant_ingest
-# — the ADVICE r13 shape-closure) is fronted in the window itself as
-# the changed query, and the two brand-new round-14 oracles are in the
-# deferral set.
-_R14_CHANGED_ACKED: list[str] = []
-
-
-def test_changed_oracles_meet_the_gate_or_are_acknowledged():
-    """Mechanical 'changed queries front first' (the round-4 advisory,
-    previously hand-tracked prose): every query whose oracle text
-    changed THIS round — per ORACLE_HASHES.json, regenerated by
-    tools_oracle_hashes.py — must be in the driver window, in the
-    new-query deferral set, or explicitly acknowledged above with the
-    evidence trail."""
-    import json
-
-    with open(os.path.join(REPO_ROOT, "ORACLE_HASHES.json")) as fh:
-        hashes = json.load(fh)
+def test_changed_oracles_meet_the_gate():
+    """Every query whose oracle text changed after its latest driver
+    row (per ORACLE_HASHES.json, regenerated by tools_oracle_hashes.py)
+    is inside the driver window."""
+    hashes = _oracle_hashes()
     # the file must cover the registry exactly (regenerate on changes)
     assert set(hashes) == set(QUERIES)
-    import hashlib
-
     stale = [
         n for n, sql in ORACLE_SQL.items()
         if hashlib.sha256(sql.encode()).hexdigest()[:16] != hashes[n]["hash"]
@@ -160,40 +119,8 @@ def test_changed_oracles_meet_the_gate_or_are_acknowledged():
         f"oracle text changed without regenerating ORACLE_HASHES.json "
         f"(run tools_oracle_hashes.py): {stale}"
     )
-    changed = {n for n, v in hashes.items() if v["round"] >= _ROTATION_ROUND}
-    window = set(list(QUERIES)[: freshness.WINDOW])
-    covered = window | set(_r14_deferred()) | set(_R14_CHANGED_ACKED)
-    assert changed <= covered, sorted(changed - covered)
-
-
-def test_front_external_gate_closure_for_r13_changes():
-    """Closure of the round-13 acknowledgement trail: every oracle
-    that changed in round 13 (per ORACLE_HASHES.json) and had a
-    pre-r13 driver row was fronted INSIDE the round-13 window itself
-    (rotation_r13's _R13_CHANGED — _R13_CHANGED_ACKED was empty), so
-    each one's round-13 driver row post-dates its change.  Verified
-    here against the record."""
-    import json
-
-    with open(os.path.join(REPO_ROOT, "ORACLE_HASHES.json")) as fh:
-        hashes = json.load(fh)
-    pre = freshness.last_checked(REPO_ROOT, through_round=12)
-    # round == 13 and a PRE-r13 driver row: an existing oracle that
-    # changed (the brand-new round-13 additions also carry round == 13
-    # but had no earlier row — they front as never-checked or changed,
-    # not via the acknowledgement trail).
-    r13_changed_existing = {
-        n for n, v in hashes.items()
-        if v["round"] == 13 and 0 <= pre.get(n, -1) < 13
-    }
-    # empty: the r13 ADVICE edit (dq_embeddings_constraints) was
-    # ITSELF an r12 tail addition with no pre-r13 row — it fronted as
-    # changed AND never-checked at once.
-    assert r13_changed_existing == set()
-    # the query rotation_r13 fronted as changed carries a green
-    # round-13 driver row, closing the r12 ADVICE-edit debt.  (The
-    # round-14 analogue — scalar_variant_ingest fronted as changed by
-    # rotation_r14 — closes when the driver writes CORRECTNESS_r14;
-    # rotation_r15's twin of this test is its pin.)
-    last = freshness.last_checked(REPO_ROOT, through_round=13)
-    assert last.get("dq_embeddings_constraints") == 13
+    changed = _changed(freshness.last_checked(REPO_ROOT))
+    assert len(changed) <= freshness.WINDOW, (
+        "more changed oracles than the driver window can check in one round"
+    )
+    assert changed <= set(_window()), sorted(changed - set(_window()))

@@ -1,8 +1,8 @@
 """Round-11 regression tests: the last Spark-4 public-API surfaces
 with no registry query (round-10 verdict #7) — DataFrame.transpose,
 the VARIANT_EXPLODE lateral TVF, and lateral column aliases — each
-oracle-parity-checked at sf0.01 until the round-12 front picks them
-up, plus shape invariants the oracle hash can't see.
+oracle-parity-checked at sf0.01, plus shape invariants the oracle
+hash can't see.
 """
 from __future__ import annotations
 

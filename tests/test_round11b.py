@@ -1,7 +1,5 @@
 """Round-11 continuation batch: oracle parity + plan/semantic pins for
-the q_round11b additions (these register behind the driver window per
-the deferral policy, so the in-repo parity tests ARE their correctness
-gate until a later rotation fronts them).
+the q_round11b additions.
 """
 from __future__ import annotations
 

@@ -1,13 +1,12 @@
 """Regenerate ORACLE_HASHES.json: per-query oracle-SQL content hashes
 with the round each hash LAST CHANGED.
 
-This mechanizes the round-4 advisory's "changed queries front first"
-rule the same way tools_plan_inventory.py mechanizes plan pins: a
-query whose oracle text changes in round N gets ``round: N`` here,
-and ``tests/test_rotation.py`` fails unless every such query is in
-the driver window, the new-query deferral set, or the explicitly
-acknowledged list — so an oracle edit can no longer slip past the
-external gate by accident.
+A query whose oracle text changes in round N gets ``round: N`` here.
+``registry`` reads these rounds at import time: a query whose oracle
+changed after its latest driver CORRECTNESS row sorts to the front of
+the registry, inside the driver window
+(``queries/freshness.driver_order``).  ``tests/test_rotation.py``
+fails when the file is stale against the registry's oracle text.
 
 Run from the repo root AFTER any round's oracle edits:
     python3 tools_oracle_hashes.py [round]
