@@ -572,3 +572,53 @@ def collation_distinct_labels(documents: DataFrame) -> DataFrame:
         F.countDistinct("label").alias("distinct_binary"),
         F.countDistinct(F.collate("label", "UNICODE_CI")).alias("distinct_ci"),
     )
+
+
+# The ragged raw column is synthesized from typed columns with the
+# SAME expression text on both engines (user_id % 4 picks the shape):
+# a flat object, a nested object, an array, and a MALFORMED fragment
+# — so the oracle verifies the whole parse from raw values, per the
+# scalar_xml_orders convention.  All extracted values are exact ints.
+# ALL FOUR branches synthesize deterministically from typed columns
+# (ADVICE r13): the original case-0 passed the raw ``props`` string
+# through both engines' parsers, making parity data-dependent on the
+# generator never emitting shapes where Spark VARIANT and DuckDB JSON
+# disagree (duplicate object keys are malformed to try_parse_json but
+# valid to json_valid; quoted numeric strings cast differently).  A
+# synthesized flat object is shape-closed — parity holds for ANY
+# events file, not just the driver's generator.
+RAGGED_RAW_SPARK = """
+    CASE CAST(user_id % 4 AS INT)
+      WHEN 0 THEN concat('{"k": ', CAST(event_id % 97 AS STRING), '}')
+      WHEN 1 THEN concat('{"a": {"b": ', CAST(event_id % 100 AS STRING), '}}')
+      WHEN 2 THEN concat('[', CAST(event_id % 7 AS STRING), ', ',
+                         CAST(event_id % 11 AS STRING), ']')
+      ELSE concat('{"broken": ', event_type)
+    END
+"""
+
+
+def variant_profile_frame(df: DataFrame) -> DataFrame:
+    """The shared VARIANT ingest profile over a frame carrying
+    (event_id, user_id, event_type): ragged-JSON synthesis →
+    try_parse_json → per-path try_variant_get coverage counts + exact
+    value sum, grouped by event_type.  Used by the batch query
+    ``scalar_variant_ingest`` AND per micro-batch by
+    ``streaming/variant_ingest.py`` — the profile columns are all
+    mergeable (counts / sums), which is what makes the streaming twin's
+    per-batch partials sum to the batch answer exactly."""
+    raw = F.expr(RAGGED_RAW_SPARK)
+    parsed = df.select("event_type", F.try_parse_json(raw).alias("v"))
+    get = lambda path: F.try_variant_get(F.col("v"), path, "long")  # noqa: E731
+    return parsed.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_if(F.col("v").isNull()).alias("n_malformed"),
+        F.count_if(get("$.k").isNotNull()).alias("n_flat"),
+        F.count_if(get("$.a.b").isNotNull()).alias("n_nested"),
+        F.count_if(get("$[1]").isNotNull()).alias("n_arr"),
+        F.sum(
+            F.coalesce(get("$.k"), F.lit(0))
+            + F.coalesce(get("$.a.b"), F.lit(0))
+            + F.coalesce(get("$[1]"), F.lit(0))
+        ).alias("sum_vals"),
+    )

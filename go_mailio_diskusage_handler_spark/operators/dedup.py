@@ -28,6 +28,7 @@ import logging
 from pyspark.sql import DataFrame, Window, functions as F
 
 from go_mailio_diskusage_handler_spark.caching import own_cache
+from go_mailio_diskusage_handler_spark.operators import text
 from go_mailio_diskusage_handler_spark.sources.tables import widen_for_compute
 
 SHINGLE_N = 3  # word trigrams
@@ -51,23 +52,11 @@ def shingles(documents: DataFrame) -> DataFrame:
     """doc_id → exploded DISTINCT word-trigram shingles.
 
     Docs with < 3 tokens are dropped (fixtures always have ≥ 30;
-    mirrored by the oracle's ``len(t) >= 3`` guard).
-
-    Implementation note: built as ``zip_with`` over three shifted
-    ``slice``s of the token array, NOT ``transform(sequence, i ->
-    element_at(toks, i)...)``.  Inside a higher-order lambda the outer
-    ``split`` is re-evaluated per element (no common-subexpression
-    elimination across lambda boundaries), which made shingling
-    O(tokens²) per document — a 6× slowdown observed at sf0.1.  The
-    slice/zip_with form evaluates ``split`` O(1) times per row.
+    mirrored by the oracle's ``len(t) >= 3`` guard).  The trigrams are
+    ``text.word_ngrams``, linear in tokens per row.
     """
     toks = F.split(F.col("text"), " ")
-    n_shingles = F.size(toks) - (SHINGLE_N - 1)
-    parts = [F.slice(toks, j + 1, n_shingles) for j in range(SHINGLE_N)]
-    sh = parts[SHINGLE_N - 1]
-    for j in range(SHINGLE_N - 2, -1, -1):
-        part = parts[j]
-        sh = F.zip_with(part, sh, lambda x, y: F.concat(x, F.lit(" "), y))
+    sh = text.word_ngrams(toks, SHINGLE_N)
     return (
         widen_for_compute(documents)
         .filter(F.size(toks) >= SHINGLE_N)
@@ -518,21 +507,19 @@ def connected_components(
         # eager=True: the edge list is measured (count) right after.
         return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
 
-    def _ckpt_lazy(df: DataFrame) -> DataFrame:
+    def _ckpt_labels(df: DataFrame) -> DataFrame:
         # localCheckpoint path (r16, measured): every lazily-checkpointed
         # frame here is followed immediately by the fixpoint SUM
         # aggregate, which materializes the checkpoint blocks INSIDE
         # the same action — one driver round-trip per loop iteration
         # instead of two (guide §7: cut per-round actions).  Labels are
         # reused from blocks afterwards exactly as with eager=True.
-        # The reliable checkpoint_dir path is unmeasured: Spark writes
-        # a reliable checkpoint in a separate job after the action,
-        # which recomputes the unpersisted labels plan.
-        return (
-            df.checkpoint(eager=False)
-            if checkpoint_dir is not None
-            else df.localCheckpoint(eager=False)
-        )
+        # A lazy reliable checkpoint would gain nothing: Spark writes it
+        # in a separate job after the action, which recomputes the
+        # unpersisted labels plan.  So checkpoint_dir checkpoints eagerly.
+        if checkpoint_dir is not None:
+            return df.checkpoint()
+        return df.localCheckpoint(eager=False)
 
     # Each undirected pair fans out to its two directed edges with ONE
     # explode over the pair subtree (r16) — the previous
@@ -556,7 +543,7 @@ def connected_components(
         4, min(sc.defaultParallelism, edges.count() // 100_000)
     )
     edges = edges.coalesce(loop_parts)
-    labels = _ckpt_lazy(
+    labels = _ckpt_labels(
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
@@ -590,7 +577,7 @@ def connected_components(
         hop = propagated.select(
             F.col("doc_id").alias("h_id"), F.col("cluster_id").alias("h_cl")
         )
-        labels = _ckpt_lazy(
+        labels = _ckpt_labels(
             propagated.join(hop, propagated["cluster_id"] == hop["h_id"], "left")
             .select(
                 "doc_id",

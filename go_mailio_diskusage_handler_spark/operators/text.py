@@ -39,13 +39,12 @@ def word_ngrams(toks: Column, n: int) -> Column:
     """Space-joined word n-gram array in LINEAR time per row.
 
     Built as ``zip_with`` over ``n`` shifted ``slice``s of the token
-    array — the same construction as ``dedup.shingles`` and for the
-    same reason (its docstring has the measurement): inside a
-    higher-order lambda like ``transform(sequence(1, size(t) - k),
-    i -> ... element_at(t, i) ...)`` the array argument ``t`` is
-    re-evaluated PER ELEMENT when it is an expression (``split`` has
-    no common-subexpression elimination across lambda boundaries),
-    making n-gram construction O(tokens²) per document.  The
+    array.  Inside a higher-order lambda like ``transform(sequence(1,
+    size(t) - k), i -> ... element_at(t, i) ...)`` the array argument
+    ``t`` is re-evaluated PER ELEMENT when it is an expression
+    (``split`` has no common-subexpression elimination across lambda
+    boundaries), making n-gram construction O(tokens²) per document —
+    a 6× slowdown of ``dedup.shingles`` observed at sf0.1.  The
     slice/zip_with form references the token expression a constant
     number of times per row.
 
@@ -318,10 +317,10 @@ def top_ngrams(documents: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     words = tokens()
     # word_ngrams, not transform(sequence(..., i -> slice(split(...:
     # the old indexed lambda re-evaluated split(text) per ELEMENT
-    # (O(tokens²) per doc — the dedup.shingles measurement, 6× at
-    # sf0.1); widen_for_compute parallelizes the explode+partial-agg
-    # over the fixtures' single-row-group scan exactly as the shingle
-    # family does (no-op at scale where the scan yields many splits).
+    # (see word_ngrams); widen_for_compute parallelizes the
+    # explode+partial-agg over the fixtures' single-row-group scan
+    # exactly as the shingle family does (no-op at scale where the scan
+    # yields many splits).
     grams = F.when(F.size(words) >= n, word_ngrams(words, n)).otherwise(
         F.array().cast("array<string>")
     )

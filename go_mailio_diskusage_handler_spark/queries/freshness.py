@@ -13,8 +13,9 @@ latest external check is missing, outdated, or oldest:
 2. queries the driver has never checked;
 3. the rest, oldest latest-check round first.
 
-Registration order breaks ties inside each group.  The order is a
-stable sort on a per-name key, so applying it to its own output
+The query name breaks ties inside each group, so the order is a
+function of the names and the two records alone: it does not depend
+on registration or import order, and applying it to its own output
 changes nothing.
 """
 
@@ -51,16 +52,16 @@ def driver_order(
     last: Mapping[str, int],
     oracle_round: Mapping[str, int],
 ) -> list[str]:
-    """``names`` (in registration order) sorted into the registry order
-    described in the module docstring.  ``oracle_round`` maps a name to
-    the round its oracle text last changed."""
+    """``names`` (in any order) sorted into the registry order described
+    in the module docstring.  ``oracle_round`` maps a name to the round
+    its oracle text last changed."""
 
-    def key(name: str) -> tuple[int, int]:
+    def key(name: str) -> tuple[int, int, str]:
         checked = last.get(name)
         if checked is None:
-            return (1, 0)
+            return (1, 0, name)
         if oracle_round.get(name, -1) > checked:
-            return (0, 0)
-        return (2, checked)
+            return (0, 0, name)
+        return (2, checked, name)
 
     return sorted(names, key=key)

@@ -6,13 +6,17 @@ This is the single source of truth consumed by ``__spark_entry__.py``,
 every computed column, and the oracle SQL uses the *same* aliases so
 the driver's order-insensitive value hash lines up.
 
-The query bodies live in per-family modules under ``queries/``; each
-import below registers its queries.  After the last import the
-registry is sorted once by ``queries.freshness.driver_order`` from the
-driver's record at the repo root (``CORRECTNESS_r*.json`` and
-``ORACLE_HASHES.json``): the driver checks ``list(QUERIES)[:50]`` each
-round, so that window always holds the queries whose latest external
-check is missing, outdated by an oracle edit, or oldest.
+The query bodies live in one module per family under ``queries/``:
+``queries.FAMILY`` maps a name's prefix (up to the first underscore)
+to its module, and each import below registers that family's
+queries.  After the last import the registry is sorted once by
+``queries.freshness.driver_order`` from the driver's record at the
+repo root (``CORRECTNESS_r*.json`` and ``ORACLE_HASHES.json``): the
+driver checks ``list(QUERIES)[:50]`` each round, so that window always
+holds the queries whose latest external check is missing, outdated by
+an oracle edit, or oldest.  Ties break by name, so the order does not
+depend on which module registers a query or in what order the modules
+are imported.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ from .queries._base import ORACLE_SQL, QUERIES, register  # noqa: F401
 from .queries import freshness
 from .queries import (  # noqa: F401
     q_du,
+    q_sql,
     q_relational,
     q_scalar,
     q_text,
@@ -31,24 +36,8 @@ from .queries import (  # noqa: F401
     q_curation,
     q_similarity,
     q_sessions,
-    q_relational2,
     q_udf,
-    q_quality_ann,
-    q_sqltier,
-    q_round5,
-    q_round5_cont,
-    q_round5_cont2,
-    q_round7,
-    q_round8,
-    q_round8b,
-    q_round8c,
-    q_round9,
-    q_round10,
-    q_round11,
-    q_round11b,
-    q_round12,
-    q_round13,
-    q_round14,
+    q_dq,
 )
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from go_mailio_diskusage_handler_spark.queries.q_round13 import (
+from go_mailio_diskusage_handler_spark.functions.scalars import (
     variant_profile_frame,
 )
 

@@ -759,7 +759,7 @@ def dynamic_session_counts(
 ) -> DataFrame:
     """Dynamic-gap session windows as an always-on stream — the
     streaming twin of the batch query ``events_session_dynamic_gap``
-    (queries/q_round12.py): a purchase holds its session open 30
+    (queries/q_sessions.py): a purchase holds its session open 30
     minutes, any other event 10, via ``F.session_window`` with a
     per-event gap expression.
 

@@ -152,7 +152,7 @@ def test_dq_embeddings_oracle_empty_list_guard(spark):
     min_norm picks up the 0.0 an empty vector folds to."""
     from pyspark.sql import functions as F
 
-    from go_mailio_diskusage_handler_spark.queries import q_round12 as q
+    from go_mailio_diskusage_handler_spark.queries import q_dq as q
 
     con = duckdb.connect()
     con.execute(

@@ -158,12 +158,14 @@ def test_variant_ingest_shape_closed_expression():
     column on either engine — all four shapes derive from typed
     columns, so parity is independent of what the generator put in
     props."""
-    from go_mailio_diskusage_handler_spark.queries.q_round13 import (
+    from go_mailio_diskusage_handler_spark.functions.scalars import (
+        RAGGED_RAW_SPARK,
+    )
+    from go_mailio_diskusage_handler_spark.queries.q_scalar import (
         _RAGGED_RAW_DUCK,
-        _RAGGED_RAW_SPARK,
     )
 
-    assert "props" not in _RAGGED_RAW_SPARK
+    assert "props" not in RAGGED_RAW_SPARK
     assert "props" not in _RAGGED_RAW_DUCK
 
 
@@ -175,9 +177,11 @@ def test_variant_ingest_parity_on_adversarial_props(spark, tmp_path):
     such a file."""
     import duckdb
 
-    from go_mailio_diskusage_handler_spark.queries.q_round13 import (
-        SCALAR_VARIANT_INGEST_ORACLE,
+    from go_mailio_diskusage_handler_spark.functions.scalars import (
         variant_profile_frame,
+    )
+    from go_mailio_diskusage_handler_spark.queries.q_scalar import (
+        SCALAR_VARIANT_INGEST_ORACLE,
     )
 
     rows = [

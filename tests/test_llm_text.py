@@ -37,6 +37,7 @@ ORACLE_CHECKED = [
     "dedup_pair_editdist",
     "dedup_clusters",
     "curation_split_assign",
+    "curation_sample_weighted",
     "curation_mixture",
     "curation_contaminated",
     "curation_pack_sequences",

@@ -19,6 +19,7 @@ ORACLE_CHECKED = [
     "media_audio_chunks",
     "events_sessionize",
     "events_sliding_window",
+    "events_window_users",
     "events_funnel",
     "events_transitions",
     "events_window_topk",

@@ -49,7 +49,7 @@ def test_ordering_fronts_changed_then_never_checked_then_oldest():
     last = {"fresh": 9, "old": 5, "edited": 8, "stale": 3, "edited_old": 2}
     oracle_round = {"edited": 9, "edited_old": 3, "fresh": 4, "old": 5}
     assert freshness.driver_order(names, last, oracle_round) == [
-        "edited",  # changed, in the given order
+        "edited",  # changed, by name
         "edited_old",
         "never",
         "stale",  # then ascending latest-check round
@@ -58,15 +58,15 @@ def test_ordering_fronts_changed_then_never_checked_then_oldest():
     ]
 
 
-def test_ordering_breaks_ties_by_registration_order():
+def test_ordering_breaks_ties_by_name():
     names = ["b", "a", "n2", "c", "n1", "x2", "x1"]
     last = {"a": 4, "b": 4, "c": 2, "x1": 1, "x2": 1}
     oracle_round = {"x1": 7, "x2": 7}
     assert freshness.driver_order(names, last, oracle_round) == [
-        "x2", "x1", "n2", "n1", "c", "b", "a",
+        "x1", "x2", "n1", "n2", "c", "a", "b",
     ]
-    # and a missing driver record leaves registration order intact
-    assert freshness.driver_order(names, {}, {}) == names
+    # and a missing driver record sorts purely by name
+    assert freshness.driver_order(names, {}, {}) == sorted(names)
 
 
 def test_window_resamples_only_changed_queries():

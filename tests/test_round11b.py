@@ -1,5 +1,5 @@
 """Round-11 continuation batch: oracle parity + plan/semantic pins for
-the q_round11b additions.
+the queries added in that batch.
 """
 from __future__ import annotations
 
@@ -175,7 +175,7 @@ def test_pagerank_empty_graph_returns_empty_like_the_oracle(spark):
     """No order with two distinct brands -> empty graph: the query must
     return zero rows with the contract schema (the oracle does), not
     raise ZeroDivisionError computing the teleport share."""
-    import go_mailio_diskusage_handler_spark.queries.q_round11b as m
+    import go_mailio_diskusage_handler_spark.queries.q_relational as m
     from go_mailio_diskusage_handler_spark.sources import tables as T
 
     single_brand = (

@@ -1,7 +1,6 @@
 """Round-12 additions: oracle parity + plan/semantic pins for the
-q_round12 queries (these register behind the driver window per the
-deferral policy, so the in-repo parity tests ARE their correctness
-gate until the round-13 front).
+queries added in round 12 (their bodies live in the family modules
+under ``queries/``).
 """
 from __future__ import annotations
 

@@ -1,8 +1,6 @@
-"""Round-13 additions: oracle parity + plan/semantic pins for the
-q_round13 queries (these register behind the driver window per the
-deferral policy, so the in-repo parity tests ARE their correctness
-gate until the round-14 front), plus the stream≡batch contract of the
-VARIANT ingest twin.
+"""Round-13 additions: oracle parity + plan/semantic pins for
+``events_interval_join`` and ``scalar_variant_ingest``, plus the
+stream≡batch contract of the VARIANT ingest twin.
 """
 from __future__ import annotations
 
@@ -105,7 +103,7 @@ def test_streaming_variant_ingest_stream_equals_batch(spark, tmp_path):
     contract that makes a streaming admission gate sound."""
     from pyspark.sql import functions as F
 
-    from go_mailio_diskusage_handler_spark.queries.q_round13 import (
+    from go_mailio_diskusage_handler_spark.functions.scalars import (
         variant_profile_frame,
     )
     from go_mailio_diskusage_handler_spark.sources.tables import load_table

@@ -1,9 +1,7 @@
-"""Round-14 additions: oracle parity + plan/semantic pins for the
-q_round14 queries (these register behind the driver window per the
-deferral policy, so the in-repo parity tests ARE their correctness
-gate until the round-15 front), plus the operator-level contracts of
-the interval-overlap join and the physical shape of the VARIANT
-round-trip write.
+"""Round-14 additions: oracle parity + plan/semantic pins for
+``events_overlap_join`` and ``scalar_variant_roundtrip``, plus the
+operator-level contracts of the interval-overlap join and the
+physical shape of the VARIANT round-trip write.
 """
 from __future__ import annotations
 
@@ -296,7 +294,7 @@ def test_variant_roundtrip_written_files_are_unshredded_variant(spark):
     docstring claims unshredded, so pin it).  pyarrow/DuckDB cannot
     parse the Variant logical type, which is why the check reads the
     raw footer bytes for the thrift-encoded field-name strings."""
-    from go_mailio_diskusage_handler_spark.queries.q_round14 import (
+    from go_mailio_diskusage_handler_spark.queries.q_scalar import (
         variant_scratch_path,
     )
 

@@ -27,12 +27,12 @@ ORACLE_CHECKED = [
     "events_forward_fill",
     "events_interpolate",
     "events_user_ewma",
-    # round-8b additions (q_round8b.py) — registry tail, driver-checked r9
+    # round-8b additions — driver-checked r9
     "events_compaction_bins",
     "orders_zone_map_skipping",
     "percentile_exact_median",
     "text_cdc_chunks",
-    # round-8c additions (q_round8c.py) — registry tail, driver-checked r9
+    # round-8c additions — driver-checked r9
     "curation_dsir_weights",
     "dq_orders_constraints",
     "text_gopher_rules",

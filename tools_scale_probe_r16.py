@@ -34,7 +34,8 @@ Usage:
 
 ``run`` prints one line per query: median-of-3 warm count() seconds
 (untimed warm-up first, cache cleared between runs — the bench's
-methodology).
+methodology).  It exits non-zero when any query prints ``FAIL`` or no
+query is timed, so a failed or empty run cannot pass as a log.
 """
 
 from __future__ import annotations
@@ -158,7 +159,9 @@ def build(src: str, out: str, factor: int) -> None:
     spark.stop()
 
 
-def run(sf_dir: str, repeats: int, queries: list[str]) -> None:
+def run(sf_dir: str, repeats: int, queries: list[str]) -> int:
+    """Time ``queries``; return the process exit code (0 only when every
+    query was timed)."""
     spark = build_session("scale-probe-run")
     spark.sparkContext.setLogLevel("ERROR")
     # Per-file-ish splits over the 32-part fixture: openCostInBytes
@@ -175,12 +178,14 @@ def run(sf_dir: str, repeats: int, queries: list[str]) -> None:
         lambda it: (pdf for pdf in it), "id long"
     ).count()
     print(f"# cpus={cpus} sf_dir={sf_dir}")
+    failed, timed = [], 0
     for name in queries:
         fn = registry.QUERIES[name]
         try:
             fn(spark, sf_dir).count()  # untimed warm-up
         except Exception as exc:
             print(f"{name}: FAIL {type(exc).__name__}: {str(exc)[:200]}")
+            failed.append(name)
             spark.catalog.clearCache()
             continue
         finally:
@@ -193,7 +198,13 @@ def run(sf_dir: str, repeats: int, queries: list[str]) -> None:
             spark.catalog.clearCache()
         med = sorted(runs)[len(runs) // 2]
         print(f"{name}: cpus={cpus} median={med} runs={runs}", flush=True)
+        timed += 1
     spark.stop()
+    if failed or not timed:
+        print(f"# FAILED: {len(failed)} failed {failed}, {timed} timed",
+              file=sys.stderr)
+        return 1
+    return 0
 
 
 def main() -> None:
@@ -211,7 +222,7 @@ def main() -> None:
     if args.cmd == "build":
         build(args.src, args.out, args.factor)
     else:
-        run(args.sf, args.repeats, args.queries or PROBE_QUERIES)
+        sys.exit(run(args.sf, args.repeats, args.queries or PROBE_QUERIES))
 
 
 if __name__ == "__main__":
