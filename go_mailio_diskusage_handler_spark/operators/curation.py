@@ -968,13 +968,7 @@ def _hashed_gram_buckets(n_buckets: int):
     from go_mailio_diskusage_handler_spark.operators.text import word_ngrams
 
     w = F.split(F.col("text"), " ")
-    n = F.size(w)
-    # word_ngrams, not transform(sequence(...)): the indexed-lambda
-    # form re-evaluated the split per element — O(tokens²) per doc.
-    bigrams = F.when(n >= 2, word_ngrams(w, 2)).otherwise(
-        F.array().cast("array<string>")
-    )
-    grams = F.concat(w, bigrams)
+    grams = F.concat(w, word_ngrams(w, 2))
     bucket = (
         F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
         % n_buckets

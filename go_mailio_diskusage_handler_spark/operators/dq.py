@@ -21,8 +21,9 @@ Distributed shape at 100 TB:
   on the foreign key.  At 100 TB the dimension side (customer keys)
   is still ~GB-scale, so the anti join broadcasts; if the dimension
   outgrows the broadcast threshold, the same rule degrades to the
-  bloom-probe pattern (see ``sql.py:bloom_probe_revenue``) — probe a
-  bloom of dimension keys first, anti-join only the survivors.
+  bloom-probe pattern (see ``queries/q_sql.py:sql_bloom_probe_revenue``)
+  — probe a bloom of dimension keys first, anti-join only the
+  survivors.
 * The per-rule rows are assembled from the two 1-row aggregate
   frames with ``F.inline`` over a literal struct array — driver never
   collects anything.

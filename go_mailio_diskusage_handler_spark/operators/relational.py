@@ -284,7 +284,8 @@ def price_band_revenue(orders: DataFrame) -> DataFrame:
     equi-join shuffle on ``cell``.
 
     Revenue sums cast inputs to DECIMAL(12,2) so the aggregate is exact
-    and engine-independent (see sql.py's cross-engine float note).
+    and engine-independent (see the cross-engine float rule above
+    ``queries/q_sql.py:ONE_TEXT``).
 
     The exploded band×cell dim is built as a JVM literal (explode of a
     struct-array over ``spark.range(1)``), not ``createDataFrame`` —

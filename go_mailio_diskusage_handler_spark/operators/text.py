@@ -48,16 +48,17 @@ def word_ngrams(toks: Column, n: int) -> Column:
     slice/zip_with form references the token expression a constant
     number of times per row.
 
-    Caller must guard ``size(toks) >= n`` (a non-positive slice
-    length errors); tokens from ``split`` are never NULL, so
-    ``concat`` here equals the previous ``concat_ws`` output.
+    Rows with fewer than ``n`` tokens, and NULL ``toks``, give an
+    empty ``array<string>``: the guard is built in because a
+    non-positive slice length errors.  Tokens from ``split`` are never
+    NULL, so ``concat`` here equals the previous ``concat_ws`` output.
     """
     count = F.size(toks) - (n - 1)
     parts = [F.slice(toks, j + 1, count) for j in range(n)]
     out = parts[n - 1]
     for j in range(n - 2, -1, -1):
         out = F.zip_with(parts[j], out, lambda x, y: F.concat(x, F.lit(" "), y))
-    return out
+    return F.when(F.size(toks) >= n, out).otherwise(F.array().cast("array<string>"))
 
 
 def token_stats(documents: DataFrame) -> DataFrame:
@@ -235,23 +236,16 @@ def repetition_signals(documents: DataFrame) -> DataFrame:
       single most frequent word.
 
     Bigram stats are pure per-row array expressions (no shuffle): the
-    bigram list is built with one indexed ``transform`` over the word
-    array and deduped with ``array_distinct`` — document-local work
-    that scales with doc length, not corpus size.  Top-word dominance
-    explodes to (doc, word) and double-aggregates (word counts →
-    per-doc max); both aggregations partial-aggregate map-side, and
-    the explode is the same shape the token-frequency tier already
-    runs at 100 TB.  ``sequence`` is guarded for 1-word docs: Spark
-    infers a DESCENDING step for ``sequence(1, 0)``, which would
-    fabricate a phantom bigram instead of an empty list.
+    bigram list is ``word_ngrams(words, 2)`` (empty for 1-word docs),
+    deduped with ``array_distinct`` — document-local work that scales
+    with doc length, not corpus size.  Top-word dominance explodes to
+    (doc, word) and double-aggregates (word counts → per-doc max);
+    both aggregations partial-aggregate map-side, and the explode is
+    the same shape the token-frequency tier already runs at 100 TB.
     """
     words = tokens()
     n = F.size(words)
-    # word_ngrams, not transform(sequence(...)): the indexed-lambda
-    # form re-evaluated the split per element — O(tokens²) per doc.
-    bigrams = F.when(n >= 2, word_ngrams(words, 2)).otherwise(
-        F.array().cast("array<string>")
-    )
+    bigrams = word_ngrams(words, 2)
     per_doc = documents.select(
         "doc_id",
         n.alias("n_words"),
@@ -314,16 +308,10 @@ def top_ngrams(documents: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     global sort.  Ties break on the n-gram string so the result is
     deterministic across partitionings and engines.
     """
-    words = tokens()
-    # word_ngrams, not transform(sequence(..., i -> slice(split(...:
-    # the old indexed lambda re-evaluated split(text) per ELEMENT
-    # (see word_ngrams); widen_for_compute parallelizes the
-    # explode+partial-agg over the fixtures' single-row-group scan
-    # exactly as the shingle family does (no-op at scale where the scan
-    # yields many splits).
-    grams = F.when(F.size(words) >= n, word_ngrams(words, n)).otherwise(
-        F.array().cast("array<string>")
-    )
+    # widen_for_compute parallelizes the explode+partial-agg over the
+    # fixtures' single-row-group scan exactly as the shingle family
+    # does (no-op at scale where the scan yields many splits).
+    grams = word_ngrams(tokens(), n)
     return (
         widen_for_compute(documents)
         .select(F.explode(grams).alias("ngram"))
@@ -882,8 +870,7 @@ def gopher_rule_gate(documents: DataFrame) -> DataFrame:
 
     Distributed shape: pure per-row array expressions — zero shuffles,
     scales linearly in document count; the bigram list is
-    document-local (same guarded ``sequence`` construction as
-    ``repetition_signals``).
+    document-local (``word_ngrams``, as in ``repetition_signals``).
     """
     w = tokens()
     n = F.size(w)
@@ -894,11 +881,7 @@ def gopher_rule_gate(documents: DataFrame) -> DataFrame:
     stop_kinds = F.size(
         F.array_intersect(w, F.array(*[F.lit(s) for s in LANG_PROFILES["en"]]))
     )
-    # word_ngrams, not transform(sequence(...)): the indexed-lambda
-    # form re-evaluated the split per element — O(tokens²) per doc.
-    bigrams = F.when(n >= 2, word_ngrams(w, 2)).otherwise(
-        F.array().cast("array<string>")
-    )
+    bigrams = word_ngrams(w, 2)
     dup_frac = F.when(
         F.size(bigrams) == 0, F.lit(0.0)
     ).otherwise(1.0 - F.size(F.array_distinct(bigrams)) / F.size(bigrams))
@@ -967,8 +950,13 @@ def bpe_train(
     pair (the only driver-side state, one row per iteration) is applied
     as a JVM array fold.  At 100 TB the corpus pass happens once;
     iterations touch millions of vocab rows, never trillions of token
-    occurrences.  Each iteration re-persists the small vocab frame and
-    unpersists the previous one, so lineage stays O(1) deep.
+    occurrences.  Each iteration persists the new vocab frame,
+    materializes it with one ``count``, and unpersists the previous
+    one, so an iteration's jobs read the cached vocab rows instead of
+    re-running earlier merges.  ``persist`` does not cut the logical
+    plan: iteration k's plan still nests all k earlier merge folds (the
+    r15 PageRank probe in ``graph_pagerank_brands`` measured the same
+    growth), which stays small for the default handful of merges.
 
     Ties break by (count DESC, left ASC, right ASC) so training is
     deterministic and partitioning-invariant.  Returns the merge list

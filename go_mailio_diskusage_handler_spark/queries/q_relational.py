@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators import core, dq, relational
 from ..sources import bucketing, compaction
-from ..sources.tables import load_table
-from ..sql import register_views
+from ..sources.tables import load_table, register_views
 from ._base import register
 from .q_du import DU_CORE_SQL
 from .q_udf import DIRECTION_CHANGES_SQL

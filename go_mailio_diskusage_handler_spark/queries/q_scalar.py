@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions import scalars
 from ..functions.scalars import RAGGED_RAW_SPARK, variant_profile_frame
 from ..operators import relational
-from ..sources.tables import load_table
+from ..sources.tables import load_table, register_views
 from ._base import register
 
 
@@ -329,8 +329,6 @@ def scalar_variant_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the lateral join is a generator inside the scan stage (no
     shuffle before the 3-key groupBy); VARIANT parse + explode are
     JVM-side, zero Python."""
-    from ..sql import register_views
-
     register_views(spark, sf_dir)
     return spark.sql(
         """

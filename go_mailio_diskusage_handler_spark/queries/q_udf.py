@@ -9,8 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import udfs
 from ..operators import core
-from ..sources.tables import load_table
-from ..sql import register_views
+from ..sources.tables import load_table, register_views
 from ._base import register
 from .q_du import INVENTORY_SQL
 from .q_similarity import _ddb_cosine

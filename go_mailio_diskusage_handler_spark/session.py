@@ -19,7 +19,9 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Cores for ``local[N]`` and the shuffle partition count: the CPUs
+    this process may run on, unless ``SPARK_GRAFT_CPUS`` overrides."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def _ensure_workers_can_import_package() -> None:

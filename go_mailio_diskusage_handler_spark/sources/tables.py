@@ -11,6 +11,7 @@ Catalyst.  At 100 TB the same one-liner fans out to one task per
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -76,6 +77,54 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # unix_micros()/window() call sites require TIMESTAMP (LTZ).
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+# Which sf_dir each session's fixture views currently point at.
+# Weak-keyed so a stopped/replaced session drops its entry; a NEW
+# session object always re-registers.  This memo holds view BINDINGS
+# (name -> lazy scan plan), never rows: re-running registration for an
+# unchanged (session, sf_dir) re-created byte-identical views at
+# ~0.95 s per call (10 footer reads + 10 catalog writes, measured r15)
+# inside the bench's timed region for every view-backed query repeat.
+# Registration still runs on first use per session and whenever sf_dir
+# changes (the driver's multi-SF correctness runs flip dirs mid-session).
+_VIEWS_AT: "weakref.WeakKeyDictionary[SparkSession, str]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Expose every fixture table as a temp view named after itself, so
+    textual ``spark.sql`` resolves the same lazy scans ``load_table``
+    returns.
+
+    Idempotent per (session, sf_dir): a repeat call with the same
+    directory is a no-op — nothing in this package ever mutates or
+    drops these views, so re-binding them would only re-do driver-side
+    catalog work.  Views stay lazy; every action scans the parquet
+    inputs.
+    """
+    key = os.path.abspath(sf_dir)
+    if _VIEWS_AT.get(spark) == key:
+        return
+    for name in TABLES:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    _VIEWS_AT[spark] = key
+
+
+def invalidate_view_memo(spark: SparkSession) -> None:
+    """Drop the registration memo for ``spark`` so the next
+    :func:`register_views` call re-binds every fixture view.
+
+    The memo assumes nothing outside this module drops or shadows the
+    fixture views (no current caller does — ADVICE r15).  A caller
+    that manipulates the catalog anyway must invalidate here, or a
+    later same-``sf_dir`` registration silently no-ops against its
+    changes.  (A per-call ``spark.catalog`` existence probe was
+    rejected: it would re-add a driver round-trip to every SQL-tier
+    query construction — the exact cost the memo removes.)
+    """
+    _VIEWS_AT.pop(spark, None)
 
 
 def widen_for_compute(df: DataFrame) -> DataFrame:

@@ -91,7 +91,7 @@ SEEDS = list(range(1100, 1140))  # 40 deterministic queries
 
 @pytest.mark.parametrize("seed", SEEDS)
 def test_generated_query_matches_duckdb(spark, ddb, seed):
-    from go_mailio_diskusage_handler_spark.sql import register_views
+    from go_mailio_diskusage_handler_spark.sources.tables import register_views
     from conftest import SF_CORRECT
 
     register_views(spark, SF_CORRECT)
@@ -140,7 +140,7 @@ JOIN_SEEDS = list(range(2200, 2220))  # 20 deterministic join queries
 
 @pytest.mark.parametrize("seed", JOIN_SEEDS)
 def test_generated_join_query_matches_duckdb(spark, ddb, seed):
-    from go_mailio_diskusage_handler_spark.sql import register_views
+    from go_mailio_diskusage_handler_spark.sources.tables import register_views
     from conftest import SF_CORRECT
 
     register_views(spark, SF_CORRECT)
@@ -193,7 +193,7 @@ WINDOW_SEEDS = list(range(3300, 3320))  # 20 deterministic window queries
 
 @pytest.mark.parametrize("seed", WINDOW_SEEDS)
 def test_generated_window_query_matches_duckdb(spark, ddb, seed):
-    from go_mailio_diskusage_handler_spark.sql import register_views
+    from go_mailio_diskusage_handler_spark.sources.tables import register_views
     from conftest import SF_CORRECT
 
     register_views(spark, SF_CORRECT)
@@ -238,7 +238,7 @@ DATE_SEEDS = list(range(4400, 4420))
 
 @pytest.mark.parametrize("seed", DATE_SEEDS)
 def test_generated_date_query_matches_duckdb(spark, ddb, seed):
-    from go_mailio_diskusage_handler_spark.sql import register_views
+    from go_mailio_diskusage_handler_spark.sources.tables import register_views
     from conftest import SF_CORRECT
 
     register_views(spark, SF_CORRECT)
@@ -285,7 +285,7 @@ STRING_SEEDS = list(range(5500, 5520))
 
 @pytest.mark.parametrize("seed", STRING_SEEDS)
 def test_generated_string_query_matches_duckdb(spark, ddb, seed):
-    from go_mailio_diskusage_handler_spark.sql import register_views
+    from go_mailio_diskusage_handler_spark.sources.tables import register_views
     from conftest import SF_CORRECT
 
     register_views(spark, SF_CORRECT)
@@ -334,7 +334,7 @@ SETOP_SEEDS = list(range(6600, 6620))
 
 @pytest.mark.parametrize("seed", SETOP_SEEDS)
 def test_generated_setop_query_matches_duckdb(spark, ddb, seed):
-    from go_mailio_diskusage_handler_spark.sql import register_views
+    from go_mailio_diskusage_handler_spark.sources.tables import register_views
     from conftest import SF_CORRECT
 
     register_views(spark, SF_CORRECT)
@@ -413,7 +413,7 @@ SUBQUERY_SEEDS = list(range(7700, 7750))  # 50 deterministic queries
 
 @pytest.mark.parametrize("seed", SUBQUERY_SEEDS)
 def test_generated_subquery_query_matches_duckdb(spark, ddb, seed):
-    from go_mailio_diskusage_handler_spark.sql import register_views
+    from go_mailio_diskusage_handler_spark.sources.tables import register_views
     from conftest import SF_CORRECT
 
     register_views(spark, SF_CORRECT)
@@ -498,7 +498,7 @@ FRAME_SEEDS = list(range(9000, 9050))  # 50 deterministic frame queries
 
 @pytest.mark.parametrize("seed", FRAME_SEEDS)
 def test_generated_frame_query_matches_duckdb(spark, ddb, seed):
-    from go_mailio_diskusage_handler_spark.sql import register_views
+    from go_mailio_diskusage_handler_spark.sources.tables import register_views
     from conftest import SF_CORRECT
 
     register_views(spark, SF_CORRECT)

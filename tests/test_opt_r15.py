@@ -222,7 +222,7 @@ def test_load_table_returns_fresh_attribute_ids(spark):
 
 
 def test_register_views_idempotent_and_sf_sensitive(spark):
-    from go_mailio_diskusage_handler_spark import sql as S
+    from go_mailio_diskusage_handler_spark.sources import tables as S
 
     sf_small = "/root/testdata/sf0.001"
     S.register_views(spark, SF_CORRECT)

@@ -6,8 +6,8 @@ Changes pinned here:
    builder replacing the ``transform(sequence(...), i -> ...)`` indexed
    lambda, which re-evaluated the token-array expression PER ELEMENT
    (O(tokens²) per document; the dedup.shingles measurement).  Tests pin
-   string-exact parity with the old construction and the callers'
-   short-document guards.
+   string-exact parity with the old construction and the built-in
+   guard: short and NULL token arrays give an empty array.
 
 2. ``dedup.connected_components`` — the per-round eager
    ``localCheckpoint`` + separate fixpoint-sum action is fused into ONE
@@ -27,11 +27,12 @@ Changes pinned here:
 
 4. ``session._local_scratch_dir`` — tmpfs is only chosen when
    /dev/shm has real headroom (ADVICE r15: Docker defaults it to
-   64 MB, where shuffle writes would ENOSPC).
+   64 MB, where shuffle writes would ENOSPC); and
+   ``session.default_parallelism`` counts the host's usable CPUs.
 
-5. ``sql.invalidate_view_memo`` — explicit invalidation hook for
-   callers that manipulate the fixture views outside sql.py
-   (ADVICE r15).
+5. ``tables.invalidate_view_memo`` — explicit invalidation hook for
+   callers that manipulate the fixture views outside
+   ``register_views`` (ADVICE r15).
 """
 
 from __future__ import annotations
@@ -73,15 +74,29 @@ def _old_ngrams(n: int):
 @pytest.mark.parametrize("n", [2, 3, 4])
 def test_word_ngrams_matches_old_transform_form(spark, n):
     df = spark.createDataFrame([(t,) for t in _TEXTS], "text string")
-    toks = F.split(F.col("text"), " ")
-    new = F.when(F.size(toks) >= n, word_ngrams(toks, n)).otherwise(
-        F.array().cast("array<string>")
-    )
+    new = word_ngrams(F.split(F.col("text"), " "), n)
     rows = df.select(
         new.alias("new"), _old_ngrams(n).alias("old")
     ).collect()
     for r in rows:
         assert r["new"] == r["old"]
+
+
+@pytest.mark.parametrize(
+    "n, expected",
+    [
+        (2, [[], [], [], ["a b"], ["a b", "b c"]]),
+        (3, [[], [], [], [], ["a b c"]]),
+    ],
+)
+def test_word_ngrams_short_and_null_tokens_give_empty(spark, n, expected):
+    df = spark.createDataFrame(
+        [(0, None), (1, []), (2, ["a"]), (3, ["a", "b"]), (4, ["a", "b", "c"])],
+        "i int, toks array<string>",
+    )
+    out = df.select("i", word_ngrams(F.col("toks"), n).alias("g"))
+    assert out.schema["g"].dataType.simpleString() == "array<string>"
+    assert [r["g"] for r in out.orderBy("i").collect()] == expected
 
 
 def test_word_ngrams_exact_length_doc(spark):
@@ -191,7 +206,7 @@ def test_dedup_report_rounding_matches_duckdb_half_up(spark, ddb):
 
 
 # ---------------------------------------------------------------------------
-# 4. tmpfs capacity guard
+# 4. host sizing: tmpfs capacity guard, core count
 # ---------------------------------------------------------------------------
 
 
@@ -217,22 +232,33 @@ def test_scratch_dir_env_override_wins(monkeypatch, tmp_path):
     assert os.path.isdir(target)
 
 
+def test_default_parallelism_sized_from_host(monkeypatch):
+    from go_mailio_diskusage_handler_spark import session as sess
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert sess.default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    assert sess.default_parallelism() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")  # deployment override wins
+    assert sess.default_parallelism() == 5
+
+
 # ---------------------------------------------------------------------------
 # 5. view-memo invalidation hook
 # ---------------------------------------------------------------------------
 
 
 def test_invalidate_view_memo_rebinds_dropped_view(spark):
-    from go_mailio_diskusage_handler_spark import sql as sql_mod
+    from go_mailio_diskusage_handler_spark.sources import tables
 
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    sql_mod.register_views(spark, sf)
+    tables.register_views(spark, sf)
     assert spark.catalog.tableExists("documents")
     spark.catalog.dropTempView("documents")
     # memoized: same sf_dir re-registration is a no-op...
-    sql_mod.register_views(spark, sf)
+    tables.register_views(spark, sf)
     assert not spark.catalog.tableExists("documents")
     # ...until the caller invalidates
-    sql_mod.invalidate_view_memo(spark)
-    sql_mod.register_views(spark, sf)
+    tables.invalidate_view_memo(spark)
+    tables.register_views(spark, sf)
     assert spark.catalog.tableExists("documents")

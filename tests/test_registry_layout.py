@@ -69,6 +69,42 @@ def test_only_the_registry_imports_query_modules():
     assert not offenders
 
 
+def _returns_dataframe(fn: ast.FunctionDef) -> bool:
+    ann = fn.returns
+    if isinstance(ann, ast.Constant):
+        return ann.value == "DataFrame"
+    return (isinstance(ann, ast.Name) and ann.id == "DataFrame") or (
+        isinstance(ann, ast.Attribute) and ann.attr == "DataFrame"
+    )
+
+
+def test_query_signatures_live_only_in_queries():
+    """A ``(spark, sf_dir) -> DataFrame`` function is a query body, and
+    query bodies live in ``queries/``; one outside would be a second
+    layer that a registered query merely delegates to."""
+    offenders = []
+    for root, _, files in os.walk(PKG_DIR):
+        if root.startswith(QUERIES_DIR):
+            continue
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and [a.arg for a in node.args.args] == ["spark", "sf_dir"]
+                    and not node.args.vararg
+                    and not node.args.kwonlyargs
+                    and not node.args.kwarg
+                    and _returns_dataframe(node)
+                ):
+                    offenders.append(f"{os.path.relpath(path, REPO_ROOT)}:{node.name}")
+    assert not offenders
+
+
 @pytest.mark.parametrize("seed", range(5))
 def test_driver_order_ignores_registration_order(seed):
     names = list(QUERIES)

@@ -128,36 +128,14 @@ def test_windows_are_partitioned(spark):
 
 def test_sql_surface_oracle_parity(spark, ddb):
     """The textual spark.sql surface must hash-match DuckDB running the
-    SAME SQL string (one query text, two engines)."""
-    from go_mailio_diskusage_handler_spark import registry
+    SAME SQL string (one query text, two engines): every ``ONE_TEXT``
+    query, plus the recursive spine, whose body only adds session
+    state around its one text."""
+    from go_mailio_diskusage_handler_spark.queries import q_sql
 
-    for name in (
-        "sql_pricing_summary",
-        "sql_shipping_priority",
-        "sql_grouping_sets",
-        "sql_local_supplier_volume",
-        "sql_large_orders",
-        "sql_order_priority",
-        "sql_customer_distribution",
-        "sql_returned_revenue",
-        "sql_sales_opportunity",
-        "sql_shipping_modes",
-        "sql_promo_revenue",
-        "sql_top_supplier",
-        "sql_small_qty_revenue",
-        "sql_waiting_suppliers",
-        "sql_nation_volume",
-        "sql_market_share",
-        "sql_forecast_revenue",
-        "sql_bracket_revenue",
-        "sql_important_nations",
-        "sql_best_supplier",
-        "sql_part_supplier_counts",
-        "sql_excess_capacity",
-        "sql_recursive_spine",
-        "sql_lateral_topn",
-        "sql_group_by_all",
-    ):
+    texts = {**q_sql.ONE_TEXT, "sql_recursive_spine": q_sql.RECURSIVE_SPINE_SQL}
+    for name, text in texts.items():
+        assert registry.ORACLE_SQL[name] == text
         compare_with_oracle(spark, ddb, name, registry.QUERIES, registry.ORACLE_SQL)
 
 
@@ -180,9 +158,7 @@ def test_grouping_sets_single_expand(spark):
 
 
 def test_sql_shipping_priority_broadcasts_dimensions(spark):
-    from go_mailio_diskusage_handler_spark import plans, sql as sql_surface
-
-    df = sql_surface.shipping_priority(spark, SF_CORRECT)
+    df = registry.QUERIES["sql_shipping_priority"](spark, SF_CORRECT)
     assert plans.has_broadcast_join(df)
 
 

@@ -381,9 +381,9 @@ def test_parameterized_sql_binds_at_parse_time(spark):
     optimized plan equals the literal-inlined query's — the safety is
     free.  And a malicious 'table name' must be rejected by the
     IDENTIFIER binder, never parsed as SQL."""
-    from go_mailio_diskusage_handler_spark import sql as sqlmod
+    from go_mailio_diskusage_handler_spark import registry
 
-    param = sqlmod.parameterized_revenue(spark, SF_CORRECT)
+    param = registry.QUERIES["sql_parameterized_revenue"](spark, SF_CORRECT)
     literal = spark.sql(
         """
         SELECT o_orderpriority, COUNT(*) AS n_orders,

@@ -51,7 +51,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from go_mailio_diskusage_handler_spark import registry  # noqa: E402
-from go_mailio_diskusage_handler_spark.session import build_session  # noqa: E402
+from go_mailio_diskusage_handler_spark.session import (  # noqa: E402
+    build_session,
+    default_parallelism,
+)
 from go_mailio_diskusage_handler_spark.sources.tables import (  # noqa: E402
     TABLES,
     load_table,
@@ -171,7 +174,7 @@ def run(sf_dir: str, repeats: int, queries: list[str]) -> int:
     # so this emulates, not cheats, the production scan shape.
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     spark.conf.set("spark.sql.files.openCostInBytes", str(512 * 1024))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_parallelism()
     # session warm-up mirroring bench.py
     registry.QUERIES["du_core"](spark, sf_dir).limit(1).collect()
     spark.range(64).repartition(64).mapInPandas(
