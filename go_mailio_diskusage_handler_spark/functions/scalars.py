@@ -173,8 +173,8 @@ def windowed_distinct_users(events: DataFrame, minutes: int = 60) -> DataFrame:
 def tumbling_event_windows(events: DataFrame, minutes: int = 10) -> DataFrame:
     """Event-time tumbling window aggregation (batch form).
 
-    ``F.window`` is the same expression Structured Streaming uses; the
-    streaming variant adds ``withWatermark`` (streaming/windows.py).
+    ``F.window`` is the same expression Structured Streaming uses; a
+    streaming form would add only ``withWatermark``.
     Window start is exported as epoch seconds for engine-neutral
     comparison.
     """
@@ -602,11 +602,10 @@ def variant_profile_frame(df: DataFrame) -> DataFrame:
     """The shared VARIANT ingest profile over a frame carrying
     (event_id, user_id, event_type): ragged-JSON synthesis →
     try_parse_json → per-path try_variant_get coverage counts + exact
-    value sum, grouped by event_type.  Used by the batch query
-    ``scalar_variant_ingest`` AND per micro-batch by
-    ``streaming/variant_ingest.py`` — the profile columns are all
-    mergeable (counts / sums), which is what makes the streaming twin's
-    per-batch partials sum to the batch answer exactly."""
+    value sum, grouped by event_type.  Used by the query
+    ``scalar_variant_ingest``.  The profile columns are all mergeable
+    (counts / sums), so per-batch partials over a feed sum to the
+    whole-feed answer exactly."""
     raw = F.expr(RAGGED_RAW_SPARK)
     parsed = df.select("event_type", F.try_parse_json(raw).alias("v"))
     get = lambda path: F.try_variant_get(F.col("v"), path, "long")  # noqa: E731

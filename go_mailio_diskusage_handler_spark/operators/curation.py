@@ -269,38 +269,6 @@ def pack_sequences(documents: DataFrame, max_tokens: int = 512) -> DataFrame:
     )
 
 
-def write_training_shards(
-    documents: DataFrame,
-    out_dir: str,
-    max_tokens: int = 512,
-    **corpus_kwargs,
-) -> DataFrame:
-    """The nightly job, end to end: curate → pack → write shards.
-
-    Composes :func:`curated_corpus` (quality gate, decontamination,
-    dedup, split assignment), :func:`pack_sequences` (token-budget
-    binning), and the AQE-compacted Parquet sink — one DAG, written
-    as Hive-partitioned ``split=train|val|test`` directories with
-    files clustered on ``bin_id`` (downstream shard readers scan one
-    split, and row-group stats prune to the bins they want).
-
-    Returns the frame that was written (for assertions/inspection).
-    """
-    from go_mailio_diskusage_handler_spark.sources.compaction import (
-        write_compacted,
-    )
-
-    corpus = curated_corpus(documents, **corpus_kwargs)
-    packed = pack_sequences(documents, max_tokens)
-    shards = corpus.join(packed, ["doc_id", "source"]).select(
-        "doc_id", "source", "split", "n_tokens", "bin_id"
-    )
-    write_compacted(
-        shards, out_dir, cluster_by=["bin_id"], partition_by=["split"]
-    )
-    return shards
-
-
 def curated_corpus(
     documents: DataFrame,
     min_distinct_ratio: float = 0.4,

@@ -92,15 +92,6 @@ def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(documents: DataFrame) -> DataFrame:
-    """doc_id → h0..h{K-1}: min over shingles of md5('{j}:' + shingle).
-
-    One explode + one groupBy shuffle; the signature table is K×32
-    bytes per doc regardless of document length.
-    """
-    return _signatures_from_shingles(shingles(documents))
-
-
 def _band_key(b: int):
     cols = [F.col(f"h{j}") for j in range(b * BAND_ROWS, (b + 1) * BAND_ROWS)]
     return F.md5(F.concat_ws("|", *cols))

@@ -2,9 +2,7 @@
 
 Batch form: lag + running-sum session assignment (two partitioned
 windows over the same (user_id, ts) sort — Spark executes them in one
-shuffle + one sort).  The streaming twin
-(``streaming.stateful.sessionize_stream``) uses
-``applyInPandasWithState``; this batch version is its oracle.
+shuffle + one sort).
 
 Timestamps are exported as epoch MICROSECONDS (exact int64 in both
 engines — no float truncation).
@@ -200,9 +198,7 @@ def funnel(events: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS) -> DataFram
 
 def first_touch(events: DataFrame) -> DataFrame:
     """Event-stream dedup: the earliest event per (user, event_type)
-    key — "first touch" attribution, and the batch oracle for the
-    streaming ``dropDuplicatesWithinWatermark`` twin
-    (``streaming.stateful.first_touch_stream``).
+    key — "first touch" attribution.
 
     Deterministic winner: min (ts, event_id) lexicographically, via a
     single min_by-shaped aggregation — one shuffle on the dedup key,
@@ -523,13 +519,10 @@ def score_daily_counts(
     min_prior: int = 3,
     z_thresh: float = 2.0,
 ) -> DataFrame:
-    """Scoring half of :func:`daily_anomaly_zscore`, shared with the
-    streaming twin (``streaming.windows.anomaly_over_counts_sink``):
-    expects a (day DATE, event_type, n_events) table — which in
-    streaming is the SINK of an additive windowed count, the
-    incremental-safe part, while this non-incremental trailing window
-    runs in the serving layer over the days×types-bounded table (the
-    rank-in-sink pattern)."""
+    """Scoring half of :func:`daily_anomaly_zscore`: expects a (day
+    DATE, event_type, n_events) table.  The daily count is additive;
+    this trailing window is not, so it runs over the days×types-bounded
+    count table rather than the events."""
     w = (
         Window.partitionBy("event_type")
         .orderBy("day")
@@ -599,12 +592,10 @@ def event_concentration(events: DataFrame, deciles: int = 10) -> DataFrame:
 
 
 def concentration_report(per_user: DataFrame, deciles: int = 10) -> DataFrame:
-    """Scoring half of :func:`event_concentration`, shared with the
-    streaming twin (``streaming.windows.concentration_over_totals_sink``):
-    expects a (user_id, n_events) table — in streaming, the SINK of
-    the additive per-user count aggregation; the NTILE ranking is not
-    incremental-safe, so it runs serving-side over the user-bounded
-    sink (rank-in-sink pattern)."""
+    """Scoring half of :func:`event_concentration`: expects a
+    (user_id, n_events) table.  The per-user count is additive; the
+    NTILE ranking is not, so it runs over the user-bounded count table
+    rather than the events."""
     w = Window.orderBy(F.desc("n_events"), F.asc("user_id"))
     bucketed = per_user.select(
         "n_events", F.ntile(deciles).over(w).alias("decile")

@@ -904,190 +904,3 @@ def gopher_rule_gate(documents: DataFrame) -> DataFrame:
             r_word_count & r_mean_word_len & r_alpha_frac & r_stopwords & r_repetition
         ).alias("keep"),
     )
-
-
-# ---------------------------------------------------------------------------
-# BPE tokenizer training + application (Sennrich et al. 2016)
-# ---------------------------------------------------------------------------
-
-def _merge_pair_expr(syms_col: str, left: str, right: str) -> Column:
-    """JVM fold applying ONE BPE merge (left, right) -> left||right to a
-    symbol array, greedy left-to-right non-overlapping — exactly the
-    reference algorithm's semantics: after a merge the new symbol is
-    ``left || right``, which can never re-match ``left`` (non-empty
-    ``right``), so a plain last-element check reproduces the
-    non-overlap rule.  Built with F.aggregate + F.lit so corpus-derived
-    symbols are bound as literal VALUES, never interpolated into SQL
-    text (no escaping rules to track)."""
-    l_lit, r_lit = F.lit(left), F.lit(right)
-    return F.aggregate(
-        F.col(syms_col),
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == l_lit)
-            & (x == r_lit),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1),
-                F.array(F.concat(l_lit, r_lit)),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def bpe_train(
-    documents: DataFrame, n_merges: int = 8
-) -> list[tuple[str, str]]:
-    """[EXT] BPE tokenizer TRAINING: learn ``n_merges`` merge rules from
-    the corpus (Sennrich et al. 2016) — the iterative generalization of
-    the single-step ``text_bpe_pairs`` registry query.
-
-    Scale design (the trainer shape production BPE implementations —
-    SentencePiece, HF tokenizers — use): the corpus collapses ONCE to
-    word frequencies (vocabulary-bounded groupBy), and every merge
-    iteration runs over the DISTINCT-vocabulary frame only — pair
-    counting is a weighted aggregate over |vocab| rows, and the argmax
-    pair (the only driver-side state, one row per iteration) is applied
-    as a JVM array fold.  At 100 TB the corpus pass happens once;
-    iterations touch millions of vocab rows, never trillions of token
-    occurrences.  Each iteration persists the new vocab frame,
-    materializes it with one ``count``, and unpersists the previous
-    one, so an iteration's jobs read the cached vocab rows instead of
-    re-running earlier merges.  ``persist`` does not cut the logical
-    plan: iteration k's plan still nests all k earlier merge folds (the
-    r15 PageRank probe in ``graph_pagerank_brands`` measured the same
-    growth), which stays small for the default handful of merges.
-
-    Ties break by (count DESC, left ASC, right ASC) so training is
-    deterministic and partitioning-invariant.  Returns the merge list
-    in rank order.
-    """
-    vocab = (
-        documents.select(F.explode(tokens()).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        # symbolize by CODE POINT to match Python's list(w) exactly:
-        # Java regex '.' consumes a full code point, so astral chars
-        # (emoji) stay whole — a position-split like split(w,'(?!^)')
-        # operates on UTF-16 code units and breaks them into lone
-        # surrogates, silently diverging from the reference algorithm
-        .select(
-            F.regexp_extract_all("w", F.lit("(?s)."), F.lit(0)).alias("syms"),
-            "cnt",
-        )
-    ).persist()
-    vocab.count()
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        # sequence(1, 0) DESCENDS in Spark — single-symbol words
-        # must not reach the pair generator
-        pairs = vocab.filter(F.size("syms") >= 2).select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1),"
-                    " i -> struct(element_at(syms, i) as l,"
-                    "             element_at(syms, i + 1) as r))"
-                )
-            ).alias("p"),
-            "cnt",
-        )
-        best = (
-            pairs.groupBy("p")
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy(F.desc("n"), F.col("p.l"), F.col("p.r"))
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["n"] is None:
-            break
-        left, right = best[0]["p"]["l"], best[0]["p"]["r"]
-        merges.append((left, right))
-        nxt = vocab.select(
-            _merge_pair_expr("syms", left, right).alias("syms"), "cnt"
-        ).persist()
-        nxt.count()
-        vocab.unpersist()
-        vocab = nxt
-    vocab.unpersist()
-    return merges
-
-
-def bpe_encode(
-    documents: DataFrame, merges: list[tuple[str, str]]
-) -> DataFrame:
-    """[EXT] BPE tokenizer APPLICATION: encode each document with a
-    trained merge table — per doc, the BPE token count and the distinct
-    BPE token count (the compression signal tokenizer evals read).
-
-    The merge RANK table ships as a broadcast local (production shape:
-    the trained tokenizer is a small artifact broadcast to every
-    executor) and encoding runs as an Arrow-batched pandas iterator —
-    the reference greedy algorithm (repeatedly merge the
-    lowest-rank adjacent pair) is inherently sequential per word, which
-    is exactly the Pandas-UDF-when-builtins-can't-express-it case; a
-    per-worker word→tokens memo collapses the Zipf-heavy word stream to
-    one encode per distinct word per batch stream."""
-    import pandas as pd
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = documents.sparkSession
-    rank = {pair: i for i, pair in enumerate(merges)}
-    # lifetime note: the broadcast is referenced by encode_iter's
-    # closure, which the returned frame's plan holds — it becomes
-    # collectable (ContextCleaner) when the result frame is dropped,
-    # the same ownership shape own_cache gives persisted frames
-    b_rank = spark.sparkContext.broadcast(rank)
-
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_bpe_tokens", LongType()),
-            StructField("n_distinct_bpe_tokens", LongType()),
-        ]
-    )
-
-    def encode_iter(batches):
-        ranks = b_rank.value
-        memo: dict[str, tuple[str, ...]] = {}
-
-        def encode_word(w: str) -> tuple[str, ...]:
-            got = memo.get(w)
-            if got is not None:
-                return got
-            syms = list(w)
-            while len(syms) > 1:
-                cand = [
-                    (ranks[(a, b)], i)
-                    for i, (a, b) in enumerate(zip(syms, syms[1:]))
-                    if (a, b) in ranks
-                ]
-                if not cand:
-                    break
-                _, i = min(cand)
-                syms[i : i + 2] = [syms[i] + syms[i + 1]]
-            enc = tuple(syms)
-            memo[w] = enc
-            return enc
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks: list[str] = []
-                # str.split(TOKEN_SPLIT) matches the JVM side's
-                # tokens() only while TOKEN_SPLIT is a literal (it is
-                # a single space); a regex TOKEN_SPLIT would need
-                # re.split here
-                for w in (text or "").split(TOKEN_SPLIT):
-                    if w:
-                        toks.extend(encode_word(w))
-                rows.append((doc_id, len(toks), len(set(toks))))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_bpe_tokens", "n_distinct_bpe_tokens"]
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        encode_iter, schema=out_schema
-    )

@@ -758,10 +758,6 @@ def scalar_variant_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer path will actually see, without a single row-level error
     (both the parse and the gets are try_ variants).
 
-    The streaming twin (``streaming/variant_ingest.py``) runs the
-    identical profile per micro-batch with idempotent per-batch
-    output — stream≡batch asserted in tests/test_round13.py.
-
     Scale: parse + gets are per-row JVM expressions inside the scan's
     codegen stage (VARIANT parse is single-pass, gets are O(1) on the
     binary encoding — no JSON re-parse per path); the aggregate is a

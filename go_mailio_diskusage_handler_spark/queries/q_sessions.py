@@ -330,10 +330,9 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval self-join (purchase ⋈ preceding clicks within 30 min).
-    Same expression runs as a bounded-state stream-stream join in
-    streaming.windows.attributed_purchases; stream ≡ batch asserted in
-    tests/test_streaming.py."""
+    """Interval self-join (purchase ⋈ preceding clicks within 30 min),
+    run as a batch frame through streaming.windows.attributed_purchases,
+    whose watermarked sides would bound its state over a stream."""
     from pyspark.sql import functions as F
 
     from ..streaming import windows as streaming_windows
@@ -1331,10 +1330,8 @@ ATTRIBUTION_SEMI_SQL = """
 @register("events_attribution_semi", ATTRIBUTION_SEMI_SQL)
 def events_attribution_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI interval self-join (purchases with >=1 preceding
-    click within 30 min — existence filter, no fan-out).  Same
-    expression runs as a bounded-state leftSemi stream-stream join in
-    streaming.windows.attributed_purchases_semi; stream ≡ batch
-    asserted in tests/test_round10.py."""
+    click within 30 min — existence filter, no fan-out), run as a
+    batch frame through streaming.windows.attributed_purchases_semi."""
     from ..streaming import windows as streaming_windows
 
     df = streaming_windows.attributed_purchases_semi(
@@ -1351,10 +1348,9 @@ def events_attribution_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("events_attribution_full_outer", ATTRIBUTION_FULL_OUTER_SQL)
 def events_attribution_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER interval self-join (purchases ⋈ preceding clicks
-    within 30 min, unmatched rows of BOTH sides null-padded).  Same
-    expression runs as a bounded-state full-outer stream-stream join
-    in streaming.windows.attributed_purchases_full_outer; stream ≡
-    batch asserted in tests/test_round10.py."""
+    within 30 min, unmatched rows of BOTH sides null-padded), run as a
+    batch frame through
+    streaming.windows.attributed_purchases_full_outer."""
     from ..streaming import windows as streaming_windows
 
     df = streaming_windows.attributed_purchases_full_outer(

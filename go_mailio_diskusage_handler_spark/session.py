@@ -98,11 +98,6 @@ def build_session(app_name: str = "diskusage-spark") -> SparkSession:
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.sql.files.ignoreCorruptFiles", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Spark 4.1 Python-data-source filter pushdown (SPARK-48788):
-        # off by default upstream; required for the inventory source's
-        # pushFilters (sources/inventory_source.py) to receive
-        # predicates instead of erroring at plan time
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # Session-catalog tables (the bucketed-join path writes some)

@@ -1,30 +1,17 @@
-"""[EXT] Small-file compaction sink.
+"""[EXT] Physical-layout planners: compaction bins, Z-order keys,
+zone-map skipping and row-deletion plans.
 
 At 100 TB the write path matters as much as the read path.  A pipeline
 stage that emits millions of KB-sized files makes every downstream
 scan pay per-file listing/open/footer overhead (and makes the S3
 LIST itself a bottleneck); one that emits a handful of multi-GB files
 kills read parallelism and retries.  The reference never faces this —
-it writes nothing (its sink is an in-memory map, handler.go:252) —
-but any materialized stage of this engine does.
-
-The scale-correct tool is AQE **rebalance** (`df.hint("rebalance")`,
-SPARK-35725): at runtime AQE splits oversized shuffle partitions and
-coalesces undersized ones toward
-``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so output files
-land near the target size with NO extra counting pass and no
-hand-tuned ``repartition(n)`` constant that rots as data grows.
-``maxRecordsPerFile`` is the belt-and-braces cap for skewed rows.
-
-Clustering: when a ``cluster_by`` key is given, rows are range-
-rebalanced and sorted within partitions on it, so Parquet row-group
-min/max stats become selective for later filters on that key (poor
-man's Z-order for the 1-key case).
+it writes nothing (its sink is an in-memory map, handler.go:252).
+Each function here is a metadata-sized plan over a table or its file
+listing that decides a layout before anything is rewritten.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -51,132 +38,16 @@ def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
     return z
 
 
-def write_compacted(
-    df: DataFrame,
-    path: str,
-    *,
-    cluster_by: Sequence[str] | None = None,
-    partition_by: Sequence[str] | None = None,
-    max_records_per_file: int | None = None,
-    zorder_by: tuple[str, str] | None = None,
-) -> None:
-    """Write ``df`` as Parquet with AQE-sized, optionally clustered files.
-
-    ``zorder_by=(col_a, col_b)`` clusters on the interleaved
-    :func:`zorder_key` instead of a single-column sort — row-group
-    stats stay selective for filters on either column.
-    """
-    out = df
-    if zorder_by is not None:
-        zk = zorder_key(F.col(zorder_by[0]), F.col(zorder_by[1]))
-        out = (
-            df.withColumn("_zorder", zk)
-            .hint("rebalance", "_zorder")
-            .sortWithinPartitions("_zorder")
-            .drop("_zorder")
-        )
-    elif cluster_by:
-        out = out.hint("rebalance", *cluster_by).sortWithinPartitions(*cluster_by)
-    else:
-        out = out.hint("rebalance")
-    writer = out.write.mode("overwrite")
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def compact_state_dir(
-    spark,
-    path: str,
-    schema: str,
-    *,
-    cluster_by: Sequence[str] | None = None,
-    partition_by: Sequence[str] | None = None,
-    fold=None,
-) -> dict:
-    """Offline compaction of an APPEND-ONLY streaming-state directory
-    (the band/shingle/gram indexes the ingest services grow one small
-    file per micro-batch): read the accumulated files, optionally
-    ``fold`` them semantically (e.g. collapse a gram index's
-    improvement chains with a groupBy-min — the physical form of the
-    read-time merge), and rewrite as few AQE-sized, key-clustered
-    files via :func:`write_compacted`.
-
-    MUST run while no ingest query is appending to ``path`` (the
-    deployment pattern: drain with ``availableNow``, compact, restart
-    — the same maintenance window a checkpoint upgrade needs).  The
-    rewrite is write-new-then-swap: the compacted generation lands in
-    a sibling tmp dir, fully materialized BEFORE the live dir moves
-    aside, so a crash at any point leaves a complete generation on
-    disk (``path`` or ``path + '.old'``); an object-store deployment
-    would version the prefix and flip a manifest pointer instead —
-    the two-phase pattern the inventory writer commits with
-    (``inventory_source.py``).
-
-    ``partition_by`` preserves a physical partitioning the consumer's
-    semantics depend on — e.g. the ingest sinks' per-``batch_id``
-    layout, where a replayed micro-batch dynamically overwrites ITS
-    OWN partition directory: compaction that merged across batch ids
-    would turn that replay into duplication, while compaction that
-    keeps the partition column rewrites each directory to few files
-    and leaves the overwrite unit intact.
-
-    Returns ``{files_before, files_after, rows_before, rows_after}``
-    (rows shrink only under ``fold``; plain compaction preserves them
-    exactly — asserted by the tests).
-    """
-    import os
-    import shutil
-
-    def _parquet_files(d: str) -> int:
-        return sum(
-            1
-            for root, _, names in os.walk(d)
-            for n in names
-            if n.endswith(".parquet")
-        )
-
-    if not os.path.isdir(path):
-        return {
-            "files_before": 0,
-            "files_after": 0,
-            "rows_before": 0,
-            "rows_after": 0,
-        }
-    files_before = _parquet_files(path)
-    df = spark.read.schema(schema).parquet(path)
-    rows_before = df.count()
-    out = fold(df) if fold is not None else df
-    tmp = path.rstrip("/") + ".compact.tmp"
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_compacted(out, tmp, cluster_by=cluster_by, partition_by=partition_by)
-    rows_after = spark.read.schema(schema).parquet(tmp).count()
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return {
-        "files_before": files_before,
-        "files_after": _parquet_files(path),
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-    }
-
-
 def plan_compaction_bins(
     events: DataFrame, *, target_bytes: int = 4096, row_overhead: int = 48
 ) -> DataFrame:
     """[EXT] Compaction *planner*: bin-pack per-partition small files
     into target-size merge groups.
 
-    The read-path complement of :func:`write_compacted`.  A streaming
-    ingest that commits one file per (event_type, hour) micro-batch —
-    the classic Structured-Streaming sink layout — accretes thousands
-    of KB-sized files; before a rewrite, the compactor must decide
-    WHICH files merge into WHICH output file.  The scale-correct plan
+    A streaming ingest that commits one file per (event_type, hour)
+    micro-batch — the classic Structured-Streaming sink layout —
+    accretes thousands of KB-sized files; before a rewrite, the
+    compactor must decide WHICH files merge into WHICH output file.  The scale-correct plan
     keeps neighbouring hours together (preserves time-locality so the
     compacted file's min/max ts stats stay selective) and packs
     greedily in hour order until ``target_bytes`` is reached: with

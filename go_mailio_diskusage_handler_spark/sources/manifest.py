@@ -145,12 +145,11 @@ def boto3_download(client) -> Callable[[str, str], bytes]:
 
 
 # ---------------------------------------------------------------------------
-# fileSchema enforcement — the contract the reference DECLARES but
-# never checks (types.go:17 carries the parquet message schema;
-# handler.go never reads Inventory.FileSchema).  At 100 TB a silently
-# drifted inventory schema (a renamed `size`, a re-typed `key`)
-# corrupts every downstream aggregate; enforcing the declared schema
-# at ingest turns drift into a loud, per-refresh error.
+# fileSchema — the contract the reference DECLARES but never reads
+# (types.go:17 carries the parquet message schema; handler.go never
+# reads Inventory.FileSchema).  Here the inventory scan is typed as
+# declared, so a file that drifted from it (a re-typed `key` or
+# `size`) is skipped as corrupt instead of corrupting the aggregate.
 # ---------------------------------------------------------------------------
 
 # parquet-message → Spark type names for the subset S3 Inventory uses.
@@ -162,10 +161,6 @@ _PARQUET_TO_SPARK = {
 
 # S3 Inventory's own types for the two columns the engine consumes.
 _INVENTORY_TYPES = {"key": "string", "size": "bigint"}
-
-
-class SchemaDriftError(ValueError):
-    """Declared fileSchema and observed DataFrame schema disagree."""
 
 
 def parse_file_schema(file_schema: str) -> dict[str, str]:
@@ -205,35 +200,3 @@ def inventory_read_schema(file_schema: str) -> str | None:
         f"{col} {declared.get(col, typ)}" for col, typ in _INVENTORY_TYPES.items()
     )
 
-
-def enforce_file_schema(
-    df, file_schema: str, *, required: tuple[str, ...] = ("key", "size")
-) -> None:
-    """Validate an inventory DataFrame against the manifest's declared
-    fileSchema.  Raises :class:`SchemaDriftError` listing every
-    missing / extra / re-typed column among the DECLARED ones that the
-    engine consumes (``required`` must exist with matching types;
-    other declared columns are checked when present — S3 Inventory
-    configs legitimately project subsets).  Pure driver-side metadata
-    work: no job runs."""
-    declared = parse_file_schema(file_schema)
-    if not declared:
-        raise SchemaDriftError("manifest declares no parsable fileSchema")
-    observed = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    problems: list[str] = []
-    for col in required:
-        if col not in declared:
-            problems.append(f"required column {col!r} absent from fileSchema")
-        elif col not in observed:
-            problems.append(f"required column {col!r} missing from data")
-    for name, typ in declared.items():
-        if name in observed and observed[name] != typ:
-            # The engine normalizes inventory timestamps to NTZ; both
-            # spellings are acceptable for timestamp columns.
-            if {observed[name], typ} <= {"timestamp", "timestamp_ntz"}:
-                continue
-            problems.append(
-                f"column {name!r}: declared {typ}, observed {observed[name]}"
-            )
-    if problems:
-        raise SchemaDriftError("; ".join(problems))

@@ -149,20 +149,3 @@ def widen_for_compute(df: DataFrame) -> DataFrame:
         return df
     return df.repartition(target)
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def read_inventory(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Multi-file inventory scan (reference O12, ``handler.go:83-91``).
-
-    The reference loops over manifest files sequentially and — the §2
-    semantic trap — lets each file's aggregate OVERWRITE the previous
-    one (``handler.go:231,252``).  Spark reads every path in one scan
-    and aggregates across all of them, which is the README's stated
-    intent ("stores all accumulated file information", README.md:15-17).
-    Per-file error skip (handler.go:86-89) maps to
-    ``spark.sql.files.ignoreCorruptFiles``.
-    """
-    return spark.read.parquet(*paths)

@@ -59,11 +59,10 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..caching import own_checkpoint
-from ..operators.core import disk_usage, disk_usage_lookup, disk_usage_observed
+from ..operators.core import disk_usage_lookup, disk_usage_observed
 from ..sources.manifest import Manifest, fetch_manifest, inventory_read_schema
 
 log = logging.getLogger(__name__)
@@ -85,6 +84,14 @@ class NotFoundError(KeyError):
 class DiskUsageHandler:
     """Drop-in functional equivalent of ``AwsDiskUsageHandler``."""
 
+    SERVING_MODES = ("map", "dataframe")
+    GATE_KEYS = (
+        "max_malformed_frac",
+        "max_null_size_rows",
+        "max_negative_size_rows",
+        "min_rows",
+    )
+
     def __init__(
         self,
         spark: SparkSession,
@@ -99,6 +106,17 @@ class DiskUsageHandler:
         autostart: bool = True,
         quality_gate: dict | None = None,
     ) -> None:
+        # A typo must not silently pick the other serving path or
+        # publish every refresh ungated.
+        if serving not in self.SERVING_MODES:
+            raise ValueError(
+                f"unknown serving {serving!r}; expected one of {self.SERVING_MODES}"
+            )
+        unknown = sorted(set(quality_gate or ()) - set(self.GATE_KEYS))
+        if unknown:
+            raise ValueError(
+                f"unknown quality_gate keys {unknown}; expected some of {self.GATE_KEYS}"
+            )
         self._spark = spark
         self._inventory_path = inventory_path
         self._period = refresh_period_seconds
@@ -268,145 +286,3 @@ class DiskUsageHandler:
             raise NotFoundError(address)
         r = rows[0]
         return DiskUsage(r["address"], r["size_bytes"], r["number_files"])
-
-
-class StreamingDiskUsageRefresher:
-    """Structured-Streaming ingest of a growing inventory directory —
-    the streaming-native counterpart of :class:`DiskUsageHandler`'s
-    timer loop (SURVEY §1.1's refresh-stream row: ``foreachBatch`` +
-    atomic snapshot swap).
-
-    Each micro-batch sees only the NEW inventory files; their
-    per-address aggregate is merged into the running totals (SUM/COUNT
-    are abelian, same algebra as ``core.incremental_disk_usage``) and
-    the merged snapshot is published atomically.  Spark's aggregation
-    does the heavy lifting per batch; the merged per-ADDRESS aggregate
-    is driver-sized by design (the reference keeps it in a Go map) —
-    a 100 TB deployment with driver-outgrowing address cardinality
-    would swap the dict for a Delta/foreachBatch MERGE into a serving
-    table, keeping this class's batch logic unchanged.
-
-    Exactly-once note: the checkpoint tracks which files each batch
-    consumed; after a restart, finished batches are not re-delivered,
-    so the merge is applied once per file as long as the snapshot and
-    checkpoint are persisted together (here: in-memory snapshot +
-    fresh checkpoint per service instance).
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        inventory_dir: str,
-        checkpoint_dir: str,
-        *,
-        schema: str = "key string, size double",
-        max_files_per_trigger: int | None = None,
-        snapshot_dir: str | None = None,
-    ) -> None:
-        self._spark = spark
-        self._lock = threading.Lock()
-        self._map: dict[str, DiskUsage] = {}
-        self._snapshot_dir = snapshot_dir
-        self._last_batch_id = -1
-        if snapshot_dir is not None:
-            self._load_snapshot()
-        reader = spark.readStream.schema(schema)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(inventory_dir)
-        self._query = (
-            stream.writeStream.foreachBatch(self._merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-
-    def _load_snapshot(self) -> None:
-        """Rehydrate totals persisted by a previous service instance.
-
-        Restart contract (with ``snapshot_dir``): the snapshot is
-        written INSIDE foreachBatch — i.e. before the streaming
-        checkpoint commits the batch — and carries the batch id that
-        produced it.  Crash windows resolve exactly-once either way:
-        crash before the snapshot write replays the batch into the old
-        totals; crash after the write but before the checkpoint commit
-        replays a batch the snapshot already folded in, which
-        ``_merge_batch`` skips via the persisted batch id.
-        """
-        try:
-            rows = self._spark.read.parquet(self._snapshot_dir).collect()
-        except AnalysisException as exc:
-            # Only a MISSING snapshot path means "first start".  Any
-            # other failure (corrupt/partially-written/unreadable
-            # snapshot) must fail loudly: silently continuing with
-            # empty totals while the checkpoint suppresses replay
-            # would permanently undercount, breaking the documented
-            # exactly-once restart contract.
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                return
-            raise
-        self._map = {
-            r["address"]: DiskUsage(
-                r["address"], r["size_bytes"], r["number_files"]
-            )
-            for r in rows
-        }
-        if rows:
-            self._last_batch_id = rows[0]["last_batch_id"]
-
-    def _persist_snapshot(
-        self, merged: dict[str, DiskUsage], batch_id: int
-    ) -> None:
-        rows = [
-            (d.address, d.size_bytes, d.number_files, batch_id)
-            for d in merged.values()
-        ]
-        (
-            self._spark.createDataFrame(
-                rows,
-                "address string, size_bytes double, "
-                "number_files bigint, last_batch_id bigint",
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(self._snapshot_dir)
-        )
-
-    def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._last_batch_id:
-            # Replay of a batch the persisted snapshot already folded
-            # in (restart landed between snapshot write and checkpoint
-            # commit) — merging again would double-count.
-            return
-        delta = disk_usage(batch_df, round_to=None)
-        merged: dict[str, DiskUsage] = dict(self._map)
-        for r in delta.toLocalIterator():
-            prev = merged.get(r["address"])
-            if prev is None:
-                merged[r["address"]] = DiskUsage(
-                    r["address"], r["size_bytes"], r["number_files"]
-                )
-            else:
-                merged[r["address"]] = DiskUsage(
-                    r["address"],
-                    prev.size_bytes + r["size_bytes"],
-                    prev.number_files + r["number_files"],
-                )
-        if self._snapshot_dir is not None:
-            self._persist_snapshot(merged, batch_id)
-        with self._lock:
-            self._map = merged  # atomic swap (handler.go:252 analog)
-            self._last_batch_id = batch_id
-
-    def process_all_available(self) -> None:
-        """Block until every file currently in the directory has been
-        merged (test/drain hook)."""
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        self._query.stop()
-
-    def get_disk_usage(self, address: str) -> DiskUsage:
-        try:
-            return self._map[address]
-        except KeyError:
-            raise NotFoundError(address) from None

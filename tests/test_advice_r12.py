@@ -1,13 +1,7 @@
 """Pins for the three round-12 ADVICE items (ADVICE.md, round 12):
 
-1. (high) inventory_source StringStartsWith pushdown is now EXACT:
-   the old ``[v, v+'\\uffff')`` range rewrite silently dropped keys
-   whose first code point after the prefix is supplementary-plane
-   (> U+FFFF — emoji, musical symbols — which UTF-8/code-point order
-   puts ABOVE '\\uffff').  The Arrow expression is now
-   ``pc.starts_with(field, v) & (field >= v)``: row-accurate prefix
-   semantics, with the implied ``>=`` leg kept so row-group min/max
-   statistics still prune.
+1. (high) the custom inventory source's StringStartsWith pushdown;
+   the source was later retired with its pin.
 2. (low) bench.py's repeat loop tracks failure with an explicit flag
    instead of comparing the last rounded elapsed time against the
    60.0 s ERROR_PENALTY_SEC sentinel — a legitimate query that rounds
@@ -20,63 +14,11 @@
 """
 from __future__ import annotations
 
-import json
 import math
 import types
 
 import duckdb
 import pytest
-
-
-# ---------------------------------------------------------------------------
-# 1. exact prefix pushdown across the supplementary plane
-# ---------------------------------------------------------------------------
-
-def test_startswith_pushdown_supplementary_plane(spark, tmp_path):
-    """The ADVICE repro, end-to-end and at the reader unit level: for
-    prefix 'alice/' the scan must return BOTH 'alice/a' and
-    'alice/\U0001d11e-music' (U+1D11E sorts above '\\uffff', so the old
-    range rewrite lost it)."""
-    from pyspark.sql.datasource import StringStartsWith
-
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-        MailioInventoryReader,
-    )
-
-    spark.dataSource.register(MailioInventoryDataSource)
-    rows = [
-        ("alice/a", 10),
-        ("alice/\U0001d11e-music", 25),
-        ("bob/x", 20),
-    ]
-    d = tmp_path / "f0"
-    spark.createDataFrame(rows, "key string, size long").coalesce(1) \
-        .write.parquet(str(d))
-    key = str(next(p for p in d.iterdir()
-                   if p.name.endswith(".parquet")).relative_to(tmp_path))
-    mpath = tmp_path / "manifest.json"
-    mpath.write_text(json.dumps({"files": [{"key": key, "size": 0}]}))
-
-    # end-to-end through Spark: LIKE 'alice/%' becomes a pushed
-    # StringStartsWith and must stay row-accurate
-    got = sorted(
-        r.key
-        for r in spark.read.format("mailio_inventory")
-        .option("manifest", str(mpath)).load()
-        .filter("key LIKE 'alice/%'").collect()
-    )
-    assert got == ["alice/a", "alice/\U0001d11e-music"]
-
-    # unit level: the filter is consumed (exactness is the reader's
-    # responsibility, not Spark's re-evaluation) and the Arrow read
-    # returns every prefixed key
-    reader = MailioInventoryReader({"manifest": str(mpath)})
-    assert list(reader.pushFilters([StringStartsWith(("key",), "alice/")])) == []
-    part = reader.partitions()[0]
-    out = sorted(k for b in reader.read(part)
-                 for k in b.column("key").to_pylist())
-    assert out == ["alice/a", "alice/\U0001d11e-music"]
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,7 @@
 """Pins for the three round-13 ADVICE items (ADVICE.md, round 13):
 
-1. (low) StreamingVariantIngest.totals() on an EMPTY feed (no batch
-   ever committed, so ``{work_dir}/profile`` was never written) must
-   return an empty frame with the profile schema instead of raising
-   PATH_NOT_FOUND from the parquet read.
+1. (low) StreamingVariantIngest.totals() on an empty feed; the
+   streaming ingest was later retired with its pins.
 2. (low) operators/intervals.interval_join guards inverted intervals
    (end < start) BEFORE the bin explode: F.sequence silently emits a
    DESCENDING bin list for them — every spurious row later filtered,
@@ -19,66 +17,8 @@
 """
 from __future__ import annotations
 
-import pytest
 
 from conftest import SF_CORRECT, SF_SMOKE, normalize
-
-
-# ---------------------------------------------------------------------------
-# 1. empty-feed totals() returns the profile schema, not PATH_NOT_FOUND
-# ---------------------------------------------------------------------------
-
-def test_variant_ingest_totals_on_empty_feed(spark, tmp_path):
-    """A feed directory with a matching glob but zero files drains
-    without committing a batch; totals() must come back empty with
-    the full admission-report schema."""
-    from go_mailio_diskusage_handler_spark.streaming.variant_ingest import (
-        StreamingVariantIngest,
-    )
-
-    feed = tmp_path / "feed" / "day_0"
-    feed.mkdir(parents=True)  # exists but holds no parquet
-    ing = StreamingVariantIngest(
-        spark,
-        str(tmp_path / "feed" / "day_*"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "work"),
-    )
-    try:
-        ing.await_drained()
-        got = ing.totals()
-        assert got.count() == 0
-        assert got.columns == [
-            "event_type", "n_rows", "n_malformed", "n_flat", "n_nested",
-            "n_arr", "sum_vals",
-        ]
-        # and the schema is the real profile schema, so a caller can
-        # union it with a non-empty report without a cast
-        assert [f.dataType.simpleString() for f in got.schema.fields] == [
-            "string", "bigint", "bigint", "bigint", "bigint", "bigint",
-            "bigint",
-        ]
-    finally:
-        ing.stop()
-
-
-def test_variant_ingest_totals_reraises_foreign_errors(spark, tmp_path):
-    """The guard is scoped to PATH_NOT_FOUND only: a profile path that
-    exists but holds garbage must still raise, not masquerade as an
-    empty feed."""
-    from go_mailio_diskusage_handler_spark.streaming.variant_ingest import (
-        StreamingVariantIngest,
-    )
-
-    ing = StreamingVariantIngest.__new__(StreamingVariantIngest)
-    ing._spark = spark
-    ing._work_dir = str(tmp_path / "work")
-    profile = tmp_path / "work" / "profile"
-    profile.mkdir(parents=True)
-    (profile / "junk.parquet").write_text("not parquet at all")
-    with pytest.raises(Exception) as ei:
-        ing.totals().collect()
-    assert "PATH_NOT_FOUND" not in str(ei.value)
 
 
 # ---------------------------------------------------------------------------

@@ -333,53 +333,6 @@ def test_corrupt_file_skipped_not_fatal(spark, tmp_path):
     assert df.count() == 2
 
 
-def test_python_datasource_reads_manifest_inventory(spark, tmp_path):
-    """Custom Python DataSource (Spark 4 API): the manifest-driven
-    inventory as spark.read.format('mailio_inventory') — one input
-    partition PER manifest file entry (the reference reads them
-    sequentially, handler.go:83-91), rows identical to reading the
-    listed files directly, and the aggregate identical through
-    core.disk_usage."""
-    import json
-
-    from go_mailio_diskusage_handler_spark.operators import core
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-    )
-
-    spark.dataSource.register(MailioInventoryDataSource)
-    batches = [
-        [("alice/a.txt", 10), ("bob/b.txt", 20)],
-        [("alice/c.txt", 5), ("malformed", 7)],
-    ]
-    keys = []
-    for i, rows in enumerate(batches):
-        d = tmp_path / f"f{i}"
-        spark.createDataFrame(rows, "key string, size long").coalesce(1).write.parquet(
-            str(d)
-        )
-        keys.append(
-            str(next(p for p in d.iterdir() if p.name.endswith(".parquet")).relative_to(tmp_path))
-        )
-    manifest = {"sourceBucket": "b", "files": [{"key": k, "size": 0} for k in keys]}
-    mpath = tmp_path / "manifest.json"
-    mpath.write_text(json.dumps(manifest))
-    df = (
-        spark.read.format("mailio_inventory")
-        .option("manifest", str(mpath))
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 2  # one per listed file
-    got = sorted(tuple(r) for r in df.collect())
-    want = sorted(t for rows in batches for t in rows)
-    assert got == want
-    agg = {
-        r.address: (r.size_bytes, r.number_files)
-        for r in core.disk_usage(df).collect()
-    }
-    assert agg == {"alice": (15.0, 2), "bob": (20.0, 1)}
-
-
 REF_FILE_SCHEMA = (
     "message s3.inventory { required binary bucket (STRING); "
     "required binary key (STRING); optional binary version_id (STRING); "
@@ -406,34 +359,28 @@ def test_file_schema_parses_reference_message():
     assert cols["last_modified_date"] == "timestamp_ntz"
 
 
-def test_enforce_file_schema_detects_drift(spark):
-    """Good data passes; a re-typed size and a missing key both raise
-    with the offending column named — the check the reference
-    declares (carries fileSchema) but never performs."""
-    import pytest
+def _unused_download(bucket, key):
+    raise AssertionError("no refresh runs in these tests")
 
-    from go_mailio_diskusage_handler_spark.sources.manifest import (
-        SchemaDriftError,
-        enforce_file_schema,
-    )
 
-    good = spark.createDataFrame(
-        [("b", "u/a", 3)], "bucket string, key string, size bigint"
-    )
-    enforce_file_schema(good, REF_FILE_SCHEMA)  # no raise
+def test_unknown_serving_mode_rejected_at_construction(spark):
+    """A typo must not silently pick the other serving path."""
+    with pytest.raises(ValueError, match=r"'Map'.*\('map', 'dataframe'\)"):
+        DiskUsageHandler(
+            spark, "s3://bkt/pfx", 3600, _unused_download,
+            serving="Map", eager=False, autostart=False,
+        )
 
-    retyped = spark.createDataFrame(
-        [("b", "u/a", "3")], "bucket string, key string, size string"
-    )
-    with pytest.raises(SchemaDriftError, match="'size'"):
-        enforce_file_schema(retyped, REF_FILE_SCHEMA)
 
-    missing = spark.createDataFrame([("b", 3)], "bucket string, size bigint")
-    with pytest.raises(SchemaDriftError, match="'key'"):
-        enforce_file_schema(missing, REF_FILE_SCHEMA)
-
-    with pytest.raises(SchemaDriftError, match="fileSchema"):
-        enforce_file_schema(good, "")
+def test_unknown_quality_gate_key_rejected_at_construction(spark):
+    """A misspelled gate key must not publish every refresh ungated:
+    the error names the bad key and the accepted ones."""
+    with pytest.raises(ValueError, match=r"\['max_null_rows'\].*max_null_size_rows"):
+        DiskUsageHandler(
+            spark, "s3://bkt/pfx", 3600, _unused_download,
+            quality_gate={"max_null_rows": 0, "min_rows": 1},
+            eager=False, autostart=False,
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -511,244 +458,3 @@ def test_quality_gate_refuses_bad_refresh_keeps_snapshot(spark, tmp_path, servin
     assert h.last_rejection is None
     assert h.get_disk_usage("bob").size_bytes == 5
     h.stop()
-
-
-def test_python_datasource_write_read_round_trip(spark, tmp_path):
-    """The writer half of the custom format: each task writes one
-    parquet file and returns its manifest entry; the driver commits
-    manifest.json ATOMICALLY only after every task succeeded.  Reading
-    the directory back through the same format must reproduce the
-    rows exactly, and the manifest must describe the real files
-    (size + md5 verified against disk)."""
-    import hashlib
-    import json
-
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-    )
-
-    spark.dataSource.register(MailioInventoryDataSource)
-    rows = [("alice/a.txt", 10), ("bob/b.txt", 20), ("alice/c.txt", 5)]
-    out = tmp_path / "inv_out"
-    (
-        spark.createDataFrame(rows, "key string, size long")
-        .repartition(2)
-        .write.format("mailio_inventory")
-        .option("path", str(out))
-        .mode("append")
-        .save()
-    )
-    manifest = json.loads((out / "manifest.json").read_text())
-    assert manifest["sourceBucket"] == str(out)
-    assert len(manifest["files"]) == 2  # one entry per write task
-    for entry in manifest["files"]:
-        raw = (out / entry["key"]).read_bytes()
-        assert entry["size"] == len(raw)
-        assert entry["MD5checksum"] == hashlib.md5(raw).hexdigest()
-    back = (
-        spark.read.format("mailio_inventory")
-        .option("manifest", str(out / "manifest.json"))
-        .load()
-    )
-    assert sorted(tuple(r) for r in back.collect()) == sorted(rows)
-
-
-def test_python_datasource_stream_writer_commits_per_batch(spark, tmp_path):
-    """writeStream.format('mailio_inventory'): each micro-batch's
-    files are described by an atomically-committed per-batch manifest
-    (manifest-batch-{id}.json), so a reader sees only fully-committed
-    batches; rows written across all batches equal the streamed
-    input."""
-    import json
-
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-    )
-
-    spark.dataSource.register(MailioInventoryDataSource)
-    src = tmp_path / "src"
-    src.mkdir()
-    rows = [("alice/a.txt", 10), ("bob/b.txt", 20), ("alice/c.txt", 5)]
-    spark.createDataFrame(rows, "key string, size long").coalesce(1).write.parquet(
-        str(src / "batch0.parquet")
-    )
-    out = tmp_path / "sink"
-    q = (
-        spark.readStream.schema("key string, size long")
-        .parquet(str(src) + "/*")
-        .writeStream.format("mailio_inventory")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    manifests = sorted(out.glob("manifest-batch-*.json"))
-    assert manifests, "no per-batch manifest committed"
-    listed = []
-    for mp in manifests:
-        man = json.loads(mp.read_text())
-        for entry in man["files"]:
-            assert (out / entry["key"]).exists()
-            listed.append(entry["key"])
-    got = sorted(
-        tuple(r)
-        for r in spark.read.schema("key string, size long")
-        .parquet(*[str(out / k) for k in listed])
-        .collect()
-    )
-    assert got == sorted(rows)
-
-
-def test_python_datasource_append_accumulates_and_overwrite_replaces(spark, tmp_path):
-    """Save-mode semantics: append merges new manifest entries with
-    the existing ones (per-job file tokens prevent collisions);
-    overwrite removes the previously listed files and publishes only
-    the new job's entries."""
-    import json
-
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-    )
-
-    spark.dataSource.register(MailioInventoryDataSource)
-    out = tmp_path / "inv"
-
-    def write(rows, mode):
-        (
-            spark.createDataFrame(rows, "key string, size long")
-            .coalesce(1)
-            .write.format("mailio_inventory")
-            .option("path", str(out))
-            .mode(mode)
-            .save()
-        )
-
-    def read_back():
-        return sorted(
-            tuple(r)
-            for r in spark.read.format("mailio_inventory")
-            .option("manifest", str(out / "manifest.json"))
-            .load()
-            .collect()
-        )
-
-    a = [("alice/a", 1), ("bob/b", 2)]
-    b = [("carol/c", 3)]
-    write(a, "append")
-    write(b, "append")
-    assert read_back() == sorted(a + b)  # append accumulated
-    c = [("dave/d", 4)]
-    write(c, "overwrite")
-    assert read_back() == sorted(c)  # overwrite replaced
-    man = json.loads((out / "manifest.json").read_text())
-    listed = {e["key"] for e in man["files"]}
-    on_disk = {p.name for p in out.glob("data-*.parquet")}
-    assert listed == on_disk, "overwrite left unlisted files behind"
-
-
-def test_stream_writer_vacuum_removes_unlisted_files(spark, tmp_path):
-    """vacuum_uncommitted removes exactly the data files no manifest
-    lists (replay/abort orphans) and leaves committed ones alone."""
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-        vacuum_uncommitted,
-    )
-
-    spark.dataSource.register(MailioInventoryDataSource)
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(
-        [("alice/a", 1)], "key string, size long"
-    ).coalesce(1).write.parquet(str(src / "b0.parquet"))
-    out = tmp_path / "sink"
-    q = (
-        spark.readStream.schema("key string, size long")
-        .parquet(str(src) + "/*")
-        .writeStream.format("mailio_inventory")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    orphan = out / "data-deadbeef-999999-00000.parquet"
-    orphan.write_bytes(b"PAR1 orphan from a failed attempt")
-    committed_before = {p.name for p in out.glob("data-*.parquet")} - {orphan.name}
-    # default retention spares a FRESH unlisted file (it could belong
-    # to an in-flight job whose driver has not committed yet)
-    assert vacuum_uncommitted(str(out)) == []
-    assert orphan.exists()
-    removed = vacuum_uncommitted(str(out), min_age_seconds=0.0)
-    assert removed == [orphan.name]
-    assert not orphan.exists()
-    assert {p.name for p in out.glob("data-*.parquet")} == committed_before
-
-
-def test_python_datasource_filter_pushdown(spark, tmp_path):
-    """Spark 4.1 Python-source filter pushdown (SPARK-48788): the
-    comparison / IN / prefix filters on key/size are consumed by
-    pushFilters, evaluated row-accurately inside the pyarrow read
-    (row-group stats prune, Arrow kernel filters), and the filtered
-    read returns exactly what post-scan filtering would.  Untranslatable
-    filters are handed back to Spark, so arbitrary predicates stay
-    correct."""
-    import json
-
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        StringStartsWith,
-    )
-
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-        MailioInventoryReader,
-    )
-
-    spark.dataSource.register(MailioInventoryDataSource)
-    rows = [("alice/a.txt", 10), ("alice/b.txt", 25), ("bob/b.txt", 20),
-            ("carol/c.txt", 40)]
-    d = tmp_path / "f0"
-    spark.createDataFrame(rows, "key string, size long").coalesce(1) \
-        .write.parquet(str(d))
-    key = str(next(p for p in d.iterdir()
-                   if p.name.endswith(".parquet")).relative_to(tmp_path))
-    mpath = tmp_path / "manifest.json"
-    mpath.write_text(json.dumps({"files": [{"key": key, "size": 0}]}))
-
-    def load():
-        return (spark.read.format("mailio_inventory")
-                .option("manifest", str(mpath)).load())
-
-    # end-to-end through Spark: every predicate class, equal results
-    got = sorted(tuple(r) for r in load()
-                 .filter("size > 15 AND key LIKE 'b%'").collect())
-    assert got == [("bob/b.txt", 20)]
-    got = sorted(tuple(r) for r in load().filter("size = 40").collect())
-    assert got == [("carol/c.txt", 40)]
-    got = sorted(tuple(r) for r in load()
-                 .filter("key IN ('alice/a.txt', 'bob/b.txt')").collect())
-    assert got == [("alice/a.txt", 10), ("bob/b.txt", 20)]
-
-    # unit contract: translatable filters are CONSUMED (not returned),
-    # untranslatable ones come back by reference
-    reader = MailioInventoryReader({"manifest": str(mpath)})
-    f_push = GreaterThan(("size",), 15)
-    f_keep = EqualTo(("nonexistent",), 1)
-    leftover = list(reader.pushFilters([f_push, f_keep]))
-    assert leftover == [f_keep]
-    assert reader._pushed == [(">", "size", 15)]
-    # and the pushed expression filters the actual Arrow read
-    part = reader.partitions()[0]
-    out = [t for b in reader.read(part) for t in
-           zip(b.column("key").to_pylist(), b.column("size").to_pylist())]
-    assert sorted(out) == [("alice/b.txt", 25), ("bob/b.txt", 20),
-                           ("carol/c.txt", 40)]
-    # prefix pushdown is exact (pc.starts_with + a stats-prunable >= leg)
-    reader2 = MailioInventoryReader({"manifest": str(mpath)})
-    assert list(reader2.pushFilters([StringStartsWith(("key",), "alice/")])) == []
-    part2 = reader2.partitions()[0]
-    out2 = [k for b in reader2.read(part2)
-            for k in b.column("key").to_pylist()]
-    assert sorted(out2) == ["alice/a.txt", "alice/b.txt"]

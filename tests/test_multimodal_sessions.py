@@ -56,43 +56,6 @@ def test_decode_path_has_no_shuffle(spark):
     assert plans.shuffle_count(df) == 0, plans.executed_plan(df)
 
 
-def test_decode_media_real_codecs_probe(spark):
-    """Dep-probed integration hook (round-9 verdict): with PIL present
-    the real-codec path must decode an actual PNG's true dimensions
-    through the same mapInPandas plumbing; without it (this sandbox)
-    the gate raises NotImplementedError and the fake path stays the
-    tested default."""
-    docs = load_table(spark, SF_CORRECT, "documents")
-    try:
-        from PIL import Image
-    except ImportError:
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_media(docs, real_codecs=True)
-        return
-    import io
-
-    img = Image.new("RGB", (37, 21))
-    buf = io.BytesIO()
-    img.save(buf, format="PNG")
-    # a real binary payload (media_table's text->binary cast is utf-8
-    # and would mangle PNG bytes, so feed the media shape directly —
-    # the same frame ingest_binary_files produces)
-    media = spark.createDataFrame(
-        [(3, "image", bytearray(buf.getvalue())),
-         (4, "audio", bytearray(b"RIFFnotdecodable"))],
-        "doc_id long, media_type string, payload binary",
-    )
-    rows = {
-        r.doc_id: r
-        for r in media.mapInPandas(
-            multimodal._real_image_decode_batches, multimodal.DECODE_SCHEMA
-        ).collect()
-    }
-    assert (rows[3].width, rows[3].height) == (37, 21)
-    # non-image rows keep the deterministic fake dimensions
-    assert rows[4].width == 16 + rows[4].n_bytes % 625
-
-
 def test_funnel_order_and_strictness(spark):
     """Hand-built sequences pin the ordered-funnel semantics the dense
     fixture can't discriminate (every fixture user completes all 3):

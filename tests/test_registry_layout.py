@@ -2,10 +2,13 @@
 ``queries.FAMILY`` names for its prefix, only ``registry.py`` reaches
 into ``queries/`` from the rest of the package, and the registry order
 depends on the query names and the driver's record, not on which
-module registers a query or in what order the modules are imported."""
+module registers a query or in what order the modules are imported.
+Every top-level package definition is reachable from the registry, the
+serving handler or a benchmark entry point."""
 from __future__ import annotations
 
 import ast
+import glob
 import json
 import os
 import random
@@ -114,3 +117,171 @@ def test_driver_order_ignores_registration_order(seed):
         oracle_round = {n: v["round"] for n, v in json.load(fh).items()}
     last = freshness.last_checked(REPO_ROOT)
     assert freshness.driver_order(shuffled, last, oracle_round) == names
+
+
+# Top-level package definitions that no root reaches, each kept for a
+# reason a test states.
+REACHABILITY_ALLOWED = {
+    "session.configure_s3a": "the reference's real S3 I/O; the S3 integration test covers it",
+    "sources.manifest.boto3_download": "the reference's real S3 I/O; the S3 integration test covers it",
+    "plans.executed_plan": "plan-inspection helper for tests",
+    "plans.formatted": "plan-inspection helper for tests",
+    "plans.has_broadcast_join": "plan-inspection helper for tests",
+    "plans.shuffle_count": "plan-inspection helper for tests",
+    "sources.tables.invalidate_view_memo": "test fixture: drops the per-session view memo",
+    "functions.udfs.per_user_zscores_pandas": "pandas reference the Arrow z-score path is checked against",
+    "functions.udfs._zscore_group": "pandas reference the Arrow z-score path is checked against",
+    "caching.derive": "own_cache's documented escape hatch",
+    "caching.release_caches": "own_cache's documented escape hatch",
+}
+
+
+class _Module:
+    """One parsed module: its top-level bindings, the code that runs on
+    import, and every name its imports bind (nested imports included)."""
+
+    def __init__(self, name: str, path: str, package: str, modules) -> None:
+        with open(path) as fh:
+            self.tree = ast.parse(fh.read())
+        self.name = name
+        self.defs: dict[str, ast.stmt] = {}
+        self.loose: list[ast.stmt] = []
+        for node in _flat_body(self.tree.body):
+            bound = _bound_names(node)
+            self.defs.update(dict.fromkeys(bound, node))
+            if not bound and not isinstance(node, (ast.Import, ast.ImportFrom)):
+                self.loose.append(node)
+        self.aliases: dict[str, set[tuple[str, str | None]]] = {}
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    local = a.asname or a.name.split(".")[0]
+                    self.aliases.setdefault(local, set()).add(
+                        (a.name if a.asname else local, None)
+                    )
+            elif isinstance(node, ast.ImportFrom):
+                parts = package.split(".")[: len(package.split(".")) - node.level + 1]
+                base = ".".join(
+                    (parts if node.level else []) + ([node.module] if node.module else [])
+                )
+                for a in node.names:
+                    sub = f"{base}.{a.name}"
+                    target = (sub, None) if sub in modules else (base, a.name)
+                    self.aliases.setdefault(a.asname or a.name, set()).add(target)
+
+
+def _flat_body(body):
+    for node in body:
+        if isinstance(node, ast.If):
+            yield from _flat_body(node.body + node.orelse)
+        elif isinstance(node, ast.Try):
+            yield from _flat_body(node.body + node.orelse + node.finalbody)
+            for h in node.handlers:
+                yield from _flat_body(h.body)
+        else:
+            yield node
+
+
+def _bound_names(node) -> list[str]:
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    return []
+
+
+def _unreached_definitions() -> dict[str, int]:
+    """``module.name`` -> line count of every top-level package
+    definition that no root reaches by name.  The roots: the query
+    modules, ``registry.py``, ``DiskUsageHandler``, ``bench.py``,
+    ``__spark_entry__.py`` and ``perfbench/``.  A reached definition
+    reaches what its body names, resolved through its module's own
+    bindings and imports; importing a module runs its top-level code."""
+    paths = {}
+    for path in glob.glob(os.path.join(PKG_DIR, "**", "*.py"), recursive=True):
+        parts = os.path.relpath(path, REPO_ROOT)[:-3].split(os.sep)
+        paths[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = path
+    mods = {}
+    for name, path in paths.items():
+        package = name if path.endswith("__init__.py") else name.rpartition(".")[0]
+        mods[name] = _Module(name, path, package, paths)
+    reached: set[tuple[str, str]] = set()
+    imported: set[str] = set()
+    todo: list[tuple[_Module, ast.AST]] = []
+
+    def mark(mod: str, name: str | None, seen=frozenset()) -> None:
+        parts = mod.split(".")
+        for i in range(1, len(parts) + 1):
+            pm = ".".join(parts[:i])
+            if pm in mods and pm not in imported:
+                imported.add(pm)
+                todo.extend((mods[pm], node) for node in mods[pm].loose)
+        m = mods.get(mod)
+        if m is None or name is None or (mod, name) in seen:
+            return
+        if name in m.defs:
+            if (mod, name) not in reached:
+                reached.add((mod, name))
+                todo.append((m, m.defs[name]))
+        for target in m.aliases.get(name, ()):  # a re-export
+            mark(*target, seen=seen | {(mod, name)})
+
+    def resolve(m: _Module, ident: str):
+        return {(m.name, ident)} if ident in m.defs else m.aliases.get(ident, set())
+
+    for name in mods:
+        if name.startswith(f"{pkg.__name__}.queries") or name == f"{pkg.__name__}.registry":
+            for d in [None, *mods[name].defs]:
+                mark(name, d)
+    mark(f"{pkg.__name__}.streaming.refresh", "DiskUsageHandler")
+    for path in [
+        os.path.join(REPO_ROOT, "bench.py"),
+        os.path.join(REPO_ROOT, "__spark_entry__.py"),
+        *glob.glob(os.path.join(REPO_ROOT, "perfbench", "*.py")),
+    ]:
+        if not os.path.basename(path).startswith("test_"):
+            entry = _Module(os.path.basename(path)[:-3], path, "", paths)
+            todo.append((entry, entry.tree))
+    while todo:
+        m, node = todo.pop()
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Name):
+                for target in resolve(m, sub.id):
+                    mark(*target)
+            elif isinstance(sub, ast.Attribute):
+                chain = []
+                base = sub
+                while isinstance(base, ast.Attribute):
+                    chain.append(base.attr)
+                    base = base.value
+                if not isinstance(base, ast.Name):
+                    continue
+                targets = resolve(m, base.id)
+                for attr in reversed(chain):  # `mod.sub.name` walks module by module
+                    targets = {
+                        (f"{mod}.{attr}", None) if f"{mod}.{attr}" in mods else (mod, attr)
+                        for mod, name in targets
+                        if name is None
+                    }
+                    for target in targets:
+                        mark(*target)
+    out = {}
+    for name, m in mods.items():
+        for d, node in m.defs.items():
+            if (name, d) not in reached and not (d.startswith("__") and d.endswith("__")):
+                rel = name[len(pkg.__name__) + 1:]
+                out[f"{rel}.{d}"] = node.end_lineno - node.lineno + 1
+    return out
+
+
+def test_package_definitions_reachable_from_roots():
+    """Code that only tests reach is not part of the engine: it either
+    gains a caller among the roots or goes, with its tests."""
+    unreached = _unreached_definitions()
+    assert set(REACHABILITY_ALLOWED) <= set(unreached), "stale allow-list entries"
+    offenders = {k: v for k, v in unreached.items() if k not in REACHABILITY_ALLOWED}
+    assert not offenders, (
+        f"{sum(offenders.values())} lines of package definitions reached by "
+        f"no root: {sorted(offenders)}"
+    )

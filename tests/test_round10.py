@@ -1,6 +1,6 @@
-"""Round-10 regression tests: the full-outer stream-stream interval
-join (the last cell of the join matrix next to round 9's left-outer),
-its batch registry twin, and the cheapened similarity-oracle helpers.
+"""Round-10 regression tests: the full-outer interval join (run as a
+batch frame by its registry query) and the cheapened similarity-oracle
+helpers.
 """
 from __future__ import annotations
 
@@ -59,94 +59,6 @@ def test_full_outer_join_covers_both_sides(spark):
             assert r.purchase_id is not None and r.click_ts is None
 
 
-def test_full_outer_stream_join_emits_unmatched_after_watermark(spark, tmp_path):
-    """FULL OUTER stream-stream interval join: matched rows emit
-    promptly; null-padded rows of BOTH directions (organic purchases
-    AND never-converted clicks) emit at state EVICTION, so a drained
-    run withholds the final watermark+horizon on both sides — and a
-    later file advancing the watermark flushes them, after which
-    stream == batch exactly."""
-    import shutil
-
-    from go_mailio_diskusage_handler_spark.sources.tables import load_table
-    from go_mailio_diskusage_handler_spark.streaming import windows
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    shutil.copy(f"{SF_CORRECT}/../sf0.001/events.parquet", d / "b0.parquet")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "sink")
-
-    def run_once():
-        # parquet sink: the memory sink cannot recover from a
-        # checkpoint, and the second phase MUST resume the first
-        # phase's state to flush its held-back outer rows
-        stream = windows.read_event_stream(spark, str(d))
-        q = (
-            windows.attributed_purchases_full_outer(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-        return {
-            (r.purchase_id, r.click_id)
-            for r in spark.read.parquet(out).collect()
-        }
-
-    batch_events = load_table(
-        spark, f"{SF_CORRECT}/../sf0.001", "events"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    want = {
-        (r.purchase_id, r.click_id)
-        for r in windows.attributed_purchases_full_outer(batch_events).collect()
-    }
-
-    got1 = run_once()
-    held_back = want - got1
-    assert got1 <= want  # nothing emits that batch would not produce
-    assert held_back, "expected tail-horizon rows to be withheld"
-    # only null-padded rows wait, and BOTH outer directions are present
-    assert all(p is None or c is None for p, c in held_back)
-    assert any(c is None for _, c in held_back), "no held-back purchase"
-    assert any(p is None for p, _ in held_back), "no held-back click"
-
-    # a later file advances the watermark past the held-back windows.
-    # It must carry BOTH event types: the query watermark is the MIN
-    # over the two withWatermark nodes and each advances only on rows
-    # reaching its branch (same shape as the left-outer test).  The
-    # future pair uses distinct users so it cannot match anything.
-    max_ts = batch_events.agg(F.max("ts")).collect()[0][0]
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    future = pd.DataFrame(
-        {
-            "event_id": [10_000_000, 10_000_001],
-            "ts": [pd.Timestamp(max_ts) + pd.Timedelta(hours=6)] * 2,
-            "user_id": [999_998, 999_999],  # distinct users: no match
-            "event_type": ["click", "purchase"],
-            "value": [0.0, 1.0],
-            "props": ["{}", "{}"],
-        }
-    )
-    t = pa.Table.from_pandas(future)
-    pq.write_table(
-        t.set_column(1, "ts", t["ts"].cast(pa.timestamp("us"))),
-        d / "b1.parquet",
-    )
-    got2 = run_once()
-    # every original null-padded row flushed; the future click and
-    # purchase are the NEW held-back tail (their join windows are
-    # still open), so the sink now equals batch over the original file
-    assert got2 == want
-
-
 # ---------------------------------------------------------------------------
 # Round-10 addition: cogroup(...).applyInArrow tier
 # ---------------------------------------------------------------------------
@@ -187,9 +99,8 @@ def test_cogroup_arrow_covers_one_sided_users(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-10 addition: the remaining stream-join-matrix cells
-# (leftSemi + rightOuter; Spark supports exactly these five types
-# for stream-stream joins)
+# Round-10 addition: the semi join and the full outer join's click
+# side
 # ---------------------------------------------------------------------------
 
 
@@ -218,139 +129,18 @@ def test_semi_join_is_deduplicated_inner_left_side(spark):
 
 
 def test_right_outer_is_full_outer_minus_organic_purchases(spark):
-    """rightOuter == fullOuter restricted to rows with a click side —
-    the click-funnel mirror of the left join."""
+    """The full outer join's click side: clicks that never converted
+    appear null-padded, and ``user_id`` is coalesced across the sides
+    so no row lacks its key."""
     from go_mailio_diskusage_handler_spark.sources.tables import load_table
     from go_mailio_diskusage_handler_spark.streaming import windows
 
     events = load_table(spark, f"{SF_CORRECT}/../sf0.001", "events")
-    right = {(r.purchase_id, r.click_id, r.user_id) for r in
-             windows.attributed_clicks_right_outer(events).collect()}
     full = {(r.purchase_id, r.click_id, r.user_id) for r in
             windows.attributed_purchases_full_outer(events).collect()}
-    assert right == {t for t in full if t[1] is not None}
-    assert any(p is None for p, _, _ in right)  # unconverted clicks present
-    assert all(u is not None for _, _, u in right)
-
-
-def test_semi_stream_join_matches_batch_promptly(spark, tmp_path):
-    """leftSemi stream-stream join: matched purchases emit PROMPTLY
-    (no eviction wait), so a single drained run over one file already
-    equals batch — the cheapest cell of the matrix."""
-    import shutil
-
-    from go_mailio_diskusage_handler_spark.sources.tables import load_table
-    from go_mailio_diskusage_handler_spark.streaming import windows
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    shutil.copy(f"{SF_CORRECT}/../sf0.001/events.parquet", d / "b0.parquet")
-    stream = windows.read_event_stream(spark, str(d))
-    q = (
-        windows.attributed_purchases_semi(stream)
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "sink"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    got = {r.purchase_id
-           for r in spark.read.parquet(str(tmp_path / "sink")).collect()}
-    batch_events = load_table(
-        spark, f"{SF_CORRECT}/../sf0.001", "events"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    want = {r.purchase_id for r in
-            windows.attributed_purchases_semi(batch_events).collect()}
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# Round-10 addition: streaming observed metrics + query listener
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_observed_metrics_and_listener(spark, tmp_path):
-    """observe() on a stream: per-micro-batch metrics surface in
-    StreamingQueryProgress.observedMetrics AND through a registered
-    StreamingQueryListener; summed across micro-batches they equal the
-    batch aggregate over the same file — monitoring with zero extra
-    passes over the input."""
-    import shutil
-
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    from go_mailio_diskusage_handler_spark.sources.tables import load_table
-    from go_mailio_diskusage_handler_spark.streaming import windows
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    shutil.copy(f"{SF_CORRECT}/../sf0.001/events.parquet", d / "b0.parquet")
-
-    captured = []
-
-    class Capture(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            om = event.progress.observedMetrics
-            if "ingest" in om:
-                captured.append(om["ingest"].asDict())
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    listener = Capture()
-    spark.streams.addListener(listener)
-    try:
-        stream = windows.with_ingest_observation(
-            windows.read_event_stream(spark, str(d))
-        )
-        q = (
-            windows.windowed_counts(stream)
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "sink"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # lastProgress carries the final batch's observed metrics too
-        last = q.lastProgress
-        q.stop()
-        import time
-
-        deadline = time.time() + 30  # listener events deliver async
-        while not captured and time.time() < deadline:
-            time.sleep(0.5)
-    finally:
-        spark.streams.removeListener(listener)
-
-    events = load_table(spark, f"{SF_CORRECT}/../sf0.001", "events")
-    want = events.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("user_id").isNull().cast("long")).alias("nu"),
-        F.round(F.sum("value"), 2).alias("vs"),
-    ).collect()[0]
-    # sum() of an all-NULL column observes as None in that micro-batch
-    got_rows = sum(m["n_rows"] or 0 for m in captured)
-    got_nulls = sum(m["null_users"] or 0 for m in captured)
-    got_sum = round(sum(m["value_sum"] or 0.0 for m in captured), 2)
-    assert got_rows == want.n
-    assert got_nulls == (want.nu or 0)
-    assert abs(got_sum - want.vs) < 0.05  # per-batch rounding drift
-    # the progress object exposes the same metrics without a listener
-    if last is not None and "observedMetrics" in last:
-        om = last["observedMetrics"].get("ingest")
-        if om:
-            assert om["n_rows"] <= want.n
+    # unconverted clicks present
+    assert any(p is None and c is not None for p, c, _ in full)
+    assert all(u is not None for _, _, u in full)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,5 @@
 """Round-13 additions: oracle parity + plan/semantic pins for
-``events_interval_join`` and ``scalar_variant_ingest``, plus the
-stream≡batch contract of the VARIANT ingest twin.
+``events_interval_join`` and ``scalar_variant_ingest``.
 """
 from __future__ import annotations
 
@@ -95,71 +94,6 @@ def test_variant_ingest_is_python_free(spark):
     df = registry.QUERIES["scalar_variant_ingest"](spark, SF_CORRECT)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
-
-
-def test_streaming_variant_ingest_stream_equals_batch(spark, tmp_path):
-    """The stream twin's accumulated totals() must equal the batch
-    profile over the union of everything ingested — the mergeability
-    contract that makes a streaming admission gate sound."""
-    from pyspark.sql import functions as F
-
-    from go_mailio_diskusage_handler_spark.functions.scalars import (
-        variant_profile_frame,
-    )
-    from go_mailio_diskusage_handler_spark.sources.tables import load_table
-    from go_mailio_diskusage_handler_spark.streaming.variant_ingest import (
-        StreamingVariantIngest,
-    )
-
-    events = load_table(spark, SF_SMOKE, "events").select(
-        "event_id", "user_id", "event_type", "props"
-    )
-    feed = tmp_path / "feed"
-    # three arrival files -> with maxFilesPerTrigger=1, three batches
-    for i in range(3):
-        events.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
-            str(feed / f"day_{i}")
-        )
-    ing = StreamingVariantIngest(
-        spark,
-        str(feed / "day_*"),
-        str(tmp_path / "ckpt"),
-        str(tmp_path / "work"),
-        max_files_per_trigger=1,
-    )
-    try:
-        ing.await_drained()
-        got = ing.totals()
-        cols = sorted(got.columns)
-        want = variant_profile_frame(events)
-        assert sorted(want.columns) == cols
-        a = normalize([tuple(r) for r in got.select(*cols).collect()])
-        b = normalize([tuple(r) for r in want.select(*cols).collect()])
-        assert a == b
-        # >1 batch actually ran (the twin exercised incremental merge,
-        # not one big batch)
-        n_parts = (
-            spark.read.parquet(str(tmp_path / "work" / "profile"))
-            .select("ingest_batch_id").distinct().count()
-        )
-        assert n_parts == 3
-        # replay idempotence: re-delivering the SAME batch id overwrites
-        # its own partition (dynamic partition overwrite) instead of
-        # double-counting — totals after the 1st and 2nd delivery match
-        replay = spark.read.parquet(str(feed / "day_0")).select(
-            "event_id", "user_id", "event_type", "props"
-        )
-        ing._ingest_batch(replay, 99)
-        once = normalize(
-            [tuple(r) for r in ing.totals().select(*cols).collect()]
-        )
-        ing._ingest_batch(replay, 99)
-        twice = normalize(
-            [tuple(r) for r in ing.totals().select(*cols).collect()]
-        )
-        assert once == twice and once != a  # it DID land, exactly once
-    finally:
-        ing.stop()
 
 
 def test_interval_join_operator_bin_width_invariance(spark):

@@ -324,135 +324,8 @@ def test_kll_quantiles_null_event_type_dropped_in_both_engines(spark):
 
 
 # ---------------------------------------------------------------------------
-# Streaming Python DataSource: incremental manifest-directory ingest
+# Novelty gate: the incremental path equals the batch path
 # ---------------------------------------------------------------------------
-
-
-def _write_manifest_batch(spark, tmp_path, idx: int, rows):
-    """One daily snapshot: a parquet listing + its manifest JSON."""
-    import json
-
-    d = tmp_path / f"files_{idx}"
-    spark.createDataFrame(rows, "key string, size long").coalesce(
-        1
-    ).write.parquet(str(d))
-    keys = [
-        str(p.relative_to(tmp_path))
-        for p in d.iterdir()
-        if p.name.endswith(".parquet")
-    ]
-    mpath = tmp_path / f"manifest_2024-01-0{idx}.json"
-    mpath.write_text(
-        json.dumps({"files": [{"key": k, "size": 0} for k in keys]})
-    )
-    return mpath.name
-
-
-def test_inventory_stream_is_incremental_and_resumable(spark, tmp_path):
-    """The reference's periodic ingest with the streaming guarantees it
-    lacks: batch 1 reads manifest 1 only; a RESTARTED stream (same
-    checkpoint) picks up exactly the manifests added since — no
-    re-download, no gap — and rows carry their owning manifest."""
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryStreamDataSource,
-    )
-
-    spark.dataSource.register(MailioInventoryStreamDataSource)
-    # manifests live in their own subdir so the parquet output sink
-    # never shadows the watched listing
-    mdir = tmp_path / "manifests"
-    mdir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    m1 = _write_manifest_batch(
-        spark, mdir, 1, [("alice/a.txt", 10), ("bob/b.txt", 20)]
-    )
-
-    def run_once():
-        # file sink (not memory) — it supports checkpoint RECOVERY,
-        # which is the semantics under test
-        q = (
-            spark.readStream.format("mailio_inventory_stream")
-            .option("manifest_dir", str(mdir))
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-        return {
-            (r.key, r.size, r.manifest)
-            for r in spark.read.parquet(out).collect()
-        }
-
-    got1 = run_once()
-    assert got1 == {("alice/a.txt", 10, m1), ("bob/b.txt", 20, m1)}
-
-    # day 2 arrives; a fresh run from the SAME checkpoint must read
-    # ONLY the new manifest (offset = count of committed manifests) —
-    # the output accumulates, batch 2 adds exactly the new rows
-    m2 = _write_manifest_batch(spark, mdir, 2, [("alice/c.txt", 5)])
-    got2 = run_once()
-    assert got2 == got1 | {("alice/c.txt", 5, m2)}
-
-
-def test_inventory_stream_missing_file_fails_batch_not_checkpoint(
-    spark, tmp_path
-):
-    """Failure posture: a manifest listing a missing file fails its
-    micro-batch (per-task isolation — no silent skips), the offset is
-    NOT committed, and once the file appears the SAME checkpoint
-    recovers and ingests everything exactly once."""
-    import json
-
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryStreamDataSource,
-    )
-
-    spark.dataSource.register(MailioInventoryStreamDataSource)
-    mdir = tmp_path / "manifests"
-    mdir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    # manifest names a file that does not exist yet
-    (mdir / "manifest_2024-01-01.json").write_text(
-        json.dumps({"files": [{"key": "late/part.parquet", "size": 0}]})
-    )
-
-    def run_once():
-        q = (
-            spark.readStream.format("mailio_inventory_stream")
-            .option("manifest_dir", str(mdir))
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    with pytest.raises(Exception):
-        run_once()
-
-    # the listed file lands; the same checkpoint must replay the batch
-    d = tmp_path / "late_src"
-    spark.createDataFrame(
-        [("alice/a.txt", 10)], "key string, size long"
-    ).coalesce(1).write.parquet(str(d))
-    part = next(p for p in d.iterdir() if p.name.endswith(".parquet"))
-    (mdir / "late").mkdir()
-    part.rename(mdir / "late" / "part.parquet")
-
-    run_once()
-    got = {(r.key, r.size) for r in spark.read.parquet(out).collect()}
-    assert got == {("alice/a.txt", 10)}
 
 
 def test_novelty_incremental_equals_batch_filtered(spark):

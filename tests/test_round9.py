@@ -1,158 +1,15 @@
-"""Round-9 regression tests: the ADVICE-r8 fixes (attempt-unique
-writer file names, streamed md5, locked append commit, explicit NULL
-policies in the DQ suites, the de-watermarked PSI stream) plus the
-stream-writer replay-idempotence pin the round-8 verdict asked for.
+"""Round-9 regression tests: the ADVICE-r8 fixes that outlived the
+custom inventory source and the streaming twins — chiefly the explicit
+NULL policies in the DQ suites.
 """
 from __future__ import annotations
 
-import json
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_CORRECT  # noqa: F401  (shared fixture constants)
-
-
-# ---------------------------------------------------------------------------
-# Inventory writer: attempt-unique names / replay idempotence / lock
-# ---------------------------------------------------------------------------
-
-
-def _register(spark):
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-    )
-
-    spark.dataSource.register(MailioInventoryDataSource)
-
-
-def test_batch_writer_file_names_are_attempt_unique(spark, tmp_path):
-    """Every data file name must carry the task ATTEMPT id (ADVICE r8):
-    a speculative/zombie retry then writes a distinct path instead of
-    racing a non-atomic write against the attempt the manifest already
-    describes."""
-    _register(spark)
-    out = tmp_path / "inv"
-    (
-        spark.createDataFrame(
-            [("alice/a", 1), ("bob/b", 2)], "key string, size long"
-        )
-        .repartition(2)
-        .write.format("mailio_inventory")
-        .option("path", str(out))
-        .mode("append")
-        .save()
-    )
-    names = sorted(p.name for p in out.glob("data-*.parquet"))
-    # data-{job token}-{partition:05d}-{taskAttemptId}.parquet
-    pat = re.compile(r"^data-[0-9a-f]{8}-\d{5}-\d+\.parquet$")
-    assert names and all(pat.match(n) for n in names), names
-    manifest = json.loads((out / "manifest.json").read_text())
-    assert sorted(e["key"] for e in manifest["files"]) == names
-
-
-def test_stream_writer_replayed_batch_republishes_same_manifest(tmp_path):
-    """Replaying an already-committed batch id (driver restart after
-    commit but before the checkpoint recorded it) must atomically
-    RE-POINT manifest-batch-{id}.json at the replay's files —
-    exactly-once at the manifest level — leaving the first attempt's
-    files unlisted for vacuum, never double-listed."""
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryStreamWriter,
-        _InventoryCommit,
-        vacuum_uncommitted,
-    )
-
-    out = tmp_path / "sink"
-    out.mkdir()
-
-    def fake_files(tag: str) -> list[_InventoryCommit]:
-        msgs = []
-        for i in range(2):
-            name = f"data-{tag}-{i:05d}-0.parquet"
-            (out / name).write_bytes(b"PAR1" + tag.encode())
-            msgs.append(_InventoryCommit(name, 4 + len(tag), "x" * 32))
-        return msgs
-
-    w1 = MailioInventoryStreamWriter({"path": str(out)}, overwrite=False)
-    w1.commit(fake_files("aaaa0001"), batchId=7)
-    first = json.loads((out / "manifest-batch-7.json").read_text())
-    assert len(first["files"]) == 2 and first["batchId"] == 7
-
-    # replayed batch: a NEW writer instance (fresh query-run token)
-    # re-commits the SAME batch id with different task files
-    w2 = MailioInventoryStreamWriter({"path": str(out)}, overwrite=False)
-    w2.commit(fake_files("bbbb0002"), batchId=7)
-    manifests = sorted(out.glob("manifest-batch-*.json"))
-    assert [m.name for m in manifests] == ["manifest-batch-7.json"]
-    replayed = json.loads((out / "manifest-batch-7.json").read_text())
-    keys = {e["key"] for e in replayed["files"]}
-    assert keys == {f"data-bbbb0002-{i:05d}-0.parquet" for i in range(2)}
-    # first attempt's files are on disk but unlisted -> vacuum's job
-    removed = sorted(vacuum_uncommitted(str(out), min_age_seconds=0.0))
-    assert removed == [f"data-aaaa0001-{i:05d}-0.parquet" for i in range(2)]
-
-
-def test_concurrent_append_jobs_lose_no_manifest_entries(spark, tmp_path):
-    """The flock around the append commit's read-merge-replace
-    (ADVICE r8): two append jobs committing concurrently must both
-    land in manifest.json — without mutual exclusion the later
-    os.replace silently drops the earlier job's entries."""
-    import threading
-
-    _register(spark)
-    out = tmp_path / "inv"
-    errs = []
-
-    def write(rows):
-        try:
-            (
-                spark.createDataFrame(rows, "key string, size long")
-                .coalesce(1)
-                .write.format("mailio_inventory")
-                .option("path", str(out))
-                .mode("append")
-                .save()
-            )
-        except Exception as exc:  # surfaced below; thread must not die silent
-            errs.append(exc)
-
-    batches = [[(f"u{j}/f{j}", j + 1)] for j in range(4)]
-    threads = [threading.Thread(target=write, args=(b,)) for b in batches]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errs, errs
-    manifest = json.loads((out / "manifest.json").read_text())
-    assert sorted(e["key"] for e in manifest["files"]) == sorted(
-        p.name for p in out.glob("data-*.parquet")
-    )
-    back = (
-        spark.read.format("mailio_inventory")
-        .option("manifest", str(out / "manifest.json"))
-        .load()
-    )
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        r for b in batches for r in b
-    )
-
-
-def test_writer_md5_is_streamed_and_correct(tmp_path):
-    """The write kernel hashes the written file in bounded chunks; the
-    digest/size must still match a whole-file read."""
-    import hashlib
-
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        _write_inventory_part,
-    )
-
-    rows = [{"key": f"u/{i}", "size": i} for i in range(5000)]
-    msg = _write_inventory_part(str(tmp_path), "part.parquet", iter(rows))
-    raw = (tmp_path / "part.parquet").read_bytes()
-    assert msg.size == len(raw)
-    assert msg.md5 == hashlib.md5(raw).hexdigest()
 
 
 # ---------------------------------------------------------------------------
@@ -209,34 +66,6 @@ def test_inventory_constraints_empty_table_is_well_defined(spark):
     assert rows and all(
         r["status"] == "PASS" and r["metric"] == 0.0 for r in rows
     )
-
-
-# ---------------------------------------------------------------------------
-# PSI stream: no inert watermark (ADVICE r8)
-# ---------------------------------------------------------------------------
-
-
-def test_binned_psi_counts_has_no_watermark(spark):
-    """binned_psi_counts aggregates on non-event-time keys, so a
-    watermark could neither bound state nor evict rows; the plan must
-    not advertise late-data semantics it does not have."""
-    from go_mailio_diskusage_handler_spark.operators import dq
-    from go_mailio_diskusage_handler_spark.sources.tables import load_table
-    from go_mailio_diskusage_handler_spark.streaming import windows
-
-    ev = load_table(spark, SF_CORRECT, "events")
-    bounds = dq.reference_decile_bounds(
-        ev.select(
-            "event_type", "value", (F.unix_timestamp("ts") < F.lit(1e18)).alias("is_ref")
-        ).where("is_ref")
-    )
-    plan = (
-        windows.binned_psi_counts(ev, bounds, split_epoch=0.0)
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-    )
-    assert "EventTimeWatermark" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -362,7 +191,7 @@ def test_aqe_skew_join_splits_skewed_partition(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-9 additions: parameterized SQL, XML source, binaryFile ingest
+# Round-9 addition: parameterized SQL
 # ---------------------------------------------------------------------------
 
 
@@ -405,174 +234,3 @@ def test_parameterized_sql_binds_at_parse_time(spark):
             "SELECT COUNT(*) AS n FROM IDENTIFIER(:tbl)",
             args={"tbl": "orders WHERE 1=0; DROP TABLE orders"},
         ).collect()
-
-
-def test_xml_roundtrip_and_quarantine(spark, tmp_path):
-    """XML source (Spark 4 built-in): schema-enforced read of rowTag
-    records + corrupt-element quarantine, same contract as CSV/JSONL."""
-    from go_mailio_diskusage_handler_spark.sources import formats
-
-    p = tmp_path / "inv.xml"
-    p.write_text(
-        "<rows>"
-        "<row><key>alice/a.txt</key><size>10</size></row>"
-        "<row><key>bob/b.txt</key><size>20</size></row>"
-        "<row><key>carol/c.txt</key><size>not_a_number</size></row>"
-        "</rows>"
-    )
-    df = formats.read_xml_strict(spark, str(p), "key string, size bigint")
-    clean, rejected = formats.split_quarantine(df)
-    got = sorted(tuple(r) for r in clean.collect())
-    assert got == [("alice/a.txt", 10), ("bob/b.txt", 20)]
-    assert rejected.count() == 1
-
-
-def test_binary_file_ingest_feeds_multimodal_stack(spark, tmp_path):
-    """binaryFile source -> opaque-payload table: per-file rows with
-    exact byte counts, extension-derived media types, numeric-stem doc
-    ids, and payloads identical to disk (md5-checked via the metadata
-    shape); the decoded-feature stack runs on it unchanged."""
-    import hashlib
-
-    from go_mailio_diskusage_handler_spark.operators import multimodal
-
-    payloads = {
-        "1.jpg": b"\xff\xd8fakejpegbytes",
-        "2.wav": b"RIFFfakewav",
-        "3.mp4": b"\x00\x00fakemp4",
-        "notes.txt": b"plain text",
-        # 20-digit numeric stem > Long.MAX: must NOT throw under ANSI
-        # mode (try_cast) and must fall back to the hash namespace
-        "99999999999999999999.png": b"epoch-nanos name",
-    }
-    for name, data in payloads.items():
-        (tmp_path / name).write_bytes(data)
-    df = multimodal.ingest_binary_files(spark, str(tmp_path))
-    rows = {r["source_path"].rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert set(rows) == set(payloads)
-    assert rows["1.jpg"]["media_type"] == "image"
-    assert rows["2.wav"]["media_type"] == "audio"
-    assert rows["3.mp4"]["media_type"] == "video"
-    assert rows["notes.txt"]["media_type"] == "binary"
-    assert rows["1.jpg"]["doc_id"] == 1 and rows["3.mp4"]["doc_id"] == 3
-    # hash-derived ids live in the strictly-negative namespace, so a
-    # hashed path can never collide with a numeric stem (ADVICE r9)
-    assert rows["notes.txt"]["doc_id"] < 0
-    assert rows["99999999999999999999.png"]["doc_id"] < 0
-    assert rows["notes.txt"]["doc_id"] != rows["99999999999999999999.png"]["doc_id"]
-    for name, data in payloads.items():
-        assert bytes(rows[name]["payload"]) == data
-        assert rows[name]["n_bytes"] == len(data)
-    # metadata layer over the ingested table: md5 matches disk
-    meta = df.select(
-        "doc_id",
-        "media_type",
-        F.octet_length("payload").cast("int").alias("n_bytes"),
-        F.md5("payload").alias("checksum"),
-    )
-    sums = {r["doc_id"]: r["checksum"] for r in meta.collect()}
-    assert sums[1] == hashlib.md5(payloads["1.jpg"]).hexdigest()
-    assert sums[2] == hashlib.md5(payloads["2.wav"]).hexdigest()
-
-
-def test_outer_stream_join_emits_unmatched_after_watermark(spark, tmp_path):
-    """LEFT OUTER stream-stream interval join: matched rows emit
-    promptly; null-padded unmatched purchases emit at state EVICTION,
-    so a drained run withholds the final watermark+horizon of
-    purchases — and a later file advancing the watermark flushes them,
-    after which stream == batch exactly."""
-    import shutil
-
-    from go_mailio_diskusage_handler_spark.sources.tables import load_table
-    from go_mailio_diskusage_handler_spark.streaming import windows
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    shutil.copy(f"{SF_CORRECT}/../sf0.001/events.parquet", d / "b0.parquet")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "sink")
-
-    def run_once():
-        # parquet sink: the memory sink cannot recover from a
-        # checkpoint, and the second phase MUST resume the first
-        # phase's state to flush its held-back outer rows
-        stream = windows.read_event_stream(spark, str(d))
-        q = (
-            windows.attributed_purchases_outer(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-        return {
-            (r.purchase_id, r.click_id)
-            for r in spark.read.parquet(out).collect()
-        }
-
-    batch_events = load_table(
-        spark, f"{SF_CORRECT}/../sf0.001", "events"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    want = {
-        (r.purchase_id, r.click_id)
-        for r in windows.attributed_purchases_outer(batch_events).collect()
-    }
-
-    got1 = run_once()
-    held_back = want - got1
-    assert got1 <= want  # nothing emits that batch would not produce
-    assert held_back, "expected tail-horizon purchases to be withheld"
-    assert all(c is None for _, c in held_back)  # only unmatched rows wait
-
-    # a later file advances the watermark past the held-back windows.
-    # It must carry BOTH event types: the query watermark is the MIN
-    # over the two withWatermark nodes and each advances only on rows
-    # reaching its branch — a future click alone leaves the
-    # purchase-side (and so the global) watermark parked and nothing
-    # ever flushes (verified empirically before this shape was chosen).
-    max_ts = batch_events.agg(F.max("ts")).collect()[0][0]
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    future = pd.DataFrame(
-        {
-            "event_id": [10_000_000, 10_000_001],
-            "ts": [pd.Timestamp(max_ts) + pd.Timedelta(hours=6)] * 2,
-            "user_id": [999_998, 999_999],  # distinct users: no match
-            "event_type": ["click", "purchase"],
-            "value": [0.0, 1.0],
-            "props": ["{}", "{}"],
-        }
-    )
-    t = pa.Table.from_pandas(future)
-    pq.write_table(
-        t.set_column(1, "ts", t["ts"].cast(pa.timestamp("us"))),
-        d / "b1.parquet",
-    )
-    got2 = run_once()
-    # every original null-padded row flushed; the future purchase is
-    # the NEW held-back tail (its own join window is still open)
-    assert got2 == want
-
-
-def test_empty_zero_partition_write_commits_empty_manifest(spark, tmp_path):
-    """A zero-task job (empty 0-partition frame) still publishes a
-    well-formed empty manifest: commit() must create the output
-    directory itself rather than rely on an executor having done it."""
-    _register(spark)
-    out = tmp_path / "inv"
-    (
-        spark.createDataFrame([], "key string, size long")
-        .write.format("mailio_inventory")
-        .option("path", str(out))
-        .mode("append")
-        .save()
-    )
-    manifest = json.loads((out / "manifest.json").read_text())
-    assert manifest["files"] == [] or all(
-        (out / e["key"]).exists() for e in manifest["files"]
-    )

@@ -2,8 +2,8 @@
 verdict #4): the reference's only test drives RetrieveAwsManifestFile
 against real AWS; this module drives the same protocol — manifest key
 derivation, probe-with-fallback GET, NoSuchKey mapping, MD5-verified
-object round-trip, and the custom source's two-phase manifest commit —
-against a REAL S3 HTTP endpoint served locally by moto.
+object round-trip — against a REAL S3 HTTP endpoint served locally
+by moto.
 
 Gating: skipped cleanly when moto/boto3 are absent (they are not
 package dependencies), or when SPARK_GRAFT_S3_TESTS=0.  The JVM S3A
@@ -173,74 +173,6 @@ def test_inventory_objects_round_trip_md5_and_aggregate(s3, spark, tmp_path):
         for r in core.disk_usage(df).collect()
     }
     assert agg == want
-
-
-def test_custom_source_two_phase_commit_round_trips_via_s3(s3, spark, tmp_path):
-    """The custom source's two-phase manifest commit, closed over the
-    live endpoint: tasks write parts + per-part checksums, the driver
-    commit publishes manifest.json (phase two); the committed artifact
-    set is uploaded object-for-object, re-fetched through the boto3
-    downloader, and every manifest entry re-verifies against the
-    served object's bytes — the wire-level proof that the writer's
-    manifest speaks the same protocol the reader and the reference
-    consume."""
-    import hashlib
-
-    from go_mailio_diskusage_handler_spark.sources import manifest as M
-    from go_mailio_diskusage_handler_spark.sources.inventory_source import (
-        MailioInventoryDataSource,
-    )
-
-    client = s3["client"]
-    bucket, prefix = "inv-commit-bucket", "mailio/inventory"
-    client.create_bucket(Bucket=bucket)
-    dt = datetime(2026, 8, 15, 1, 0, tzinfo=timezone.utc)
-
-    spark.dataSource.register(MailioInventoryDataSource)
-    rows = [("alice/a.txt", 10), ("bob/b.txt", 20), ("alice/c.txt", 5)]
-    out = tmp_path / "committed"
-    (
-        spark.createDataFrame(rows, "key string, size long")
-        .repartition(2)
-        .write.format("mailio_inventory")
-        .option("path", str(out))
-        .mode("append")
-        .save()
-    )
-    local_manifest = json.loads((out / "manifest.json").read_text())
-
-    # publish: parts first, manifest last (the same ordering the
-    # two-phase commit enforces locally — readers never see a manifest
-    # whose objects are missing)
-    for entry in local_manifest["files"]:
-        client.put_object(
-            Bucket=bucket,
-            Key=f"{prefix}/data/{entry['key']}",
-            Body=(out / entry["key"]).read_bytes(),
-        )
-    published = dict(local_manifest)
-    published["sourceBucket"] = bucket
-    published["files"] = [
-        {**e, "key": f"{prefix}/data/{e['key']}"}
-        for e in local_manifest["files"]
-    ]
-    client.put_object(
-        Bucket=bucket,
-        Key=M.manifest_key(prefix, dt),
-        Body=json.dumps(published).encode(),
-    )
-
-    fetched = M.fetch_manifest(
-        f"s3://{bucket}/{prefix}", dt, M.boto3_download(client)
-    )
-    assert len(fetched.files) == 2
-    total = 0
-    for f in fetched.files:
-        body = client.get_object(Bucket=bucket, Key=f.key)["Body"].read()
-        assert hashlib.md5(body).hexdigest() == f.md5_checksum
-        assert len(body) == f.size
-        total += f.size
-    assert total == sum(e["size"] for e in local_manifest["files"])
 
 
 def test_configure_s3a_targets_the_local_endpoint(s3, spark):

@@ -71,68 +71,6 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
-def test_csv_roundtrip_with_explicit_schema(spark, tmp_path):
-    """CSV source: schema-enforced read (no inference pass) must
-    round-trip the table exactly."""
-    from go_mailio_diskusage_handler_spark.sources import formats
-
-    out = str(tmp_path / "orders_csv")
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
-    )
-    orders.write.option("header", True).csv(out)
-    back = formats.read_csv_strict(
-        spark,
-        out,
-        "o_orderkey bigint, o_custkey bigint, o_totalprice double, o_orderstatus string",
-    )
-    clean, rejected = formats.split_quarantine(back)
-    assert rejected.count() == 0
-    assert clean.count() == orders.count()
-    assert sorted(map(tuple, clean.collect())) == sorted(map(tuple, orders.collect()))
-
-
-def test_csv_corrupt_rows_quarantine_not_fatal(spark, tmp_path):
-    """A malformed CSV line must land in _corrupt_record (reference
-    log.Fatalf's on bad input — handler.go:176; we quarantine)."""
-    from go_mailio_diskusage_handler_spark.sources import formats
-
-    p = tmp_path / "inv.csv"
-    p.write_text("key,size\na/1,100\nBADLINE-not-an-int,xyz\nb/2,200\n")
-    df = formats.read_csv_strict(spark, str(p), "key string, size bigint")
-    clean, rejected = formats.split_quarantine(df)
-    assert clean.count() == 2
-    assert rejected.count() == 1
-    assert "BADLINE" in rejected.collect()[0]["_corrupt_record"]
-
-
-def test_jsonl_roundtrip_and_quarantine(spark, tmp_path):
-    """JSON-lines source: schema-enforced round-trip + corrupt-line
-    quarantine in one file."""
-    from go_mailio_diskusage_handler_spark.sources import formats
-
-    out = str(tmp_path / "events_json")
-    events = load_table(spark, SF_SMOKE, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    events.write.json(out)
-    back = formats.read_jsonl_strict(
-        spark, out, "event_id bigint, user_id bigint, event_type string, value double"
-    )
-    clean, rejected = formats.split_quarantine(back)
-    assert rejected.count() == 0
-    assert clean.count() == events.count()
-
-    p = tmp_path / "bad.jsonl"
-    p.write_text('{"event_id": 1, "user_id": 2, "event_type": "x", "value": 1.5}\n{not json}\n')
-    df = formats.read_jsonl_strict(
-        spark, str(p), "event_id bigint, user_id bigint, event_type string, value double"
-    )
-    clean, rejected = formats.split_quarantine(df)
-    assert clean.count() == 1
-    assert rejected.count() == 1
-
-
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     """ORC source/sink (AWS S3 Inventory's third delivery format):
     round-trip fidelity + predicate pushdown into the ORC scan."""
@@ -145,42 +83,6 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     plan = plans.formatted(filtered)
     assert "PushedFilters: [" in plan, plan
     assert "o_orderstatus" in plan.split("PushedFilters")[1][:200], plan
-
-
-def test_compacted_write_bounds_file_count(spark, tmp_path):
-    """AQE rebalance sizing: a skew-partitioned frame (32 shuffle
-    partitions of tiny data) must compact down to few, evenly sized
-    files instead of 32 shards."""
-    import os
-
-    from go_mailio_diskusage_handler_spark.sources.compaction import write_compacted
-
-    out = str(tmp_path / "lineitem_compact")
-    li = load_table(spark, SF_SMOKE, "lineitem").repartition(32)
-    write_compacted(li, out, cluster_by=["l_orderkey"])
-    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    assert 1 <= len(files) <= 4, files
-    back = spark.read.parquet(out)
-    assert back.count() == li.count()
-
-
-def test_training_shards_end_to_end(spark, tmp_path):
-    """The nightly job: curated corpus → packed bins → partitioned,
-    compacted shards on disk; read-back prunes on the split column."""
-    import os
-
-    from go_mailio_diskusage_handler_spark.operators import curation
-
-    out = str(tmp_path / "shards")
-    docs = load_table(spark, SF_SMOKE, "documents")
-    written = curation.write_training_shards(docs, out)
-    splits = {d for d in os.listdir(out) if d.startswith("split=")}
-    assert splits <= {"split=train", "split=val", "split=test"}
-    assert "split=train" in splits
-    back = spark.read.parquet(out)
-    assert back.count() == written.count() > 0
-    pruned = back.filter(F.col("split") == "train")
-    assert "PartitionFilters" in plans.formatted(pruned)
 
 
 def test_zorder_key_matches_python_reference(spark):
@@ -210,7 +112,7 @@ def test_zorder_write_prunes_on_both_columns(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from go_mailio_diskusage_handler_spark.sources.compaction import write_compacted
+    from go_mailio_diskusage_handler_spark.sources.compaction import zorder_key
 
     li = load_table(spark, SF_SMOKE, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity"
@@ -231,13 +133,22 @@ def test_zorder_write_prunes_on_both_columns(spark, tmp_path):
         assert total >= 4, f"need multiple files to measure pruning, got {total}"
         return hits, total
 
+    def write_sorted(df, path, key):
+        # rebalance + file-local sort; maxRecordsPerFile forces several
+        # files so there is something to prune
+        (
+            df.withColumn("_k", key)
+            .hint("rebalance", "_k")
+            .sortWithinPartitions("_k")
+            .drop("_k")
+            .write.option("maxRecordsPerFile", 1500)
+            .parquet(path)
+        )
+
     target = str(tmp_path / "zorder")
-    # force several files so there is something to prune
-    write_compacted(
-        li, target, zorder_by=("l_partkey", "l_suppkey"), max_records_per_file=1500
-    )
+    write_sorted(li, target, zorder_key(F.col("l_partkey"), F.col("l_suppkey")))
     baseline = str(tmp_path / "suppsort")
-    write_compacted(li, baseline, cluster_by=["l_suppkey"], max_records_per_file=1500)
+    write_sorted(li, baseline, F.col("l_suppkey"))
 
     probe_part = li.select("l_partkey").first()[0]
     z_hits, z_total = files_possibly_containing(target, "l_partkey", probe_part)

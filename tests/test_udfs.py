@@ -83,3 +83,33 @@ def test_arrow_optimized_udf_uses_arrow_eval(spark):
     )
     assert "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan, plan
+
+
+def test_barrier_map_in_pandas_surface(spark):
+    """``mapInPandas(..., barrier=True)`` — the barrier execution mode
+    distributed-training launchers (all-gather embedding jobs, NCCL
+    init) rely on: every task starts together and can see the full
+    task group via BarrierTaskContext.  Locally we pin the surface:
+    the barrier stage runs, each task reports the SAME task-group size
+    through the context, and results match the non-barrier twin.
+    Barrier mode requires #partitions <= available slots, so the input
+    is coalesced to 4."""
+    import pandas as pd
+
+    def agg_with_ctx(batches):
+        from pyspark import BarrierTaskContext
+
+        ctx = BarrierTaskContext.get()
+        n = 0
+        for pdf in batches:
+            n += len(pdf)
+        yield pd.DataFrame(
+            {"rows": [n], "world_size": [len(ctx.getTaskInfos())]}
+        )
+
+    df = spark.range(0, 1000).repartition(4)
+    out = df.mapInPandas(
+        agg_with_ctx, "rows long, world_size int", barrier=True
+    ).collect()
+    assert sum(r.rows for r in out) == 1000
+    assert {r.world_size for r in out} == {4}

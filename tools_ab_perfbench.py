@@ -3,12 +3,16 @@
     python3 tools_ab_perfbench.py --ref HEAD~1 --workload du_lookup \
         --seeds 31-40 [--seconds 8] [--workdir DIR]
 
-The ref's tree is exported (``git archive``) into a temporary directory
-under ``--workdir`` (the system temp dir by default) and removed at the
-end.  For each seed, the ref ("base") and this checkout ("change") each
-run the benchmark once, back to back; which side goes first alternates
-from one seed to the next, so a drift of the host's load does not
-favour either side.  Every run's result line is echoed as it arrives.
+Both sides run from fresh trees in temporary directories under
+``--workdir`` (the system temp dir by default), removed at the end: the
+ref's tree is exported with ``git archive``, and this checkout's working
+tree is copied (its tracked files plus the untracked files git does not
+ignore).  Neither side runs from the checkout itself, so run state left
+in it (``.perfbench_work/``, ``__pycache__/``) favours neither.  For each
+seed, the ref ("base") and the working tree ("change") each run the
+benchmark once, back to back; which side goes first alternates from one
+seed to the next, so a drift of the host's load does not favour either
+side.  Every run's result line is echoed as it arrives.
 
 At the end, per end-to-end metric of ``BENCHMARK.json``: each side's
 median and quartiles, the ratio of the medians, the change's wins over
@@ -52,6 +56,20 @@ def export_ref(ref: str, dest: str) -> str:
     if archive.wait() != 0:
         raise SystemExit(f"git archive {sha} failed")
     return sha
+
+
+def copy_worktree(dest: str) -> None:
+    """Copy this checkout's working tree into ``dest``: tracked files as
+    they are on disk, plus untracked files that git does not ignore."""
+    listed = subprocess.run(
+        ["git", "-C", REPO, "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+        check=True, capture_output=True, text=True,
+    ).stdout.split("\0")
+    for rel in filter(None, listed):
+        src = os.path.join(REPO, rel)
+        if os.path.isfile(src):  # a tracked file deleted in the worktree is skipped
+            os.makedirs(os.path.dirname(os.path.join(dest, rel)), exist_ok=True)
+            shutil.copy2(src, os.path.join(dest, rel))
 
 
 def run_one(root: str, workload: str, seed: int, seconds: float) -> dict | None:
@@ -109,14 +127,16 @@ def main() -> int:
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
         metrics = json.load(f)["end_to_end"]
     base_root = tempfile.mkdtemp(prefix="ab-base-", dir=args.workdir)
+    change_root = tempfile.mkdtemp(prefix="ab-change-", dir=args.workdir)
     bad = 0
     pairs: list[tuple[dict, dict]] = []
     try:
         sha = export_ref(args.ref, base_root)
-        print(f"# base {args.ref} = {sha}; change = working tree of {REPO}; "
+        copy_worktree(change_root)
+        print(f"# base {args.ref} = {sha}; change = copy of the working tree of {REPO}; "
               f"workload {args.workload}", flush=True)
         for i, seed in enumerate(parse_seeds(args.seeds)):
-            sides = [("base", base_root), ("change", REPO)]
+            sides = [("base", base_root), ("change", change_root)]
             if i % 2:
                 sides.reverse()
             got = {}
@@ -130,6 +150,7 @@ def main() -> int:
                 pairs.append((got["base"], got["change"]))
     finally:
         shutil.rmtree(base_root, ignore_errors=True)
+        shutil.rmtree(change_root, ignore_errors=True)
     if pairs:
         print("\n".join(summarize(metrics, pairs)))
     if bad:
