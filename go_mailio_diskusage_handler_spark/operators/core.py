@@ -16,7 +16,10 @@ Spark mapping and why it scales:
   into the Parquet scan (``ReadSchema`` shows only key/size) — the
   reference does this by hand, Catalyst does it for free.
 * The malformed-key guard is a scan-level predicate; expressed with
-  ``contains`` so it is pushdown-eligible.
+  ``contains`` so it is pushdown-eligible.  The address comes from
+  ``substring_index``.  Both are byte-level ``UTF8String`` kernels: the
+  per-object parse runs no regex split and allocates no array, which
+  ``split``/``split_part`` do for every row.
 * The groupBy compiles to ``HashAggregateExec`` partial → shuffle by
   ``address`` → final: map-side combine means the shuffle carries one
   row per (task, address), not per object.  At 100 TB / ~billions of
@@ -59,8 +62,14 @@ def inventory_from_lineitem(lineitem: DataFrame) -> DataFrame:
 
 
 def well_formed_key() -> Column:
-    """O7 guard: key must have >= 2 slash-separated parts."""
-    return F.size(F.split(F.col("key"), "/")) >= 2
+    """O7 guard: key must have >= 2 slash-separated parts, i.e. contain
+    a ``/``.  NULL for a NULL key."""
+    return F.col("key").contains("/")
+
+
+def key_address() -> Column:
+    """O6 derive: the key's first slash-separated part (``parts[0]``)."""
+    return F.substring_index(F.col("key"), "/", 1)
 
 
 def disk_usage(inventory: DataFrame, *, round_to: int | None = 2) -> DataFrame:
@@ -75,7 +84,7 @@ def disk_usage(inventory: DataFrame, *, round_to: int | None = 2) -> DataFrame:
         sum_col = F.round(sum_col, round_to)
     return (
         inventory.filter(well_formed_key())
-        .select(F.split_part(F.col("key"), F.lit("/"), F.lit(1)).alias("address"), "size")
+        .select(key_address().alias("address"), "size")
         .groupBy("address")
         .agg(
             sum_col.alias("size_bytes"),
@@ -119,7 +128,11 @@ def disk_usage_observed(inventory: DataFrame, *, round_to: int | None = 2):
     observed = inventory.observe(
         obs,
         F.count(F.lit(1)).alias("total_rows"),
-        F.sum((~well_formed_key()).cast("long")).alias("malformed_keys"),
+        # A NULL key is malformed, as in dq.inventory_constraint_suite:
+        # the guard is NULL there, which a bare SUM would skip.
+        F.sum(F.coalesce((~well_formed_key()).cast("long"), F.lit(1))).alias(
+            "malformed_keys"
+        ),
         # Deequ-style completeness/bounds counters for the swap gate
         # (refresh.py quality_gate) — same scan, zero extra passes.
         F.sum(F.col("size").isNull().cast("long")).alias("null_size_rows"),
@@ -168,12 +181,12 @@ def incremental_disk_usage(
     consistency anchor.
     """
     added = added_inv.filter(well_formed_key()).select(
-        F.split_part(F.col("key"), F.lit("/"), F.lit(1)).alias("address"),
+        key_address().alias("address"),
         F.col("size").alias("d_size"),
         F.lit(1).cast("long").alias("d_files"),
     )
     removed = removed_inv.filter(well_formed_key()).select(
-        F.split_part(F.col("key"), F.lit("/"), F.lit(1)).alias("address"),
+        key_address().alias("address"),
         (-F.col("size")).alias("d_size"),
         F.lit(-1).cast("long").alias("d_files"),
     )
@@ -419,9 +432,8 @@ def largest_files_per_address(
     the corpus) sharing its shuffle with a windowed SUM for the share
     denominator — no join back to the aggregate, no second exchange.
     """
-    addr = F.split_part(F.col("key"), F.lit("/"), F.lit(1))
     base = inventory.filter(well_formed_key()).select(
-        addr.alias("address"), "key", "size"
+        key_address().alias("address"), "key", "size"
     )
     w = Window.partitionBy("address")
     rk = Window.partitionBy("address").orderBy(

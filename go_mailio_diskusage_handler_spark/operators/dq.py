@@ -437,9 +437,10 @@ def inventory_constraint_suite(
     from .core import well_formed_key
 
     # NULL handling is explicit so Spark and the DuckDB mirror agree:
-    # a NULL key makes well_formed_key() NULL (size(split(NULL)) is
+    # a NULL key makes well_formed_key() NULL (contains(NULL, '/') is
     # NULL), which a bare SUM would silently DROP while the oracle's
-    # CASE ... ELSE 1 counts it as malformed — coalesce the flag to 1.
+    # CASE ... ELSE 1 counts it as malformed — coalesce the flag to 1,
+    # as core.disk_usage_observed does for the in-flight gate.
     one_pass = inventory.agg(
         F.count(F.lit(1)).alias("n_rows"),
         _nz_sum(F.col("key").isNull().cast("long")).alias("null_keys"),

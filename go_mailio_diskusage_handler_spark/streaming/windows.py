@@ -30,34 +30,9 @@ def attributed_purchases(
     On a batch frame the watermarks are no-ops and the interval join
     runs as a plain join; DuckDB-oracle parity pins that result.
     """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
+    purchases, clicks = _attribution_sides(events, watermark)
     return purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon_minutes} MINUTES")
-        ),
-        "inner",
+        clicks, _attribution_cond(horizon_minutes), "inner"
     ).select(
         "purchase_id", "user_id", "purchase_ts", "purchase_value", "click_id", "click_ts"
     )
@@ -66,8 +41,8 @@ def attributed_purchases(
 def _attribution_sides(
     events: DataFrame, watermark: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The shared click/purchase split + watermarks of the semi and
-    full-outer attribution joins."""
+    """The shared click/purchase split + watermarks of the three
+    attribution joins."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(

@@ -90,6 +90,21 @@ def test_observed_metrics_match_quality_gate(spark):
     assert obs.get["malformed_keys"] == gate["malformed_keys"]
 
 
+def test_refresh_key_parse_runs_no_split(spark, tmp_path):
+    """The refresh's per-object key parse (O6/O7) uses the byte-level
+    ``contains``/``substring_index`` kernels: no ``split`` (a regex
+    split and an array per row) anywhere in the executed plan."""
+    from go_mailio_diskusage_handler_spark import plans
+
+    path = str(tmp_path / "inv.parquet")
+    spark.createDataFrame(
+        [("alice/a", 1), ("noslash", 2)], "key string, size long"
+    ).write.parquet(path)
+    du, _ = core.disk_usage_observed(spark.read.parquet(path))
+    plan = plans.executed_plan(du)
+    assert "split(" not in plan and "split_part(" not in plan, plan
+
+
 def test_heavy_users_no_sort_no_window(spark):
     """heavy_users compares against BROADCAST scalars: the plan must
     contain no Sort/Window over the aggregate, and the 1-row stats

@@ -458,3 +458,36 @@ def test_quality_gate_refuses_bad_refresh_keeps_snapshot(spark, tmp_path, servin
     assert h.last_rejection is None
     assert h.get_disk_usage("bob").size_bytes == 5
     h.stop()
+
+
+def test_quality_gate_counts_null_keys_as_malformed(spark, tmp_path):
+    """A NULL key is malformed for the in-flight gate exactly as for
+    ``dq.inventory_constraint_suite``, which documents the same
+    thresholds: 2 NULL keys of 3 rows exceed ``max_malformed_frac``."""
+    from go_mailio_diskusage_handler_spark.operators import dq
+
+    inv = spark.createDataFrame(
+        [("alice/a", 10), (None, 5), (None, 7)], "key string, size long"
+    )
+    inv.write.parquet(str(tmp_path / "f.parquet"))
+    suite = {r["rule"]: r["status"] for r in dq.inventory_constraint_suite(inv).collect()}
+    assert suite["malformed_frac:key"] == "FAIL"
+
+    def download(bucket, key):
+        return json.dumps({"sourceBucket": str(tmp_path), "files": [{"key": "f.parquet"}]})
+
+    h = DiskUsageHandler(
+        spark,
+        "s3://bkt/pfx",
+        refresh_period_seconds=3600,
+        download=download,
+        path_scheme="file",
+        autostart=False,
+        quality_gate={"max_malformed_frac": 0.5},
+    )
+    assert h.last_rejection is not None
+    assert h.last_rejection["metrics"]["malformed_keys"] == 2
+    assert "max_malformed_frac" in h.last_rejection["violations"][0]
+    with pytest.raises(NotFoundError):
+        h.get_disk_usage("alice")
+    h.stop()

@@ -16,9 +16,14 @@ from pyspark.sql import functions as F
 from go_mailio_diskusage_handler_spark.operators import core, dedup, sessions
 
 # key: 1-2 slash segments from a tiny alphabet (forces collisions and
-# malformed single-segment keys); size: small ints (exact arithmetic).
+# malformed single-segment keys), plus the edge shapes of the key parse:
+# empty key, bare, leading, trailing and doubled slashes, multibyte
+# segments; size: small ints (exact arithmetic).
 _seg = st.sampled_from(["a", "b", "c", "d"])
-_key = st.one_of(_seg, st.tuples(_seg, _seg).map(lambda t: "/".join(t)))
+_edge_key = st.sampled_from(["", "/", "/a", "b/", "a//b", "é/ü", "üé"])
+_key = st.one_of(
+    _seg, st.tuples(_seg, _seg).map(lambda t: "/".join(t)), _edge_key
+)
 _row = st.tuples(_key, st.integers(min_value=0, max_value=1000))
 _inventory = st.lists(_row, min_size=0, max_size=30)
 
