@@ -119,8 +119,11 @@ def disk_usage_observed(inventory: DataFrame, *, round_to: int | None = 2):
     accumulated DURING the aggregation's own scan — at 100 TB that is
     the difference between free metrics and a second full pass
     (:func:`inventory_quality` is the standalone twin when a gate must
-    run *before* the main job).  Metric values are available from the
-    Observation after the first action on the returned frame.
+    run *before* the main job; it counts NULL keys apart, under
+    ``null_keys``, where ``malformed_keys`` here includes them — the
+    ``du_quality_check`` oracle pins the twin's split).  Metric values
+    are available from the Observation after the first action on the
+    returned frame.
     """
     from pyspark.sql import Observation
 

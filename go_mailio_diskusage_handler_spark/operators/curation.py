@@ -347,8 +347,8 @@ def keep_best_per_cluster(documents, threshold: float = 0.6):
     One min-struct aggregation per cluster over (−n_chars, doc_id) —
     the same single-shuffle argmax shape as ``sessions.first_touch``;
     no window sort of cluster members.  Composes
-    ``dedup.duplicate_clusters`` (strict-by-default: unconverged
-    clusters raise rather than silently electing a wrong keeper).
+    ``dedup.duplicate_clusters`` (unconverged clusters raise rather
+    than silently electing a wrong keeper).
     """
     from pyspark.sql import functions as F
 

@@ -23,8 +23,6 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from go_mailio_diskusage_handler_spark.caching import own_cache
@@ -153,40 +151,34 @@ def jaccard_for_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_dedup_pairs(
-    documents: DataFrame, threshold: float = 0.8, *, persist: bool = True
-) -> DataFrame:
+def minhash_dedup_pairs(documents: DataFrame, threshold: float = 0.8) -> DataFrame:
     """MinHash→LSH→exact-verify near-dup pairs with Jaccard ≥ threshold.
 
     The shingle table feeds four consumers (signatures, both sides of
     the verification join, set sizes); without persistence Spark
     re-runs the scan+shingle subplan for each — measured 2× end-to-end
-    at sf0.1.  ``persist=True`` materializes it once
+    at sf0.1.  It is persisted once
     (MEMORY_AND_DISK — spills, never OOMs), which is also the 100 TB
     deployment shape: shingles/signatures are written as intermediate
     tables there, not recomputed per stage.
     """
-    sh = shingles(documents)
-    sigs = _signatures_from_shingles(sh)
-    if persist:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        # Signatures feed BOTH sides of the band self-join (no exchange
-        # reuse there), shingles feed signatures + both verification
-        # sides + sizes; persisting the pair computes each once —
-        # measured 2.4× end-to-end at sf0.1 on top of the shingle cache.
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    # Signatures feed BOTH sides of the band self-join (no exchange
+    # reuse there), shingles feed signatures + both verification
+    # sides + sizes; persisting the pair computes each once —
+    # measured 2.4× end-to-end at sf0.1 on top of the shingle cache.
+    sh = shingles(documents).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = _signatures_from_shingles(sh).persist(StorageLevel.MEMORY_AND_DISK)
     cands = lsh_candidate_pairs(sigs)
     out = jaccard_for_pairs(cands, sh).filter(F.col("jaccard") >= threshold)
-    return own_cache(out, sh, sigs) if persist else out
+    return own_cache(out, sh, sigs)
 
 
 def ngram_jaccard_pairs(
     documents: DataFrame,
     threshold: float = 0.6,
     *,
-    persist: bool = True,
     sh: DataFrame | None = None,
     max_doc_freq: int | None = MAX_SHINGLE_DF,
 ) -> DataFrame:
@@ -195,33 +187,29 @@ def ngram_jaccard_pairs(
     The shared-shingle join bounds the pair set far under n² — as long
     as no single shingle is corpus-frequent, which ``max_doc_freq``
     enforces (:func:`cap_shingle_df`; ``None`` disables, callers that
-    pre-capped pass ``None``).  ``persist`` as in
+    pre-capped pass ``None``).  The shingle table is persisted as in
     :func:`minhash_dedup_pairs` (three consumers here).  Callers that
     already hold a (persisted) shingle table pass it via ``sh`` so
     composite pipelines explode the corpus once.
     """
+    from pyspark import StorageLevel
+
     owned: list[DataFrame] = []
     if sh is None:
         sh = shingles(documents)
-        if persist and max_doc_freq is None:
-            from pyspark import StorageLevel
-
+        if max_doc_freq is None:
             sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
             owned.append(sh)
     if max_doc_freq is not None:
-        sh = cap_shingle_df(sh, max_doc_freq)
-        if persist:
-            from pyspark import StorageLevel
-
-            # Persist the CAPPED table only — it is the one with three
-            # consumers (sizes + both self-join sides).  Persisting the
-            # raw table as well materializes the corpus explode twice
-            # for no reuse win: the raw table's two consumers (the df
-            # aggregate and the anti-join probe) are each single-pass,
-            # and re-running the explode is cheaper than a second
-            # storage materialization (A/B at sf0.1: 2.1 s vs 2.5-3 s).
-            sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-            owned.append(sh)
+        # Persist the CAPPED table only — it is the one with three
+        # consumers (sizes + both self-join sides).  Persisting the
+        # raw table as well materializes the corpus explode twice
+        # for no reuse win: the raw table's two consumers (the df
+        # aggregate and the anti-join probe) are each single-pass,
+        # and re-running the explode is cheaper than a second
+        # storage materialization (A/B at sf0.1: 2.1 s vs 2.5-3 s).
+        sh = cap_shingle_df(sh, max_doc_freq).persist(StorageLevel.MEMORY_AND_DISK)
+        owned.append(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     # One shuffle-join + one aggregation: intersection sizes fall out of
     # the shared-shingle join directly (no distinct-pairs + re-join).
@@ -309,9 +297,7 @@ def simhash_values(documents: DataFrame) -> DataFrame:
     return packed
 
 
-def simhash_dedup_pairs(
-    documents: DataFrame, max_hamming: int = 3, *, persist: bool = True
-) -> DataFrame:
+def simhash_dedup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs via 4-block banding.
 
     Pigeonhole: hamming(a,b) ≤ 3 over 4 15-bit blocks ⇒ at least one
@@ -320,13 +306,11 @@ def simhash_dedup_pairs(
 
     The signature table feeds both sides of the self-join and Spark
     does NOT reuse the exchange there (different join-key columns per
-    side) — persist computes the 60-bit signatures once.
+    side) — persisting computes the 60-bit signatures once.
     """
-    sims = simhash_values(documents)
-    if persist:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        sims = sims.persist(StorageLevel.MEMORY_AND_DISK)
+    sims = simhash_values(documents).persist(StorageLevel.MEMORY_AND_DISK)
     blocks = sims.select(
         "doc_id",
         "simhash",
@@ -361,7 +345,7 @@ def simhash_dedup_pairs(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    return own_cache(out, sims) if persist else out
+    return own_cache(out, sims)
 
 
 # ---------------------------------------------------------------------------
@@ -392,8 +376,6 @@ def incremental_minhash_pairs(
     documents: DataFrame,
     batch_min_doc_id: int,
     threshold: float = 0.8,
-    *,
-    persist: bool = True,
 ) -> DataFrame:
     """Incremental fuzzy dedup: near-dup pairs involving at least one
     NEW document (doc_id ≥ ``batch_min_doc_id``), i.e. every
@@ -415,13 +397,10 @@ def incremental_minhash_pairs(
     the full dedup would find nothing new — the invariant the
     incremental form must preserve.
     """
-    sh = shingles(documents)
-    sigs = _signatures_from_shingles(sh)
-    if persist:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = shingles(documents).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = _signatures_from_shingles(sh).persist(StorageLevel.MEMORY_AND_DISK)
     bands = band_rows(sigs)
     index_side = bands.alias("a")  # full corpus: the stored band index
     probe_side = bands.filter(F.col("doc_id") >= batch_min_doc_id).alias("b")
@@ -436,16 +415,12 @@ def incremental_minhash_pairs(
         .distinct()
     )
     out = jaccard_for_pairs(cands, sh).filter(F.col("jaccard") >= threshold)
-    return own_cache(out, sh, sigs) if persist else out
+    return own_cache(out, sh, sigs)
 
 
 def connected_components(
-    pairs: DataFrame,
-    max_iterations: int = 25,
-    *,
-    checkpoint_dir: str | None = None,
-    strict: bool = True,
-) -> tuple[DataFrame, int, bool]:
+    pairs: DataFrame, max_iterations: int = 25
+) -> tuple[DataFrame, int]:
     """Connected components over an undirected pair graph, labeling
     every node with the smallest node id in its component.
 
@@ -469,12 +444,12 @@ def connected_components(
 
     Checkpointing truncates lineage each round — without it the plan
     doubles per iteration and Catalyst analysis time blows up around
-    round 8.  Default is ``localCheckpoint`` (executor-local blocks:
-    fast, right for local mode); pass ``checkpoint_dir`` (HDFS/S3
-    path) on a real cluster to switch every round to a RELIABLE
-    checkpoint — executor loss under localCheckpoint discards blocks
-    and fails the job, while reliable checkpoints replay from
-    distributed storage.
+    round 8.  The edges take an eager ``localCheckpoint`` (their count
+    sizes the loop); each round's labels take a lazy one that the
+    fixpoint SUM materializes inside its own action.  Executor-local
+    blocks are the trade-off ``DiskUsageHandler``'s DataFrame serving
+    also makes: an executor loss fails the job instead of replaying
+    it.
 
     Iteration frames are re-sized to the measured edge count (the
     checkpoint materializes edges anyway, so the count is free):
@@ -482,42 +457,19 @@ def connected_components(
     and dragging the session's full partition count through every
     round charged ~0.15 s/round of pure task overhead at sf0.1.
 
-    Returns ``(labels, rounds_used, converged)``.  Partially-converged
-    labels are silently WRONG cluster ids — a dedup pipeline keeping
-    one doc per *unfinished* cluster deletes the wrong documents — so
-    hitting ``max_iterations`` without a fixpoint RAISES by default
-    (``strict=True``).  Pass ``strict=False`` to get the partial
-    labels back with ``converged=False`` (diagnostics, incremental
-    runs that re-enter the loop), in which case a warning is logged.
+    Returns ``(labels, rounds_used)``.  Partially-converged labels are
+    silently WRONG cluster ids — a dedup pipeline keeping one doc per
+    *unfinished* cluster deletes the wrong documents — so hitting
+    ``max_iterations`` without a fixpoint RAISES.
     """
     sc = pairs.sparkSession.sparkContext
-    if checkpoint_dir is not None:
-        sc.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # eager=True: the edge list is measured (count) right after.
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
-    def _ckpt_labels(df: DataFrame) -> DataFrame:
-        # localCheckpoint path (r16, measured): every lazily-checkpointed
-        # frame here is followed immediately by the fixpoint SUM
-        # aggregate, which materializes the checkpoint blocks INSIDE
-        # the same action — one driver round-trip per loop iteration
-        # instead of two (guide §7: cut per-round actions).  Labels are
-        # reused from blocks afterwards exactly as with eager=True.
-        # A lazy reliable checkpoint would gain nothing: Spark writes it
-        # in a separate job after the action, which recomputes the
-        # unpersisted labels plan.  So checkpoint_dir checkpoints eagerly.
-        if checkpoint_dir is not None:
-            return df.checkpoint()
-        return df.localCheckpoint(eager=False)
-
     # Each undirected pair fans out to its two directed edges with ONE
     # explode over the pair subtree (r16) — the previous
     # union(pairs, pairs.swapped) carried the whole pair-generation
     # plan TWICE and relied on exchange reuse to dedup the execution;
-    # the explode makes the single evaluation structural.
-    edges = _ckpt(
+    # the explode makes the single evaluation structural.  The edge
+    # checkpoint is eager: the edge list is measured (count) right after.
+    edges = (
         pairs.select(
             F.explode(
                 F.array(
@@ -528,23 +480,29 @@ def connected_components(
                     ),
                 )
             ).alias("e")
-        ).select("e.doc_a", "e.doc_b")
+        )
+        .select("e.doc_a", "e.doc_b")
+        .localCheckpoint()
     )
     loop_parts = max(
         4, min(sc.defaultParallelism, edges.count() // 100_000)
     )
     edges = edges.coalesce(loop_parts)
-    labels = _ckpt_labels(
+    # Labels checkpoint lazily (r16, measured): every labels frame is
+    # followed immediately by the fixpoint SUM aggregate, which
+    # materializes the checkpoint blocks INSIDE the same action — one
+    # driver round-trip per loop iteration instead of two (guide §7:
+    # cut per-round actions).  Labels are reused from blocks afterwards
+    # exactly as with eager=True.
+    labels = (
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
         .coalesce(loop_parts)
+        .localCheckpoint(eager=False)
     )
     prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-    rounds = 0
-    converged = False
-    for _ in range(max_iterations):
-        rounds += 1
+    for rounds in range(1, max_iterations + 1):
         # min(own, min over in-neighbors) as ONE aggregation: each
         # edge contributes its tail's label to its head, the node's own
         # label rides the union, and a single groupBy-min folds both —
@@ -568,7 +526,7 @@ def connected_components(
         hop = propagated.select(
             F.col("doc_id").alias("h_id"), F.col("cluster_id").alias("h_cl")
         )
-        labels = _ckpt_labels(
+        labels = (
             propagated.join(hop, propagated["cluster_id"] == hop["h_id"], "left")
             .select(
                 "doc_id",
@@ -578,35 +536,25 @@ def connected_components(
                 ).alias("cluster_id"),
             )
             .coalesce(loop_parts)
+            .localCheckpoint(eager=False)
         )
         new_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
         if new_sum == prev_sum:
-            converged = True
-            break
+            return labels, rounds
         prev_sum = new_sum
-    if not converged:
-        msg = (
-            f"connected_components hit max_iterations={max_iterations} "
-            "without reaching a fixpoint; cluster_ids would span "
-            "unfinished merges"
-        )
-        if strict:
-            raise RuntimeError(
-                msg + " (raise max_iterations, or pass strict=False to "
-                "accept partial labels)"
-            )
-        logging.getLogger(__name__).warning(msg)
-    return labels, rounds, converged
+    raise RuntimeError(
+        f"connected_components hit max_iterations={max_iterations} "
+        "without reaching a fixpoint; cluster_ids would span "
+        "unfinished merges (raise max_iterations)"
+    )
 
 
 def duplicate_clusters(
     documents: DataFrame,
     threshold: float = 0.6,
-    max_iterations: int = 25,
     *,
     sh: DataFrame | None = None,
     max_doc_freq: int | None = MAX_SHINGLE_DF,
-    strict: bool = True,
 ) -> DataFrame:
     """Group near-duplicate documents into clusters: connected
     components over the exact-Jaccard pair graph, labeled by the
@@ -615,8 +563,7 @@ def duplicate_clusters(
     cluster_id``, drop the rest).
 
     Delegates to :func:`connected_components` (min-label propagation
-    with pointer-doubling, O(log diameter) rounds).  ``strict``
-    (default on) propagates: non-convergence at ``max_iterations``
+    with pointer-doubling, O(log diameter) rounds).  Non-convergence
     raises rather than returning cluster ids that span unfinished
     merges — downstream keep-one-per-cluster would delete the wrong
     documents.
@@ -632,7 +579,7 @@ def duplicate_clusters(
         documents, threshold, sh=sh, max_doc_freq=max_doc_freq
     )
     pairs = pair_src.select("doc_a", "doc_b")
-    labels, _, _ = connected_components(pairs, max_iterations, strict=strict)
+    labels, _ = connected_components(pairs)
     return labels
 
 
@@ -640,7 +587,7 @@ def ngram_containment_pairs(
     documents: DataFrame,
     threshold: float = 0.8,
     *,
-    max_doc_freq: int | None = MAX_SHINGLE_DF,
+    max_doc_freq: int = MAX_SHINGLE_DF,
 ) -> DataFrame:
     """Directed n-gram CONTAINMENT near-dup: (doc_src, doc_dst) where
     ``|S_src ∩ S_dst| / |S_src| ≥ threshold`` — the asymmetric
@@ -656,14 +603,11 @@ def ngram_containment_pairs(
     and emits 0-2 directed rows via an array-filter-explode — no
     second join, no union re-scan.
     """
-    sh = shingles(documents)
-    owned: list[DataFrame] = []
-    if max_doc_freq is not None:
-        sh = cap_shingle_df(sh, max_doc_freq)
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        owned.append(sh)
+    sh = cap_shingle_df(shingles(documents), max_doc_freq).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
         sh.alias("x")
@@ -702,7 +646,7 @@ def ngram_containment_pairs(
             F.round(F.col("p.c"), 4).alias("containment"),
         )
     )
-    return own_cache(out, *owned)
+    return own_cache(out, sh)
 
 
 def simhash_pairs_editdist(
@@ -1241,12 +1185,7 @@ def trim_duplicated_spans(
     )
 
 
-def weighted_jaccard_pairs(
-    documents: DataFrame,
-    threshold: float = 0.5,
-    *,
-    max_doc_freq: int | None = MAX_SHINGLE_DF,
-) -> DataFrame:
+def weighted_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     """IDF-weighted Jaccard near-dup pairs — the set-similarity tier
     that discounts boilerplate instead of merely capping it: each
     shingle weighs ``ln(N / df)`` (N = documents in the shingle
@@ -1285,13 +1224,12 @@ def weighted_jaccard_pairs(
     # vocabulary-sized join side loses the broadcast the hot set gets,
     # and the "duplicate" second aggregate actually runs over the
     # persisted capped table, which is cheaper than the extra shuffle.
-    sh = shingles(documents)
-    if max_doc_freq is not None:
-        sh = cap_shingle_df(sh, max_doc_freq)
     # Three consumers of the capped table (N aggregate, df aggregate,
     # the weighted-join build) — persist it or the corpus explode and
     # cap join run three times (measured 7.9 s vs 2.5 s at sf0.1).
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = cap_shingle_df(shingles(documents), MAX_SHINGLE_DF).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     n_docs = sh.select(F.count_distinct("doc_id").alias("n_docs"))
     dfw = (
         sh.groupBy("shingle")

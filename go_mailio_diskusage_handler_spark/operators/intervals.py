@@ -26,9 +26,10 @@ O(interval_len / width) rows per interval, while a too-wide bin makes
 each hash bucket carry points that mostly fail the range predicate.
 Set it near the median interval length — hour bins for hour-scale
 windows, day bins for day-scale.  At 100 TB the points side shuffles
-by bin; calendar skew (one hot day) is visible to AQE's skew split
-because the bin IS the shuffle key, or salt the bin further by
-hashing the point timestamp's sub-bin remainder.
+by bin, and AQE's skew split is the hot-bin mitigation: calendar skew
+(one hot day) is visible to it because the bin IS the shuffle key.
+Measured at 60 M rows with a 32%-hot day (SCALE.md round 14): join
+stage max/median 8.5 unmitigated, 1.71 with the AQE split.
 """
 
 from __future__ import annotations
@@ -54,7 +55,6 @@ def interval_join(
     end: str = "e",
     point_ts: str = "ts",
     bin_width: str = "day",
-    n_salt: int | None = None,
 ) -> DataFrame:
     """Inner-join ``points`` to every interval containing them —
     ``points[point_ts] ∈ [intervals[start], intervals[end])`` — as a
@@ -62,34 +62,14 @@ def interval_join(
     column of both inputs (the caller aggregates); column names must
     not collide apart from the bin key the operator adds and drops.
 
-    ``n_salt`` (optional) spreads a HOT BIN — calendar skew, e.g. one
-    launch day owning 30% of all points — over ``n_salt`` shuffle
-    partitions deterministically: points carry
-    ``pmod(xxhash64(point_ts), n_salt)`` as a second join key, and each
-    (interval, bin) row fans out to all ``n_salt`` salts, so every
-    containing interval still meets every point exactly once
-    (interval-side-bounded extra cost: bins × n_salt rows per
-    interval).  Leave it None in the common regimes: with a
-    broadcast-able interval side the points never shuffle at all, and
-    in the shuffle regime AQE's skew split already sees the hot bin
-    because the bin IS the shuffle key.  Salt ONLY for the case AQE
-    declines — a keyed downstream consumer pinning the join's
-    partitioning — sized from the skew advisor's recommendation.
-    The salt MULTIPLIES the interval-side fan-out (bins × n_salt rows
-    per interval), so pair it with a bin width near the interval
-    length — minute bins over multi-day intervals already cost
-    thousands of rows per interval before any salt.
-    Measured at 60 M rows with a 32%-hot day
-    (SCALE.md round 14): unmitigated join-stage max/median 8.5,
-    AQE split 1.71, salt S=32 1.83 — identical results in all
-    regimes.
+    With a broadcast-able interval side the points never shuffle at
+    all; in the shuffle regime a hot bin is AQE's to split (module
+    docstring).
     """
     if bin_width not in BIN_WIDTHS:
         raise ValueError(
             f"bin_width must be one of {sorted(BIN_WIDTHS)}, got {bin_width!r}"
         )
-    if n_salt is not None and n_salt < 2:
-        raise ValueError(f"n_salt must be >= 2 when set, got {n_salt!r}")
     width = BIN_WIDTHS[bin_width]
     # Guard degenerate/inverted intervals BEFORE the explode (ADVICE
     # r13): end < start can never satisfy the [start, end) predicate,
@@ -110,28 +90,12 @@ def interval_join(
         ),
     )
     pt = points.withColumn("__bin", _bin_of(F.col(point_ts), width))
-    keys = ["__bin"]
-    if n_salt is not None:
-        iv = iv.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        # hash of the FULL timestamp, not minute-of-day (ADVICE r14):
-        # batch-stamped/truncated timestamps cluster in a few minutes,
-        # which left the old minute-granularity salt with no spread
-        # exactly when the bin was hottest.  xxhash64 is deterministic
-        # across retries (guide §2.5 — never rand() in a shuffle key)
-        # and any sub-bin structure still spreads uniformly.
-        pt = pt.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(F.col(point_ts)), F.lit(n_salt)).cast("int"),
-        )
-        keys.append("__salt")
     return (
-        iv.join(pt, on=keys, how="inner")
+        iv.join(pt, on=["__bin"], how="inner")
         .filter(
             (F.col(point_ts) >= F.col(start)) & (F.col(point_ts) < F.col(end))
         )
-        .drop(*keys)
+        .drop("__bin")
     )
 
 
@@ -144,7 +108,6 @@ def overlap_join(
     right_start: str = "s2",
     right_end: str = "e2",
     bin_width: str = "day",
-    n_salt: int | None = None,
 ) -> DataFrame:
     """Inner-join every overlapping pair of intervals — half-open
     OVERLAP, ``left[start] < right[end] AND right[start] < left[end]``
@@ -182,32 +145,11 @@ def overlap_join(
     a hot bin because the bin IS the shuffle key.  Without the
     rewrite, Catalyst plans a pure theta join as
     BroadcastNestedLoopJoin — O(|left|·|right|) comparisons.
-
-    ``n_salt`` (optional) spreads a HOT BIN over ``n_salt`` shuffle
-    partitions, like ``interval_join`` — but here the fan-out is
-    TWO-SIDED (both sides may hold many intervals in the hot bin), so
-    the point-join's construction (hash the probe row's own timestamp)
-    does not apply: a salted left row must still meet EVERY right row
-    of its bin.  Construction: the right side carries ONE deterministic
-    salt hashed from its interval identity,
-    ``pmod(xxhash64(s2, e2), n_salt)``, and each (left, bin) row fans
-    out to all ``n_salt`` salts.  Every overlapping pair still meets in
-    exactly one (bin, salt) partition — the left copy with the right
-    row's salt — so exactly-once production is preserved with no
-    post-join dedup; results are salt-invariant (pinned by test).
-    Cost: left-side fan-out multiplies by ``n_salt``; the hot bin's
-    per-partition hash-build side shrinks by ~``n_salt``.  As with
-    ``interval_join``, leave it None unless AQE's skew split (which
-    sees the bin, the shuffle key) is unavailable because a downstream
-    consumer pins the join's partitioning — see the SCALE.md round-15
-    hot-day measurement.
     """
     if bin_width not in BIN_WIDTHS:
         raise ValueError(
             f"bin_width must be one of {sorted(BIN_WIDTHS)}, got {bin_width!r}"
         )
-    if n_salt is not None and n_salt < 2:
-        raise ValueError(f"n_salt must be >= 2 when set, got {n_salt!r}")
     width = BIN_WIDTHS[bin_width]
 
     def _binned(df: DataFrame, s: str, e: str) -> DataFrame:
@@ -219,21 +161,8 @@ def overlap_join(
 
     lv = _binned(left, left_start, left_end)
     rv = _binned(right, right_start, right_end)
-    keys = ["__bin"]
-    if n_salt is not None:
-        rv = rv.withColumn(
-            "__salt",
-            F.pmod(
-                F.xxhash64(F.col(right_start), F.col(right_end)),
-                F.lit(n_salt),
-            ).cast("int"),
-        )
-        lv = lv.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        keys.append("__salt")
     return (
-        lv.join(rv, on=keys, how="inner")
+        lv.join(rv, on=["__bin"], how="inner")
         .filter(
             (F.col(left_start) < F.col(right_end))
             & (F.col(right_start) < F.col(left_end))
@@ -245,5 +174,5 @@ def overlap_join(
                 _bin_of(F.col(right_start), width),
             )
         )
-        .drop(*keys)
+        .drop("__bin")
     )

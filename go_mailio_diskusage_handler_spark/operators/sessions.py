@@ -644,9 +644,11 @@ def markov_stationary(events: DataFrame, iters: int = 3) -> DataFrame:
         .union(p.select(F.col("next_type").alias("t")))
         .distinct()
     )
-    n_types = types.count()
+    # The uniform start counts the types inside the plan (a global
+    # window over the |event_types|-bounded frame), so building the
+    # frame runs no job; 1.0 / count is the same IEEE division.
     pi = types.select(
-        "t", (F.lit(1.0) / F.lit(float(n_types))).alias("pv")
+        "t", (F.lit(1.0) / F.count(F.lit(1)).over(Window.partitionBy())).alias("pv")
     )
     for _ in range(iters):
         pi = (

@@ -555,7 +555,7 @@ def ivf_ann_topk(
 
 
 def embedding_near_dup_pairs(
-    embeddings: DataFrame, threshold: float = 0.4, *, persist: bool = True
+    embeddings: DataFrame, threshold: float = 0.4
 ) -> DataFrame:
     """Embedding-cosine near-dup: multi-table multi-probe bucket join
     (LSH) then exact-cosine verify ≥ threshold.  The n² risk is
@@ -577,8 +577,10 @@ def embedding_near_dup_pairs(
 
     The bucketed projection (N_TABLES×N_PLANES hyperplane dots + norm
     per vector) feeds both sides of the self-join and Spark does not
-    reuse the exchange — persist computes it once (measured 9× at
+    reuse the exchange — persisting computes it once (measured 9× at
     sf0.1)."""
+    from pyspark import StorageLevel
+
     withb = widen_for_compute(embeddings).select(
         "vec_id",
         "embedding",
@@ -587,11 +589,7 @@ def embedding_near_dup_pairs(
             bucket_id(F.col("embedding"), table=t).alias(f"b{t}")
             for t in range(N_TABLES)
         ],
-    )
-    if persist:
-        from pyspark import StorageLevel
-
-        withb = withb.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     index_entries = F.array(
         *[
             F.struct(F.lit(t).alias("t"), F.col(f"b{t}").alias("bucket"))
@@ -633,7 +631,7 @@ def embedding_near_dup_pairs(
         .distinct()
         .filter(F.col("cos_sim") >= threshold)
     )
-    return own_cache(out, withb) if persist else out
+    return own_cache(out, withb)
 
 
 PQ_M = 8  # subspaces (dim 64 → 8 sub-vectors of 8)

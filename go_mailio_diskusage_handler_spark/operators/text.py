@@ -31,8 +31,9 @@ TOKEN_SPLIT = " "
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def tokens(col: str | Column = "text") -> Column:
-    return F.split(col if isinstance(col, Column) else F.col(col), TOKEN_SPLIT)
+def tokens() -> Column:
+    """The ``text`` column split into whitespace tokens."""
+    return F.split(F.col("text"), TOKEN_SPLIT)
 
 
 def word_ngrams(toks: Column, n: int) -> Column:

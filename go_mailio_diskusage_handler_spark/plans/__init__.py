@@ -21,3 +21,16 @@ def has_broadcast_join(df: DataFrame) -> bool:
 
 def shuffle_count(df: DataFrame) -> int:
     return executed_plan(df).count("Exchange hashpartitioning")
+
+
+def plan_shape(plan: str) -> dict[str, int]:
+    """The shape facts ``PLAN_BASELINE.json`` records for one executed
+    plan: hash shuffles, broadcast and sort-merge joins, and
+    nested-loop or cartesian joins.  Counts are static: a subplan that
+    feeds k consumers counts k times."""
+    return {
+        "shuffles": plan.count("Exchange hashpartitioning"),
+        "broadcast_joins": plan.count("BroadcastHashJoin"),
+        "sort_merge_joins": plan.count("SortMergeJoin"),
+        "nested_loops": plan.count("NestedLoopJoin") + plan.count("CartesianProduct"),
+    }

@@ -81,13 +81,23 @@ def test_lookup_empty_for_unknown_address(spark):
 
 def test_observed_metrics_match_quality_gate(spark):
     """df.observe counters must equal the standalone quality aggregate
-    — same invariants, zero extra passes."""
-    inv = core.inventory_from_lineitem(load_table(spark, SF_SMOKE, "lineitem"))
-    du, obs = core.disk_usage_observed(inv)
-    du.count()  # first action materializes the metrics
-    gate = core.inventory_quality(inv).collect()[0]
-    assert obs.get["total_rows"] == gate["total_rows"]
-    assert obs.get["malformed_keys"] == gate["malformed_keys"]
+    — same invariants, zero extra passes.  A NULL key is malformed to
+    the in-flight gate, while ``inventory_quality`` counts it apart,
+    under ``null_keys`` only."""
+    lineitem_inv = core.inventory_from_lineitem(
+        load_table(spark, SF_SMOKE, "lineitem")
+    )
+    null_key_inv = spark.createDataFrame(
+        [("a/x", 1), (None, 2), ("noslash", 3), (None, 4), ("b/y", 5)],
+        "key string, size long",
+    )
+    for inv in (lineitem_inv, null_key_inv):
+        du, obs = core.disk_usage_observed(inv)
+        du.count()  # first action materializes the metrics
+        gate = core.inventory_quality(inv).collect()[0]
+        assert obs.get["total_rows"] == gate["total_rows"]
+        assert obs.get["malformed_keys"] == gate["malformed_keys"] + gate["null_keys"]
+    assert (gate["null_keys"], gate["malformed_keys"]) == (2, 1)
 
 
 def test_refresh_key_parse_runs_no_split(spark, tmp_path):

@@ -515,10 +515,10 @@ def test_generated_frame_query_matches_duckdb(spark, ddb, seed):
 # Unlike grammars 1-8 (one SQL text, two engines), this one fuzzes an
 # OPERATOR: the Spark side runs `operators/intervals.py`'s binned
 # rewrite (interval_join / overlap_join) through the DataFrame API
-# with a randomized bin width and optional sub-bin salt, while the
+# with a randomized bin width, while the
 # oracle runs the naive theta join DuckDB executes natively (IEJoin).
 # Agreement therefore proves the rewrite's EXACTLY-ONCE pair
-# production — bin fan-out, first-shared-bin dedup, salt fan-out —
+# production — bin fan-out and first-shared-bin dedup —
 # over randomized interval shapes: lengths from zero to multi-day
 # (including zero-length intervals — under the strict predicate a
 # zero-length right interval [t, t) is open at t, so s < t < e CAN
@@ -539,17 +539,13 @@ def gen_interval_case(seed: int) -> dict:
     if len_day_mod == 1 and len_hours == 0:
         len_hours = 1  # keep the all-zero-length seed non-vacuous
     # Bin width respects the operator's usage contract (width ~ the
-    # interval length): fan-out is bins-per-interval × n_salt, so
-    # minute bins over multi-day intervals (up to ~6 000 bins each)
-    # are a cost misconfiguration, not a semantics axis — seed 11037
-    # demonstrated it as a 12.6 GiB broadcast.  Minute bins are
-    # fuzzed only for sub-26h intervals, and the total per-interval
-    # fan-out (max bins × salt) is capped at 200 so the grammar stays
-    # runnable at EVERY fixture scale: the interval-side row count
-    # scales with SF (60 k intervals at sf0.1 for the loosest
-    # threshold), and an unbounded bins×salt product turned one
-    # committed salted-hour seed into a ~150 M-row single-threaded
-    # broadcast build on the sf0.1 closing re-run.
+    # interval length): fan-out is bins-per-interval, so minute bins
+    # over multi-day intervals (up to ~6 000 bins each) are a cost
+    # misconfiguration, not a semantics axis — seed 11037 demonstrated
+    # it as a 12.6 GiB broadcast.  Minute bins are fuzzed only for
+    # sub-26h intervals, so the grammar stays runnable at EVERY
+    # fixture scale: the interval-side row count scales with SF (60 k
+    # intervals at sf0.1 for the loosest threshold).
     max_len_min = (len_day_mod - 1) * 1440 + len_hours * 60
     thresh = rng.choice([300000, 420000, 480000, 540000])
     # minute bins also require a SELECTIVE interval set: ~1.5 k bins
@@ -559,18 +555,6 @@ def gen_interval_case(seed: int) -> dict:
         ["minute"] if max_len_min <= 1560 and thresh >= 480000 else []
     )
     width = rng.choice(widths)
-    max_bins = {
-        "day": len_day_mod + 2,
-        "hour": (len_day_mod - 1) * 24 + len_hours + 2,
-        "minute": max_len_min + 2,
-    }[width]
-    # Salt is fuzzed on BOTH kinds since r15: overlap_join grew the
-    # two-sided salt knob (right side hashed by interval identity, left
-    # side fanned out), and its left fan-out obeys the same
-    # bins × n_salt ≤ 200 cap as the point join's interval side.
-    salt_pool = [None, None] + [
-        s for s in (4, 16) if max_bins * s <= 200
-    ]
     case = {
         "kind": kind,
         "width": width,
@@ -582,10 +566,6 @@ def gen_interval_case(seed: int) -> dict:
         "invert_mod": rng.choice([0, 7, 13]),
         "pad_min": rng.randrange(1, 90),
         "grouped": rng.random() < 0.6,
-        # drawn LAST (and for "point" in the same rng position as
-        # before r15) so every committed point seed derives the exact
-        # case it always did; overlap seeds gain only the salt axis.
-        "salt": rng.choice(salt_pool),
     }
     return case
 
@@ -671,7 +651,7 @@ def run_interval_case(spark, sf_dir: str, c: dict):
         ev = events.select(
             "ts", F.round(F.col("value") * 100).cast("long").alias("cents")
         )
-        j = interval_join(iv, ev, bin_width=c["width"], n_salt=c["salt"])
+        j = interval_join(iv, ev, bin_width=c["width"])
         aggs = [
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("cents"), F.lit(0).cast("long")).alias("cents"),
@@ -695,7 +675,7 @@ def run_interval_case(spark, sf_dir: str, c: dict):
             iv, act,
             left_start="s", left_end="e",
             right_start="s1", right_end="e1",
-            bin_width=c["width"], n_salt=c["salt"],
+            bin_width=c["width"],
         )
         aggs = [
             F.count(F.lit(1)).alias("n"),

@@ -330,23 +330,6 @@ def test_shingle_df_cap_is_broadcast_anti_join(spark):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
 
 
-def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
-    """The cluster-mode switch: with ``checkpoint_dir`` set, every
-    round uses a reliable checkpoint (files must appear under the
-    dir) and labels are identical to the localCheckpoint path."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    ckpt = tmp_path / "cc_ckpt"
-    labels, _, converged = dedup.connected_components(
-        pairs, checkpoint_dir=str(ckpt)
-    )
-    assert converged
-    got = {r.doc_id: r.cluster_id for r in labels.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    assert any(ckpt.rglob("*")), "no reliable checkpoint files written"
-
-
 def test_connected_components_chain_converges_logarithmically(spark):
     """Pointer-doubling bound: a 64-node chain (diameter 63) must
     converge in O(log n) rounds — plain min-label propagation would
@@ -355,16 +338,15 @@ def test_connected_components_chain_converges_logarithmically(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    labels, rounds, converged = dedup.connected_components(pairs, max_iterations=25)
-    assert converged
+    labels, rounds = dedup.connected_components(pairs, max_iterations=25)
     assert rounds <= 10, f"chain took {rounds} rounds; shortcut not effective"
     got = {r.doc_id: r.cluster_id for r in labels.collect()}
     assert got == {i: 0 for i in range(n)}
 
 
 def test_connected_components_strict_raises_on_non_convergence(spark):
-    """Partially-converged labels are wrong cluster ids; the default
-    must refuse them loudly.  A 4-node chain cannot reach fixpoint
+    """Partially-converged labels are wrong cluster ids; they must be
+    refused loudly.  A 4-node chain cannot reach fixpoint
     verification in one round (the convergence check itself needs a
     no-change round), so max_iterations=1 forces the path."""
     pairs = spark.createDataFrame(
@@ -372,12 +354,6 @@ def test_connected_components_strict_raises_on_non_convergence(spark):
     )
     with pytest.raises(RuntimeError, match="max_iterations"):
         dedup.connected_components(pairs, max_iterations=1)
-    # Opt-out returns the partial labels and says so.
-    labels, rounds, converged = dedup.connected_components(
-        pairs, max_iterations=1, strict=False
-    )
-    assert rounds == 1 and not converged
-    assert labels.count() == 4
 
 
 def test_duplicate_clusters_are_consistent_with_pairs(spark):
@@ -420,9 +396,7 @@ def test_shingle_df_cap_drops_heavy_hitter(spark):
     )
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in dedup.ngram_jaccard_pairs(
-            docs, 0.5, max_doc_freq=3, persist=False
-        ).collect()
+        for r in dedup.ngram_jaccard_pairs(docs, 0.5, max_doc_freq=3).collect()
     }
     assert (1, 4) in pairs, "rare-shingle duplicate lost by the cap"
     assert all(p == (1, 4) for p in pairs), (
@@ -665,9 +639,7 @@ def test_prefix_filter_is_lossless_and_prunes_candidates(spark):
     docs = load_table(spark, SF_CORRECT, "documents")
     full = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in D.ngram_jaccard_pairs(
-            docs, 0.6, max_doc_freq=None, persist=False
-        ).collect()
+        for r in D.ngram_jaccard_pairs(docs, 0.6, max_doc_freq=None).collect()
     }
     got = {
         (r.doc_a, r.doc_b, r.jaccard)

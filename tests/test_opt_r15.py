@@ -102,54 +102,6 @@ def test_pagerank_oracle_parity(spark, ddb):
     )
 
 
-def test_overlap_join_salt_is_cost_only(spark):
-    """r15: overlap_join grew the two-sided salt knob (verdict #3).
-    Salted and unsalted runs must return identical overlapping pairs —
-    the right side carries one identity-hashed salt, the left fans out
-    to all salts, so each pair still meets exactly once."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from go_mailio_diskusage_handler_spark.operators.intervals import (
-        overlap_join,
-    )
-    from go_mailio_diskusage_handler_spark.sources.tables import load_table
-
-    from conftest import normalize
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    act = (
-        events.groupBy("user_id")
-        .agg(
-            F.min("ts").alias("s2"),
-            (F.max("ts") + F.make_interval(hours=F.lit(6).cast("int"))).alias(
-                "e2"
-            ),
-        )
-    )
-    base = F.to_timestamp(F.lit("2024-01-02"))
-    iv = spark.range(40).select(
-        F.col("id").alias("iv_id"),
-        (base + F.make_interval(
-            hours=(F.col("id") * 7 % 120).cast("int"))).alias("s1"),
-    ).withColumn("e1", F.col("s1") + F.make_interval(
-        hours=(F.lit(2) + F.col("iv_id") % 40).cast("int")))
-
-    def pairs(**kw):
-        return normalize([
-            (r.iv_id, r.user_id)
-            for r in overlap_join(iv, act, **kw)
-            .select("iv_id", "user_id").collect()
-        ])
-
-    plain = pairs()
-    assert plain == pairs(n_salt=4) == pairs(n_salt=16)
-    assert len(plain) > 0
-
-    with pytest.raises(ValueError):
-        overlap_join(iv, act, n_salt=1)
-
-
 def test_triangles_plan_lineage_truncated(spark):
     """r15: near_dup_triangles materializes the edge list (and the
     degree-oriented edge frame) with eager localCheckpoint instead of

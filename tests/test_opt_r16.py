@@ -134,8 +134,7 @@ def test_connected_components_labels_and_rounds(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
         "doc_a long, doc_b long",
     )
-    labels, rounds, converged = connected_components(pairs)
-    assert converged
+    labels, rounds = connected_components(pairs)
     got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
     # pointer doubling keeps rounds logarithmic: the depth-3 chain plus
@@ -151,8 +150,7 @@ def test_connected_components_edge_doubling_is_symmetric(spark):
     )
 
     pairs = spark.createDataFrame([(7, 3)], "doc_a long, doc_b long")
-    labels, _, converged = connected_components(pairs)
-    assert converged
+    labels, _ = connected_components(pairs)
     got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
     assert got == {3: 3, 7: 3}
 

@@ -2,17 +2,16 @@
 
 `PLAN_BASELINE.json` (regenerate with `python3 tools_plan_inventory.py`
 after INTENTIONAL plan changes) records, for every registered query at
-sf0.001: static shuffle count, broadcast/sort-merge join counts, and
-nested-loop/cartesian count.  This test asserts no query's shuffle or
+sf0.001, `plans.plan_shape` of its executed plan: static shuffle count,
+broadcast/sort-merge join counts, and nested-loop/cartesian count.  This test asserts no query's shuffle or
 nested-loop count GREW — the silent ways a refactor degrades the
 100 TB story (a broadcast falling back to SMJ+exchange, a join
 condition losing its equi-key and going cartesian).
 
 Counts are STATIC lineage counts: a query whose persisted subplan
 feeds k consumers counts that subplan's exchanges k times even though
-execution materializes once (e.g. dedup_triangles' unrolled iterative
-CC).  That over-count is stable for fixed code, which is all a
-monotonic gate needs.  Planning only — nothing executes.
+execution materializes once.  That over-count is stable for fixed
+code, which is all a monotonic gate needs.  Planning only — nothing executes.
 """
 from __future__ import annotations
 
@@ -73,8 +72,8 @@ def test_plan_shape_did_not_regress(spark, name):
     gc.collect()
     df = registry.QUERIES[name](spark, SF_TINY)
     plan = plans.executed_plan(df)
-    shuffles = plan.count("Exchange hashpartitioning")
-    nested = plan.count("NestedLoopJoin") + plan.count("CartesianProduct")
+    shape = plans.plan_shape(plan)
+    shuffles, nested = shape["shuffles"], shape["nested_loops"]
     assert shuffles <= base["shuffles"], (
         f"{name}: shuffle count grew {base['shuffles']} -> {shuffles}; if "
         f"intentional, regenerate PLAN_BASELINE.json\n{plan}"

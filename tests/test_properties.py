@@ -234,7 +234,8 @@ def test_weighted_sample_is_monotone_in_rate(spark, n_docs, r_low, r_hi_delta):
 def test_containment_matches_python_reference(spark, doc_words, threshold):
     """ngram_containment_pairs == a direct Python reimplementation
     (directed |S_src ∩ S_dst| / |S_src| over distinct word trigrams,
-    emitted when ≥ threshold) for arbitrary corpora.  DF cap disabled
+    emitted when ≥ threshold) for arbitrary corpora.  The DF cap is the
+    document count, which no shingle's document frequency can exceed,
     so the tiny alphabet's heavy-hitters don't mask pairs — the cap's
     own algebra is property-tested separately."""
     from go_mailio_diskusage_handler_spark.operators import dedup
@@ -256,7 +257,7 @@ def test_containment_matches_python_reference(spark, doc_words, threshold):
     got = {
         (r.doc_src, r.doc_dst): r.containment
         for r in dedup.ngram_containment_pairs(
-            docs, threshold, max_doc_freq=None
+            docs, threshold, max_doc_freq=len(rows)
         ).collect()
     }
     assert got == want

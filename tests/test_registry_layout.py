@@ -4,7 +4,8 @@ into ``queries/`` from the rest of the package, and the registry order
 depends on the query names and the driver's record, not on which
 module registers a query or in what order the modules are imported.
 Every top-level package definition is reachable from the registry, the
-serving handler or a benchmark entry point."""
+serving handler or a benchmark entry point, and every defaulted
+parameter that selects a branch is set by one of them."""
 from __future__ import annotations
 
 import ast
@@ -128,6 +129,7 @@ REACHABILITY_ALLOWED = {
     "plans.formatted": "plan-inspection helper for tests",
     "plans.has_broadcast_join": "plan-inspection helper for tests",
     "plans.shuffle_count": "plan-inspection helper for tests",
+    "plans.plan_shape": "what PLAN_BASELINE.json records; its tool and its test share it",
     "sources.tables.invalidate_view_memo": "test fixture: drops the per-session view memo",
     "functions.udfs.per_user_zscores_pandas": "pandas reference the Arrow z-score path is checked against",
     "functions.udfs._zscore_group": "pandas reference the Arrow z-score path is checked against",
@@ -191,13 +193,16 @@ def _bound_names(node) -> list[str]:
     return []
 
 
-def _unreached_definitions() -> dict[str, int]:
-    """``module.name`` -> line count of every top-level package
-    definition that no root reaches by name.  The roots: the query
-    modules, ``registry.py``, ``DiskUsageHandler``, ``bench.py``,
+def _reach():
+    """Walk the package from its roots.  The roots: the query modules,
+    ``registry.py``, ``DiskUsageHandler``, ``bench.py``,
     ``__spark_entry__.py`` and ``perfbench/``.  A reached definition
     reaches what its body names, resolved through its module's own
-    bindings and imports; importing a module runs its top-level code."""
+    bindings and imports; importing a module runs its top-level code.
+    Returns the parsed package modules, the reached ``(module, name)``
+    pairs, every ``(module, node)`` walked, and the resolver from an
+    identifier in a module to the ``(module, name)`` it binds, where a
+    name of ``None`` is the module itself."""
     paths = {}
     for path in glob.glob(os.path.join(PKG_DIR, "**", "*.py"), recursive=True):
         parts = os.path.relpath(path, REPO_ROOT)[:-3].split(os.sep)
@@ -243,29 +248,47 @@ def _unreached_definitions() -> dict[str, int]:
         if not os.path.basename(path).startswith("test_"):
             entry = _Module(os.path.basename(path)[:-3], path, "", paths)
             todo.append((entry, entry.tree))
+    walked: list[tuple[_Module, ast.AST]] = []
     while todo:
         m, node = todo.pop()
+        walked.append((m, node))
         for sub in ast.walk(node):
             if isinstance(sub, ast.Name):
                 for target in resolve(m, sub.id):
                     mark(*target)
             elif isinstance(sub, ast.Attribute):
-                chain = []
-                base = sub
-                while isinstance(base, ast.Attribute):
-                    chain.append(base.attr)
-                    base = base.value
-                if not isinstance(base, ast.Name):
-                    continue
-                targets = resolve(m, base.id)
-                for attr in reversed(chain):  # `mod.sub.name` walks module by module
-                    targets = {
-                        (f"{mod}.{attr}", None) if f"{mod}.{attr}" in mods else (mod, attr)
-                        for mod, name in targets
-                        if name is None
-                    }
+                for targets in _chain(mods, resolve, m, sub):
                     for target in targets:
                         mark(*target)
+    return mods, reached, walked, resolve
+
+
+def _chain(mods, resolve, m: _Module, node: ast.Attribute) -> list[set]:
+    """The targets of each link of an attribute chain: `mod.sub.name`
+    walks module by module, so the last set is what the chain names."""
+    chain = []
+    base = node
+    while isinstance(base, ast.Attribute):
+        chain.append(base.attr)
+        base = base.value
+    if not isinstance(base, ast.Name):
+        return []
+    targets = resolve(m, base.id)
+    links = []
+    for attr in reversed(chain):
+        targets = {
+            (f"{mod}.{attr}", None) if f"{mod}.{attr}" in mods else (mod, attr)
+            for mod, name in targets
+            if name is None
+        }
+        links.append(targets)
+    return links
+
+
+def _unreached_definitions() -> dict[str, int]:
+    """``module.name`` -> line count of every top-level package
+    definition that no root reaches by name (see :func:`_reach`)."""
+    mods, reached, _, _ = _reach()
     out = {}
     for name, m in mods.items():
         for d, node in m.defs.items():
@@ -285,3 +308,216 @@ def test_package_definitions_reachable_from_roots():
         f"{sum(offenders.values())} lines of package definitions reached by "
         f"no root: {sorted(offenders)}"
     )
+
+
+# Branch parameters (see `_unselected_branch_parameters`) that no root
+# sets, each kept for a reason a test states.
+_SKEW = "tests use the unguarded path as the reference the skew guard is checked against"
+_S3A = "a deployment setting of the reference's real S3 I/O; the S3 integration test covers it"
+_VALUE = "a value forwarded to its callee's default: it selects no branch"
+BRANCH_PARAMETERS_ALLOWED = {
+    "operators.curation.mixture_rebalance.skew_guard": _SKEW,
+    "operators.curation.stratified_split.skew_guard": _SKEW,
+    "session.configure_s3a.access_key": _S3A,
+    "session.configure_s3a.endpoint": _S3A,
+    "session.configure_s3a.path_style": _S3A,
+    "session.configure_s3a.region": _S3A,
+    "session.configure_s3a.secret_key": _S3A,
+    "operators.curation.bloom_prefiltered_contamination.k_hashes": _VALUE,
+    "operators.curation.bloom_prefiltered_contamination.m_bits": _VALUE,
+    "operators.curation.novelty_gate.n": _VALUE,
+    "operators.relational._morton_interleave.bits": _VALUE,
+    "operators.relational.zorder_keys.bits": _VALUE,
+    "operators.sessions.daily_anomaly_zscore.min_prior": _VALUE,
+    "operators.sessions.daily_anomaly_zscore.trailing": _VALUE,
+    "operators.sessions.daily_anomaly_zscore.z_thresh": _VALUE,
+    "operators.sessions.event_concentration.deciles": _VALUE,
+    "operators.sessions.funnel_step_rates.steps": _VALUE,
+    "operators.similarity.bucket_id.dim": _VALUE,
+    "operators.similarity.ivfpq_recall_eval.k": _VALUE,
+    "operators.similarity.ivfpq_recall_eval.n_queries": _VALUE,
+    "operators.similarity.ivfpq_rerank_topk.n_probe": _VALUE,
+    "operators.similarity.kmeans_cluster_stats.iters": _VALUE,
+    "operators.similarity.kmeans_cluster_stats.k": _VALUE,
+    "sources.bucketing.bucketed_spend_by_nation.buckets": _VALUE,
+}
+
+
+def _defaulted(fn: ast.FunctionDef) -> dict[str, int | None]:
+    """Defaulted parameter -> its position, ``None`` if keyword-only."""
+    pos = fn.args.posonlyargs + fn.args.args
+    out = {
+        a.arg: i for i, a in enumerate(pos) if i >= len(pos) - len(fn.args.defaults)
+    }
+    out.update(
+        (a.arg, None)
+        for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    )
+    return out
+
+
+def _params(fn) -> set[str]:
+    a = fn.args
+    return {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+
+
+def _tested(fn: ast.FunctionDef) -> set[str]:
+    """The defaulted parameters named in the test of an ``if`` or a
+    conditional expression anywhere in ``fn``."""
+    names = {
+        n.id
+        for t in ast.walk(fn)
+        if isinstance(t, (ast.If, ast.IfExp))
+        for n in ast.walk(t.test)
+        if isinstance(n, ast.Name)
+    }
+    return set(_defaulted(fn)) & names
+
+
+def _calls(node: ast.AST, scope: tuple = ()):
+    """Every call under ``node`` with the functions enclosing it,
+    innermost last."""
+    if isinstance(node, ast.Call):
+        yield node, scope
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+        scope = scope + (node,)
+    for child in ast.iter_child_nodes(node):
+        yield from _calls(child, scope)
+
+
+def _passed(call: ast.Call, param: str, position: int | None, skip: int):
+    """What ``call`` passes for ``param``: the argument's node, ``True``
+    for a splat that may carry it, ``None`` if it does not pass it.
+    ``skip`` leading parameters (a method's ``self``) take no argument."""
+    for kw in call.keywords:
+        if kw.arg == param:
+            return kw.value
+        if kw.arg is None:
+            return True
+    if position is None:
+        return None
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return True
+        if i + skip == position:
+            return arg
+    return None
+
+
+def _unselected_branch_parameters() -> list[str]:
+    """``module.function.parameter`` of every branch parameter of a
+    package function or method that no root selects.
+
+    A branch parameter is a defaulted parameter that an ``if`` or a
+    conditional expression tests, or one that its function forwards
+    (``strict=strict``) to a branch parameter or to a default that no
+    root sets.  A root selects it when a call site reached from the
+    roots of :func:`_reach` passes it, by keyword or by position; a
+    forward of the caller's own defaulted parameter counts only if a
+    root selects that one."""
+    mods, _, walked, resolve = _reach()
+    functions: dict[tuple[str, str], ast.FunctionDef] = {}
+    for name, m in mods.items():
+        for d, node in m.defs.items():
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                functions[(name, d)] = node
+            elif isinstance(node, ast.ClassDef):
+                for sub in node.body:
+                    if isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        functions[(name, f"{d}.{sub.name}")] = sub
+    key_of = {id(fn): key for key, fn in functions.items()}
+
+    def definition(target, seen=frozenset()):
+        mod, name = target
+        m = mods.get(mod)
+        if m is None or name is None or target in seen:
+            return None
+        if name in m.defs:
+            return target
+        for t in m.aliases.get(name, ()):  # a re-export
+            found = definition(t, seen | {target})
+            if found:
+                return found
+        return None
+
+    def callees(m: _Module, func: ast.expr) -> list[tuple[tuple[str, str], int]]:
+        """The package functions a call may run, each with the number
+        of leading parameters (``self``) its positional arguments skip."""
+        if isinstance(func, ast.Name):
+            targets = resolve(m, func.id)
+        elif isinstance(func, ast.Attribute):
+            links = _chain(mods, resolve, m, func)
+            targets = links[-1] if links else set()
+        else:
+            return []
+        out = []
+        for mod, name in filter(None, map(definition, targets)):
+            if (mod, name) in functions:
+                out.append(((mod, name), 0))
+            elif (mod, f"{name}.__init__") in functions:
+                out.append(((mod, f"{name}.__init__"), 1))
+        if not out and isinstance(func, ast.Attribute):
+            # `obj.method(...)`: any package method of that name
+            out = [
+                (key, 1) for key in functions
+                if key[1].rpartition(".")[2] == func.attr and "." in key[1]
+            ]
+        return out
+
+    # (callee, parameter) -> one entry per reached call site passing
+    # it: the caller's forwarded (function, parameter), or None
+    passes: dict[tuple, list] = {}
+    for m, node in walked:
+        for call, scope in _calls(node):
+            for key, skip in callees(m, call.func):
+                for param, position in _defaulted(functions[key]).items():
+                    value = _passed(call, param, position, skip)
+                    if value is None:
+                        continue
+                    source = None
+                    if isinstance(value, ast.Name):
+                        owner = next(
+                            (f for f in reversed(scope) if value.id in _params(f)), None
+                        )
+                        if id(owner) in key_of and value.id in _defaulted(owner):
+                            source = (key_of[id(owner)], value.id)
+                    passes.setdefault((key, param), []).append(source)
+    forwards: dict[tuple, list] = {}
+    for target, sources in passes.items():
+        for source in filter(None, sources):
+            forwards.setdefault(source, []).append(target)
+
+    memo: dict[tuple, bool] = {}
+
+    def selected(target) -> bool:
+        if target not in memo:
+            memo[target] = False  # a forwarding cycle selects nothing
+            memo[target] = any(
+                source is None or selected(source) for source in passes.get(target, ())
+            )
+        return memo[target]
+
+    def branch(target, seen=frozenset()) -> bool:
+        key, param = target
+        return param in _tested(functions[key]) or any(
+            t not in seen and (branch(t, seen | {target}) or not selected(t))
+            for t in forwards.get(target, ())
+        )
+
+    return sorted(
+        f"{mod[len(pkg.__name__) + 1:]}.{name}.{param}"
+        for (mod, name), fn in functions.items()
+        for param in _defaulted(fn)
+        if branch(((mod, name), param)) and not selected(((mod, name), param))
+    )
+
+
+def test_branch_parameters_selected_by_a_root():
+    """A branch parameter that no root selects is a configuration that
+    runs in no workload: it goes with its branch, or the allow-list
+    says why it stays."""
+    unselected = _unselected_branch_parameters()
+    assert set(BRANCH_PARAMETERS_ALLOWED) <= set(unselected), "stale allow-list entries"
+    offenders = [p for p in unselected if p not in BRANCH_PARAMETERS_ALLOWED]
+    assert not offenders, f"branch parameters that no root selects: {offenders}"

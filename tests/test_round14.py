@@ -247,41 +247,6 @@ def test_point_join_is_degenerate_overlap(spark):
     assert len(via_point) > 0
 
 
-def test_interval_join_salt_is_cost_only(spark):
-    """The sub-bin salt knob (SCALE.md round 14): salted and unsalted
-    runs return identical matched pairs — the salt spreads a hot bin
-    across n_salt shuffle partitions without touching semantics."""
-    from pyspark.sql import functions as F
-
-    from go_mailio_diskusage_handler_spark.operators.intervals import (
-        interval_join,
-    )
-    from go_mailio_diskusage_handler_spark.sources.tables import load_table
-
-    events = load_table(spark, SF_SMOKE, "events").select("event_id", "ts")
-    base = F.to_timestamp(F.lit("2024-01-03"))
-    iv = spark.range(25).select(
-        F.col("id").alias("iv_id"),
-        (base + F.make_interval(
-            hours=(F.col("id") * 9 % 96).cast("int"))).alias("s"),
-    ).withColumn("e", F.col("s") + F.make_interval(
-        hours=(F.lit(3) + F.col("iv_id") % 30).cast("int")))
-
-    def pairs(**kw):
-        return normalize([
-            (r.iv_id, r.event_id)
-            for r in interval_join(iv, events, **kw)
-            .select("iv_id", "event_id").collect()
-        ])
-
-    plain = pairs()
-    assert plain == pairs(n_salt=8) == pairs(n_salt=32)
-    assert len(plain) > 0
-
-    with pytest.raises(ValueError):
-        interval_join(iv, events, n_salt=1)
-
-
 # ---------------------------------------------------------------------------
 # VARIANT round trip: physical shape + JVM-only plan
 # ---------------------------------------------------------------------------

@@ -1,15 +1,18 @@
 """Regenerate PLAN_BASELINE.json: per-query physical-plan shape facts.
 
-Planning only — no query executes.  Run from the repo root:
+Planning only — no query executes.  Plans the package of the checkout
+this file lives in, and writes that checkout's baseline:
     python3 tools_plan_inventory.py
 """
 from __future__ import annotations
 
 import gc
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from go_mailio_diskusage_handler_spark import plans, registry  # noqa: E402
 from go_mailio_diskusage_handler_spark.session import build_session  # noqa: E402
@@ -34,18 +37,11 @@ def main() -> None:
             spark.catalog.clearCache()
             gc.collect()
             df = fn(spark, SF)
-            plan = plans.executed_plan(df)
-            out[name] = {
-                "shuffles": plan.count("Exchange hashpartitioning"),
-                "broadcast_joins": plan.count("BroadcastHashJoin"),
-                "sort_merge_joins": plan.count("SortMergeJoin"),
-                "nested_loops": plan.count("NestedLoopJoin")
-                + plan.count("CartesianProduct"),
-            }
+            out[name] = plans.plan_shape(plans.executed_plan(df))
         except Exception as exc:  # planning failure must be visible
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
         print(name, out[name], flush=True)
-    with open("/root/repo/PLAN_BASELINE.json", "w") as fh:
+    with open(os.path.join(REPO, "PLAN_BASELINE.json"), "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
         fh.write("\n")
     spark.stop()
