@@ -193,9 +193,10 @@ def tumbling_event_windows(events: DataFrame, minutes: int = 10) -> DataFrame:
     )
 
 
-def mergeable_user_sketches(
-    events: DataFrame, rel_tol: float = 0.05
-) -> DataFrame:
+SKETCH_REL_TOL = 0.05
+
+
+def mergeable_user_sketches(events: DataFrame) -> DataFrame:
     """Apache DataSketches HLL as a MERGEABLE rollup: per-(type, day)
     partial sketches (``hll_sketch_agg``) unioned per type
     (``hll_union_agg``) — the two-level pattern a 100 TB metrics
@@ -206,7 +207,8 @@ def mergeable_user_sketches(
 
     Driver-checkable invariant form (sketch bytes aren't
     SQL-portable): per event type, the exact distinct-user count plus
-    a boolean asserting the merged estimate lands within ``rel_tol``
+    a boolean asserting the merged estimate lands within
+    ``SKETCH_REL_TOL``
     — at fixture cardinalities (≤150 users) the default lgK=12 sketch
     is essentially exact.
     """
@@ -225,7 +227,7 @@ def mergeable_user_sketches(
         "exact_users",
         (
             F.abs(F.col("est") - F.col("exact_users"))
-            <= rel_tol * F.col("exact_users")
+            <= SKETCH_REL_TOL * F.col("exact_users")
         ).alias("merge_ok"),
     )
 
@@ -280,12 +282,15 @@ def variant_prop_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def windowed_top_event_types(
-    events: DataFrame, minutes: int = 60, k: int = 3
-) -> DataFrame:
-    """Per-window heavy hitters: each event-time window's top-k event
-    types by count (count desc, type asc tie-break) — the dashboard
-    primitive behind "what dominated the last hour".
+TOP_WINDOW_MINUTES = 60
+TOP_TYPES_PER_WINDOW = 3
+
+
+def windowed_top_event_types(events: DataFrame) -> DataFrame:
+    """Per-window heavy hitters: each event-time window's top
+    ``TOP_TYPES_PER_WINDOW`` event types by count (count desc, type asc
+    tie-break) — the dashboard primitive behind "what dominated the
+    last hour".
 
     Shape at 100 TB: ONE aggregation keyed on (window, type) — a
     bounded domain after map-side combine — then rank inside each
@@ -298,7 +303,7 @@ def windowed_top_event_types(
 
     counts = (
         events.groupBy(
-            F.window("ts", f"{minutes} minutes").alias("w"), "event_type"
+            F.window("ts", f"{TOP_WINDOW_MINUTES} minutes").alias("w"), "event_type"
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -313,7 +318,7 @@ def windowed_top_event_types(
     return (
         counts.select(
             "*", F.row_number().over(w).alias("type_rank")
-        ).filter(F.col("type_rank") <= k)
+        ).filter(F.col("type_rank") <= TOP_TYPES_PER_WINDOW)
     )
 
 
@@ -384,7 +389,10 @@ def safe_json_parse_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def mergeable_value_quantiles(events: DataFrame, rank_tol: float = 0.02) -> DataFrame:
+KLL_RANK_TOL = 0.02
+
+
+def mergeable_value_quantiles(events: DataFrame) -> DataFrame:
     """Apache DataSketches KLL as a MERGEABLE quantile rollup — the
     quantile sibling of :func:`mergeable_user_sketches`: per-(type,
     day) partial sketches (``kll_sketch_agg_double`` over ``value``)
@@ -398,7 +406,7 @@ def mergeable_value_quantiles(events: DataFrame, rank_tol: float = 0.02) -> Data
     booleans asserting (a) the sketch's retained N is EXACTLY the
     count (KLL tracks n losslessly) and (b) each estimated quantile's
     TRUE rank — measured against the raw values with one extra
-    broadcast-join pass — lands within ``rank_tol`` of its target
+    broadcast-join pass — lands within ``KLL_RANK_TOL`` of its target
     (default k=200 bounds normalized rank error well under 2%).  The
     rank check is two-sided on the CDF step: rank(est⁻) ≤ p+tol and
     rank(est⁺) ≥ p−tol, which is insertion-order-stable where a
@@ -441,14 +449,14 @@ def mergeable_value_quantiles(events: DataFrame, rank_tol: float = 0.02) -> Data
                         F.when(F.col("value") < F.col(f"q{tag}"), 1).otherwise(0)
                     )
                     / F.count(F.lit(1))
-                    <= p + rank_tol
+                    <= p + KLL_RANK_TOL
                 ).alias(f"q{tag}_lo_ok"),
                 (
                     F.sum(
                         F.when(F.col("value") <= F.col(f"q{tag}"), 1).otherwise(0)
                     )
                     / F.count(F.lit(1))
-                    >= p - rank_tol
+                    >= p - KLL_RANK_TOL
                 ).alias(f"q{tag}_hi_ok"),
             )
         ],
@@ -466,7 +474,7 @@ def mergeable_value_quantiles(events: DataFrame, rank_tol: float = 0.02) -> Data
     )
 
 
-def theta_retained_users(events: DataFrame, rel_tol: float = 0.05) -> DataFrame:
+def theta_retained_users(events: DataFrame) -> DataFrame:
     """Apache DataSketches Theta as MERGEABLE distinct sketches with
     SET OPERATIONS — the capability HLL fundamentally lacks: daily
     user sketches intersect (``theta_intersection``) for day-over-day
@@ -478,7 +486,7 @@ def theta_retained_users(events: DataFrame, rel_tol: float = 0.05) -> DataFrame:
     over the DISTINCT days actually present — a data gap pairs across
     it, in both engines) the EXACT retained / new distinct-user
     counts, plus booleans asserting each theta estimate lands within
-    ``rel_tol`` (absolute slack 1 for near-empty intersections; at
+    ``SKETCH_REL_TOL`` (absolute slack 1 for near-empty intersections; at
     fixture cardinalities theta mode is exact — every sketch is far
     below its k=4096 sampling threshold).
 
@@ -525,7 +533,7 @@ def theta_retained_users(events: DataFrame, rel_tol: float = 0.05) -> DataFrame:
 
     def ok(est_col: str, exact_col):
         return F.abs(F.col(est_col) - exact_col) <= F.greatest(
-            F.lit(1.0), rel_tol * exact_col
+            F.lit(1.0), SKETCH_REL_TOL * exact_col
         )
 
     exact_new = F.col("exact_users") - F.coalesce(

@@ -255,9 +255,10 @@ def heavy_users(disk_usage_df: DataFrame, multiple: float = 3.0) -> DataFrame:
     )
 
 
-def usage_growth(
-    inv_old: DataFrame, inv_new: DataFrame, k: int = 10
-) -> DataFrame:
+GROWTH_TOP_K = 10
+
+
+def usage_growth(inv_old: DataFrame, inv_new: DataFrame) -> DataFrame:
     """Top-k disk-usage GROWTH between two inventory snapshots: the
     capacity-planning leaderboard ("who grew most since yesterday")
     the reference's consumers ask next after point lookups.
@@ -293,7 +294,7 @@ def usage_growth(
             (F.col("nf") - F.col("of")).alias("growth_files"),
         )
         .orderBy(F.desc("growth_bytes"), F.asc("address"))
-        .limit(k)
+        .limit(GROWTH_TOP_K)
     )
 
 
@@ -383,13 +384,16 @@ def scd2_history(
     )
 
 
-def quota_alerts(agg: DataFrame, quota_quantile: float = 0.95) -> DataFrame:
+QUOTA_QUANTILE = 0.95
+
+
+def quota_alerts(agg: DataFrame) -> DataFrame:
     """Quota-breach report over the disk-usage aggregate — the
     decision the reference's lookup API exists to serve (mailio
     checks an address's usage against its plan before accepting
     attachments), pushed down into the engine as a set-returning
     query: every address above quota, with its absolute and relative
-    excess.  The demo quota is the aggregate's own ``quota_quantile``
+    excess.  The demo quota is the aggregate's own ``QUOTA_QUANTILE``
     usage percentile (a real deployment joins a plans dimension —
     same broadcast shape).
 
@@ -398,7 +402,7 @@ def quota_alerts(agg: DataFrame, quota_quantile: float = 0.95) -> DataFrame:
     of the fact table, no sort.
     """
     q = agg.agg(
-        F.expr(f"percentile(size_bytes, {quota_quantile})").alias("quota")
+        F.expr(f"percentile(size_bytes, {QUOTA_QUANTILE})").alias("quota")
     )
     return (
         agg.crossJoin(F.broadcast(q))
@@ -423,11 +427,12 @@ def quota_alerts(agg: DataFrame, quota_quantile: float = 0.95) -> DataFrame:
     )
 
 
-def largest_files_per_address(
-    inventory: DataFrame, k: int = 3
-) -> DataFrame:
+LARGEST_FILES_K = 3
+
+
+def largest_files_per_address(inventory: DataFrame) -> DataFrame:
     """Per-address largest objects: the drill-down behind every quota
-    conversation ("what is taking my space?") — top ``k`` objects by
+    conversation ("what is taking my space?") — top ``LARGEST_FILES_K`` objects by
     size per address with their share of the address's total.
 
     One address-partitioned window over the raw inventory (the
@@ -452,5 +457,5 @@ def largest_files_per_address(
                 "addr_share"
             ),
         )
-        .filter(F.col("size_rank") <= k)
+        .filter(F.col("size_rank") <= LARGEST_FILES_K)
     )

@@ -164,10 +164,14 @@ def mixture_rebalance(
     )
 
 
+EVAL_MAX_DOC_ID = 200  # doc_ids below this are the eval set
+MIN_OVERLAP = 3  # shared shingles that mark a training doc contaminated
+
+
 def contaminated_docs(
     documents: DataFrame,
-    eval_max_doc_id: int = 200,
-    min_overlap: int = 3,
+    eval_max_doc_id: int = EVAL_MAX_DOC_ID,
+    min_overlap: int = MIN_OVERLAP,
     *,
     sh: DataFrame | None = None,
     max_doc_freq: int | None = None,
@@ -269,14 +273,12 @@ def pack_sequences(documents: DataFrame, max_tokens: int = 512) -> DataFrame:
     )
 
 
-def curated_corpus(
-    documents: DataFrame,
-    min_distinct_ratio: float = 0.4,
-    min_tokens: int = 20,
-    eval_max_doc_id: int = 200,
-    min_overlap: int = 3,
-    dup_threshold: float = 0.6,
-) -> DataFrame:
+CURATED_MIN_DISTINCT_RATIO = 0.4
+CURATED_MIN_TOKENS = 20
+CURATED_DUP_THRESHOLD = 0.6
+
+
+def curated_corpus(documents: DataFrame) -> DataFrame:
     """The whole curation pipeline as ONE declarative plan: quality
     gate → eval-set exclusion + decontamination → keep one doc per
     duplicate cluster → assign train/val/test.
@@ -309,23 +311,23 @@ def curated_corpus(
     quality_ok = (
         text.quality_scores(documents)
         .filter(
-            (F.col("distinct_ratio") >= min_distinct_ratio)
-            & (F.col("n_tokens") >= min_tokens)
+            (F.col("distinct_ratio") >= CURATED_MIN_DISTINCT_RATIO)
+            & (F.col("n_tokens") >= CURATED_MIN_TOKENS)
         )
         .select("doc_id")
     )
-    contaminated = contaminated_docs(
-        documents, eval_max_doc_id, min_overlap, sh=sh
-    ).select("doc_id")
+    contaminated = contaminated_docs(documents, sh=sh).select("doc_id")
     dup_losers = (
         # sh is already df-capped above; max_doc_freq=None avoids a
         # second (no-op) cap pass inside the pair generator.
-        duplicate_clusters(documents, dup_threshold, sh=sh, max_doc_freq=None)
+        duplicate_clusters(
+            documents, CURATED_DUP_THRESHOLD, sh=sh, max_doc_freq=None
+        )
         .filter(F.col("doc_id") != F.col("cluster_id"))
         .select("doc_id")
     )
     kept = (
-        documents.filter(F.col("doc_id") >= eval_max_doc_id)
+        documents.filter(F.col("doc_id") >= EVAL_MAX_DOC_ID)
         .join(quality_ok, "doc_id", "semi")
         .join(contaminated, "doc_id", "anti")
         .join(dup_losers, "doc_id", "anti")
@@ -376,7 +378,10 @@ def keep_best_per_cluster(documents, threshold: float = 0.6):
     )
 
 
-def temperature_sample(documents: DataFrame, scale: int = 1 << 16) -> DataFrame:
+TEMPERATURE_SCALE = 1 << 16
+
+
+def temperature_sample(documents: DataFrame) -> DataFrame:
     """Temperature-based source rebalancing (the multilingual-corpus
     standard: sample source s proportionally to p_s^alpha, here
     alpha = 1/2): deterministic hash sampling whose per-source keep
@@ -410,7 +415,7 @@ def temperature_sample(documents: DataFrame, scale: int = 1 << 16) -> DataFrame:
         ).limit(0)
     n_min = min(r["n"] for r in counts)
     cutoffs = {
-        r["source"]: math.floor(math.sqrt(n_min / r["n"]) * scale)
+        r["source"]: math.floor(math.sqrt(n_min / r["n"]) * TEMPERATURE_SCALE)
         for r in counts
     }
     cap_map = F.create_map(
@@ -420,7 +425,7 @@ def temperature_sample(documents: DataFrame, scale: int = 1 << 16) -> DataFrame:
         *[
             F.lit(x)
             for s, c in sorted(cutoffs.items())
-            for x in (s, round(c / scale, 6))
+            for x in (s, round(c / TEMPERATURE_SCALE, 6))
         ]
     )
     h = F.expr(_BUCKET_SQL).cast("long")
@@ -431,24 +436,22 @@ def temperature_sample(documents: DataFrame, scale: int = 1 << 16) -> DataFrame:
     )
 
 
-def bloom_shingle_filter(
-    probe_side: DataFrame,
-    build_side: DataFrame,
-    *,
-    m_bits: int = 1 << 17,
-    k_hashes: int = 5,
-) -> DataFrame:
+BLOOM_M_BITS = 1 << 17
+BLOOM_K_HASHES = 5
+
+
+def bloom_shingle_filter(probe_side: DataFrame, build_side: DataFrame) -> DataFrame:
     """Filter ``probe_side`` to shingles that MIGHT be in
-    ``build_side`` via a driver-built Bloom bitmap: k xxhash64 seeds →
-    bit positions mod ``m_bits``, OR-folded into a long[] literal;
-    membership = AND of k shift-and-mask probes, pure codegen
-    expression at the scan.  No false negatives; false-positive rate
-    ≈ (1 - e^(-k·n/m))^k."""
+    ``build_side`` via a driver-built Bloom bitmap: BLOOM_K_HASHES
+    xxhash64 seeds → bit positions mod ``BLOOM_M_BITS``, OR-folded
+    into a long[] literal; membership = AND of k shift-and-mask probes,
+    pure codegen expression at the scan.  No false negatives;
+    false-positive rate ≈ (1 - e^(-k·n/m))^k."""
     pos = [
-        F.pmod(F.xxhash64("shingle", F.lit(seed)), F.lit(m_bits))
-        for seed in range(k_hashes)
+        F.pmod(F.xxhash64("shingle", F.lit(seed)), F.lit(BLOOM_M_BITS))
+        for seed in range(BLOOM_K_HASHES)
     ]
-    bitmap = [0] * (m_bits // 64)
+    bitmap = [0] * (BLOOM_M_BITS // 64)
     rows = (
         build_side.select(F.explode(F.array(*pos)).alias("p"))
         .distinct()
@@ -467,12 +470,12 @@ def bloom_shingle_filter(
 
     bloom_lit = const_array_lit(words, "bigint")
     member = None
-    for seed in range(k_hashes):
+    for seed in range(BLOOM_K_HASHES):
         probe = (
             F.expr(
                 f"shiftright(element_at(_bloom, "
-                f"CAST(pmod(xxhash64(shingle, {seed}), {m_bits}) div 64 AS INT) + 1), "
-                f"CAST(pmod(xxhash64(shingle, {seed}), {m_bits}) % 64 AS INT)) & 1"
+                f"CAST(pmod(xxhash64(shingle, {seed}), {BLOOM_M_BITS}) div 64 AS INT) + 1), "
+                f"CAST(pmod(xxhash64(shingle, {seed}), {BLOOM_M_BITS}) % 64 AS INT)) & 1"
             )
             == 1
         )
@@ -486,11 +489,8 @@ def bloom_shingle_filter(
 
 def bloom_prefiltered_contamination(
     documents: DataFrame,
-    eval_max_doc_id: int = 200,
-    min_overlap: int = 3,
-    *,
-    m_bits: int = 1 << 17,
-    k_hashes: int = 5,
+    eval_max_doc_id: int = EVAL_MAX_DOC_ID,
+    min_overlap: int = MIN_OVERLAP,
 ) -> DataFrame:
     """:func:`contaminated_docs` with a broadcast BLOOM FILTER
     pre-filter on the train side — identical output, different plan.
@@ -498,7 +498,7 @@ def bloom_prefiltered_contamination(
     Why this exists at 100 TB: the exact path broadcasts the eval
     SHINGLE TABLE (strings) into the join, so every train shingle
     still flows into a join operator.  A Bloom filter over the eval
-    shingles is a fixed ``m_bits/8``-byte bitmap (16 KB here; a few
+    shingles is a fixed ``BLOOM_M_BITS/8``-byte bitmap (16 KB here; a few
     MB even for 10⁸ eval shingles) that the Parquet scan can apply as
     a pure per-row expression — the overwhelmingly non-contaminated
     train corpus is dropped AT THE SCAN, and only candidate shingles
@@ -520,12 +520,7 @@ def bloom_prefiltered_contamination(
     ev = sh.filter(F.col("doc_id") < eval_max_doc_id).select(
         F.col("doc_id").alias("eval_doc_id"), "shingle"
     )
-    train = bloom_shingle_filter(
-        sh.filter(F.col("doc_id") >= eval_max_doc_id),
-        ev,
-        m_bits=m_bits,
-        k_hashes=k_hashes,
-    )
+    train = bloom_shingle_filter(sh.filter(F.col("doc_id") >= eval_max_doc_id), ev)
     overlap = (
         train.join(F.broadcast(ev), "shingle")
         .groupBy("doc_id", "eval_doc_id")
@@ -538,16 +533,19 @@ def bloom_prefiltered_contamination(
     )
 
 
-def adaptive_quality_gate(documents: DataFrame, pct: float = 0.25) -> DataFrame:
+QUALITY_GATE_PCT = 0.25
+
+
+def adaptive_quality_gate(documents: DataFrame) -> DataFrame:
     """Per-source ADAPTIVE quality filtering: drop each source's worst
-    ``pct`` tail by quality score (distinct-token ratio — the
+    ``QUALITY_GATE_PCT`` tail by quality score (distinct-token ratio — the
     repetition detector from the quality suite) instead of one global
     threshold.  Per-source thresholds are the curation standard: a
     fixed global cutoff over-prunes noisy-but-valuable sources and
     under-prunes clean boilerplate farms.
 
     Semantics: keep a doc iff ``cume_dist() OVER (PARTITION BY source
-    ORDER BY q) > pct`` — a pure function of (source, q), which is
+    ORDER BY q) > QUALITY_GATE_PCT`` — a pure function of (source, q), which is
     what makes the EXACT quantile computable WITHOUT windowing the
     fact table:
 
@@ -556,14 +554,15 @@ def adaptive_quality_gate(documents: DataFrame, pct: float = 0.25) -> DataFrame:
       carries at most |sources|·10 001 pre-combined rows regardless of
       corpus size (the same bounded-histogram fence as
       :func:`mixture_rebalance`'s skew guard);
-    * the per-source cutoff (min q with cumulative fraction > pct)
+    * the per-source cutoff (min q with cumulative fraction >
+      QUALITY_GATE_PCT)
       collects to a ≤ |sources|-row map literal, and the keep decision
       is a scan-level filter expression.  No window touches the
       corpus; a 10⁹-doc source costs the same exchange as a 10³-doc
       one.
 
     The oracle states the same result as the window form (cume_dist >
-    pct), asserting the histogram path implements it exactly.
+    QUALITY_GATE_PCT), asserting the histogram path implements it exactly.
     """
     toks = F.split(F.col("text"), " ")
     q = F.round(F.size(F.array_distinct(toks)) / F.size(toks), 4)
@@ -583,7 +582,7 @@ def adaptive_quality_gate(documents: DataFrame, pct: float = 0.25) -> DataFrame:
                 F.sum("n").over(cum_w) / F.sum("n").over(tot_w)
             ).alias("cd"),
         )
-        .filter(F.col("cd") > pct)
+        .filter(F.col("cd") > QUALITY_GATE_PCT)
         .groupBy("source")
         .agg(F.min("q").alias("q_cut"))
         .collect()
@@ -603,9 +602,12 @@ def adaptive_quality_gate(documents: DataFrame, pct: float = 0.25) -> DataFrame:
     return base.filter(F.col("q") >= cut_map[F.col("source")])
 
 
-def shard_manifest(documents: DataFrame, n_shards: int = 16) -> DataFrame:
+N_SHARDS = 16
+
+
+def shard_manifest(documents: DataFrame) -> DataFrame:
     """Integrity manifest for deterministic training shards: per
-    shard (md5-bucket % n_shards), the document count, total
+    shard (md5-bucket % N_SHARDS), the document count, total
     token count, and an ORDER-INSENSITIVE content checksum (sum of
     each doc's 24-bit md5 prefix — commutative, so any partitioning
     or retry order produces the identical digest).  A backfill that
@@ -625,7 +627,7 @@ def shard_manifest(documents: DataFrame, n_shards: int = 16) -> DataFrame:
     )
     return (
         documents.select(
-            (h % n_shards).alias("shard_id"),
+            (h % N_SHARDS).alias("shard_id"),
             F.expr(doc_sum).cast("long").alias("doc_digest"),
             F.size(F.split(F.col("text"), " ")).alias("n_toks"),
         )
@@ -700,10 +702,13 @@ def corpus_dedup_report(documents: DataFrame) -> DataFrame:
     return own_cache(out, docs, absorb=[pairs])
 
 
-def epoch_repeat(documents: DataFrame, max_epochs: int = 4) -> DataFrame:
+MAX_EPOCHS = 4
+
+
+def epoch_repeat(documents: DataFrame) -> DataFrame:
     """UP-sampling half of data mixing (epoch weighting): each source
     is repeated ``floor(n_max / n_s)`` times, capped at
-    ``max_epochs`` — the low-resource-language / scarce-domain
+    ``MAX_EPOCHS`` — the low-resource-language / scarce-domain
     rebalance that down-sampling (:func:`temperature_sample`,
     :func:`mixture_rebalance`) cannot express, with the cap encoding
     the public finding that beyond ~4 repeats marginal value decays
@@ -728,7 +733,7 @@ def epoch_repeat(documents: DataFrame, max_epochs: int = 4) -> DataFrame:
             F.lit(0).cast("bigint").alias("copy_idx"),
         ).limit(0)
     n_max = max(r["n"] for r in counts)
-    epochs = {r["source"]: min(max_epochs, n_max // r["n"]) for r in counts}
+    epochs = {r["source"]: min(MAX_EPOCHS, n_max // r["n"]) for r in counts}
     ep_map = F.create_map(
         *[F.lit(x) for kv in sorted(epochs.items()) for x in kv]
     )
@@ -743,11 +748,12 @@ def epoch_repeat(documents: DataFrame, max_epochs: int = 4) -> DataFrame:
     )
 
 
-def stratified_split(
-    documents: DataFrame, eval_frac_bp: int = 1000, *, skew_guard: bool = True
-) -> DataFrame:
+EVAL_FRAC_BP = 1000  # basis points: 10%
+
+
+def stratified_split(documents: DataFrame, *, skew_guard: bool = True) -> DataFrame:
     """Stratified eval split: EXACTLY ``ceil(frac · n_s)`` documents
-    from EVERY source (``eval_frac_bp`` in basis points, 1000 = 10%) —
+    from EVERY source (``EVAL_FRAC_BP`` in basis points, 1000 = 10%) —
     the guaranteed-proportion complement of the Bernoulli splits
     (:func:`split_assignments` holds fractions only in expectation,
     and a small domain can lose all its eval rows to variance; a
@@ -773,7 +779,7 @@ def stratified_split(
     base = documents.select("doc_id", "source", h.alias("h"))
 
     def quota(n_col):
-        return (n_col * eval_frac_bp + 9999) / F.lit(10000)
+        return (n_col * EVAL_FRAC_BP + 9999) / F.lit(10000)
 
     if not skew_guard:
         n_w = Window.partitionBy("source")
@@ -853,13 +859,12 @@ def stratified_split(
     return head_out.unionAll(tail_out)
 
 
-def novelty_gate(
-    documents: DataFrame,
-    min_novelty: float = 0.5,
-    n: int = 8,
-) -> DataFrame:
+MIN_NOVELTY = 0.5
+
+
+def novelty_gate(documents: DataFrame) -> DataFrame:
     """Per-source corpus report for a NOVELTY-gated keep policy: how
-    many documents each source keeps (novel_frac ≥ ``min_novelty``) vs
+    many documents each source keeps (novel_frac ≥ ``MIN_NOVELTY``) vs
     drops, and the kept token volume — the dedup-aware acceptance
     dashboard a crawl pipeline reads before admitting a source's batch
     (a re-publisher source shows a high drop rate here long before
@@ -871,11 +876,11 @@ def novelty_gate(
     MIN-per-gram scale story carry over); this adds one broadcast-able
     dimension join back to ``source`` and a per-source rollup — one
     extra shuffle on the source key.  Documents too short to carry a
-    gram (< ``n`` words) are reported in their own ``short_docs``
+    gram (< ``dedup.SPAN_N`` words) are reported in their own ``short_docs``
     column rather than silently dropped: at corpus scale, "too short
     to judge" is a signal about the source, not noise.
     """
-    nv = novelty_fraction(documents, n=n)
+    nv = novelty_fraction(documents)
     dim = documents.select(
         "doc_id",
         "source",
@@ -889,12 +894,12 @@ def novelty_gate(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(
-                F.when(F.col("novel_frac") >= min_novelty, 1).otherwise(0)
+                F.when(F.col("novel_frac") >= MIN_NOVELTY, 1).otherwise(0)
             ).cast("bigint").alias("kept_docs"),
             F.sum(
                 F.when(
                     F.col("novel_frac").isNotNull()
-                    & (F.col("novel_frac") < min_novelty),
+                    & (F.col("novel_frac") < MIN_NOVELTY),
                     1,
                 ).otherwise(0)
             ).cast("bigint").alias("dropped_docs"),
@@ -902,7 +907,7 @@ def novelty_gate(
                 F.when(F.col("novel_frac").isNull(), 1).otherwise(0)
             ).cast("bigint").alias("short_docs"),
             F.sum(
-                F.when(F.col("novel_frac") >= min_novelty, F.col("n_words"))
+                F.when(F.col("novel_frac") >= MIN_NOVELTY, F.col("n_words"))
                 .otherwise(0)
             ).cast("bigint").alias("kept_tokens"),
         )
@@ -924,10 +929,10 @@ def novelty_gate(
 DSIR_BUCKETS = 1024
 
 
-def _hashed_gram_buckets(n_buckets: int):
+def _hashed_gram_buckets():
     """(words column) -> exploded gram-bucket column builder.
 
-    Feature = unigrams + word bigrams, hashed to ``n_buckets`` via the
+    Feature = unigrams + word bigrams, hashed to ``DSIR_BUCKETS`` via the
     first 8 hex chars of md5 — the one hash both Spark and DuckDB
     evaluate bit-identically (same portability trick as the curation
     split buckets).  At 100 TB you would widen to the public DSIR
@@ -939,22 +944,21 @@ def _hashed_gram_buckets(n_buckets: int):
     grams = F.concat(w, word_ngrams(w, 2))
     bucket = (
         F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
-        % n_buckets
+        % DSIR_BUCKETS
     )
     return grams, bucket
 
 
-def dsir_importance_weights(
-    documents: DataFrame,
-    target_lang: str = "en",
-    n_buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
+DSIR_TARGET_LANG = "en"
+
+
+def dsir_importance_weights(documents: DataFrame) -> DataFrame:
     """DSIR (Xie et al. 2023, "Data Selection for Language Models via
     Importance Resampling", arXiv 2302.03169): score every raw document
     by how target-like its hashed-ngram profile is.
 
-    Features are unigram+bigram counts hashed into ``n_buckets``; both
-    the target distribution (here: ``lang = target_lang`` docs as the
+    Features are unigram+bigram counts hashed into ``DSIR_BUCKETS``;
+    both the target distribution (here: ``lang = DSIR_TARGET_LANG`` docs as the
     in-domain proxy) and the raw distribution are add-1-smoothed
     bag-of-buckets models, and each doc's log importance weight is
 
@@ -965,7 +969,7 @@ def dsir_importance_weights(
 
     Distributed shape: ONE explode of the gram stream feeds both
     estimators and the scoring pass — (doc, bucket) partial counts
-    aggregate map-side, the global bucket table is ≤ ``n_buckets``
+    aggregate map-side, the global bucket table is ≤ ``DSIR_BUCKETS``
     rows (corpus-size-independent), totals are a 1-row aggregate
     cross-joined back, and scoring joins the per-doc counts to the
     BROADCAST bucket-weight table.  No corpus-sized state ever sits
@@ -977,7 +981,7 @@ def dsir_importance_weights(
     """
     from pyspark import StorageLevel
 
-    grams, bucket = _hashed_gram_buckets(n_buckets)
+    grams, bucket = _hashed_gram_buckets()
     # md5-per-gram is the dominant cost and sits below the first
     # shuffle — widen a single-split local scan so it parallelizes
     # (no-op at scale; see sources.tables.widen_for_compute).
@@ -993,7 +997,7 @@ def dsir_importance_weights(
     glob = per_doc.groupBy("bucket").agg(
         F.sum("cnt").alias("raw_cnt"),
         F.sum(
-            F.when(F.col("lang") == target_lang, F.col("cnt")).otherwise(0)
+            F.when(F.col("lang") == DSIR_TARGET_LANG, F.col("cnt")).otherwise(0)
         ).alias("tgt_cnt"),
     )
     totals = glob.agg(
@@ -1002,8 +1006,8 @@ def dsir_importance_weights(
     wts = glob.crossJoin(F.broadcast(totals)).select(
         "bucket",
         (
-            F.log((F.col("tgt_cnt") + 1) / (F.col("tgt_tot") + n_buckets))
-            - F.log((F.col("raw_cnt") + 1) / (F.col("raw_tot") + n_buckets))
+            F.log((F.col("tgt_cnt") + 1) / (F.col("tgt_tot") + DSIR_BUCKETS))
+            - F.log((F.col("raw_cnt") + 1) / (F.col("raw_tot") + DSIR_BUCKETS))
         ).alias("w"),
     )
     out = (

@@ -583,12 +583,7 @@ def duplicate_clusters(
     return labels
 
 
-def ngram_containment_pairs(
-    documents: DataFrame,
-    threshold: float = 0.8,
-    *,
-    max_doc_freq: int = MAX_SHINGLE_DF,
-) -> DataFrame:
+def ngram_containment_pairs(documents: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Directed n-gram CONTAINMENT near-dup: (doc_src, doc_dst) where
     ``|S_src ∩ S_dst| / |S_src| ≥ threshold`` — the asymmetric
     complement of Jaccard.  A short document quoted inside a long one
@@ -605,9 +600,7 @@ def ngram_containment_pairs(
     """
     from pyspark import StorageLevel
 
-    sh = cap_shingle_df(shingles(documents), max_doc_freq).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
         sh.alias("x")
@@ -649,9 +642,10 @@ def ngram_containment_pairs(
     return own_cache(out, sh)
 
 
-def simhash_pairs_editdist(
-    documents: DataFrame, head_chars: int = 64, max_hamming: int = 3
-) -> DataFrame:
+EDITDIST_HEAD_CHARS = 64
+
+
+def simhash_pairs_editdist(documents: DataFrame) -> DataFrame:
     """Edit-distance verification tier over the SimHash candidate
     pairs: Levenshtein on the documents' fixed-width heads, appended
     to each banded-candidate pair.
@@ -659,15 +653,15 @@ def simhash_pairs_editdist(
     The tiering is the scale story: Levenshtein is O(m·n) PER PAIR —
     unthinkable corpus-wide — but the SimHash bands have already cut
     the pair space to hash-close candidates, and the fixed
-    ``head_chars`` cap bounds each evaluation at O(head²) regardless
-    of document length.  This is the standard cheap-filter →
+    ``EDITDIST_HEAD_CHARS`` cap bounds each evaluation at O(head²)
+    regardless of document length.  This is the standard cheap-filter →
     expensive-verify composition (same shape as the LSH → exact-cosine
     re-rank), here with a string metric the sketch tiers cannot give.
     """
-    pair_src = simhash_dedup_pairs(documents, max_hamming)
+    pair_src = simhash_dedup_pairs(documents)
     pairs = pair_src.select("doc_a", "doc_b")
     heads = documents.select(
-        "doc_id", F.substring("text", 1, head_chars).alias("head")
+        "doc_id", F.substring("text", 1, EDITDIST_HEAD_CHARS).alias("head")
     )
     out = (
         pairs.join(
@@ -691,19 +685,19 @@ def simhash_pairs_editdist(
     return own_cache(out, absorb=[pair_src])
 
 
-def duplicated_span_coverage(
-    documents: DataFrame,
-    n: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
+SPAN_N = 8  # word n-gram length of the exact-span and novelty tiers
+SPAN_MIN_DOCS = 2  # a span is duplicated once this many documents hold it
+
+
+def duplicated_span_coverage(documents: DataFrame) -> DataFrame:
     """Exact duplicated-substring coverage — the distributed analog of
     suffix-array exact-substring dedup (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better"): for each document,
-    the fraction of its tokens covered by at least one word ``n``-gram
-    that also occurs in ≥ ``min_docs`` distinct documents.  Corpus
-    policies drop or trim documents above a coverage threshold; unlike
-    whole-doc fuzzy dedup this catches long verbatim quotations inside
-    otherwise-unique documents.
+    the fraction of its tokens covered by at least one word
+    ``SPAN_N``-gram that also occurs in ≥ ``SPAN_MIN_DOCS`` distinct
+    documents.  Corpus policies drop or trim documents above a
+    coverage threshold; unlike whole-doc fuzzy dedup this catches long
+    verbatim quotations inside otherwise-unique documents.
 
     Plan shape at 100 TB (suffix arrays don't distribute; n-gram
     inversion does):
@@ -717,9 +711,9 @@ def duplicated_span_coverage(
       scale the gram string would be xxhash64-compressed to a fixed
       8-byte join key (kept as the raw string here for bit-exact
       oracle parity);
-    * coverage union = explode each surviving occurrence into its n
-      covered positions, distinct, count — bounded by n× the
-      DUPLICATED occurrences only, not the corpus.
+    * coverage union = explode each surviving occurrence into its
+      SPAN_N covered positions, distinct, count — bounded by SPAN_N×
+      the DUPLICATED occurrences only, not the corpus.
 
     Output: (doc_id, n_words, covered_tokens, dup_span_frac), one row
     per document including zero-coverage ones.
@@ -729,24 +723,24 @@ def duplicated_span_coverage(
         F.split(F.col("text"), " ").alias("t"),
     ).select("doc_id", "t", F.size("t").alias("n_words"))
     gram_arr = F.when(
-        F.col("n_words") >= n,
+        F.col("n_words") >= SPAN_N,
         F.expr(
-            f"transform(sequence(1, size(t) - {n - 1}), "
-            f"i -> concat_ws(' ', slice(t, i, {n})))"
+            f"transform(sequence(1, size(t) - {SPAN_N - 1}), "
+            f"i -> concat_ws(' ', slice(t, i, {SPAN_N})))"
         ),
     ).otherwise(F.array().cast("array<string>"))
     occ = base.select("doc_id", F.posexplode(gram_arr).alias("idx", "g"))
     dup_grams = (
         occ.groupBy("g")
         .agg(F.count_distinct("doc_id").alias("df"))
-        .filter(F.col("df") >= min_docs)
+        .filter(F.col("df") >= SPAN_MIN_DOCS)
         .select("g")
     )
     covered = (
         occ.join(dup_grams, "g")
         .select(
             "doc_id",
-            F.explode(F.expr(f"sequence(idx, idx + {n - 1})")).alias("p"),
+            F.explode(F.expr(f"sequence(idx, idx + {SPAN_N - 1})")).alias("p"),
         )
         .distinct()
         .groupBy("doc_id")
@@ -1029,17 +1023,17 @@ def minhash_estimate_quality(documents: DataFrame) -> DataFrame:
     return own_cache(out, sh, sigs)
 
 
-def dedup_eval_pr(
-    documents: DataFrame,
-    jaccard_threshold: float = 0.6,
-    max_hamming: int = 3,
-) -> DataFrame:
+EVAL_JACCARD_THRESHOLD = 0.6
+
+
+def dedup_eval_pr(documents: DataFrame) -> DataFrame:
     """Candidate-quality evaluation of the SimHash tier against exact
     n-gram Jaccard truth: precision / recall / F1 of the banded
-    SimHash pairs (≤ ``max_hamming``) vs the pairs whose true Jaccard
-    ≥ ``jaccard_threshold`` — the measurement that turns "we have a
-    cheap dedup tier" into "we know what it misses" (cf.
-    text.language_confusion for the classifier analog).
+    SimHash pairs (at :func:`simhash_dedup_pairs`' default radius) vs
+    the pairs whose true Jaccard ≥ ``EVAL_JACCARD_THRESHOLD`` — the
+    measurement that turns "we have a cheap dedup tier" into "we know
+    what it misses" (cf. text.language_confusion for the classifier
+    analog).
 
     Both pair sets are the existing operators, unchanged; the
     comparison is ONE tagged-union aggregation on the pair key (the
@@ -1050,8 +1044,8 @@ def dedup_eval_pr(
     # Hold the pair-generator frames in locals: they carry ownership
     # of their persisted shingle/signature caches (own_cache), which
     # must transfer to the returned report, not die with a temporary.
-    truth_pairs = ngram_jaccard_pairs(documents, jaccard_threshold)
-    pred_pairs = simhash_dedup_pairs(documents, max_hamming)
+    truth_pairs = ngram_jaccard_pairs(documents, EVAL_JACCARD_THRESHOLD)
+    pred_pairs = simhash_dedup_pairs(documents)
     truth = truth_pairs.select(
         "doc_a", "doc_b", F.lit(1).alias("t"), F.lit(0).alias("p")
     )
@@ -1086,17 +1080,13 @@ def dedup_eval_pr(
     return own_cache(out, absorb=[truth_pairs, pred_pairs])
 
 
-def trim_duplicated_spans(
-    documents: DataFrame,
-    n: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
+def trim_duplicated_spans(documents: DataFrame, n: int = SPAN_N) -> DataFrame:
     """Exact duplicated-substring REMOVAL — the rewrite policy that
     :func:`duplicated_span_coverage` only measures (Lee et al. 2022
     drop the repeated substring, keeping one occurrence; this variant
     trims every occurrence, the conservative form when provenance is
     unknown): every token covered by a word ``n``-gram occurring in
-    ≥ ``min_docs`` distinct documents is deleted, and the surviving
+    ≥ ``SPAN_MIN_DOCS`` distinct documents is deleted, and the surviving
     tokens are reassembled in order into ``trimmed_text``.
 
     Plan shape at 100 TB — linear, no per-row quadratic membership
@@ -1139,7 +1129,7 @@ def trim_duplicated_spans(
     dup_grams = (
         occ.groupBy("g")
         .agg(F.count_distinct("doc_id").alias("df"))
-        .filter(F.col("df") >= min_docs)
+        .filter(F.col("df") >= SPAN_MIN_DOCS)
         .select("g")
     )
     covered = (
@@ -1295,13 +1285,10 @@ def gram_occurrences(documents: DataFrame, n: int) -> DataFrame:
     )
 
 
-def novelty_fraction(
-    documents: DataFrame,
-    n: int = 8,
-) -> DataFrame:
+def novelty_fraction(documents: DataFrame) -> DataFrame:
     """Per-document NOVELTY — the curation signal dual to
     :func:`duplicated_span_coverage`: the fraction of a document's
-    distinct word ``n``-grams whose FIRST corpus occurrence (minimum
+    distinct word ``SPAN_N``-grams whose FIRST corpus occurrence (minimum
     ``doc_id`` — ingestion order in this corpus) is the document
     itself.  A crawl pipeline ranks same-topic documents by novelty to
     keep first-sources and demote re-publishers; coverage alone cannot
@@ -1330,7 +1317,7 @@ def novelty_fraction(
     from pyspark import StorageLevel
 
     occ = (
-        gram_occurrences(documents, n)
+        gram_occurrences(documents, SPAN_N)
         # two consumers (the MIN aggregate and the join-back probe)
         # shuffle on DIFFERENT keys, so the exchange can't be reused —
         # persist the gram table once instead of re-running the
@@ -1362,15 +1349,14 @@ def novelty_fraction(
     return own_cache(out, occ)
 
 
-def novelty_fraction_incremental(
-    documents: DataFrame,
-    history_frac: float = 0.8,
-    n: int = 8,
-) -> DataFrame:
+HISTORY_FRAC = 0.8
+
+
+def novelty_fraction_incremental(documents: DataFrame) -> DataFrame:
     """Incremental novelty — :func:`novelty_fraction` for the daily
     batch, probing the HISTORY's gram index instead of recomputing the
     corpus (the same O(new)-per-batch shape as
-    :func:`incremental_minhash_pairs`): the oldest ``history_frac`` of
+    :func:`incremental_minhash_pairs`): the oldest ``HISTORY_FRAC`` of
     documents (by doc_id — ingest order) plays the persisted corpus, the
     rest is the arriving batch.  A batch document owns a gram iff no
     history document contains it AND the document is the gram's first
@@ -1390,16 +1376,16 @@ def novelty_fraction_incremental(
     * the surviving grams' first-in-batch MIN and the per-doc rollup
       are the batch operator's aggregates over O(new) rows.
 
-    The split point is FLOOR(history_frac · max(doc_id)) computed as a
+    The split point is FLOOR(HISTORY_FRAC · max(doc_id)) computed as a
     1-row aggregate broadcast into both branches (FLOOR, not CAST:
     DuckDB rounds double→int casts while Spark truncates — FLOOR is
     exact in both).
     """
     from pyspark import StorageLevel
 
-    occ = gram_occurrences(documents, n)
+    occ = gram_occurrences(documents, SPAN_N)
     split = documents.agg(
-        F.floor(F.lit(history_frac) * F.max("doc_id")).alias("split_id")
+        F.floor(F.lit(HISTORY_FRAC) * F.max("doc_id")).alias("split_id")
     )
     occ_split = occ.join(F.broadcast(split))
     hist_index = (

@@ -421,9 +421,7 @@ def _type_window():
 MAX_MALFORMED_FRAC = 0.5
 
 
-def inventory_constraint_suite(
-    inventory: DataFrame, max_malformed_frac: float = MAX_MALFORMED_FRAC
-) -> DataFrame:
+def inventory_constraint_suite(inventory: DataFrame) -> DataFrame:
     """The refresher's swap-gate rules over an inventory(key, size)
     table, as an inspectable (rule, metric, status) report — the same
     thresholds ``streaming.refresh.DiskUsageHandler(quality_gate=...)``
@@ -432,7 +430,7 @@ def inventory_constraint_suite(
 
     Rules: key completeness (NULL keys), size completeness, size
     non-negativity, and the malformed-key fraction (reference O7
-    guard, handler.go:235-238) against ``max_malformed_frac``.
+    guard, handler.go:235-238) against ``MAX_MALFORMED_FRAC``.
     """
     from .core import well_formed_key
 
@@ -471,7 +469,7 @@ def inventory_constraint_suite(
                 rule(
                     "malformed_frac:key",
                     malformed_frac,
-                    malformed_frac <= max_malformed_frac,
+                    malformed_frac <= MAX_MALFORMED_FRAC,
                 ),
             )
         )

@@ -48,16 +48,10 @@ def _bin_of(ts: Column, width_sec: int) -> Column:
 
 
 def interval_join(
-    intervals: DataFrame,
-    points: DataFrame,
-    *,
-    start: str = "s",
-    end: str = "e",
-    point_ts: str = "ts",
-    bin_width: str = "day",
+    intervals: DataFrame, points: DataFrame, *, bin_width: str = "day"
 ) -> DataFrame:
     """Inner-join ``points`` to every interval containing them —
-    ``points[point_ts] ∈ [intervals[start], intervals[end])`` — as a
+    ``points.ts ∈ [intervals.s, intervals.e)`` — as a
     binned hash equi-join.  Returns the joined frame carrying every
     column of both inputs (the caller aggregates); column names must
     not collide apart from the bin key the operator adds and drops.
@@ -78,23 +72,21 @@ def interval_join(
     # corrupt interval set inflates the fan-out unboundedly (a single
     # inverted year-wide range is ~365 wasted rows at day bins).  The
     # filter makes degenerate inputs cost zero rows instead.
-    iv = intervals.filter(F.col(start) <= F.col(end)).withColumn(
+    iv = intervals.filter(F.col("s") <= F.col("e")).withColumn(
         "__bin",
         F.explode(
             F.sequence(
-                _bin_of(F.col(start), width),
+                _bin_of(F.col("s"), width),
                 # end is EXCLUSIVE, but a partial trailing bin still
                 # holds matches; the range predicate below trims it
-                _bin_of(F.col(end), width),
+                _bin_of(F.col("e"), width),
             )
         ),
     )
-    pt = points.withColumn("__bin", _bin_of(F.col(point_ts), width))
+    pt = points.withColumn("__bin", _bin_of(F.col("ts"), width))
     return (
         iv.join(pt, on=["__bin"], how="inner")
-        .filter(
-            (F.col(point_ts) >= F.col(start)) & (F.col(point_ts) < F.col(end))
-        )
+        .filter((F.col("ts") >= F.col("s")) & (F.col("ts") < F.col("e")))
         .drop("__bin")
     )
 

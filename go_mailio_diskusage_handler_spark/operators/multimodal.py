@@ -169,13 +169,14 @@ def resize_images(documents: DataFrame, max_side: int = 128) -> DataFrame:
     return imgs.mapInPandas(resize_batches, RESIZE_SCHEMA)
 
 
-def audio_chunks(
-    documents: DataFrame, chunk_ms: int = 250, sample_rate: int = 16_000
-) -> DataFrame:
+SAMPLE_RATE = 16_000
+
+
+def audio_chunks(documents: DataFrame, chunk_ms: int = 250) -> DataFrame:
     """Fixed-duration chunk boundaries for audio rows — the audio twin
     of :func:`frame_sample`.
 
-    Payload bytes are treated as 16-bit mono PCM at ``sample_rate``
+    Payload bytes are treated as 16-bit mono PCM at ``SAMPLE_RATE``
     (n_samples = n_bytes/2); each row explodes into its chunk windows
     with start offset and actual length (the last chunk is short).
     Pure JVM ``sequence``+``explode`` — chunking is metadata
@@ -183,7 +184,7 @@ def audio_chunks(
     these (doc_id, start, length) windows to the codec kernel so each
     Arrow batch decodes bounded audio, not whole files.
     """
-    spc = sample_rate * chunk_ms // 1000  # samples per chunk
+    spc = SAMPLE_RATE * chunk_ms // 1000  # samples per chunk
     m = media_table(documents).filter(F.col("media_type") == "audio")
     n_samples = F.floor(F.octet_length("payload") / 2).cast("bigint")
     withn = m.select("doc_id", n_samples.alias("n_samples")).filter(

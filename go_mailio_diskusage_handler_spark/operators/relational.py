@@ -157,21 +157,24 @@ def distinct_customers_per_status(orders: DataFrame) -> DataFrame:
     )
 
 
-def salted_event_totals(events: DataFrame, salts: int = 16) -> DataFrame:
+N_SALTS = 16
+
+
+def salted_event_totals(events: DataFrame) -> DataFrame:
     """Two-stage salted aggregation for HEAVILY skewed group keys
     (SURVEY §2.1 skew mitigation).
 
     ``event_type`` has a handful of distinct values — at 100 TB a
     direct groupBy funnels billions of rows into ~5 reducer tasks.
     Stage 1 groups by (key, salt) so every reducer sees at most
-    1/salts of the hottest key; stage 2 combines the ``salts``
+    1/N_SALTS of the hottest key; stage 2 combines the ``N_SALTS``
     sub-aggregates per key (trivial).  The salt never leaves the job,
     so results are identical to the direct groupBy (oracle = plain
     GROUP BY).  Note partial map-side aggregation already handles
     *moderate* skew; salting is the explicit fix when a single key
     exceeds what one final-agg task should hold.
     """
-    salt = F.pmod(F.hash("event_id"), F.lit(salts)).alias("salt")
+    salt = F.pmod(F.hash("event_id"), F.lit(N_SALTS)).alias("salt")
     stage1 = (
         events.select("event_type", salt, "value")
         .groupBy("event_type", "salt")
@@ -378,31 +381,37 @@ def moving_monthly_spend(orders: DataFrame) -> DataFrame:
     )
 
 
-def approx_distinct_customers(orders: DataFrame, rsd: float = 0.01) -> DataFrame:
+HLL_RSD = 0.01
+
+
+def approx_distinct_customers(orders: DataFrame) -> DataFrame:
     """HyperLogLog++ sketch — the 100 TB path for distinct counts:
     one pass, fixed memory, no distinct-expand shuffle.  The sketch
     estimate itself is engine-specific, so the query emits a
     *deterministic invariant* the DuckDB oracle can hash-match: the
     exact distinct count plus a boolean asserting the HLL estimate
     lands within 5x the configured relative standard deviation (a
-    ~5-sigma bound; HLL++ at rsd=0.01 is far tighter in practice).
+    ~5-sigma bound; HLL++ at HLL_RSD=0.01 is far tighter in practice).
     Both the exact count and the sketch are computed in the same
     single-pass aggregate (two partial buffers, one shuffle)."""
     agg = orders.agg(
         F.countDistinct("o_custkey").alias("exact_distinct"),
-        F.approx_count_distinct("o_custkey", rsd).alias("approx"),
+        F.approx_count_distinct("o_custkey", HLL_RSD).alias("approx"),
     )
     return agg.select(
         "exact_distinct",
         (
             F.abs(F.col("approx") - F.col("exact_distinct"))
             / F.col("exact_distinct")
-            <= F.lit(5 * rsd)
+            <= F.lit(5 * HLL_RSD)
         ).alias("within_tol"),
     )
 
 
-def approx_top_event_types(events: DataFrame, k: int = 5) -> DataFrame:
+TOP_EVENT_TYPES = 5
+
+
+def approx_top_event_types(events: DataFrame) -> DataFrame:
     """approx_top_k heavy-hitter sketch — the 100 TB path for "what
     are the hottest keys": one pass, fixed memory (maxItemsTracked
     counters), mergeable partials, vs the exact answer's full
@@ -425,6 +434,7 @@ def approx_top_event_types(events: DataFrame, k: int = 5) -> DataFrame:
     boundary-tied key still surfaces unless more than k keys share
     the boundary count exactly; the join then always finds the key
     and compares its count."""
+    k = TOP_EVENT_TYPES
     sketch = events.agg(
         F.expr(f"approx_top_k(event_type, {2 * k}, 100000)").alias("tk")
     ).select(F.explode("tk").alias("e")).select(
@@ -447,7 +457,10 @@ def approx_top_event_types(events: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def approx_order_percentiles(orders: DataFrame, accuracy: int = 10_000) -> DataFrame:
+GK_ACCURACY = 10_000
+
+
+def approx_order_percentiles(orders: DataFrame) -> DataFrame:
     """approx_percentile sketch (Greenwald-Khanna) — the 100 TB path
     for quantiles: single pass, bounded memory, mergeable partials,
     vs the exact percentile's full sort.  Like the HLL query, emits a
@@ -455,7 +468,7 @@ def approx_order_percentiles(orders: DataFrame, accuracy: int = 10_000) -> DataF
     (cross-engine reproducible, rounded) plus booleans asserting the
     GK estimates sit within 1% relative error of them."""
     p = orders.agg(
-        F.percentile_approx("o_totalprice", [0.5, 0.9, 0.99], accuracy).alias("a"),
+        F.percentile_approx("o_totalprice", [0.5, 0.9, 0.99], GK_ACCURACY).alias("a"),
         F.expr("percentile(o_totalprice, array(0.5D, 0.9D, 0.99D))").alias("e"),
     )
 
@@ -508,7 +521,10 @@ def segment_spend_ranks(orders: DataFrame, customer: DataFrame) -> DataFrame:
     )
 
 
-def customer_spend_trend(orders: DataFrame, min_orders: int = 5) -> DataFrame:
+TREND_MIN_ORDERS = 5
+
+
+def customer_spend_trend(orders: DataFrame) -> DataFrame:
     """Per-customer linear spend trend (least-squares slope of
     o_totalprice over order day) — regression via SUFFICIENT
     STATISTICS: one aggregation collecting (n, Σx, Σy, Σxy, Σx²) per
@@ -540,7 +556,7 @@ def customer_spend_trend(orders: DataFrame, min_orders: int = 5) -> DataFrame:
         F.col("n_orders") * F.col("sxx") - F.col("sx") * F.col("sx")
     ).cast("double")
     return (
-        stats.filter((F.col("n_orders") >= min_orders) & (den != 0))
+        stats.filter((F.col("n_orders") >= TREND_MIN_ORDERS) & (den != 0))
         .select(
             "o_custkey",
             "n_orders",
@@ -549,9 +565,10 @@ def customer_spend_trend(orders: DataFrame, min_orders: int = 5) -> DataFrame:
     )
 
 
-def part_type_affinity(
-    lineitem: DataFrame, part: DataFrame, k: int = 20
-) -> DataFrame:
+AFFINITY_TOP_PAIRS = 20
+
+
+def part_type_affinity(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """Co-occurrence mining: pairs of part TYPES appearing in the same
     order, counted across orders — the market-basket rollup used for
     curriculum mixing and contamination triage when "order" is a
@@ -583,7 +600,7 @@ def part_type_affinity(
         )
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), F.asc("type_a"), F.asc("type_b"))
-        .limit(k)
+        .limit(AFFINITY_TOP_PAIRS)
     )
 
 
@@ -628,18 +645,16 @@ def spend_reconciliation(orders: DataFrame, split_date: str) -> DataFrame:
 ZORDER_BITS = 8
 
 
-def _morton_interleave(bx, by, bits: int = ZORDER_BITS):
+def _morton_interleave(bx, by):
     """Morton code with bit i of x at position 2i, bit i of y at
     2i+1 — delegates to the compaction sink's interleave (which puts
     its FIRST arg on odd positions, so the args swap)."""
     from go_mailio_diskusage_handler_spark.sources.compaction import zorder_key
 
-    return zorder_key(by, bx, bits)
+    return zorder_key(by, bx, ZORDER_BITS)
 
 
-def zorder_keys(
-    orders: DataFrame, bits: int = ZORDER_BITS
-) -> DataFrame:
+def zorder_keys(orders: DataFrame) -> DataFrame:
     """Z-order clustering key over (o_custkey, o_totalprice) — the
     layout primitive behind multi-dimensional data skipping (Delta
     OPTIMIZE ZORDER BY, Hudi/Iceberg z-ordering): sort-by-z groups
@@ -650,7 +665,7 @@ def zorder_keys(
     Quantization is exact integer math end-to-end: per-dimension
     min/max (two scalars, collected once — the same bounded-driver
     pattern as every codebook/cutoff broadcast here) scale each value
-    to a 2^bits bucket via INTEGER division, then the Morton
+    to a 2^ZORDER_BITS bucket via INTEGER division, then the Morton
     interleave is shift/mask/add.  No floats anywhere, so the key is
     bit-identical in the DuckDB oracle.
 
@@ -669,10 +684,10 @@ def zorder_keys(
         F.max(F.floor("o_totalprice").cast("long")),
     ).first()
     bx = F.expr(
-        f"(o_custkey - {lo_x}) * {1 << bits} div {hi_x - lo_x + 1}"
+        f"(o_custkey - {lo_x}) * {1 << ZORDER_BITS} div {hi_x - lo_x + 1}"
     ).cast("long")
     by = F.expr(
-        f"(CAST(floor(o_totalprice) AS BIGINT) - {lo_y}) * {1 << bits}"
+        f"(CAST(floor(o_totalprice) AS BIGINT) - {lo_y}) * {1 << ZORDER_BITS}"
         f" div {hi_y - lo_y + 1}"
     ).cast("long")
     return orders.select(
@@ -681,9 +696,7 @@ def zorder_keys(
         "o_orderkey",
         "bucket_x",
         "bucket_y",
-        _morton_interleave(
-            F.col("bucket_x"), F.col("bucket_y"), bits
-        ).alias("z_key"),
+        _morton_interleave(F.col("bucket_x"), F.col("bucket_y")).alias("z_key"),
     )
 
 
@@ -816,7 +829,7 @@ def daily_revenue_dense(orders: DataFrame) -> DataFrame:
     )
 
 
-def profile_table(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """Single-pass column profiler: for every column, the null count
     and exact distinct count — the first query run against any new
     table, generated from the schema so it works on all of them.
@@ -827,7 +840,7 @@ def profile_table(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame
     never |columns| separate scans, which is how naive profilers turn
     a 100 TB audit into |columns| × 100 TB of I/O.
     """
-    cols = key_cols or df.columns
+    cols = df.columns
     aggs = []
     for c in cols:
         aggs.append(
@@ -950,9 +963,10 @@ def corpus_index_coverage(
     )
 
 
-def part_affinity_lift(
-    lineitem: DataFrame, part: DataFrame, min_pair_orders: int = 20
-) -> DataFrame:
+LIFT_MIN_PAIR_ORDERS = 20
+
+
+def part_affinity_lift(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """Association-rule statistics over the type co-occurrence pairs:
     support, confidence (both directions folded to max), and LIFT —
     P(a,b) / (P(a)·P(b)) — the measure that separates "frequent
@@ -992,7 +1006,7 @@ def part_affinity_lift(
             F.col("b.p_type").alias("type_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .filter(F.col("n_pair") >= min_pair_orders)
+        .filter(F.col("n_pair") >= LIFT_MIN_PAIR_ORDERS)
     )
     ma = marg.select(
         F.col("p_type").alias("type_a"), F.col("n_type").alias("n_a")
@@ -1026,7 +1040,10 @@ def part_affinity_lift(
     return own_cache(out, order_types)
 
 
-def exact_global_median(orders: DataFrame, *, buckets: int = 1024) -> DataFrame:
+MEDIAN_BUCKETS = 1024
+
+
+def exact_global_median(orders: DataFrame) -> DataFrame:
     """[EXT] Exact global median via two distributed passes — no
     global sort, no single-task window.
 
@@ -1036,13 +1053,13 @@ def exact_global_median(orders: DataFrame, *, buckets: int = 1024) -> DataFrame:
     The scale-correct exact algorithm is histogram refinement:
 
     1. one pass aggregates (min, max, count) — three scalars;
-    2. one pass builds a ``buckets``-bin histogram (map-side partial
-       agg, ≤ ``buckets`` rows to the driver — bounded, like the
+    2. one pass builds a ``MEDIAN_BUCKETS``-bin histogram (map-side
+       partial agg, ≤ ``MEDIAN_BUCKETS`` rows to the driver — bounded, like the
        codebook collects elsewhere in this package);
     3. the driver walks the histogram to find the bucket(s) holding
        the two middle ranks, then ONE narrow filtered pass (the range
        predicate prunes parquet row groups via min/max stats) ranks
-       only ~n/buckets rows to read the exact order statistics.
+       only ~n/MEDIAN_BUCKETS rows to read the exact order statistics.
 
     Slice membership reuses the SAME bucket expression as the
     histogram, so float rounding can't strand a row between passes;
@@ -1072,8 +1089,10 @@ def exact_global_median(orders: DataFrame, *, buckets: int = 1024) -> DataFrame:
             F.lit(lo).alias("hi_mid"),
             (F.round(F.lit(lo) * 100) * 2).cast("bigint").alias("median_cents_x2"),
         )
-    width = (hi - lo) / buckets
-    bexpr = F.least(F.floor((v - F.lit(lo)) / F.lit(width)), F.lit(buckets - 1))
+    width = (hi - lo) / MEDIAN_BUCKETS
+    bexpr = F.least(
+        F.floor((v - F.lit(lo)) / F.lit(width)), F.lit(MEDIAN_BUCKETS - 1)
+    )
     hist = dict(
         (r[0], r[1])
         for r in orders.groupBy(bexpr.alias("b"))

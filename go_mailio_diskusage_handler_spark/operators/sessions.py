@@ -12,12 +12,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-DEFAULT_GAP_MINUTES = 30
+SESSION_GAP_MINUTES = 30
 
 
-def session_window_stats(
-    events: DataFrame, gap_minutes: int = DEFAULT_GAP_MINUTES
-) -> DataFrame:
+def session_window_stats(events: DataFrame) -> DataFrame:
     """Native ``F.session_window`` sessionization — Spark's built-in
     gap-based session operator (works identically in batch and
     Structured Streaming).
@@ -30,7 +28,8 @@ def session_window_stats(
     """
     return (
         events.groupBy(
-            "user_id", F.session_window("ts", f"{gap_minutes} minutes").alias("w")
+            "user_id",
+            F.session_window("ts", f"{SESSION_GAP_MINUTES} minutes").alias("w"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -42,12 +41,10 @@ def session_window_stats(
     )
 
 
-def asof_last_purchase(
-    events: DataFrame, probe_type: str = "click", ref_type: str = "purchase"
-) -> DataFrame:
+def asof_last_purchase(events: DataFrame) -> DataFrame:
     """AS-OF join as a composition (SURVEY §2.1 notes Spark lacks a
-    native as-of): for every ``probe_type`` event, the value of the
-    same user's most recent ``ref_type`` event at-or-before it.
+    native as-of): for every ``click`` event, the value of the same
+    user's most recent ``purchase`` event at-or-before it.
 
     Instead of a range join (which Spark would execute as a broadcast
     nested loop at O(n·m) per user), both event sets ride ONE
@@ -61,6 +58,7 @@ def asof_last_purchase(
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    probe_type, ref_type = "click", "purchase"
     ref_val = F.when(F.col("event_type") == ref_type, F.col("value"))
     ref_ts = F.when(F.col("event_type") == ref_type, F.unix_micros("ts"))
     carried = events.filter(
@@ -90,12 +88,12 @@ def asof_last_purchase(
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = DEFAULT_GAP_MINUTES) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Events → sessions: (user_id, session_start_us, n_events,
     duration_us).  A new session starts when the gap to the previous
-    event of the same user exceeds ``gap_minutes``.
+    event of the same user exceeds ``SESSION_GAP_MINUTES``.
     """
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     us = F.unix_micros("ts")
@@ -124,9 +122,9 @@ def sessionize(events: DataFrame, gap_minutes: int = DEFAULT_GAP_MINUTES) -> Dat
 FUNNEL_STEPS = ("view", "click", "purchase")
 
 
-def funnel(events: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS) -> DataFrame:
+def funnel(events: DataFrame) -> DataFrame:
     """Ordered-funnel analysis: for every user, the first time each
-    step of ``steps`` was completed IN ORDER (each step strictly after
+    step of ``FUNNEL_STEPS`` was completed IN ORDER (each step strictly after
     the previous step's completion) — the product-analytics
     counterpart of sessionization, and the same shape a training
     pipeline uses for ordered event-sequence mining.
@@ -156,21 +154,21 @@ def funnel(events: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS) -> DataFram
             F.sort_array(
                 F.collect_list(
                     F.when(
-                        F.col("event_type").isin(*steps),
+                        F.col("event_type").isin(*FUNNEL_STEPS),
                         F.struct(us.alias("t"), F.col("event_type").alias("e")),
                     )
                 )
             ).alias("evs")
         )
     )
-    n = len(steps)
+    n = len(FUNNEL_STEPS)
     acc0 = F.struct(
         *[F.lit(None).cast("bigint").alias(f"s{i}") for i in range(n)]
     )
 
     def fold(acc, s):
         fields = []
-        for i, step in enumerate(steps):
+        for i, step in enumerate(FUNNEL_STEPS):
             prev_done = F.lit(True) if i == 0 else acc[f"s{i-1}"].isNotNull()
             prev_t = F.lit(-1).cast("bigint") if i == 0 else acc[f"s{i-1}"]
             fields.append(
@@ -403,11 +401,7 @@ def dau_wau(events: DataFrame) -> DataFrame:
     )
 
 
-def funnel_within(
-    events: DataFrame,
-    steps: tuple[str, ...] = FUNNEL_STEPS,
-    within_hours: int = 24,
-) -> DataFrame:
+def funnel_within(events: DataFrame, within_hours: int = 24) -> DataFrame:
     """Time-bound ordered funnel: like :func:`funnel`, but each step
     must land within ``within_hours`` of the PREVIOUS step's
     completion — the conversion-window semantics real funnels use (a
@@ -432,21 +426,21 @@ def funnel_within(
             F.sort_array(
                 F.collect_list(
                     F.when(
-                        F.col("event_type").isin(*steps),
+                        F.col("event_type").isin(*FUNNEL_STEPS),
                         F.struct(us.alias("t"), F.col("event_type").alias("e")),
                     )
                 )
             ).alias("evs")
         )
     )
-    n = len(steps)
+    n = len(FUNNEL_STEPS)
     acc0 = F.struct(
         *[F.lit(None).cast("bigint").alias(f"s{i}") for i in range(n)]
     )
 
     def fold(acc, s):
         fields = []
-        for i, step in enumerate(steps):
+        for i, step in enumerate(FUNNEL_STEPS):
             if i == 0:
                 cond = s["e"] == step
             else:
@@ -478,16 +472,17 @@ def funnel_within(
     )
 
 
-def daily_anomaly_zscore(
-    events: DataFrame,
-    trailing: int = 7,
-    min_prior: int = 3,
-    z_thresh: float = 2.0,
-) -> DataFrame:
+ANOMALY_TRAILING = 7  # prior rows in the baseline
+ANOMALY_MIN_PRIOR = 3  # prior rows before a day is scoreable
+ANOMALY_Z_THRESH = 2.0
+
+
+def daily_anomaly_zscore(events: DataFrame) -> DataFrame:
     """Daily event-volume anomaly detection: per (day, event_type)
-    counts scored against a trailing-``trailing``-row baseline
+    counts scored against a trailing-``ANOMALY_TRAILING``-row baseline
     (mean + sample stddev of the PRIOR rows only — the current day
-    never contaminates its own baseline), flagging |z| >= ``z_thresh``.
+    never contaminates its own baseline), flagging |z| >=
+    ``ANOMALY_Z_THRESH``.
 
     Scale shape: the corpus-sized work is ONE hash aggregation down
     to (days x types) rows; the window then runs over that
@@ -498,7 +493,7 @@ def daily_anomaly_zscore(
     stretch the baseline horizon, cf. relational.daily_revenue_dense
     for explicit densification).
 
-    Warm-up semantics: days with fewer than ``min_prior`` prior rows
+    Warm-up semantics: days with fewer than ``ANOMALY_MIN_PRIOR`` prior rows
     or zero variance are not scoreable — ``scoreable = false``,
     ``is_anomaly = false``, and the double columns carry SENTINELS
     (mean -1, z 0) rather than NULL: a nullable DOUBLE round-trips as
@@ -508,17 +503,10 @@ def daily_anomaly_zscore(
     daily = events.groupBy(
         F.to_date("ts").alias("day"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    return score_daily_counts(
-        daily, trailing=trailing, min_prior=min_prior, z_thresh=z_thresh
-    )
+    return score_daily_counts(daily)
 
 
-def score_daily_counts(
-    daily: DataFrame,
-    trailing: int = 7,
-    min_prior: int = 3,
-    z_thresh: float = 2.0,
-) -> DataFrame:
+def score_daily_counts(daily: DataFrame) -> DataFrame:
     """Scoring half of :func:`daily_anomaly_zscore`: expects a (day
     DATE, event_type, n_events) table.  The daily count is additive;
     this trailing window is not, so it runs over the days×types-bounded
@@ -526,7 +514,7 @@ def score_daily_counts(
     w = (
         Window.partitionBy("event_type")
         .orderBy("day")
-        .rowsBetween(-trailing, -1)
+        .rowsBetween(-ANOMALY_TRAILING, -1)
     )
     scored = daily.select(
         "day",
@@ -536,7 +524,7 @@ def score_daily_counts(
         F.avg("n_events").over(w).alias("mean_prior"),
         F.stddev_samp("n_events").over(w).alias("sd_prior"),
     )
-    ok = (F.col("n_prior") >= min_prior) & (F.col("sd_prior") > 0)
+    ok = (F.col("n_prior") >= ANOMALY_MIN_PRIOR) & (F.col("sd_prior") > 0)
     z = F.when(
         ok, (F.col("n_events") - F.col("mean_prior")) / F.col("sd_prior")
     )
@@ -548,7 +536,7 @@ def score_daily_counts(
         F.coalesce(F.round("mean_prior", 4), F.lit(-1.0)).alias("mean_prior"),
         F.coalesce(ok, F.lit(False)).alias("scoreable"),
         F.coalesce(F.round(z, 4), F.lit(0.0)).alias("zscore"),
-        F.coalesce(F.abs(z) >= z_thresh, F.lit(False)).alias("is_anomaly"),
+        F.coalesce(F.abs(z) >= ANOMALY_Z_THRESH, F.lit(False)).alias("is_anomaly"),
     )
 
 
@@ -575,7 +563,10 @@ def user_growth(events: DataFrame) -> DataFrame:
     )
 
 
-def event_concentration(events: DataFrame, deciles: int = 10) -> DataFrame:
+N_DECILES = 10
+
+
+def event_concentration(events: DataFrame) -> DataFrame:
     """Activity concentration (Pareto) report: bucket users into
     activity deciles and report each decile's share of total events —
     the whale-detection / abuse-skew health metric.  One user-keyed
@@ -588,17 +579,17 @@ def event_concentration(events: DataFrame, deciles: int = 10) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    return concentration_report(per_user, deciles)
+    return concentration_report(per_user)
 
 
-def concentration_report(per_user: DataFrame, deciles: int = 10) -> DataFrame:
+def concentration_report(per_user: DataFrame) -> DataFrame:
     """Scoring half of :func:`event_concentration`: expects a
     (user_id, n_events) table.  The per-user count is additive; the
     NTILE ranking is not, so it runs over the user-bounded count table
     rather than the events."""
     w = Window.orderBy(F.desc("n_events"), F.asc("user_id"))
     bucketed = per_user.select(
-        "n_events", F.ntile(deciles).over(w).alias("decile")
+        "n_events", F.ntile(N_DECILES).over(w).alias("decile")
     )
     agg = bucketed.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_users"),
@@ -616,9 +607,12 @@ def concentration_report(per_user: DataFrame, deciles: int = 10) -> DataFrame:
     )
 
 
-def markov_stationary(events: DataFrame, iters: int = 3) -> DataFrame:
+MARKOV_ITERS = 3
+
+
+def markov_stationary(events: DataFrame) -> DataFrame:
     """Approximate stationary distribution of the event-type Markov
-    chain: ``iters`` power-iteration steps (π ← πP) from the uniform
+    chain: ``MARKOV_ITERS`` power-iteration steps (π ← πP) from the uniform
     start over :func:`event_transitions`' matrix — "where does a user
     journey settle", the chain-level summary next to the edge-level
     transition matrix.
@@ -650,7 +644,7 @@ def markov_stationary(events: DataFrame, iters: int = 3) -> DataFrame:
     pi = types.select(
         "t", (F.lit(1.0) / F.count(F.lit(1)).over(Window.partitionBy())).alias("pv")
     )
-    for _ in range(iters):
+    for _ in range(MARKOV_ITERS):
         pi = (
             pi.join(p, pi["t"] == p["event_type"])
             .groupBy(F.col("next_type").alias("t"))
@@ -707,13 +701,11 @@ _USER_BUCKET = " + ".join(
 )
 
 
-def ab_conversion_test(
-    events: DataFrame, conv_type: str = "purchase"
-) -> DataFrame:
+def ab_conversion_test(events: DataFrame) -> DataFrame:
     """Deterministic A/B experiment readout: users split 50/50 by
     md5-bucket parity (the same keyed-hash assignment the curation
     splits use — stable across reruns and backfills, no RNG state),
-    conversion = "is the user an above-median ``conv_type``-er"
+    conversion = "is the user an above-median purchaser"
     (median over per-user counts — scale-free, so the rate stays
     interior at any sf; a naive did-they-ever definition saturates at
     1.0 on dense data and zeroes the test's variance), and the
@@ -737,7 +729,7 @@ def ab_conversion_test(
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(
-            F.sum((F.col("event_type") == conv_type).cast("int")).alias(
+            F.sum((F.col("event_type") == "purchase").cast("int")).alias(
                 "n_conv_events"
             )
         )
@@ -927,9 +919,7 @@ def retention_curve(events: DataFrame) -> DataFrame:
     )
 
 
-def funnel_step_rates(
-    events: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS
-) -> DataFrame:
+def funnel_step_rates(events: DataFrame) -> DataFrame:
     """The funnel REPORT: per step, how many users reached it, the
     conversion rate from the previous step, and the overall rate from
     the top — the aggregate view the per-user funnel
@@ -945,8 +935,8 @@ def funnel_step_rates(
     0.0 rate with ``rate_defined = false`` instead of the NULL/NaN
     double a raw division would produce.
     """
-    f = funnel(events, steps)
-    n = len(steps)
+    f = funnel(events)
+    n = len(FUNNEL_STEPS)
     reached = f.agg(
         F.count(F.lit(1)).alias("total"),
         *[
@@ -957,7 +947,7 @@ def funnel_step_rates(
         ],
     )
     pairs = ", ".join(
-        f"{i + 1}, '{steps[i]}', coalesce(r{i}, 0L), "
+        f"{i + 1}, '{FUNNEL_STEPS[i]}', coalesce(r{i}, 0L), "
         + ("CAST(NULL AS BIGINT)" if i == 0 else f"coalesce(r{i - 1}, 0L)")
         for i in range(n)
     )
@@ -1082,23 +1072,25 @@ def interpolate_values(events: DataFrame) -> DataFrame:
     )
 
 
-def user_value_ewma(
-    events: DataFrame, alpha: float = 0.1, cap: int = 256
-) -> DataFrame:
+EWMA_ALPHA = 0.1
+EWMA_CAP = 256
+
+
+def user_value_ewma(events: DataFrame) -> DataFrame:
     """Per-user exponentially weighted moving average of ``value`` —
     the classic recency-weighted feature (recursive ``y = (1-α)·y +
     α·x``, which no window frame expresses) computed as an ORDERED
     ARRAY FOLD that never leaves the JVM: sort-collect the user's
-    (ts, event_id, value) sequence, keep the trailing ``cap`` elements,
+    (ts, event_id, value) sequence, keep the trailing ``EWMA_CAP`` elements,
     and ``F.aggregate`` the fold — one shuffle, whole-stage codegen,
     no Python (contrast ``DirectionChangesUDTF``, which exists to
     exercise the Python table-function surface; this is how the same
     per-key sequential shape ships FAST when the logic is expressible
     as a lambda).
 
-    The trailing cap is the scale guard: per-group state is ≤ ``cap``
+    The trailing cap is the scale guard: per-group state is ≤ ``EWMA_CAP``
     elements regardless of a user's history length (the dropped prefix
-    contributes weight ≤ (1-α)^cap ≈ 2e-12 at the defaults — below
+    contributes weight ≤ (1-α)^cap ≈ 2e-12 at α = ``EWMA_ALPHA`` — below
     double noise), so executor memory is bounded exactly like the
     table-arg UDTF's O(1) state.
 
@@ -1122,13 +1114,13 @@ def user_value_ewma(
     )
     tail = F.slice(
         F.col("vals"),
-        F.greatest(F.lit(1), F.size("vals") - F.lit(cap - 1)),
-        F.lit(cap),
+        F.greatest(F.lit(1), F.size("vals") - F.lit(EWMA_CAP - 1)),
+        F.lit(EWMA_CAP),
     )
     ewma = F.aggregate(
         F.slice(tail, 2, F.greatest(F.size(tail) - 1, F.lit(0))),
         F.element_at(tail, 1),
-        lambda acc, x: acc * F.lit(1.0 - alpha) + F.lit(alpha) * x,
+        lambda acc, x: acc * F.lit(1.0 - EWMA_ALPHA) + F.lit(EWMA_ALPHA) * x,
     )
     return per_user.select("user_id", "n_events", ewma.alias("ewma_value"))
 

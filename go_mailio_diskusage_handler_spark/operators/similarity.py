@@ -40,6 +40,8 @@ from go_mailio_diskusage_handler_spark.sources.tables import widen_for_compute
 N_PLANES = 8  # 256 buckets per table
 N_TABLES = 3  # independent hash tables OR-ed on the ANN path
 EMB_DIM = 64
+N_QUERIES = 8  # queries are vec_id < N_QUERIES
+TOP_K = 5  # neighbors per query
 
 # Multi-probe bucket masks: the query's own bucket, every Hamming-1
 # flip, and every Hamming-2 flip.  A neighbor ≤ 2 planes away in SOME
@@ -245,7 +247,7 @@ def filtered_topk(
     )
 
 
-def hyperplane(p: int, dim: int = EMB_DIM) -> list[float]:
+def hyperplane(p: int) -> list[float]:
     """Deterministic small-integer 'random' hyperplane p: each
     component is an md5-derived value in [-3, 3].
 
@@ -262,11 +264,11 @@ def hyperplane(p: int, dim: int = EMB_DIM) -> list[float]:
 
     return [
         float(int(hashlib.md5(f"{p}:{c}".encode()).hexdigest()[:8], 16) % 7 - 3)
-        for c in range(dim)
+        for c in range(EMB_DIM)
     ]
 
 
-def bucket_id(emb: Column, dim: int = EMB_DIM, table: int = 0) -> Column:
+def bucket_id(emb: Column, table: int = 0) -> Column:
     """Pack sign(dot(v, plane_p)) bits into an int bucket id; hash
     table ``t`` uses the independent plane block ``[t*N_PLANES,
     (t+1)*N_PLANES)``.
@@ -277,7 +279,7 @@ def bucket_id(emb: Column, dim: int = EMB_DIM, table: int = 0) -> Column:
     literal-vs-unrolled-codegen tradeoff as the IVF codebook, measured
     2.2× at sf0.1 with bit-identical buckets."""
     planes = const_array_lit(
-        [hyperplane(table * N_PLANES + p, dim) for p in range(N_PLANES)]
+        [hyperplane(table * N_PLANES + p) for p in range(N_PLANES)]
     )
     contrib = F.transform(
         planes,
@@ -705,9 +707,7 @@ def _pq_code_array(emb: Column, cb: Column) -> Column:
     )
 
 
-def pq_ann_topk(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 5
-) -> DataFrame:
+def pq_ann_topk(embeddings: DataFrame) -> DataFrame:
     """PQ ANN via asymmetric distance computation (ADC).
 
     The query side never quantizes: per query, a distance table
@@ -724,7 +724,7 @@ def pq_ann_topk(
     distances round to 6 digits and the 8-entry sum to 4 (both
     engines), so group-sum order can't flip the cross-engine hash.
     """
-    dt = _adc_tables(embeddings, n_queries)
+    dt = _adc_tables(embeddings)
     codes = pq_codes(embeddings)
     scored = (
         codes.join(F.broadcast(dt), ["subspace", "code"])
@@ -736,13 +736,11 @@ def pq_ann_topk(
         F.asc("approx_dist"), F.asc("neighbor_id")
     )
     return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
+        F.col("rank") <= TOP_K
     )
 
 
-def _adc_tables(
-    embeddings: DataFrame, n_queries: int, cb: Column | None = None
-) -> DataFrame:
+def _adc_tables(embeddings: DataFrame, cb: Column | None = None) -> DataFrame:
     """Per-query ADC distance tables: (query_id, subspace, code, d)
     rows, ``d = ||q_sub - centroid||²`` rounded to 6 — PQ_M × PQ_K
     entries per query, built as JVM expressions over the codebook
@@ -752,7 +750,7 @@ def _adc_tables(
     query for the identical constant."""
     if cb is None:
         cb = const_array_lit(_pq_codebook(embeddings))  # [M][K][SUB] doubles
-    queries = embeddings.filter(F.col("vec_id") < n_queries).select(
+    queries = embeddings.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), _to_double(F.col("embedding")).alias("q")
     )
     entries = F.flatten(
@@ -774,15 +772,13 @@ def _adc_tables(
     )
 
 
-def _ivfpq_adc_scored(
-    embeddings: DataFrame, n_queries: int, n_probe: int = N_PROBE
-) -> DataFrame:
+def _ivfpq_adc_scored(embeddings: DataFrame) -> DataFrame:
     """(query_id, neighbor_id, approx_dist) for every candidate in the
     queries' probed IVF lists, scored by PQ ADC — the shared core of
     :func:`ivfpq_ann_topk` (ADC order as final) and
     :func:`ivfpq_rerank_topk` (exact re-rank of the ADC shortlist).
 
-    ``n_probe`` only widens the QUERY side's probed lists; the corpus
+    ``N_PROBE`` only widens the QUERY side's probed lists; the corpus
     assignment is always ``lists[0]``."""
     from pyspark import StorageLevel
 
@@ -805,12 +801,12 @@ def _ivfpq_adc_scored(
         .select(
             "vec_id",
             nrm.alias("nrm"),
-            _best_lists(F.col("embedding"), nrm, cents, n_probe).alias("lists"),
+            _best_lists(F.col("embedding"), nrm, cents, N_PROBE).alias("lists"),
             _pq_code_array(F.col("embedding"), cb).alias("codes"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    probes = scored_corpus.filter(F.col("vec_id") < n_queries).select(
+    probes = scored_corpus.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.explode("lists").alias("list_id")
     )
     cand = (
@@ -824,7 +820,7 @@ def _ivfpq_adc_scored(
         )
     )
     out = (
-        cand.join(F.broadcast(_adc_tables(embeddings, n_queries, cb)),
+        cand.join(F.broadcast(_adc_tables(embeddings, cb)),
                   ["query_id", "subspace", "code"])
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.round(F.sum("d"), 4).alias("approx_dist"))
@@ -832,9 +828,7 @@ def _ivfpq_adc_scored(
     return own_cache(out, scored_corpus)
 
 
-def ivfpq_ann_topk(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 5
-) -> DataFrame:
+def ivfpq_ann_topk(embeddings: DataFrame) -> DataFrame:
     """IVF probe pruning × PQ ADC scoring — the production ANN stack.
 
     The coarse quantizer bounds WHICH vectors get scored (only the
@@ -845,12 +839,12 @@ def ivfpq_ann_topk(
     the final order here; :func:`ivfpq_rerank_topk` adds the exact
     re-rank tier a deployment runs on top.
     """
-    scored = _ivfpq_adc_scored(embeddings, n_queries)
+    scored = _ivfpq_adc_scored(embeddings)
     w = Window.partitionBy("query_id").orderBy(
         F.asc("approx_dist"), F.asc("neighbor_id")
     )
     out = scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
+        F.col("rank") <= TOP_K
     )
     # Transfer scored_corpus's cache ownership to the RETURNED frame:
     # without it the owner (``scored``) dies at function exit and the
@@ -863,46 +857,40 @@ def ivfpq_ann_topk(
     return own_cache(out, absorb=[scored])
 
 
-def ivfpq_rerank_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    shortlist: int = RERANK_SHORTLIST,
-    n_probe: int = N_PROBE,
-) -> DataFrame:
+def ivfpq_rerank_topk(embeddings: DataFrame) -> DataFrame:
     """IVF×PQ ADC shortlist → EXACT cosine re-rank — the full
     production ANN output stage.
 
     ADC distance is quantized (PQ error dominates on unstructured
     vectors — recall@5 ≈ 0.2 when it is the final order), so
     deployments keep the cheap ADC pass for candidate *selection*
-    (top-``shortlist`` per query) and re-rank only that shortlist
-    against the true vectors.  Cost at 100 TB: the corpus-wide work
-    is still codes-only; exactly ``n_queries × shortlist`` full
+    (top-``RERANK_SHORTLIST`` per query) and re-rank only that
+    shortlist against the true vectors.  Cost at 100 TB: the corpus-wide
+    work is still codes-only; exactly ``N_QUERIES × RERANK_SHORTLIST`` full
     vectors are fetched for the re-rank (a broadcast-joined point
     lookup against the vector store), so the exact tier's cost is
     independent of corpus size.  Measured recall@5 on the fixtures:
     0.20 (ADC order) → 0.70 (shortlist=20) → 0.925 (shortlist=60,
-    the default) — the old ceiling was the SHORTLIST truncating
+    RERANK_SHORTLIST) — the old ceiling was the SHORTLIST truncating
     ADC-misranked true neighbors, not the coarse quantizer; see
     RERANK_SHORTLIST's sweep, including why n_probe at fixed
     shortlist moves recall the wrong way.
     """
-    scored = _ivfpq_adc_scored(embeddings, n_queries, n_probe)
+    scored = _ivfpq_adc_scored(embeddings)
     w_short = Window.partitionBy("query_id").orderBy(
         F.asc("approx_dist"), F.asc("neighbor_id")
     )
     short = (
         scored.select("*", F.row_number().over(w_short).alias("srank"))
-        .filter(F.col("srank") <= shortlist)
+        .filter(F.col("srank") <= RERANK_SHORTLIST)
         .select("query_id", "neighbor_id")
     )
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
+    q = embeddings.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         l2_norm(F.col("embedding")).alias("q_nrm"),
     )
-    # The shortlist (n_queries × shortlist rows) broadcasts to the
+    # The shortlist (N_QUERIES × RERANK_SHORTLIST rows) broadcasts to the
     # corpus scan; only matching vectors compute the exact cosine.
     exact = (
         embeddings.select(
@@ -926,7 +914,7 @@ def ivfpq_rerank_topk(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
     out = exact.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= k
+        F.col("rank") <= TOP_K
     )
     # Same ownership transfer as ivfpq_ann_topk (see the note there).
     return own_cache(out, absorb=[scored])
@@ -988,11 +976,7 @@ MMR_K = 5
 
 
 def mmr_rerank_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = MMR_K,
-    shortlist: int = MMR_SHORTLIST,
-    lam: float = MMR_LAMBDA,
+    embeddings: DataFrame, k: int = MMR_K, lam: float = MMR_LAMBDA
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k: greedily select
     candidates maximizing ``λ·rel(c) − (1−λ)·max_{s∈S} sim(c, s)`` —
@@ -1003,17 +987,17 @@ def mmr_rerank_topk(
     Scale shape: the GREEDY is inherently sequential, so it runs where
     sequential is free — per query, over a bounded shortlist.  All
     vector math stays in JVM expressions: relevance comes from the
-    exact top-``shortlist`` tier and the shortlist×shortlist pairwise
-    sims from a query-keyed self-join (≤ shortlist² rows per query,
-    corpus-independent).  The Arrow-batched ``applyInPandas`` step
-    then does only O(k·shortlist) float compares per query — no dot
+    exact top-``MMR_SHORTLIST`` tier and the shortlist×shortlist
+    pairwise sims from a query-keyed self-join (≤ MMR_SHORTLIST² rows
+    per query, corpus-independent).  The Arrow-batched ``applyInPandas``
+    step then does only O(k·MMR_SHORTLIST) float compares per query — no dot
     products in Python, so engine/oracle fp agreement reduces to IEEE
     arithmetic on the SAME rounded inputs.  At 100 TB the shortlist
     tier is the ANN stack; the MMR cost never grows with the corpus.
     """
     import pandas as pd
 
-    cand = brute_force_topk(embeddings, n_queries, shortlist).select(
+    cand = brute_force_topk(embeddings, N_QUERIES, MMR_SHORTLIST).select(
         "query_id", "neighbor_id", F.col("cos_sim").alias("rel")
     )
     e = widen_for_compute(embeddings).select(
@@ -1099,28 +1083,22 @@ def mmr_rerank_topk(
 RRF_K = 60
 RRF_TOPK = 5
 RRF_POOL = 20
+RRF_QUERIES = 4
 
 
-def rrf_hybrid_topk(
-    documents: DataFrame,
-    embeddings: DataFrame,
-    n_queries: int = 4,
-    k: int = RRF_TOPK,
-    pool: int = RRF_POOL,
-    rrf_k: int = RRF_K,
-) -> DataFrame:
+def rrf_hybrid_topk(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
     """Hybrid retrieval by reciprocal-rank fusion: a LEXICAL ranking
     (n-gram Jaccard over the df-capped shingle join) and a VECTOR
     ranking (exact cosine) are fused per query as
-    ``Σ 1/(rrf_k + rank)`` — the standard multi-retriever combination
+    ``Σ 1/(RRF_K + rank)`` — the standard multi-retriever combination
     (rank-based, so the two scoring scales never need calibrating).
 
-    Scale shape: both rank lists are per-query top-``pool`` — the
+    Scale shape: both rank lists are per-query top-``RRF_POOL`` — the
     lexical side probes the shingle index with only the query docs'
     shingles (probe-side bounded, same fence as incremental dedup),
     the vector side is the exact tier (swap in the ANN stack at
     corpus scale) — and the fusion is a FULL OUTER join of two
-    (n_queries × pool)-row lists: query-bounded, corpus-independent.
+    (RRF_QUERIES × RRF_POOL)-row lists: query-bounded, corpus-independent.
     Fused scores are sums of exact reciprocals of small ints —
     bit-identical across engines; ties share identical rank pairs and
     break on candidate id.
@@ -1133,7 +1111,7 @@ def rrf_hybrid_topk(
 
     sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    probe = sh.filter(F.col("doc_id") < n_queries)
+    probe = sh.filter(F.col("doc_id") < RRF_QUERIES)
     inter = (
         sh.alias("c")
         .join(
@@ -1164,11 +1142,11 @@ def rrf_hybrid_topk(
     )
     text_ranks = (
         jac.select("*", F.row_number().over(w_t).alias("rank_t"))
-        .filter(F.col("rank_t") <= pool)
+        .filter(F.col("rank_t") <= RRF_POOL)
         .select("query_id", "cand_id", "rank_t")
     )
     vec_ranks = (
-        brute_force_topk(embeddings, n_queries, pool)
+        brute_force_topk(embeddings, RRF_QUERIES, RRF_POOL)
         .select(
             "query_id",
             F.col("neighbor_id").alias("cand_id"),
@@ -1190,10 +1168,10 @@ def rrf_hybrid_topk(
             F.coalesce(F.col("t.cand_id"), F.col("v.cand_id")).alias("cand_id"),
             (
                 F.coalesce(
-                    1.0 / (F.lit(rrf_k) + F.col("rank_t")), F.lit(0.0)
+                    1.0 / (F.lit(RRF_K) + F.col("rank_t")), F.lit(0.0)
                 )
                 + F.coalesce(
-                    1.0 / (F.lit(rrf_k) + F.col("rank_v")), F.lit(0.0)
+                    1.0 / (F.lit(RRF_K) + F.col("rank_v")), F.lit(0.0)
                 )
             ).alias("rrf_score"),
         )
@@ -1203,7 +1181,7 @@ def rrf_hybrid_topk(
     )
     out = (
         fused.select("*", F.row_number().over(w_f).alias("fused_rank"))
-        .filter(F.col("fused_rank") <= k)
+        .filter(F.col("fused_rank") <= RRF_TOPK)
     )
     return own_cache(out, sh)
 
@@ -1213,6 +1191,7 @@ def rrf_hybrid_topk(
 # ---------------------------------------------------------------------------
 KM_K = 8
 KM_ITERS = 2
+KM_N_PROBE = 2
 
 
 def _km_assign(
@@ -1322,18 +1301,10 @@ def _km_fit(
     return e, cents
 
 
-def kmeans_ivf_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    topk: int = 5,
-    *,
-    k: int = KM_K,
-    iters: int = KM_ITERS,
-    n_probe: int = 2,
-) -> DataFrame:
+def kmeans_ivf_topk(embeddings: DataFrame) -> DataFrame:
     """End-to-end TRAINED IVF: Lloyd-fit the codebook
     (:func:`kmeans_train`'s loop), assign the corpus, then answer ANN
-    queries by probing the ``n_probe`` nearest trained cells and
+    queries by probing the ``KM_N_PROBE`` nearest trained cells and
     exact-L2² re-ranking inside them — the trainer→index integration
     a production vector pipeline runs, where :func:`ivf_ann_topk`'s
     deterministic stand-in codebook is replaced by a fitted one.
@@ -1345,7 +1316,7 @@ def kmeans_ivf_topk(
     probed cells get exact distances.  L2 metric end-to-end so the
     ranking is consistent with the trainer's objective.
     """
-    e, cents = _km_fit(embeddings, k, iters)
+    e, cents = _km_fit(embeddings, KM_K, KM_ITERS)
     assign = _km_assign(e, cents).select("vec_id", "cluster_id")
     cid_lit = const_array_lit([c for c, _ in cents], "int")
     vec_lit = const_array_lit([v for _, v in cents])
@@ -1357,12 +1328,12 @@ def kmeans_ivf_topk(
         ),
     )
     probes = (
-        e.filter(F.col("vec_id") < n_queries)
+        e.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("qv"),
             F.explode(
-                F.slice(F.array_sort(scored_cells), 1, n_probe)
+                F.slice(F.array_sort(scored_cells), 1, KM_N_PROBE)
             ).alias("cell"),
         )
         .select("query_id", "qv", F.col("cell.cid").alias("cluster_id"))
@@ -1384,16 +1355,17 @@ def kmeans_ivf_topk(
     out = (
         ranked.select(
             "*", F.row_number().over(w).cast("int").alias("rank")
-        ).filter(F.col("rank") <= topk)
+        ).filter(F.col("rank") <= TOP_K)
     )
     return own_cache(out, e)
 
 
-def range_search(
-    embeddings: DataFrame, n_queries: int = 8, min_cos: float = 0.3
-) -> DataFrame:
+RANGE_MIN_COS = 0.3
+
+
+def range_search(embeddings: DataFrame) -> DataFrame:
     """Radius (range) search: ALL corpus vectors within cosine ≥
-    ``min_cos`` of each query — the fixed-threshold retrieval API
+    ``RANGE_MIN_COS`` of each query — the fixed-threshold retrieval API
     (dedup sweeps, compliance "find everything similar" queries) that
     top-k cannot express when the true neighbor count varies per
     query.  Same broadcast-query scan shape as
@@ -1402,7 +1374,7 @@ def range_search(
     threshold as the verify predicate.
     """
     embeddings = widen_for_compute(embeddings)
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
+    q = embeddings.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         l2_norm(F.col("embedding")).alias("q_nrm"),
@@ -1423,13 +1395,11 @@ def range_search(
                 6,
             ).alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= min_cos)
+        .filter(F.col("cos_sim") >= RANGE_MIN_COS)
     )
 
 
-def kmeans_cluster_stats(
-    embeddings: DataFrame, k: int = KM_K, iters: int = KM_ITERS
-) -> DataFrame:
+def kmeans_cluster_stats(embeddings: DataFrame) -> DataFrame:
     """Per-cluster training diagnostics over the fitted assignment:
     member count, mean and max squared distance to the centroid
     (inertia contribution and radius) — the report that says whether
@@ -1437,7 +1407,7 @@ def kmeans_cluster_stats(
     degenerate (empty cells dropped).  Pure aggregation over
     :func:`kmeans_train`'s output; |k|-bounded result.
     """
-    a = kmeans_train(embeddings, k, iters)
+    a = kmeans_train(embeddings)
     out = a.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.round(F.avg("dist_sq"), 4).alias("mean_dist_sq"),
@@ -1446,35 +1416,32 @@ def kmeans_cluster_stats(
     return own_cache(out, absorb=[a])
 
 
-def semantic_dedup(
-    embeddings: DataFrame,
-    threshold: float = 0.4,
-    window: int = 8,
-    k: int = KM_K,
-    iters: int = KM_ITERS,
-) -> DataFrame:
+SEMDEDUP_THRESHOLD = 0.4
+SEMDEDUP_WINDOW = 8
+
+
+def semantic_dedup(embeddings: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     public): cluster the corpus with the Lloyd trainer, then look for
     near-duplicate pairs ONLY between cluster-mates that sit within
-    ``window`` positions of each other in the cell's
+    ``SEMDEDUP_WINDOW`` positions of each other in the cell's
     centroid-distance order — near-identical vectors have
     near-identical centroid distances, so true duplicates land on
     adjacent ranks while the candidate count stays O(N·window)
     however large a cell grows (the all-pairs form is O(cell²), which
     no k keeps bounded against a skewed cell).  A vector is dropped
     (``kept = false``) when some in-window cluster-mate with a
-    SMALLER rank is cosine-``threshold``-close — greedy
+    SMALLER rank is cosine-``SEMDEDUP_THRESHOLD``-close — greedy
     keep-first-by-rank, deterministic on (dist_sq, vec_id).
 
     Scale anatomy: Lloyd's passes are the trainer's (broadcast
     centroid literal, k·dim-bounded update shuffle); the rank window
     shuffles once on cluster_id; the candidate self-join is rank-
-    banded so it is corpus-LINEAR.  At 100 TB you raise k so cells
-    stay cache-sized (SemDeDup used ~100k clusters) and widen
-    ``window`` for recall — both knobs are independent of corpus
-    size.
+    banded so it is corpus-LINEAR.  Cell count (``KM_K``) and window
+    are both independent of corpus size: SemDeDup used ~100k clusters
+    to keep cells cache-sized.
     """
-    e, cents = _km_fit(embeddings, k, iters)
+    e, cents = _km_fit(embeddings, KM_K, KM_ITERS)
     assign = _km_assign(e, cents, keep_vec=True)
     rk = Window.partitionBy("cluster_id").orderBy(
         F.col("dist_sq").asc(), F.col("vec_id").asc()
@@ -1488,11 +1455,11 @@ def semantic_dedup(
             y,
             (F.col("x.cluster_id") == F.col("y.cluster_id"))
             & (F.col("x.rk") > F.col("y.rk"))
-            & (F.col("x.rk") - F.col("y.rk") <= window),
+            & (F.col("x.rk") - F.col("y.rk") <= SEMDEDUP_WINDOW),
         )
         .filter(
             F.round(cosine(F.col("x.v"), F.col("y.v")), 6)
-            >= F.lit(threshold)
+            >= F.lit(SEMDEDUP_THRESHOLD)
         )
         .groupBy(F.col("x.vec_id").alias("vec_id"))
         .agg(F.count(F.lit(1)).alias("n_dups"))
@@ -1511,11 +1478,10 @@ def semantic_dedup(
 
 
 PCA_COMPONENTS = 8
+PCA_TOL = 1e-6
 
 
-def pca_fit_project(
-    embeddings: DataFrame, q: int = PCA_COMPONENTS, tol: float = 1e-6
-) -> DataFrame:
+def pca_fit_project(embeddings: DataFrame) -> DataFrame:
     """Distributed PCA for the dimensionality-reduction tier of the
     ANN stack (OPQ-style pre-rotation, cheap coarse search spaces):
     fit on exact second moments, project every vector, and emit
@@ -1539,7 +1505,7 @@ def pca_fit_project(
       Python on the hot path.
 
     Emitted flags (each must hold for EVERY vector / the fit):
-    ``proj_norm_ok`` — ‖P(x-μ)‖² ≤ ‖x-μ‖² + tol (an orthonormal
+    ``proj_norm_ok`` — ‖P(x-μ)‖² ≤ ‖x-μ‖² + PCA_TOL (an orthonormal
     projection never grows a norm; catches broken components on every
     single row); ``variance_ok`` — top-q eigenvalue mass ≥ q/d of the
     trace (PCA beats-or-ties any axis-aligned q-subset); and
@@ -1552,6 +1518,7 @@ def pca_fit_project(
         "vec_id", _to_double(F.col("embedding")).alias("v")
     )
     d = EMB_DIM
+    q = PCA_COMPONENTS
 
     def partials(batches):
         n = 0
@@ -1588,7 +1555,7 @@ def pca_fit_project(
             comps[i] = -comps[i]
     top_mass = float(np.sum(np.clip(evals[order], 0, None)))
     trace = float(np.trace(cov))
-    variance_ok = bool(top_mass >= (q / d) * trace - tol)
+    variance_ok = bool(top_mass >= (q / d) * trace - PCA_TOL)
     gram = comps @ comps.T
     orthonormal_ok = bool(
         float(np.max(np.abs(gram - np.eye(q)))) < 1e-6
@@ -1604,7 +1571,7 @@ def pca_fit_project(
     return e.select(
         "vec_id",
         F.lit(q).cast("int").alias("n_components"),
-        (sq(proj) <= sq(centered) + F.lit(tol)).alias("proj_norm_ok"),
+        (sq(proj) <= sq(centered) + F.lit(PCA_TOL)).alias("proj_norm_ok"),
         F.lit(variance_ok).alias("variance_ok"),
         F.lit(orthonormal_ok).alias("orthonormal_ok"),
     )
@@ -1624,18 +1591,12 @@ MRL_PREFIX_DIM = 16
 MRL_SHORTLIST = 30
 
 
-def matryoshka_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    prefix_dim: int = MRL_PREFIX_DIM,
-    shortlist: int = MRL_SHORTLIST,
-) -> DataFrame:
+def matryoshka_topk(embeddings: DataFrame) -> DataFrame:
     """Matryoshka-tier ANN (Kusupati et al. 2022, public): score the
-    corpus with cosine over only the FIRST ``prefix_dim`` coordinates
+    corpus with cosine over only the FIRST ``MRL_PREFIX_DIM`` coordinates
     (MRL-trained embeddings front-load information, so the prefix is
     a usable coarse space at 1/4 the arithmetic and 1/4 the scan
-    bytes), keep a per-query ``shortlist``, then exact full-dimension
+    bytes), keep a per-query ``MRL_SHORTLIST``, then exact full-dimension
     re-rank — the two-tier cost shape of the IVF-PQ + rerank stack,
     but with NO index artifact to build or store: the coarse tier is
     a prefix slice of the same column.
@@ -1643,11 +1604,11 @@ def matryoshka_topk(
     Scale shape: corpus touched once with quarter-width arithmetic
     (at 100 TB the prefix tier reads a physically separate narrow
     column/file), the shortlist join back to full vectors is
-    (n_queries × shortlist)-bounded, queries broadcast.  Both tiers
+    (N_QUERIES × MRL_SHORTLIST)-bounded, queries broadcast.  Both tiers
     round scores to 6 before ranking; ties break on id.
     """
     e = widen_for_compute(embeddings)
-    q = e.filter(F.col("vec_id") < n_queries).select(
+    q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
     )
@@ -1661,8 +1622,8 @@ def matryoshka_topk(
             "q_emb",
             F.round(
                 cosine(
-                    F.slice(F.col("embedding"), 1, prefix_dim),
-                    F.slice(F.col("q_emb"), 1, prefix_dim),
+                    F.slice(F.col("embedding"), 1, MRL_PREFIX_DIM),
+                    F.slice(F.col("q_emb"), 1, MRL_PREFIX_DIM),
                 ),
                 6,
             ).alias("coarse_sim"),
@@ -1673,7 +1634,7 @@ def matryoshka_topk(
     )
     short = coarse.select(
         "*", F.row_number().over(w_c).alias("crk")
-    ).filter(F.col("crk") <= shortlist)
+    ).filter(F.col("crk") <= MRL_SHORTLIST)
     w_r = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -1686,18 +1647,18 @@ def matryoshka_topk(
             ),
         )
         .select("*", F.row_number().over(w_r).cast("int").alias("rank"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
     )
 
 
-def semantic_decontam(
-    embeddings: DataFrame,
-    eval_max_vec_id: int = 8,
-    threshold: float = 0.4,
-) -> DataFrame:
+DECONTAM_EVAL_VECS = 8
+DECONTAM_THRESHOLD = 0.4
+
+
+def semantic_decontam(embeddings: DataFrame) -> DataFrame:
     """Embedding-space decontamination: training vectors
-    cosine-``threshold``-close to ANY eval-set vector (vec_id <
-    ``eval_max_vec_id`` stands in for the benchmark corpus) — the
+    cosine-``DECONTAM_THRESHOLD``-close to ANY eval-set vector (vec_id <
+    ``DECONTAM_EVAL_VECS`` stands in for the benchmark corpus) — the
     semantic sibling of the n-gram overlap check
     (operators/curation.py:contaminated_docs), catching paraphrased
     leakage that shares no shingles.
@@ -1710,12 +1671,12 @@ def semantic_decontam(
     front as the candidate generator, same as dedup.
     """
     e = widen_for_compute(embeddings)
-    ev = e.filter(F.col("vec_id") < eval_max_vec_id).select(
+    ev = e.filter(F.col("vec_id") < DECONTAM_EVAL_VECS).select(
         F.col("vec_id").alias("eval_vec_id"),
         F.col("embedding").alias("ev_emb"),
     )
     scored = (
-        e.filter(F.col("vec_id") >= eval_max_vec_id)
+        e.filter(F.col("vec_id") >= DECONTAM_EVAL_VECS)
         .join(F.broadcast(ev))
         .select(
             "vec_id",
@@ -1724,7 +1685,7 @@ def semantic_decontam(
                 "cos_sim"
             ),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= DECONTAM_THRESHOLD)
     )
     return scored.groupBy("vec_id").agg(
         F.round(F.max("cos_sim"), 6).alias("max_cos"),
@@ -1804,11 +1765,9 @@ def _recall_report(
     return own_cache(out, absorb=[truth_src, pred_src])
 
 
-def ann_recall_eval(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 5
-) -> DataFrame:
+def ann_recall_eval(embeddings: DataFrame) -> DataFrame:
     """Recall harness for the LSH ANN tier: per query, how much of the
-    exact top-``k`` (brute-force truth) the multi-probe LSH search
+    exact top-``TOP_K`` (brute-force truth) the multi-probe LSH search
     returns, plus the reciprocal rank of the TRUE nearest neighbor in
     the ANN list — the live twin of the recall assertions that
     otherwise exist only in pytest, so a production index rebuild can
@@ -1816,20 +1775,18 @@ def ann_recall_eval(
     tier).
 
     Cost = the two component searches (truth is exact but
-    query-bounded: n_queries × corpus — the oracle tier, not the
-    serving path) + one (n_queries × k)-row join: evaluation is
+    query-bounded: N_QUERIES × corpus — the oracle tier, not the
+    serving path) + one (N_QUERIES × TOP_K)-row join: evaluation is
     corpus-free beyond the searches themselves.
     """
     return _recall_report(
-        brute_force_topk(embeddings, n_queries, k),
-        lsh_ann_topk(embeddings, n_queries, k),
-        k,
+        brute_force_topk(embeddings, N_QUERIES, TOP_K),
+        lsh_ann_topk(embeddings, N_QUERIES, TOP_K),
+        TOP_K,
     )
 
 
-def ivfpq_recall_eval(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 5
-) -> DataFrame:
+def ivfpq_recall_eval(embeddings: DataFrame) -> DataFrame:
     """Recall harness for the PRODUCTION ANN stack (IVF probe → PQ ADC
     → exact re-rank), same contract as :func:`ann_recall_eval` for
     the LSH tier: per-query recall@k and top-1 reciprocal rank vs the
@@ -1838,7 +1795,7 @@ def ivfpq_recall_eval(
     from silently degrading retrieval.
     """
     return _recall_report(
-        brute_force_topk(embeddings, n_queries, k),
-        ivfpq_rerank_topk(embeddings, n_queries, k),
-        k,
+        brute_force_topk(embeddings, N_QUERIES, TOP_K),
+        ivfpq_rerank_topk(embeddings),
+        TOP_K,
     )

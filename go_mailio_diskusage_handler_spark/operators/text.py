@@ -323,8 +323,11 @@ def top_ngrams(documents: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     )
 
 
-def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
-    """Per-document top-k TF-IDF terms — the classic keyword/topic
+TFIDF_TOP_TERMS = 3
+
+
+def tfidf_top_terms(documents: DataFrame) -> DataFrame:
+    """Per-document top-``TFIDF_TOP_TERMS`` TF-IDF terms — the classic keyword/topic
     signal for corpus audits and near-dup triage.
 
     Three bounded aggregations: term frequency per (doc, word) — one
@@ -357,7 +360,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.select("*", F.row_number().over(w).alias("term_rank"))
-        .filter(F.col("term_rank") <= k)
+        .filter(F.col("term_rank") <= TFIDF_TOP_TERMS)
     )
 
 
@@ -408,7 +411,7 @@ _PII_RULES: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def pii_signals(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_signals(documents: DataFrame) -> DataFrame:
     """PII detection + redaction — the compliance pass every
     training-data pipeline runs before a corpus ships: per-document
     match counts for emails / IPv4 addresses / phone numbers / long
@@ -423,7 +426,7 @@ def pii_signals(documents: DataFrame, text_col: str = "text") -> DataFrame:
     classes (a digit run inside an already-redacted phone) cannot
     double-redact; the oracle mirrors the same order.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     counts = [
         F.regexp_count(c, F.lit(pat)).alias(f"n_{name}")
         for name, pat, _ in _PII_RULES
@@ -481,11 +484,10 @@ def chunk_documents(
     )
 
 
-def tfidf_cosine_pairs(
-    documents: DataFrame,
-    threshold: float = 0.9,
-    max_doc_freq: int = 1000,
-) -> DataFrame:
+TFIDF_MAX_DOC_FREQ = 1000
+
+
+def tfidf_cosine_pairs(documents: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Weighted lexical near-dup: cosine over L2-normalized TF-IDF
     vectors, computed with a SPARSE inverted-index join — no dense
     vectors, no all-pairs scan.  Complements the set-based tiers
@@ -496,7 +498,7 @@ def tfidf_cosine_pairs(
     ``tf · ln(N/df)`` normalized by the doc's L2 norm; then
     ``cos(A,B) = Σ_t w_At·w_Bt`` falls out of ONE self-join on term
     with a pair-keyed sum.  Join volume is Σ_t df_t², so terms above
-    ``max_doc_freq`` are dropped up front (same hot-key fence as the
+    ``TFIDF_MAX_DOC_FREQ`` are dropped up front (same hot-key fence as the
     shingle DF cap — their idf weight is near zero anyway, the join
     cost is the real reason).  At 100 TB this is the plan vector-DB
     "sparse retrieval" backends run; the DF cap plus rare-term
@@ -514,7 +516,7 @@ def tfidf_cosine_pairs(
     df = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_doc_freq)
+        .filter(F.col("df") <= TFIDF_MAX_DOC_FREQ)
     )
     w = tf.join(df, "term").select(
         "doc_id",
@@ -567,10 +569,13 @@ def language_confusion(documents: DataFrame) -> DataFrame:
     )
 
 
-def zipf_fit(documents: DataFrame, k: int = 100) -> DataFrame:
+ZIPF_TOP_WORDS = 100
+
+
+def zipf_fit(documents: DataFrame) -> DataFrame:
     """Zipf's-law fit over the corpus word-frequency distribution:
     least-squares regression of ln(frequency) on ln(rank) for the top
-    ``k`` words — slope ≈ -1 is the healthy-natural-text signature;
+    ``ZIPF_TOP_WORDS`` words — slope ≈ -1 is the healthy-natural-text signature;
     a flat slope flags templated/boilerplate corpora and a cliff
     flags token-collapse, so this is the single-number corpus-health
     probe next to the per-document quality scores.
@@ -578,14 +583,14 @@ def zipf_fit(documents: DataFrame, k: int = 100) -> DataFrame:
     Scale shape: the corpus-sized work is ONE vocabulary-bounded
     word-count aggregation (map-side combined); the ordered top-k is
     TakeOrderedAndProject (no global sort) and the regression runs
-    over exactly ``k`` rows, so the SinglePartition rank window and
+    over exactly ``ZIPF_TOP_WORDS`` rows, so the SinglePartition rank window and
     the final 1-row aggregate are k-bounded, not corpus-bounded.
     """
     words = documents.select(
         F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
     ).filter(F.col("w") != "")
     freq = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    top = freq.orderBy(F.desc("cnt"), F.asc("w")).limit(k)
+    top = freq.orderBy(F.desc("cnt"), F.asc("w")).limit(ZIPF_TOP_WORDS)
     ranked = top.select(
         F.log(
             F.row_number().over(
@@ -604,28 +609,24 @@ def zipf_fit(documents: DataFrame, k: int = 100) -> DataFrame:
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+BM25_QUERIES = 4
+BM25_QUERY_TERMS = 8
+BM25_TOPK = 10
 
 
-def bm25_topk(
-    documents: DataFrame,
-    n_queries: int = 4,
-    k: int = 10,
-    query_terms: int = 8,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
-    """BM25 lexical retrieval: the first ``n_queries`` documents play
-    queries (represented by their ``query_terms`` most-frequent
+def bm25_topk(documents: DataFrame) -> DataFrame:
+    """BM25 lexical retrieval: the first ``BM25_QUERIES`` documents play
+    queries (represented by their ``BM25_QUERY_TERMS`` most-frequent
     terms), every other document is scored with the Lucene-form BM25
     (idf = ln(1 + (N - df + .5)/(df + .5)) — always positive) and the
-    top ``k`` are ranked per query.  This is the classical-IR rung
+    top ``BM25_TOPK`` are ranked per query.  This is the classical-IR rung
     under the TF-IDF-cosine and RRF-hybrid queries: term-at-a-time
     scoring over a postings table.
 
     Scale shape: the corpus-sized artifacts are the postings
     aggregation (term, doc, tf) and two tiny side aggregates (per-doc
     length, per-term df) — all one shuffle each; the query side is
-    n_queries × query_terms rows, broadcast into the postings join,
+    BM25_QUERIES × BM25_QUERY_TERMS rows, broadcast into the postings join,
     so candidate volume is bounded by the probed terms' posting
     lists.  At 100 TB the posting lists of stopword-grade terms
     dominate; production adds WAND/max-score pruning on top of the
@@ -656,21 +657,22 @@ def bm25_topk(
     )
     qw = Window.partitionBy("doc_id").orderBy(F.desc("tf"), F.asc("w"))
     qterms = (
-        postings.filter(F.col("doc_id") < n_queries)
+        postings.filter(F.col("doc_id") < BM25_QUERIES)
         .select(
             F.col("doc_id").alias("query_id"),
             "w",
             F.row_number().over(qw).alias("qrk"),
         )
-        .filter(F.col("qrk") <= query_terms)
+        .filter(F.col("qrk") <= BM25_QUERY_TERMS)
         .drop("qrk")
     )
     idf = F.log(
         F.lit(1.0)
         + (F.lit(float(n_corpus)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
-    tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
+    tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
+        F.col("tf")
+        + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.lit(float(avgdl)))
     )
     scored = (
         postings.join(F.broadcast(qterms), "w")
@@ -688,7 +690,7 @@ def bm25_topk(
         "doc_id",
         "score",
         F.row_number().over(w_rank).cast("int").alias("rank"),
-    ).filter(F.col("rank") <= k)
+    ).filter(F.col("rank") <= BM25_TOPK)
 
 
 def corpus_datacard(documents: DataFrame) -> DataFrame:

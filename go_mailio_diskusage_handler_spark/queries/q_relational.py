@@ -1164,9 +1164,14 @@ def graph_pagerank_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`part_type_affinity`'s fence — ≤ C(brands, 2) pairs per order);
     each iteration is one |E|-row join + one integer aggregate, and
     the rank frame (bounded by the 25-value brand domain here, |V|
-    generally) broadcasts; at billion-node scale the same loop
-    shuffle-joins on node id and checkpoints per round like the CC
-    operator."""
+    generally) broadcasts; at billion-node scale the same plan
+    shuffle-joins on node id.
+
+    The three rounds are ONE lazy plan, so building the frame runs no
+    job: |V| is a global-window count over the out-weight table,
+    carried through the rounds as a column, and the teleport share is
+    ``150000000 div max(n)``.  An empty graph yields zero rows by
+    itself, as in the oracle."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     ot = (
@@ -1195,51 +1200,22 @@ def graph_pagerank_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    # loop-invariant propagation table (edge + source out-weight) —
-    # persisted ONCE so iterations never re-derive the co-occurrence
-    # self-join; on a real cluster this is the materialized edge table
-    contrib_src = edges.join(outw, "src").persist()
-    # one distinct over the cached frame serves both |V| and the rank
-    # init (a second distinct would re-aggregate the same |E| rows)
-    nodes = contrib_src.select("src").distinct().persist()
-    n = nodes.count()  # |V|
-    if n == 0:
-        # no order carries two distinct brands: the graph is empty and
-        # the oracle returns zero rows — mirror that instead of letting
-        # the teleport division below raise ZeroDivisionError
-        contrib_src.unpersist()
-        nodes.unpersist()
-        return spark.createDataFrame([], "p_brand string, rank_nano bigint")
-    ranks = nodes.select(
-        F.col("src").alias("node"), F.lit(1000000000 // n).alias("r9")
-    ).localCheckpoint(eager=True)
-    nodes.unpersist()
-    step = f"{150000000 // n} + (85 * sum((r9 * w) div ow)) div 100"
+    contrib_src = edges.join(outw, "src")
+    ranks = outw.select(
+        F.col("src").alias("node"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),  # |V|
+    ).selectExpr("node", "1000000000 div n AS r9", "n")
+    step = "150000000 div max(n) + (85 * sum((r9 * w) div ow)) div 100"
     for _ in range(3):
-        # localCheckpoint (eager), not persist+count: persist keeps the
-        # full logical lineage, so round k's plan nests every prior
-        # round's tree — the unrolled explain reached 1229 Exchange
-        # references and the driver spent ~3.2 s of the query in
-        # inter-job planning gaps (r15 event-log probe).  Checkpointing
-        # truncates each round to a LogicalRDD scan (guide §3.3/§5:
-        # materialise to cut a plan that only grows), one job per round
-        # as before, identical ranks (integer arithmetic; pinned by the
-        # registry oracle).
         ranks = (
             contrib_src.join(ranks, F.col("src") == F.col("node"))
             .groupBy(F.col("dst"))
-            .agg(F.expr(step).cast("long").alias("r9"))
-            .select(F.col("dst").alias("node"), "r9")
-            .localCheckpoint(eager=True)
+            .agg(F.expr(step).cast("long").alias("r9"), F.max("n").alias("n"))
+            .select(F.col("dst").alias("node"), "r9", "n")
         )
-    from ..caching import own_cache
-
-    out = ranks.select(
+    return ranks.select(
         F.col("node").alias("p_brand"), F.col("r9").alias("rank_nano")
     )
-    # only contrib_src is persist()-cached now; the checkpointed rank
-    # frames release with RDD GC, no unpersist handle needed
-    return own_cache(out, contrib_src)
 
 
 # ---------------------------------------------------------------------------

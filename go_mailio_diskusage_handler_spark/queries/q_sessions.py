@@ -140,7 +140,7 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (SELECT user_id, event_id, ts, epoch_us(ts) AS us FROM events),
     m AS (SELECT user_id, us,
                  CASE WHEN lag(us) OVER w IS NULL
-                           OR us - lag(us) OVER w > {sessions.DEFAULT_GAP_MINUTES * 60 * 1_000_000}
+                           OR us - lag(us) OVER w > {sessions.SESSION_GAP_MINUTES * 60 * 1_000_000}
                       THEN 1 ELSE 0 END AS new_session
           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
     s AS (SELECT user_id, us,
@@ -218,7 +218,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
     m AS (SELECT user_id, us,
                  CASE WHEN lag(us) OVER w IS NULL
-                           OR us - lag(us) OVER w >= {sessions.DEFAULT_GAP_MINUTES * 60 * 1_000_000}
+                           OR us - lag(us) OVER w >= {sessions.SESSION_GAP_MINUTES * 60 * 1_000_000}
                       THEN 1 ELSE 0 END AS new_session
           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
     s AS (SELECT user_id, us,
@@ -227,7 +227,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM m)
     SELECT user_id,
            MIN(us) AS session_start_us,
-           MAX(us) + {sessions.DEFAULT_GAP_MINUTES * 60 * 1_000_000} AS session_end_us,
+           MAX(us) + {sessions.SESSION_GAP_MINUTES * 60 * 1_000_000} AS session_end_us,
            COUNT(*) AS n_events
     FROM s GROUP BY user_id, session_seq
     """,
@@ -462,7 +462,7 @@ EVENTS_BOUNCE_SQL = f"""
     WITH e AS (SELECT user_id, event_id, ts, epoch_us(ts) AS us FROM events),
     m AS (SELECT user_id, us,
                  CASE WHEN lag(us) OVER w IS NULL
-                           OR us - lag(us) OVER w > {sessions.DEFAULT_GAP_MINUTES * 60 * 1_000_000}
+                           OR us - lag(us) OVER w > {sessions.SESSION_GAP_MINUTES * 60 * 1_000_000}
                       THEN 1 ELSE 0 END AS new_session
           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
     s AS (SELECT user_id, us,

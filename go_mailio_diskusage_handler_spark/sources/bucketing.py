@@ -20,13 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+N_BUCKETS = 8
+
+
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    *,
-    buckets: int = 8,
-    sorted_by: str | None = None,
+    df: DataFrame, table: str, bucket_col: str, *, sorted_by: str | None = None
 ) -> None:
     """Save ``df`` as a session-catalog Parquet table bucketed (and
     optionally sorted) by ``bucket_col`` — one shuffle now, zero
@@ -44,7 +42,7 @@ def write_bucketed(
     if wh:
         shutil.rmtree(f"{wh}/{table.lower()}", ignore_errors=True)
     w = df.write.mode("overwrite").format("parquet").bucketBy(
-        buckets, bucket_col
+        N_BUCKETS, bucket_col
     )
     if sorted_by is not None:
         w = w.sortBy(sorted_by)
@@ -52,11 +50,7 @@ def write_bucketed(
 
 
 def bucketed_spend_by_nation(
-    spark: SparkSession,
-    orders: DataFrame,
-    customer: DataFrame,
-    *,
-    buckets: int = 8,
+    spark: SparkSession, orders: DataFrame, customer: DataFrame
 ) -> DataFrame:
     """Customer spend per nation through a BUCKETED fact-to-fact join:
     both sides are written bucketed by custkey, read back from the
@@ -71,14 +65,12 @@ def bucketed_spend_by_nation(
         orders.select("o_custkey", "o_totalprice"),
         "bkt_orders",
         "o_custkey",
-        buckets=buckets,
         sorted_by="o_custkey",
     )
     write_bucketed(
         customer.select("c_custkey", "c_nationkey"),
         "bkt_customer",
         "c_custkey",
-        buckets=buckets,
         sorted_by="c_custkey",
     )
     o = spark.table("bkt_orders")

@@ -38,9 +38,11 @@ def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
     return z
 
 
-def plan_compaction_bins(
-    events: DataFrame, *, target_bytes: int = 4096, row_overhead: int = 48
-) -> DataFrame:
+COMPACTION_TARGET_BYTES = 4096
+ROW_OVERHEAD_BYTES = 48
+
+
+def plan_compaction_bins(events: DataFrame) -> DataFrame:
     """[EXT] Compaction *planner*: bin-pack per-partition small files
     into target-size merge groups.
 
@@ -50,7 +52,7 @@ def plan_compaction_bins(
     compactor must decide WHICH files merge into WHICH output file.  The scale-correct plan
     keeps neighbouring hours together (preserves time-locality so the
     compacted file's min/max ts stats stay selective) and packs
-    greedily in hour order until ``target_bytes`` is reached: with
+    greedily in hour order until ``COMPACTION_TARGET_BYTES`` is reached: with
     files ordered by hour, ``bin = floor(bytes_before_file / target)``
     — a running-sum window per event_type, no driver loop, no
     all-pairs.  One shuffle on event_type for the window plus the
@@ -59,7 +61,7 @@ def plan_compaction_bins(
     plan is metadata-sized.
 
     File bytes are synthesized from the events themselves
-    (``length(props) + row_overhead`` per row) since the local
+    (``length(props) + ROW_OVERHEAD_BYTES`` per row) since the local
     fixtures are single parquet files; on a real lake the same plan
     runs directly over the S3 inventory / listing table.
     """
@@ -68,16 +70,16 @@ def plan_compaction_bins(
     files = events.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour_ts")
     ).agg(
-        F.sum(F.coalesce(F.length("props"), F.lit(0)) + F.lit(row_overhead)).alias(
-            "file_bytes"
-        )
+        F.sum(
+            F.coalesce(F.length("props"), F.lit(0)) + F.lit(ROW_OVERHEAD_BYTES)
+        ).alias("file_bytes")
     )
     w = Window.partitionBy("event_type").orderBy("hour_ts")
     binned = files.withColumn(
         "bin_id",
         F.floor(
             (F.sum("file_bytes").over(w) - F.col("file_bytes"))
-            / F.lit(float(target_bytes))
+            / F.lit(float(COMPACTION_TARGET_BYTES))
         ).cast("bigint"),
     )
     return binned.groupBy("event_type", "bin_id").agg(
@@ -88,14 +90,13 @@ def plan_compaction_bins(
     )
 
 
-def zone_map_skipping_audit(
-    orders: DataFrame,
-    *,
-    pred_lo: str = "1997-03-01",
-    pred_hi: str = "1997-04-01",
-    key_shard_rows: int = 256,
-    hash_buckets: int = 64,
-) -> DataFrame:
+AUDIT_PRED_LO = "1997-03-01"
+AUDIT_PRED_HI = "1997-04-01"
+KEY_SHARD_ROWS = 256
+HASH_BUCKETS = 64
+
+
+def zone_map_skipping_audit(orders: DataFrame) -> DataFrame:
     """[EXT] Zone-map (file min/max stats) skipping audit across
     candidate physical layouts.
 
@@ -104,7 +105,7 @@ def zone_map_skipping_audit(
     predicate.  How much skips is decided at *write* time by the
     layout, so before committing to one, audit candidates against the
     real query predicate.  Three layouts of `orders` vs a one-month
-    ``o_orderdate`` window:
+    ``o_orderdate`` window [AUDIT_PRED_LO, AUDIT_PRED_HI):
 
     * ``date_partitioned`` — shard = calendar month: the predicate
       column is the layout key, ~all shards skip;
@@ -129,11 +130,11 @@ def zone_map_skipping_audit(
         ),
         F.struct(
             F.lit("key_clustered").alias("layout"),
-            F.floor(F.col("o_orderkey") / key_shard_rows).cast("bigint").alias("shard"),
+            F.floor(F.col("o_orderkey") / KEY_SHARD_ROWS).cast("bigint").alias("shard"),
         ),
         F.struct(
             F.lit("hash_bucketed").alias("layout"),
-            ((F.col("o_orderkey") * F.lit(2654435761)) % hash_buckets)
+            ((F.col("o_orderkey") * F.lit(2654435761)) % HASH_BUCKETS)
             .cast("bigint")
             .alias("shard"),
         ),
@@ -144,8 +145,8 @@ def zone_map_skipping_audit(
         .agg(F.min("d").alias("dmin"), F.max("d").alias("dmax"))
     )
     scanned = F.when(
-        (F.col("dmax") >= F.lit(pred_lo).cast("timestamp"))
-        & (F.col("dmin") < F.lit(pred_hi).cast("timestamp")),
+        (F.col("dmax") >= F.lit(AUDIT_PRED_LO).cast("timestamp"))
+        & (F.col("dmin") < F.lit(AUDIT_PRED_HI).cast("timestamp")),
         1,
     ).otherwise(0)
     return zone.groupBy("layout").agg(

@@ -12,35 +12,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+HORIZON_MINUTES = 30  # a click attributes purchases this long after it
+WATERMARK = "60 minutes"
 
-def attributed_purchases(
-    events: DataFrame, *, horizon_minutes: int = 30, watermark: str = "60 minutes"
-) -> DataFrame:
+
+def attributed_purchases(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase matched to the same
-    user's clicks in the preceding ``horizon_minutes``.
+    user's clicks in the preceding ``HORIZON_MINUTES``.
 
     This is the canonical bounded-state stream-stream join config:
     an equi-key (``user_id``), watermarks on BOTH sides, and a range
     constraint tying the two event times together.  The range bound is
     what lets Spark evict join state — click state older than
-    ``watermark + horizon`` can never match a future purchase and is
+    ``WATERMARK + HORIZON_MINUTES`` can never match a future purchase and is
     dropped, so state stays bounded at unbounded input.  Without the
     time constraint the join would have to keep every click forever.
 
     On a batch frame the watermarks are no-ops and the interval join
     runs as a plain join; DuckDB-oracle parity pins that result.
     """
-    purchases, clicks = _attribution_sides(events, watermark)
+    purchases, clicks = _attribution_sides(events)
     return purchases.join(
-        clicks, _attribution_cond(horizon_minutes), "inner"
+        clicks, _attribution_cond(), "inner"
     ).select(
         "purchase_id", "user_id", "purchase_ts", "purchase_value", "click_id", "click_ts"
     )
 
 
-def _attribution_sides(
-    events: DataFrame, watermark: str
-) -> tuple[DataFrame, DataFrame]:
+def _attribution_sides(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The shared click/purchase split + watermarks of the three
     attribution joins."""
     clicks = (
@@ -50,7 +49,7 @@ def _attribution_sides(
             F.col("ts").alias("click_ts"),
             F.col("event_id").alias("click_id"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -60,25 +59,23 @@ def _attribution_sides(
             F.col("event_id").alias("purchase_id"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     return purchases, clicks
 
 
-def _attribution_cond(horizon_minutes: int):
+def _attribution_cond():
     return (
         (F.col("user_id") == F.col("c_user"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (
             F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon_minutes} MINUTES")
+            >= F.col("purchase_ts") - F.expr(f"INTERVAL {HORIZON_MINUTES} MINUTES")
         )
     )
 
 
-def attributed_purchases_semi(
-    events: DataFrame, *, horizon_minutes: int = 30, watermark: str = "60 minutes"
-) -> DataFrame:
+def attributed_purchases_semi(events: DataFrame) -> DataFrame:
     """LEFT SEMI stream-stream interval join: purchases that had at
     least one click in the preceding horizon — existence filtering
     without duplicating the purchase per matching click (the inner
@@ -92,15 +89,13 @@ def attributed_purchases_semi(
     Emission is prompt on match (no eviction wait); state bounds are
     the inner join's.
     """
-    purchases, clicks = _attribution_sides(events, watermark)
+    purchases, clicks = _attribution_sides(events)
     return purchases.join(
-        clicks, _attribution_cond(horizon_minutes), "leftSemi"
+        clicks, _attribution_cond(), "leftSemi"
     ).select("purchase_id", "user_id", "purchase_ts", "purchase_value")
 
 
-def attributed_purchases_full_outer(
-    events: DataFrame, *, horizon_minutes: int = 30, watermark: str = "60 minutes"
-) -> DataFrame:
+def attributed_purchases_full_outer(events: DataFrame) -> DataFrame:
     """FULL OUTER stream-stream interval join — the cell of the join
     matrix next to :func:`attributed_purchases` (inner): every purchase
     AND every click emits exactly once as matched or null-padded, the
@@ -110,14 +105,14 @@ def attributed_purchases_full_outer(
     the watermark passes its event time plus the horizon (no future
     row of the other side can reach it), then emits null-padded.  State
     stays bounded exactly as the inner form: the range bound lets both
-    sides evict anything older than ``watermark + horizon``.
+    sides evict anything older than ``WATERMARK + HORIZON_MINUTES``.
 
     ``user_id`` is coalesced across the two sides so unmatched rows of
     either direction still carry their key.
     """
-    purchases, clicks = _attribution_sides(events, watermark)
+    purchases, clicks = _attribution_sides(events)
     return purchases.join(
-        clicks, _attribution_cond(horizon_minutes), "fullOuter"
+        clicks, _attribution_cond(), "fullOuter"
     ).select(
         "purchase_id",
         F.coalesce(F.col("user_id"), F.col("c_user")).alias("user_id"),

@@ -60,7 +60,7 @@ def test_three_persisting_operators_back_to_back_leave_no_cache(spark):
     assert b2.df.count() > 0
     b2.drop()
 
-    b3 = _Box(relational.part_affinity_lift(li, part, min_pair_orders=1))
+    b3 = _Box(relational.part_affinity_lift(li, part))
     assert b3.df.count() >= 0
     b3.drop()
 

@@ -95,9 +95,8 @@ def test_incremental_equals_full_reaggregation(spark, rows, split):
 )
 def test_sessionize_partitions_events(spark, ts_lists):
     """Sessions per user must (a) cover every event exactly once,
-    (b) never contain an internal gap > gap_minutes."""
-    gap_min = 1
-    gap_us = gap_min * 60 * 1_000_000
+    (b) never contain an internal gap > SESSION_GAP_MINUTES."""
+    gap_us = sessions.SESSION_GAP_MINUTES * 60 * 1_000_000
     rows = []
     eid = 0
     for uid, ts in enumerate(ts_lists):
@@ -107,7 +106,7 @@ def test_sessionize_partitions_events(spark, ts_lists):
     df = spark.createDataFrame(
         rows, "event_id long, us long, user_id long"
     ).select("event_id", "user_id", F.timestamp_micros("us").alias("ts"))
-    out = sessions.sessionize(df, gap_min).collect()
+    out = sessions.sessionize(df).collect()
     by_user: dict[int, list] = {}
     for r in out:
         by_user.setdefault(r.user_id, []).append(r)
@@ -234,10 +233,11 @@ def test_weighted_sample_is_monotone_in_rate(spark, n_docs, r_low, r_hi_delta):
 def test_containment_matches_python_reference(spark, doc_words, threshold):
     """ngram_containment_pairs == a direct Python reimplementation
     (directed |S_src ∩ S_dst| / |S_src| over distinct word trigrams,
-    emitted when ≥ threshold) for arbitrary corpora.  The DF cap is the
-    document count, which no shingle's document frequency can exceed,
-    so the tiny alphabet's heavy-hitters don't mask pairs — the cap's
-    own algebra is property-tested separately."""
+    emitted when ≥ threshold) for arbitrary corpora.  The DF cap,
+    MAX_SHINGLE_DF, exceeds the document count, which no shingle's
+    document frequency can exceed, so the tiny alphabet's heavy-hitters
+    don't mask pairs — the cap's own algebra is property-tested
+    separately."""
     from go_mailio_diskusage_handler_spark.operators import dedup
 
     rows = [(i, " ".join(ws)) for i, ws in enumerate(doc_words)]
@@ -256,9 +256,7 @@ def test_containment_matches_python_reference(spark, doc_words, threshold):
                 want[(a, b)] = round(c, 4)
     got = {
         (r.doc_src, r.doc_dst): r.containment
-        for r in dedup.ngram_containment_pairs(
-            docs, threshold, max_doc_freq=len(rows)
-        ).collect()
+        for r in dedup.ngram_containment_pairs(docs, threshold).collect()
     }
     assert got == want
 

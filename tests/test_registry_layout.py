@@ -5,7 +5,7 @@ depends on the query names and the driver's record, not on which
 module registers a query or in what order the modules are imported.
 Every top-level package definition is reachable from the registry, the
 serving handler or a benchmark entry point, and every defaulted
-parameter that selects a branch is set by one of them."""
+parameter is set by one of them."""
 from __future__ import annotations
 
 import ast
@@ -310,12 +310,11 @@ def test_package_definitions_reachable_from_roots():
     )
 
 
-# Branch parameters (see `_unselected_branch_parameters`) that no root
-# sets, each kept for a reason a test states.
+# Defaulted parameters (see `_unselected_defaulted_parameters`) that no
+# root sets, each kept for a reason a test states.
 _SKEW = "tests use the unguarded path as the reference the skew guard is checked against"
 _S3A = "a deployment setting of the reference's real S3 I/O; the S3 integration test covers it"
-_VALUE = "a value forwarded to its callee's default: it selects no branch"
-BRANCH_PARAMETERS_ALLOWED = {
+DEFAULTED_PARAMETERS_ALLOWED = {
     "operators.curation.mixture_rebalance.skew_guard": _SKEW,
     "operators.curation.stratified_split.skew_guard": _SKEW,
     "session.configure_s3a.access_key": _S3A,
@@ -323,23 +322,37 @@ BRANCH_PARAMETERS_ALLOWED = {
     "session.configure_s3a.path_style": _S3A,
     "session.configure_s3a.region": _S3A,
     "session.configure_s3a.secret_key": _S3A,
-    "operators.curation.bloom_prefiltered_contamination.k_hashes": _VALUE,
-    "operators.curation.bloom_prefiltered_contamination.m_bits": _VALUE,
-    "operators.curation.novelty_gate.n": _VALUE,
-    "operators.relational._morton_interleave.bits": _VALUE,
-    "operators.relational.zorder_keys.bits": _VALUE,
-    "operators.sessions.daily_anomaly_zscore.min_prior": _VALUE,
-    "operators.sessions.daily_anomaly_zscore.trailing": _VALUE,
-    "operators.sessions.daily_anomaly_zscore.z_thresh": _VALUE,
-    "operators.sessions.event_concentration.deciles": _VALUE,
-    "operators.sessions.funnel_step_rates.steps": _VALUE,
-    "operators.similarity.bucket_id.dim": _VALUE,
-    "operators.similarity.ivfpq_recall_eval.k": _VALUE,
-    "operators.similarity.ivfpq_recall_eval.n_queries": _VALUE,
-    "operators.similarity.ivfpq_rerank_topk.n_probe": _VALUE,
-    "operators.similarity.kmeans_cluster_stats.iters": _VALUE,
-    "operators.similarity.kmeans_cluster_stats.k": _VALUE,
-    "sources.bucketing.bucketed_spend_by_nation.buckets": _VALUE,
+    "streaming.refresh.DiskUsageHandler.__init__.quality_gate":
+        "a deployment policy over outside input; the handler tests pass their own gates",
+    "operators.dedup.connected_components.max_iterations":
+        "the only way test_connected_components_strict_raises_on_non_convergence "
+        "reaches the non-convergence raise",
+    "operators.dedup.ngram_containment_pairs.threshold":
+        "test_containment_matches_python_reference draws the threshold",
+    "operators.dedup.trim_duplicated_spans.n":
+        "test_span_trim_invariants_hold_for_arbitrary_corpora needs n=4 "
+        "for its generated docs to collide",
+    "operators.multimodal.shard_plan.shard_bytes":
+        "test_media_shard_plan_matches_prefix_sum_reference draws budgets "
+        "below its generated asset sizes",
+    "operators.sessions.funnel_within.within_hours":
+        "test_funnel_window_bounds_conversions checks a huge "
+        "window against the unbounded funnel",
+    "operators.similarity.kmeans_train.iters":
+        "test_kmeans_iterations_do_not_increase_inertia compares 1 and 2 rounds",
+    "operators.similarity.kmeans_train.k":
+        "test_kmeans_separates_well_separated_clusters fits its two blobs with k=2",
+    "operators.similarity.mmr_rerank_topk.k":
+        "test_mmr_diversifies_near_duplicate_neighbors pins a 3-deep ranking",
+    "operators.similarity.mmr_rerank_topk.lam":
+        "test_mmr_diversifies_near_duplicate_neighbors needs lam=0.5 "
+        "for diversity to beat relevance",
+    "operators.text.chunk_documents.stride":
+        "test_chunking_known_values hand-checks window=4, stride=3",
+    "operators.text.chunk_documents.window":
+        "test_chunking_known_values hand-checks window=4, stride=3",
+    "operators.text.tfidf_cosine_pairs.threshold":
+        "test_tfidf_cosine_weights_rare_terms checks cosines below the default",
 }
 
 
@@ -360,19 +373,6 @@ def _defaulted(fn: ast.FunctionDef) -> dict[str, int | None]:
 def _params(fn) -> set[str]:
     a = fn.args
     return {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
-
-
-def _tested(fn: ast.FunctionDef) -> set[str]:
-    """The defaulted parameters named in the test of an ``if`` or a
-    conditional expression anywhere in ``fn``."""
-    names = {
-        n.id
-        for t in ast.walk(fn)
-        if isinstance(t, (ast.If, ast.IfExp))
-        for n in ast.walk(t.test)
-        if isinstance(n, ast.Name)
-    }
-    return set(_defaulted(fn)) & names
 
 
 def _calls(node: ast.AST, scope: tuple = ()):
@@ -405,16 +405,13 @@ def _passed(call: ast.Call, param: str, position: int | None, skip: int):
     return None
 
 
-def _unselected_branch_parameters() -> list[str]:
-    """``module.function.parameter`` of every branch parameter of a
+def _unselected_defaulted_parameters() -> list[str]:
+    """``module.function.parameter`` of every defaulted parameter of a
     package function or method that no root selects.
 
-    A branch parameter is a defaulted parameter that an ``if`` or a
-    conditional expression tests, or one that its function forwards
-    (``strict=strict``) to a branch parameter or to a default that no
-    root sets.  A root selects it when a call site reached from the
-    roots of :func:`_reach` passes it, by keyword or by position; a
-    forward of the caller's own defaulted parameter counts only if a
+    A root selects it when a call site reached from the roots of
+    :func:`_reach` passes it, by keyword or by position; a forward of
+    the caller's own defaulted parameter (``k=k``) counts only if a
     root selects that one."""
     mods, _, walked, resolve = _reach()
     functions: dict[tuple[str, str], ast.FunctionDef] = {}
@@ -483,11 +480,6 @@ def _unselected_branch_parameters() -> list[str]:
                         if id(owner) in key_of and value.id in _defaulted(owner):
                             source = (key_of[id(owner)], value.id)
                     passes.setdefault((key, param), []).append(source)
-    forwards: dict[tuple, list] = {}
-    for target, sources in passes.items():
-        for source in filter(None, sources):
-            forwards.setdefault(source, []).append(target)
-
     memo: dict[tuple, bool] = {}
 
     def selected(target) -> bool:
@@ -498,26 +490,19 @@ def _unselected_branch_parameters() -> list[str]:
             )
         return memo[target]
 
-    def branch(target, seen=frozenset()) -> bool:
-        key, param = target
-        return param in _tested(functions[key]) or any(
-            t not in seen and (branch(t, seen | {target}) or not selected(t))
-            for t in forwards.get(target, ())
-        )
-
     return sorted(
         f"{mod[len(pkg.__name__) + 1:]}.{name}.{param}"
         for (mod, name), fn in functions.items()
         for param in _defaulted(fn)
-        if branch(((mod, name), param)) and not selected(((mod, name), param))
+        if not selected(((mod, name), param))
     )
 
 
-def test_branch_parameters_selected_by_a_root():
-    """A branch parameter that no root selects is a configuration that
-    runs in no workload: it goes with its branch, or the allow-list
-    says why it stays."""
-    unselected = _unselected_branch_parameters()
-    assert set(BRANCH_PARAMETERS_ALLOWED) <= set(unselected), "stale allow-list entries"
-    offenders = [p for p in unselected if p not in BRANCH_PARAMETERS_ALLOWED]
-    assert not offenders, f"branch parameters that no root selects: {offenders}"
+def test_defaulted_parameters_selected_by_a_root():
+    """A defaulted parameter that no root sets is configuration that no
+    workload exercises: its value becomes a module constant, or the
+    allow-list says why it stays."""
+    unselected = _unselected_defaulted_parameters()
+    assert set(DEFAULTED_PARAMETERS_ALLOWED) <= set(unselected), "stale allow-list entries"
+    offenders = [p for p in unselected if p not in DEFAULTED_PARAMETERS_ALLOWED]
+    assert not offenders, f"defaulted parameters that no root sets: {offenders}"

@@ -9,6 +9,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
+import sys
 
 from go_mailio_diskusage_handler_spark.queries import freshness
 from go_mailio_diskusage_handler_spark.registry import ORACLE_SQL, QUERIES
@@ -124,3 +126,21 @@ def test_changed_oracles_meet_the_gate():
         "more changed oracles than the driver window can check in one round"
     )
     assert changed <= set(_window()), sorted(changed - set(_window()))
+
+
+def test_oracle_hash_tool_reports_only_changed_hashes(tmp_path, monkeypatch, capsys):
+    """A rerun of ``tools_oracle_hashes.py`` over its own output names no
+    oracle and rewrites the file byte for byte: an entry stamped with
+    the current round by an earlier run is not a change."""
+    import tools_oracle_hashes as tool
+
+    out = tmp_path / "ORACLE_HASHES.json"
+    shutil.copy(os.path.join(REPO_ROOT, "ORACLE_HASHES.json"), out)
+    monkeypatch.setattr(tool, "OUT", str(out))
+    monkeypatch.setattr(sys, "argv", ["tools_oracle_hashes.py"])
+    tool.main()
+    first = out.read_bytes()
+    capsys.readouterr()
+    tool.main()
+    assert "0 oracle(s) changed/new: []" in capsys.readouterr().out
+    assert out.read_bytes() == first

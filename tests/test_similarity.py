@@ -155,7 +155,9 @@ def test_ann_recall_floors(spark):
     quantization error dominates when vectors have no structure)."""
     emb = load_table(spark, SF_CORRECT, "embeddings")
     truth: dict[int, set[int]] = {}
-    for r in similarity.brute_force_topk(emb, 8, 5).collect():
+    for r in similarity.brute_force_topk(
+        emb, similarity.N_QUERIES, similarity.TOP_K
+    ).collect():
         truth.setdefault(r.query_id, set()).add(r.neighbor_id)
 
     def recall(hits):
@@ -177,7 +179,7 @@ def test_ann_recall_floors(spark):
         "pq": (similarity.pq_ann_topk, 0.10),
     }
     for name, (fn, floor) in floors.items():
-        r = recall(fn(emb, 8, 5).collect())
+        r = recall(fn(emb).collect())
         assert r >= floor, f"{name} recall@5 collapsed: {r} < {floor}"
 
 
@@ -225,7 +227,7 @@ def test_mmr_diversifies_near_duplicate_neighbors(spark):
         rows, "vec_id long, embedding array<float>, label int"
     )
     got = (
-        S.mmr_rerank_topk(emb, n_queries=1, k=3, shortlist=4, lam=0.5)
+        S.mmr_rerank_topk(emb, k=3, lam=0.5)
         .orderBy("mmr_rank")
         .collect()
     )
@@ -323,7 +325,7 @@ def test_trained_ivf_recall_floor(spark):
     from conftest import SF_CORRECT
 
     emb = load_table(spark, SF_CORRECT, "embeddings")
-    got = similarity.kmeans_ivf_topk(emb, 8, 5)
+    got = similarity.kmeans_ivf_topk(emb)
     rows = got.collect()
     spark.catalog.clearCache()
     # Exact L2 top-5 ground truth, computed in-test.
@@ -357,12 +359,12 @@ def test_range_search_is_exactly_thresholded_brute_force(spark):
     emb = load_table(spark, SF_CORRECT, "embeddings")
     got = {
         (r.query_id, r.neighbor_id): r.cos_sim
-        for r in similarity.range_search(emb, 8, 0.3).collect()
+        for r in similarity.range_search(emb).collect()
     }
     brute = {
         (r.query_id, r.neighbor_id): r.cos_sim
-        for r in similarity.brute_force_topk(emb, 8, 500).collect()
-        if r.cos_sim >= 0.3
+        for r in similarity.brute_force_topk(emb, similarity.N_QUERIES, 500).collect()
+        if r.cos_sim >= similarity.RANGE_MIN_COS
     }
     assert got == brute and got
 

@@ -51,18 +51,18 @@ def main() -> None:
     if os.path.exists(OUT):
         with open(OUT) as fh:
             old = json.load(fh)
-    new = {}
+    new, changed = {}, []
     for name, h in oracle_hashes().items():
         prev = old.get(name)
         if prev and prev["hash"] == h:
             new[name] = prev  # unchanged: keep its last-changed round
         else:
             new[name] = {"hash": h, "round": rnd}
+            changed.append(name)
     dropped = sorted(set(old) - set(new))
     if dropped:
         print(f"dropped from registry: {dropped}")
-    changed = sorted(n for n, v in new.items() if v["round"] == rnd)
-    print(f"round {rnd}: {len(changed)} oracle(s) changed/new: {changed}")
+    print(f"round {rnd}: {len(changed)} oracle(s) changed/new: {sorted(changed)}")
     with open(OUT, "w") as fh:
         json.dump(new, fh, indent=1, sort_keys=True)
         fh.write("\n")
