@@ -11,7 +11,9 @@ median of SPARK_GRAFT_BENCH_REPEATS runs (default 3), after one untimed
 warm-up pass that SPARK_GRAFT_BENCH_WARMUP=0 skips (it is always
 skipped at one repeat).  A failing query is charged ERROR_PENALTY_SEC
 and the process exits 2 after printing the line.  At sf0.1 the full
-record also goes to BENCH_SUMMARY.json, and SPARK_GRAFT_PIN_BASELINE=1
+record also goes to BENCH_SUMMARY.json, with the Janino compiles each
+query's timed repeats made (``compiles``; 0 when every generated class
+was reused from Spark's codegen cache), and SPARK_GRAFT_PIN_BASELINE=1
 writes the stdout record to BASELINE_QUERIES.json.
 
 Queries run in registry order, which ``registry`` re-derives from the
@@ -49,11 +51,19 @@ from go_mailio_diskusage_handler_spark.session import build_session  # noqa: E40
 ERROR_PENALTY_SEC = 60.0
 
 
-def time_query(spark, name, fn, sf_dir, repeats, warmup, errors):
+def compile_count(spark) -> int:
+    """Janino compiles so far in this JVM: Spark's codegen metric takes
+    one compilation-time sample per compiled class."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def time_query(spark, name, fn, sf_dir, repeats, warmup, errors, compiles):
     """Time one registry query: optional untimed warm-up pass, then
-    ``repeats`` timed executions; returns the per-run seconds list and
-    records any failure message into ``errors``.  Module-level (not
-    inlined in main) so the failure-isolation contract is unit-testable.
+    ``repeats`` timed executions; returns the per-run seconds list,
+    records any failure message into ``errors`` and the timed repeats'
+    Janino compiles into ``compiles``.  Module-level (not inlined in
+    main) so the failure-isolation contract is unit-testable.
     """
     runs: list[float] = []
     # Explicit failure flag (round-12 ADVICE): comparing the last
@@ -71,6 +81,7 @@ def time_query(spark, name, fn, sf_dir, repeats, warmup, errors):
         finally:
             spark.catalog.clearCache()
     df = None
+    compiled_before = compile_count(spark)
     for _ in range(repeats):
         if failed:
             break  # already failed (warm-up or a prior repeat)
@@ -101,6 +112,7 @@ def time_query(spark, name, fn, sf_dir, repeats, warmup, errors):
             # pressure later queries; each query is timed self-contained,
             # including its own materialization.
             spark.catalog.clearCache()
+    compiles[name] = compile_count(spark) - compiled_before
     return runs
 
 
@@ -172,8 +184,9 @@ def main() -> None:
     WARMUP = REPEATS > 1 and os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
     errors: dict[str, str] = {}
     per_query_runs: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
     for name, fn in registry.QUERIES.items():
-        runs = time_query(spark, name, fn, sf_dir, REPEATS, WARMUP, errors)
+        runs = time_query(spark, name, fn, sf_dir, REPEATS, WARMUP, errors, compiles)
         per_query_runs[name] = runs
         timings[name] = round(sorted(runs)[len(runs) // 2], 3)
 
@@ -227,6 +240,7 @@ def main() -> None:
     summary = dict(out)
     summary["n_queries"] = len(timings)
     summary["runs"] = per_query_runs
+    summary["compiles"] = compiles
     if float(sf) == 0.1:
         try:
             with open(os.path.join(repo_dir, "BENCH_SUMMARY.json"), "w") as fh:

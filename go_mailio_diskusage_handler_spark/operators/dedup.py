@@ -256,13 +256,14 @@ _HEX = "0123456789abcdef"
 
 
 def simhash_values(documents: DataFrame) -> DataFrame:
-    """32-bit SimHash per document from token md5s.
+    """``SIMHASH_BITS``-bit SimHash per document from token md5s.
 
-    Per-token nibble values are decoded from the md5 hex string
-    (portable across engines); each bit contributes ±1 weighted by
-    token multiplicity; the sign vector packs into one int.  Plan:
-    explode tokens → one groupBy(doc_id) with 32 SUM aggregates
-    (partial aggregation collapses the explode before the shuffle).
+    Per-token nibble values are decoded from the first
+    ``SIMHASH_BITS // 4`` hex digits of the md5 (portable across
+    engines); each bit contributes ±1 weighted by token multiplicity;
+    the sign vector packs into one long.  Plan: explode tokens → one
+    groupBy(doc_id) with ``SIMHASH_BITS`` SUM aggregates (partial
+    aggregation collapses the explode before the shuffle).
     """
     toks = widen_for_compute(documents).select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")

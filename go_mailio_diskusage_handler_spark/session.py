@@ -6,6 +6,29 @@ S3 object buffered).  Here the session is configured for the opposite:
 vectorized scans, AQE, and shuffle-partition counts sized to the local
 test harness while remaining sane defaults for a real cluster (where
 AQE re-coalesces at runtime anyway).
+
+The session also keeps every class that Catalyst generates and Janino
+compiles (Spark SQL, SIGMOD 2015, §4.3.4) for the life of the JVM.
+Spark caches compiled classes by their exact source text in an LRU of
+``spark.sql.codegen.cache.maxEntries`` entries, 100 by default.  That
+is smaller than what this engine reuses: perfbench's seven ``queries``
+need 107 classes, so the LRU evicted each class shortly before its next
+use, and every warm pass recompiled 58-81 of them; a pass over the whole
+registry compiled ~4,000 classes, and a second pass again ~4,000.  Each
+recompile is a new JVM class that the JIT compiles again as well.
+``CODEGEN_CACHE_ENTRIES`` sizes the cache to the registry instead (see
+its comment), and whole-stage class names leave out the stage id, so a
+stage whose id changes from run to run keeps its source text.  One
+registry pass at sf0.01 then compiles 2,337 classes and the next pass
+31.  Kept classes hold JVM non-heap memory, but fewer classes are
+made: after two passes non-heap read 401 MB, against 453 MB at the
+default cache.  Count compiles through py4j with Spark's own metric::
+
+    spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+(one histogram sample per Janino compile; ``bench.py`` records it per
+query in ``BENCH_SUMMARY.json``).
 """
 
 from __future__ import annotations
@@ -16,6 +39,14 @@ from pyspark.sql import SparkSession
 
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Entries of Spark's compiled-class cache (spark.sql.codegen.cache.maxEntries,
+# a static setting).  Sized to the registry's working set, not a
+# benchmark's: with 8,192 entries, one pass over all 262 queries at
+# sf0.01 compiled 2,690 distinct classes (2,678 at 4,096; 2,337 once
+# class names leave out the stage id), so 4,096 holds them with headroom
+# while bounding non-heap growth on a long-lived JVM.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
@@ -89,6 +120,14 @@ def build_session(app_name: str = "diskusage-spark") -> SparkSession:
         # DuckDB oracle (which treats naive parquet timestamps as-is)
         # on any host, cluster or laptop.
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # The cache keys on source text, and a whole-stage class name
+        # carries its stage id, which AQE assigns in the order stages
+        # are planned at run time.  Queries with parallel stages
+        # (PageRank, the dedup and retrieval joins) got new ids, so new
+        # source, on every run: 86 of the 126 classes a warm registry
+        # pass recompiled differed from a cached one only in that id.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
+def zorder_key(a: Column, b: Column, bits: int) -> Column:
     """Bit-interleaved Z-order key over two non-negative int columns.
 
     Sorting by one column makes row-group min/max stats selective for

@@ -49,10 +49,11 @@ def test_bench_exact_60s_run_is_not_a_failure(monkeypatch):
         return clock["t"]
 
     monkeypatch.setattr(bench.time, "perf_counter", fake_counter)
+    monkeypatch.setattr(bench, "compile_count", lambda spark: 0)
     errors: dict[str, str] = {}
     runs = bench.time_query(
         _FakeSpark(), "q", lambda spark, sf: _FakeDF(), "/none",
-        repeats=3, warmup=False, errors=errors,
+        repeats=3, warmup=False, errors=errors, compiles={},
     )
     assert runs == [60.0, 60.0, 60.0]  # all three repeats ran
     assert errors == {}
@@ -66,10 +67,11 @@ def test_bench_real_failure_still_breaks_and_records(monkeypatch):
     def boom(spark, sf):
         raise ValueError("fixture missing")
 
+    monkeypatch.setattr(bench, "compile_count", lambda spark: 0)
     errors: dict[str, str] = {}
     runs = bench.time_query(
         _FakeSpark(), "q", boom, "/none",
-        repeats=3, warmup=False, errors=errors,
+        repeats=3, warmup=False, errors=errors, compiles={},
     )
     assert runs == [bench.ERROR_PENALTY_SEC]
     assert "ValueError" in errors["q"]
@@ -78,10 +80,30 @@ def test_bench_real_failure_still_breaks_and_records(monkeypatch):
     errors2: dict[str, str] = {}
     runs2 = bench.time_query(
         _FakeSpark(), "q", boom, "/none",
-        repeats=3, warmup=True, errors=errors2,
+        repeats=3, warmup=True, errors=errors2, compiles={},
     )
     assert runs2 == [bench.ERROR_PENALTY_SEC]
     assert "ValueError" in errors2["q"]
+
+
+def test_bench_counts_compiles_of_timed_repeats_only(monkeypatch):
+    """``compiles`` holds what the timed repeats compiled: the warm-up
+    pass's first compiles are not charged to the query."""
+    import bench
+
+    compiled = {"n": 0}
+
+    def run(spark, sf):
+        compiled["n"] += 5 if compiled["n"] == 0 else 1  # warm-up: 5, then 1 per run
+        return _FakeDF()
+
+    monkeypatch.setattr(bench, "compile_count", lambda spark: compiled["n"])
+    compiles: dict[str, int] = {}
+    bench.time_query(
+        _FakeSpark(), "q", run, "/none",
+        repeats=3, warmup=True, errors={}, compiles=compiles,
+    )
+    assert compiles == {"q": 3}
 
 
 # ---------------------------------------------------------------------------

@@ -161,3 +161,38 @@ def test_largest_files_shares_one_window_exchange(spark):
 
     df = registry.QUERIES["du_largest_files"](spark, SF_CORRECT)
     assert plans.shuffle_count(df) == 1, plans.executed_plan(df)
+
+
+# perfbench's ``queries`` workload plus two more registry queries: on a
+# fresh JVM one pass of these compiles 117 distinct classes, more than
+# Spark's default codegen cache of 100 holds, and their generated source
+# repeats exactly from pass to pass.
+CODEGEN_REUSE_QUERIES = (
+    "dedup_normalized",
+    "sql_pricing_summary",
+    "curation_quality_gate",
+    "events_funnel",
+    "sim_brute_topk",
+    "sql_market_share",
+    "text_ngram_topk",
+    "du_core",
+    "sql_shipping_priority",
+)
+
+
+def test_repeated_pass_compiles_no_class(spark):
+    """A second pass over queries that need more classes than the default
+    cache holds compiles nothing: every class stays cached for the JVM's
+    life (``session.CODEGEN_CACHE_ENTRIES``).  At the default 100 entries
+    the LRU evicts each class before its next use and the second pass
+    recompiles most of them."""
+    from bench import compile_count
+
+    def run_pass() -> int:
+        before = compile_count(spark)
+        for q in CODEGEN_REUSE_QUERIES:
+            registry.QUERIES[q](spark, SF_CORRECT).write.format("noop").mode("overwrite").save()
+        return compile_count(spark) - before
+
+    run_pass()
+    assert run_pass() == 0

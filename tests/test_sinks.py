@@ -98,7 +98,7 @@ def test_zorder_key_matches_python_reference(spark):
 
     vals = [(0, 0), (1, 0), (0, 1), (5, 9), (1023, 77), (65535, 65535)]
     df = spark.createDataFrame(vals, "a bigint, b bigint")
-    got = df.select("a", "b", zorder_key(F.col("a"), F.col("b")).alias("z")).collect()
+    got = df.select("a", "b", zorder_key(F.col("a"), F.col("b"), bits=16).alias("z")).collect()
     for r in got:
         assert r["z"] == ref(r["a"], r["b"]), (r["a"], r["b"])
 
@@ -146,7 +146,7 @@ def test_zorder_write_prunes_on_both_columns(spark, tmp_path):
         )
 
     target = str(tmp_path / "zorder")
-    write_sorted(li, target, zorder_key(F.col("l_partkey"), F.col("l_suppkey")))
+    write_sorted(li, target, zorder_key(F.col("l_partkey"), F.col("l_suppkey"), bits=16))
     baseline = str(tmp_path / "suppsort")
     write_sorted(li, baseline, F.col("l_suppkey"))
 
