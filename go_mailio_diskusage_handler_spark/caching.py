@@ -31,24 +31,16 @@ report, run an iterative loop over checkpoints) need nothing — the
 owning frame dies at function exit, which is exactly when its cache
 stops being useful.
 
-**Derivation hazard**: ownership is tied to the exact returned Python
-object.  If a consumer keeps only a DERIVED frame —
-``op(...).select(...)`` as the sole handle — the owner is collected
-immediately and the cache is gone before the derived plan ever runs
-(recompute is silent and correct, just cold).  Library consumers that
-hold a derived frame should transfer ownership with :func:`derive`::
-
-    best = derive(keep_best(docs).select("doc_id"), keep_best(docs))
-    # or, with one call to the operator:
-    kb = keep_best(docs)
-    best = derive(kb.select("doc_id"), kb)
+Ownership is tied to the exact returned Python object: a consumer
+that keeps only a DERIVED frame (``op(...).select(...)``) lets the
+owner be collected at once, and the derived plan recomputes cold
+(silently and correctly).
 
 **GC caveat**: release relies on prompt CPython refcounting.  A
 reference cycle through an owning frame — or a non-refcounting
 interpreter — defers the finalizer until a ``gc`` cycle runs, so the
 no-``clearCache`` contract is "eventually", not "at the drop
-statement", in those cases.  Long-lived services that need a
-deterministic release point should call :func:`release_caches`.
+statement", in those cases.
 
 Release uses non-blocking ``unpersist`` (the CacheManager entry is
 dropped synchronously; block deletion proceeds in the background) and
@@ -95,7 +87,7 @@ def own_cache(
 
     Returns ``owner`` (same object) so call sites read
     ``return own_cache(result, sh)``.  See the module docstring for
-    the derivation hazard and the GC caveat.
+    what a derived frame loses and for the GC caveat.
     """
     frames: list[DataFrame] = list(cached)
     for src in absorb:
@@ -117,32 +109,6 @@ def own_cache(
     fin = weakref.finalize(owner, _release, frames)
     _OWNERS[owner] = (frames, fin)
     return owner
-
-
-def derive(derived: DataFrame, *sources: DataFrame) -> DataFrame:
-    """Transfer cache ownership from ``sources`` to a frame DERIVED
-    from them, so the caches stay warm for exactly as long as the
-    derived handle lives.
-
-    For consumers that keep only ``op(...).select(...)`` (not the
-    operator's own return value): without the transfer the owner is
-    collected at once and the cache is released before first use.
-    Sources that own nothing are ignored, so ``derive`` is safe to
-    wrap around any operator output.
-    """
-    return own_cache(derived, absorb=sources)
-
-
-def release_caches(df: DataFrame) -> None:
-    """Release ``df``'s owned caches NOW (idempotent).  For callers
-    that want deterministic release without dropping the handle —
-    the reliable path in long-lived services (see the GC caveat)."""
-    owned = _OWNERS.pop(df, None)
-    if owned is None:
-        return
-    frames, fin = owned
-    fin.detach()
-    _release(frames)
 
 
 def _unpersist_rdd(jrdd) -> None:

@@ -27,25 +27,6 @@ def monthly_order_stats(orders: DataFrame) -> DataFrame:
     )
 
 
-def math_buckets(lineitem: DataFrame, buckets: int = 8) -> DataFrame:
-    """Math scalars: pmod bucketing + abs/floor/sqrt aggregates."""
-    return (
-        lineitem.select(
-            F.pmod(F.col("l_orderkey"), F.lit(buckets)).alias("bucket"),
-            "l_extendedprice",
-            "l_discount",
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "discounted_revenue"
-            ),
-            F.round(F.avg(F.sqrt(F.col("l_extendedprice"))), 4).alias("avg_sqrt_price"),
-        )
-    )
-
-
 def json_event_stats(events: DataFrame) -> DataFrame:
     """JSON scalar: extract ``$.k`` from the props JSON string and
     aggregate per event type.  get_json_object is a JVM expression —

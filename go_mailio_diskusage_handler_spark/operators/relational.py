@@ -31,99 +31,6 @@ def top_k_addresses(disk_usage_df: DataFrame, k: int = 10) -> DataFrame:
     ).limit(k)
 
 
-def top_orders_per_customer(orders: DataFrame, n: int = 3) -> DataFrame:
-    """row_number window: each customer's n most expensive orders.
-
-    PARTITION BY o_custkey keeps every window task bounded by one
-    customer's orders; deterministic via o_orderkey tie-break.
-    """
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= n)
-    )
-
-
-def running_total_per_customer(orders: DataFrame) -> DataFrame:
-    """Running revenue per customer over order date (ROWS frame,
-    deterministic order via o_orderkey tie-break)."""
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
-    )
-
-
-def revenue_by_region(
-    orders: DataFrame, customer: DataFrame, nation: DataFrame, region: DataFrame
-) -> DataFrame:
-    """Star join: fact(orders) ⋈ dims, all dims broadcast.
-
-    At 100 TB the orders side streams through unchanged; the only
-    shuffle is the final groupBy on 5 region names (collapsed almost
-    entirely by partial aggregation).
-    """
-    dims = (
-        customer.select("c_custkey", "c_nationkey")
-        .join(F.broadcast(nation.select("n_nationkey", "n_regionkey")),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region.select("r_regionkey", "r_name")),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("c_custkey", "r_name")
-    )
-    return (
-        orders.join(F.broadcast(dims), orders["o_custkey"] == dims["c_custkey"])
-        .groupBy("r_name")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("order_count"),
-        )
-    )
-
-
-def customers_without_orders(
-    customer: DataFrame, orders: DataFrame, year: int | None = None
-) -> DataFrame:
-    """LEFT ANTI join — customers with no orders (optionally: none in
-    ``year``).  Spark broadcasts the custkey set when small; at scale
-    AQE picks shuffled hash anti-join.  The year filter is pushed to
-    the orders scan before the join."""
-    if year is not None:
-        orders = orders.filter(F.year("o_orderdate") == year)
-    return customer.join(
-        orders.select("o_custkey"),
-        customer["c_custkey"] == orders["o_custkey"],
-        "left_anti",
-    ).select("c_custkey", "c_name")
-
-
-def customers_with_orders(
-    customer: DataFrame, orders: DataFrame, year: int
-) -> DataFrame:
-    """LEFT SEMI join — the existence-check twin of the anti join:
-    customers with at least one order in ``year``.  Semi joins carry
-    only the probe side's columns and stop at the first match, so the
-    orders side contributes just its (filtered, pre-pushed-down)
-    custkey set to the hash table."""
-    return customer.join(
-        orders.filter(F.year("o_orderdate") == year).select("o_custkey"),
-        customer["c_custkey"] == F.col("o_custkey"),
-        "left_semi",
-    ).select("c_custkey", "c_name")
-
-
 def lapsed_customers(orders: DataFrame, split_date: str) -> DataFrame:
     """Set difference: customers ordering BEFORE split_date but not
     after — day-over-day inventory-diff pattern (SURVEY §2.1 set ops).
@@ -134,26 +41,6 @@ def lapsed_customers(orders: DataFrame, split_date: str) -> DataFrame:
     after = orders.filter(F.col("o_orderdate") >= split_date).select("o_custkey")
     return before.distinct().exceptAll(after.distinct()).select(
         F.col("o_custkey").alias("lapsed_custkey")
-    )
-
-
-def rollup_order_stats(orders: DataFrame) -> DataFrame:
-    """ROLLUP (status, priority): per-group, per-status, grand totals
-    in one pass — Spark expands grouping sets before the single
-    aggregation shuffle."""
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-            F.count(F.lit(1)).alias("order_count"),
-        )
-    )
-
-
-def distinct_customers_per_status(orders: DataFrame) -> DataFrame:
-    """Exact COUNT(DISTINCT) — expands to two-phase aggregate."""
-    return orders.groupBy("o_orderstatus").agg(
-        F.countDistinct("o_custkey").alias("distinct_customers")
     )
 
 
@@ -287,8 +174,8 @@ def price_band_revenue(orders: DataFrame) -> DataFrame:
     equi-join shuffle on ``cell``.
 
     Revenue sums cast inputs to DECIMAL(12,2) so the aggregate is exact
-    and engine-independent (see the cross-engine float rule above
-    ``queries/q_sql.py:ONE_TEXT``).
+    and engine-independent (see the cross-engine float rule above the
+    ``register_texts`` table in ``queries/q_sql.py``).
 
     The exploded band×cell dim is built as a JVM literal (explode of a
     struct-array over ``spark.range(1)``), not ``createDataFrame`` —
@@ -487,40 +374,6 @@ def approx_order_percentiles(orders: DataFrame) -> DataFrame:
     )
 
 
-def segment_spend_ranks(orders: DataFrame, customer: DataFrame) -> DataFrame:
-    """Rank-family windows (NTILE / PERCENT_RANK / CUME_DIST): per
-    market segment, each customer's spend decile and rank statistics.
-
-    The window partitions by c_mktsegment — a per-partition sort of
-    per-CUSTOMER aggregates, never of raw orders, so the window input
-    is distinct-customer-bounded.  (An UNPARTITIONED ntile over a fact
-    table would serialize into one task; this module bans that shape —
-    see tests asserting no SinglePartition window.)  Spend is
-    aggregated first (one shuffle on o_custkey, partial agg map-side);
-    the broadcast customer dim attaches the segment.  Ties: identical
-    spend totals order by c_custkey so every rank function is
-    deterministic and engine-portable.
-    """
-    spend = orders.groupBy("o_custkey").agg(
-        F.round(F.sum("o_totalprice"), 2).alias("total_spend")
-    )
-    seg = spend.join(
-        F.broadcast(customer.select("c_custkey", "c_mktsegment")),
-        spend["o_custkey"] == F.col("c_custkey"),
-    )
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.desc("total_spend"), F.asc("c_custkey")
-    )
-    return seg.select(
-        F.col("c_custkey").alias("custkey"),
-        F.col("c_mktsegment").alias("segment"),
-        "total_spend",
-        F.ntile(10).over(w).alias("spend_decile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
-
-
 TREND_MIN_ORDERS = 5
 
 
@@ -562,80 +415,6 @@ def customer_spend_trend(orders: DataFrame) -> DataFrame:
             "n_orders",
             F.round(num / den, 6).alias("spend_slope"),
         )
-    )
-
-
-AFFINITY_TOP_PAIRS = 20
-
-
-def part_type_affinity(lineitem: DataFrame, part: DataFrame) -> DataFrame:
-    """Co-occurrence mining: pairs of part TYPES appearing in the same
-    order, counted across orders — the market-basket rollup used for
-    curriculum mixing and contamination triage when "order" is a
-    document and "type" a tag.
-
-    Scale fence: the quadratic step is a self-join of DISTINCT
-    (order, type) rows keyed on the order — bounded by the per-order
-    line count (≤7 on this schema), so each order emits ≤ C(types,2)
-    pairs regardless of corpus size.  The part dim broadcasts; top-k
-    is TakeOrderedAndProject with a lexicographic tie-break.
-    """
-    order_types = (
-        lineitem.join(F.broadcast(part.select("p_partkey", "p_type")),
-                      lineitem["l_partkey"] == F.col("p_partkey"))
-        .select("l_orderkey", "p_type")
-        .distinct()
-    )
-    a = order_types.alias("a")
-    b = order_types.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.p_type") < F.col("b.p_type")),
-        )
-        .groupBy(
-            F.col("a.p_type").alias("type_a"),
-            F.col("b.p_type").alias("type_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy(F.desc("n_orders"), F.asc("type_a"), F.asc("type_b"))
-        .limit(AFFINITY_TOP_PAIRS)
-    )
-
-
-def spend_reconciliation(orders: DataFrame, split_date: str) -> DataFrame:
-    """FULL OUTER reconcile of two per-customer aggregates (early vs
-    late period) — presence-classified with COALESCE'd measures.
-
-    When both sides come from the SAME table, `inventory_diff` shows
-    the cheaper form (one groupBy, no join).  The FULL OUTER join is
-    the general tool this query covers: two sides from DIFFERENT
-    sources/schemas (yesterday's published snapshot vs today's
-    recount, billing vs usage) that cannot be unioned into one
-    aggregation.  Both inputs arrive pre-aggregated (one row per
-    customer), so the join shuffles reduced data on the same key both
-    aggregations grouped by — AQE shares the exchanges.
-    """
-    early = (
-        orders.filter(F.col("o_orderdate") < F.lit(split_date).cast("date"))
-        .groupBy("o_custkey")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("spend_early"))
-    )
-    late = (
-        orders.filter(F.col("o_orderdate") >= F.lit(split_date).cast("date"))
-        .groupBy("o_custkey")
-        .agg(F.round(F.sum("o_totalprice"), 2).alias("spend_late"))
-    )
-    e, l = early.alias("e"), late.alias("l")
-    return e.join(l, F.col("e.o_custkey") == F.col("l.o_custkey"), "full_outer").select(
-        F.coalesce(F.col("e.o_custkey"), F.col("l.o_custkey")).alias("custkey"),
-        F.coalesce(F.col("spend_early"), F.lit(0.0)).alias("spend_early"),
-        F.coalesce(F.col("spend_late"), F.lit(0.0)).alias("spend_late"),
-        F.when(F.col("e.o_custkey").isNull(), F.lit("late_only"))
-        .when(F.col("l.o_custkey").isNull(), F.lit("early_only"))
-        .otherwise(F.lit("both"))
-        .alias("presence"),
     )
 
 
@@ -971,7 +750,7 @@ def part_affinity_lift(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     support, confidence (both directions folded to max), and LIFT —
     P(a,b) / (P(a)·P(b)) — the measure that separates "frequent
     because both are common" from genuine affinity, which raw pair
-    counts (:func:`part_type_affinity`) cannot tell apart.
+    counts (the `part_type_affinity` query) cannot tell apart.
 
     Inputs are the same order-bounded distinct self-join plus one
     |types|-bounded marginal count joined in twice (broadcast — the

@@ -832,46 +832,6 @@ def user_day_features(events: DataFrame) -> DataFrame:
     )
 
 
-def user_behavior_entropy(events: DataFrame) -> DataFrame:
-    """Per-user behavioral entropy: Shannon entropy (nats) of the
-    user's event-type distribution plus its normalized form
-    (entropy / ln(n_types)) — the "how scripted is this account"
-    feature behind bot scoring (near-zero entropy = one repeated
-    action) and the diversity signal next to the volume features of
-    :func:`user_day_features`.
-
-    Two bounded aggregations: corpus → (user × type) counts (the
-    corpus-sized shuffle), then a per-user fold whose input is ≤
-    |event_types| rows per user.  Entropy terms are identical
-    expressions in both engines, rounded at 4; single-type users
-    (ln(1) = 0 denominator) emit normalized = 0, not NULL.
-    """
-    ut = (
-        events.filter(F.col("user_id").isNotNull())
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    per_user = ut.groupBy("user_id").agg(
-        F.sum("n").alias("n_events"),
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum(F.col("n") * F.log("n")).alias("sum_nlogn"),
-    )
-    ent = (
-        F.log(F.col("n_events"))
-        - F.col("sum_nlogn") / F.col("n_events")
-    )
-    norm = F.when(
-        F.col("n_types") > 1, ent / F.log(F.col("n_types").cast("double"))
-    ).otherwise(F.lit(0.0))
-    return per_user.select(
-        "user_id",
-        "n_events",
-        "n_types",
-        F.round(ent, 4).alias("entropy"),
-        F.round(norm, 4).alias("norm_entropy"),
-    )
-
-
 def retention_curve(events: DataFrame) -> DataFrame:
     """The headline retention curve: for each day offset, the
     cohort-size-weighted share of users still active — the one-line

@@ -169,41 +169,6 @@ CHAR_TRIGRAM_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
-def language_id_ngram(documents: DataFrame) -> DataFrame:
-    """Character-n-gram language ID: per language, total occurrences
-    of its signature trigrams; argmax with language-code tie-break.
-
-    Occurrence counting is the engine-portable replace-length trick —
-    ``(len(text) - len(replace(text, tg, ''))) / len(tg)`` — pure
-    string expressions, no regex engine dialect in play, no shuffle:
-    per-row work that scales linearly like :func:`language_id`.
-    """
-
-    def occurrences(tg: str) -> Column:
-        return (
-            (F.length("text") - F.length(F.replace(F.col("text"), F.lit(tg))))
-            / len(tg)
-        ).cast("long")
-
-    scores = [
-        sum(
-            [occurrences(tg) for tg in tgs[1:]], occurrences(tgs[0])
-        ).alias(f"score_{lang}")
-        for lang, tgs in CHAR_TRIGRAM_PROFILES.items()
-    ]
-    scored = documents.select("doc_id", "lang", *scores)
-    best = F.greatest(*[F.col(f"score_{lang}") for lang in CHAR_TRIGRAM_PROFILES])
-    pred = F.lit(None).cast("string")
-    for lang in reversed(list(CHAR_TRIGRAM_PROFILES)):
-        pred = F.when(F.col(f"score_{lang}") == best, F.lit(lang)).otherwise(pred)
-    return scored.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        pred.alias("predicted_lang"),
-        best.alias("best_score"),
-    )
-
-
 def fingerprints(documents: DataFrame) -> DataFrame:
     """Document fingerprinting:
 

@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from ..operators import core, dq, relational
 from ..sources import bucketing, compaction
-from ..sources.tables import load_table, register_views
-from ._base import register
+from ..sources.tables import load_table
+from ._base import register, register_texts
 from .q_du import DU_CORE_SQL
 from .q_udf import DIRECTION_CHANGES_SQL
 
@@ -30,9 +30,8 @@ def topk_addresses(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.top_k_addresses(core.disk_usage(inv), 10)
 
 
-@register(
-    "window_top_orders",
-    """
+register_texts(__name__, {
+    "window_top_orders": """
     SELECT o_custkey, o_orderkey, o_totalprice, rank FROM (
         SELECT o_custkey, o_orderkey, o_totalprice,
                ROW_NUMBER() OVER (PARTITION BY o_custkey
@@ -40,14 +39,7 @@ def topk_addresses(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
     ) WHERE rank <= 3
     """,
-)
-def window_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.top_orders_per_customer(load_table(spark, sf_dir, "orders"), 3)
-
-
-@register(
-    "window_running_total",
-    """
+    "window_running_total": """
     SELECT o_custkey, o_orderkey,
            ROUND(SUM(o_totalprice) OVER (
                PARTITION BY o_custkey
@@ -55,14 +47,8 @@ def window_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_total
     FROM orders
     """,
-)
-def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.running_total_per_customer(load_table(spark, sf_dir, "orders"))
-
-
-@register(
-    "join_revenue_by_region",
-    """
+    # Every dimension broadcasts: the fact never shuffles for a join.
+    "join_revenue_by_region": """
     SELECT r_name,
            ROUND(SUM(o_totalprice), 2) AS revenue,
            COUNT(*) AS order_count
@@ -72,34 +58,14 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region   ON n_regionkey = r_regionkey
     GROUP BY r_name
     """,
-)
-def join_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.revenue_by_region(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "region"),
-    )
-
-
-@register(
-    "anti_customers_without_orders",
-    """
+    "anti_customers_without_orders": """
     SELECT c_custkey, c_name FROM customer
     WHERE NOT EXISTS (
         SELECT 1 FROM orders
         WHERE o_custkey = c_custkey AND year(o_orderdate) = 1998
     )
     """,
-)
-def anti_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with no 1998 orders (non-empty at every fixture SF,
-    so the oracle hash actually discriminates)."""
-    return relational.customers_without_orders(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        year=1998,
-    )
+})
 
 
 @register(
@@ -115,29 +81,19 @@ def setop_lapsed_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.lapsed_customers(load_table(spark, sf_dir, "orders"), "1999-01-01")
 
 
-@register(
-    "rollup_order_stats",
-    """
+register_texts(__name__, {
+    "rollup_order_stats": """
     SELECT o_orderstatus, o_orderpriority,
            ROUND(SUM(o_totalprice), 2) AS total_price,
            COUNT(*) AS order_count
     FROM orders
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
-)
-def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.rollup_order_stats(load_table(spark, sf_dir, "orders"))
-
-
-@register(
-    "distinct_customers_per_status",
-    """
+    "distinct_customers_per_status": """
     SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS distinct_customers
     FROM orders GROUP BY o_orderstatus
     """,
-)
-def distinct_customers_per_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.distinct_customers_per_status(load_table(spark, sf_dir, "orders"))
+})
 
 
 # Sketch estimates are engine-specific, so each query emits a
@@ -243,27 +199,13 @@ def salted_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.salted_event_totals(load_table(spark, sf_dir, "events"))
 
 
-@register(
-    "semi_customers_with_orders",
-    """
+register_texts(__name__, {
+    "semi_customers_with_orders": """
     SELECT c_custkey, c_name FROM customer
     WHERE c_custkey IN (SELECT o_custkey FROM orders
                         WHERE year(o_orderdate) = 1995)
     """,
-)
-def semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI join (existence check) — completes the semi/anti pair
-    from SURVEY §2.1's join row."""
-    return relational.customers_with_orders(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        1995,
-    )
-
-
-@register(
-    "part_brand_stats",
-    """
+    "part_brand_stats": """
     SELECT p_brand,
            COUNT(*) AS part_count,
            ROUND(AVG(p_retailprice), 2) AS avg_retail,
@@ -271,53 +213,17 @@ def semi_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(p_size) AS max_size
     FROM part GROUP BY p_brand
     """,
-)
-def part_brand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-aggregate scan over the part dimension (min/max/avg in
-    one pass)."""
-    from pyspark.sql import functions as F
-
-    return (
-        load_table(spark, sf_dir, "part")
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("part_count"),
-            F.round(F.avg("p_retailprice"), 2).alias("avg_retail"),
-            F.min("p_size").alias("min_size"),
-            F.max("p_size").alias("max_size"),
-        )
-    )
-
-
-@register(
-    "supplier_nation_balance",
-    """
+    "supplier_nation_balance": """
     SELECT n_name,
            COUNT(*) AS supplier_count,
            ROUND(SUM(s_acctbal), 2) AS total_acctbal
     FROM supplier JOIN nation ON s_nationkey = n_nationkey
     GROUP BY n_name
     """,
-)
-def supplier_nation_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier facts ⋈ broadcast nation dim → per-nation totals."""
-    from pyspark.sql import functions as F
-
-    sup = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        sup.join(F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"])
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("supplier_count"),
-            F.round(F.sum("s_acctbal"), 2).alias("total_acctbal"),
-        )
-    )
-
-
-@register(
-    "star_profit_by_nation_brand",
-    """
+    # TPC-H Q9 shape: part, supplier and nation all broadcast, so the
+    # fact streams through with no join shuffle; the only exchange is
+    # the final aggregation, after a partial one.
+    "star_profit_by_nation_brand": """
     SELECT n_name, p_brand,
            ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
            COUNT(*) AS line_count
@@ -327,82 +233,19 @@ def supplier_nation_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation ON s_nationkey = n_nationkey
     GROUP BY n_name, p_brand
     """,
-)
-def star_profit_by_nation_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-dimension star join over the big fact (TPC-H Q9 shape):
-    lineitem ⋈ part ⋈ supplier ⋈ nation, every dimension broadcast —
-    the fact table streams through with ZERO join shuffles; the only
-    exchange is the final (n_name, p_brand) aggregation, collapsed by
-    partial aggregation first."""
-    from pyspark.sql import functions as F
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .join(F.broadcast(sup), li["l_suppkey"] == sup["s_suppkey"])
-        .join(F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"])
-        .groupBy("n_name", "p_brand")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("line_count"),
-        )
-    )
-
-
-@register(
-    "segment_customer_value",
-    """
+    "segment_customer_value": """
     SELECT c_mktsegment,
            COUNT(*) AS customer_count,
            ROUND(AVG(c_acctbal), 2) AS avg_acctbal,
            ROUND(SUM(c_acctbal), 2) AS total_acctbal
     FROM customer GROUP BY c_mktsegment
     """,
-)
-def segment_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    return (
-        load_table(spark, sf_dir, "customer")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("customer_count"),
-            F.round(F.avg("c_acctbal"), 2).alias("avg_acctbal"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_acctbal"),
-        )
-    )
-
-
-@register(
-    "setop_retained_customers",
-    """
+    "setop_retained_customers": """
     SELECT o_custkey AS retained_custkey FROM orders WHERE o_orderdate < '1998-01-01'
     INTERSECT
     SELECT o_custkey FROM orders WHERE o_orderdate >= '1998-01-01'
     """,
-)
-def setop_retained_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (completing union/except/intersect): customers active
-    in BOTH halves of the date range.  Spark plans this as a left-semi
-    join over the two distinct sets — both sides shrink to distinct
-    custkeys before the shuffle."""
-    from pyspark.sql import functions as F
-
-    orders = load_table(spark, sf_dir, "orders")
-    before = orders.filter(F.col("o_orderdate") < "1998-01-01").select(
-        F.col("o_custkey").alias("retained_custkey")
-    )
-    after = orders.filter(F.col("o_orderdate") >= "1998-01-01").select(
-        F.col("o_custkey").alias("retained_custkey")
-    )
-    return before.intersect(after)
+})
 
 
 ORDER_GAPS_SQL = """
@@ -485,9 +328,8 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.price_band_revenue(load_table(spark, sf_dir, "orders"))
 
 
-@register(
-    "join_spend_reconcile",
-    """
+register_texts(__name__, {
+    "join_spend_reconcile": """
     WITH a AS (SELECT o_custkey, ROUND(SUM(o_totalprice), 2) AS spend_early
                FROM orders WHERE o_orderdate < DATE '1997-01-01'
                GROUP BY o_custkey),
@@ -502,15 +344,7 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'both' END AS presence
     FROM a FULL OUTER JOIN b ON a.o_custkey = b.o_custkey
     """,
-)
-def join_spend_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER reconcile of two pre-aggregated periods
-    (relational.spend_reconciliation) — the join type for two-source
-    reconciliation; same-table diffs use the cheaper single-groupBy
-    `inventory_diff` form."""
-    return relational.spend_reconciliation(
-        load_table(spark, sf_dir, "orders"), "1997-01-01"
-    )
+})
 
 
 SPEND_TREND_SQL = """
@@ -560,14 +394,9 @@ PART_AFFINITY_SQL = """
 """
 
 
-@register("part_type_affinity", PART_AFFINITY_SQL)
-def part_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 co-ordered part-type pairs — order-bounded self-join
-    (relational.part_type_affinity)."""
-    return relational.part_type_affinity(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "part"),
-    )
+register_texts(__name__, {
+    "part_type_affinity": PART_AFFINITY_SQL,
+})
 
 
 SEGMENT_SPEND_RANKS_SQL = """
@@ -587,14 +416,9 @@ SEGMENT_SPEND_RANKS_SQL = """
 """
 
 
-@register("window_segment_deciles", SEGMENT_SPEND_RANKS_SQL)
-def window_segment_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NTILE/PERCENT_RANK/CUME_DIST over a PARTITIONED window of
-    per-customer aggregates (relational.segment_spend_ranks)."""
-    return relational.segment_spend_ranks(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-    )
+register_texts(__name__, {
+    "window_segment_deciles": SEGMENT_SPEND_RANKS_SQL,
+})
 
 
 # [EXT] Robust per-group outlier stats: exact median + MAD + 3-MAD
@@ -990,7 +814,11 @@ def aqp_sampled_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # setop_churned_buyers_except_all — EXCEPT ALL multiset semantics
 # ---------------------------------------------------------------------------
 
-# DuckDB mirror: EXCEPT ALL is ISO multiset difference in both engines.
+# EXCEPT ALL is ISO multiset difference in both engines: a customer
+# with 5 early and 2 late orders shows 3 here and vanishes from the
+# distinct EXCEPT of `setop_lapsed_customers`.  Spark plans it as one
+# hash aggregate of per-key count deltas: one shuffle on the key, no
+# join.
 SETOP_EXCEPT_ALL_ORACLE = """
     SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_excess FROM (
         SELECT o_custkey FROM orders WHERE year(o_orderdate) <= 1997
@@ -1000,58 +828,28 @@ SETOP_EXCEPT_ALL_ORACLE = """
 """
 
 
-@register("setop_churned_buyers_except_all", SETOP_EXCEPT_ALL_ORACLE)
-def setop_churned_buyers_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] ``DataFrame.exceptAll`` — ISO multiset EXCEPT ALL: each
-    customer's early-period order occurrences minus their late-period
-    occurrences, preserving multiplicity (the cardinality drop per
-    customer, which distinct EXCEPT — `setop_lapsed_customers` —
-    cannot express: a customer who ordered 5 then 2 times shows 3
-    here and vanishes there).
-
-    Scale: Spark plans exceptAll as a single hash aggregate computing
-    per-key count deltas (generate sum(1L) vs sum(-1L), replicate
-    rows) — one shuffle on the key, no join; the trailing groupBy
-    reuses the same hash partitioning."""
-    orders = load_table(spark, sf_dir, "orders")
-    early = orders.filter(F.year("o_orderdate") <= 1997).select("o_custkey")
-    late = orders.filter(F.year("o_orderdate") >= 1998).select("o_custkey")
-    return (
-        early.exceptAll(late)
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_excess"))
-    )
+register_texts(__name__, {
+    "setop_churned_buyers_except_all": SETOP_EXCEPT_ALL_ORACLE,
+})
 
 
 # ---------------------------------------------------------------------------
-# window_paged_orders — DataFrame.offset pagination
+# window_paged_orders — LIMIT/OFFSET pagination
 # ---------------------------------------------------------------------------
+# Page 3 of the price-ranked orders.  The o_orderkey tiebreak makes the
+# order total, so a page is stable across runs and partitionings.
+# Catalyst folds offset+limit into a per-partition top-(offset+limit):
+# no global sort.  Deep offsets should switch to keyset predicates
+# (WHERE price < last_seen).
 PAGED_ORDERS_ORACLE = """
     SELECT o_orderkey, o_custkey, o_totalprice FROM orders
     ORDER BY o_totalprice DESC, o_orderkey LIMIT 5 OFFSET 10
 """
 
 
-@register("window_paged_orders", PAGED_ORDERS_ORACLE)
-def window_paged_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] ``DataFrame.offset`` (Spark 3.4+/4.x) — keyset-free
-    pagination: page 3 of the price-ranked order list (rows 11-15
-    under a DETERMINISTIC total order; the o_orderkey tiebreak is what
-    makes pagination stable across runs and partitionings).
-
-    Scale: Catalyst folds offset+limit into CollectLimit — each
-    partition returns at most offset+limit rows and the driver skips
-    the first `offset`; the cost is O(pages_seen), never a global
-    sort.  Deep pagination (offset in the millions) should switch to
-    keyset predicates (WHERE price < last_seen) — documented here as
-    the operator's scale cliff."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .offset(10)
-        .limit(5)
-    )
+register_texts(__name__, {
+    "window_paged_orders": PAGED_ORDERS_ORACLE,
+})
 
 
 # ---------------------------------------------------------------------------
@@ -1221,55 +1019,20 @@ def graph_pagerank_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # window_direction_changes — built-in twin of udtf_table_arg_changes
 # ---------------------------------------------------------------------------
-@register("window_direction_changes", DIRECTION_CHANGES_SQL)
-def window_direction_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] Per-user direction-change counting in PURE built-in
-    window functions — the scale-correct twin of
-    ``udtf_table_arg_changes`` (VERDICT r11 #4): identical semantics
-    (same oracle), but where the UDTF variant exists to exercise the
-    TABLE-argument UDTF *surface* (one Python process per partition),
-    this form stays entirely inside whole-stage codegen — zero Python
-    eval nodes (plan-asserted in tests/test_round12.py), so it is the
-    shape a 100 TB run should use.
-
-    Scale: both window specs share the (user_id) partitioning and
-    (ts, event_id) sort, so Catalyst evaluates them in ONE shuffle +
-    sort pass; the two trailing aggregates reuse the same hash key.
-    The deterministic (ts, event_id) tiebreak makes the lag stream —
-    and therefore the count — partitioning-invariant."""
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("user_id").isNotNull())
-        .select("user_id", "event_id", "ts", "value")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nz = (
-        e.withColumn("diff", F.col("value") - F.lag("value").over(w))
-        .filter(F.col("diff").isNotNull() & (F.col("diff") != 0))
-        .withColumn("s", F.signum("diff"))
-    )
-    ch = nz.withColumn(
-        "c", F.when(F.col("s") != F.lag("s").over(w), F.lit(1)).otherwise(F.lit(0))
-    )
-    changes = ch.groupBy("user_id").agg(
-        F.sum("c").alias("direction_changes")
-    )
-    counts = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    return counts.join(changes, "user_id", "left").select(
-        "user_id",
-        "n_events",
-        F.coalesce(F.col("direction_changes"), F.lit(0).cast("long")).alias(
-            "direction_changes"
-        ),
-    )
+# The same text as the UDTF query's oracle, run in built-in window
+# functions: no Python node in the plan, the form a 100 TB run uses.
+register_texts(__name__, {
+    "window_direction_changes": DIRECTION_CHANGES_SQL,
+})
 
 
 # ---------------------------------------------------------------------------
 # setop_repeat_buyers_intersect_all — INTERSECT ALL multiset semantics
 # ---------------------------------------------------------------------------
 
-# DuckDB mirror: INTERSECT ALL is ISO multiset intersection in both
-# engines — per key, min(multiplicity_early, multiplicity_late).
+# INTERSECT ALL is ISO multiset intersection in both engines — per
+# key, min(multiplicity_early, multiplicity_late).  Spark plans it as
+# one hash aggregate of per-key count pairs: one shuffle, no join.
 SETOP_INTERSECT_ALL_ORACLE = """
     SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_common FROM (
         SELECT o_custkey FROM orders WHERE year(o_orderdate) <= 1995
@@ -1279,28 +1042,9 @@ SETOP_INTERSECT_ALL_ORACLE = """
 """
 
 
-@register("setop_repeat_buyers_intersect_all", SETOP_INTERSECT_ALL_ORACLE)
-def setop_repeat_buyers_intersect_all(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """[EXT] ``DataFrame.intersectAll`` — ISO multiset INTERSECT ALL:
-    per customer, min(early-period orders, late-period orders) — the
-    sustained-activity multiplicity that distinct INTERSECT
-    (`setop_retained_customers`) collapses to membership, completing
-    the multiset set-op pair with `setop_churned_buyers_except_all`.
-
-    Scale: Spark plans intersectAll as one hash aggregate computing
-    per-key (count_left, count_right) and replicating min(l, r) rows
-    — one shuffle on the key, no join; the trailing groupBy reuses
-    the same hash partitioning."""
-    orders = load_table(spark, sf_dir, "orders")
-    early = orders.filter(F.year("o_orderdate") <= 1995).select("o_custkey")
-    late = orders.filter(F.year("o_orderdate") >= 1996).select("o_custkey")
-    return (
-        early.intersectAll(late)
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+register_texts(__name__, {
+    "setop_repeat_buyers_intersect_all": SETOP_INTERSECT_ALL_ORACLE,
+})
 
 
 # ---------------------------------------------------------------------------
@@ -1367,25 +1111,6 @@ STAT_LINREG_SQL = """
 """
 
 
-@register("stat_linreg_normal_eq", STAT_LINREG_SQL)
-def stat_linreg_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] Closed-form multiple linear regression (cents revenue on
-    quantity + line number, with intercept) by the NORMAL EQUATIONS:
-    one distributed pass accumulates the O(d²) moment matrix as exact
-    decimal integer sums, and a 3×3 Cramer solve — plain expressions
-    over the 1-row aggregate — yields coefficients plus the
-    unexplained-variance fraction (1 − R²).  This is the one-pass,
-    no-iteration regression shape a feature pipeline runs at 100 TB:
-    map-side-combined partials, a d(d+1)/2-wide reduce, zero joins,
-    zero driver math — and the result is BIT-reproducible across
-    engines and partitionings because the sums are exact decimals and
-    the solve is one fixed IEEE expression tree (same SQL text runs on
-    both engines).
-
-    Scale: the moment pass is a single hash-free global aggregate
-    (partial → final); d grows the reduce width quadratically but
-    never adds a pass — at d where d² outgrows a row, switch to the
-    mapInPandas moment partials `sim_pca_project` uses
-    (similarity.py:1515), the same arithmetic at matrix shape."""
-    register_views(spark, sf_dir)
-    return spark.sql(STAT_LINREG_SQL)
+register_texts(__name__, {
+    "stat_linreg_normal_eq": STAT_LINREG_SQL,
+})

@@ -17,7 +17,7 @@ from ..functions import scalars
 from ..functions.scalars import RAGGED_RAW_SPARK, variant_profile_frame
 from ..operators import relational
 from ..sources.tables import load_table, register_views
-from ._base import register
+from ._base import register, register_texts
 
 
 @register(
@@ -33,18 +33,15 @@ def scalar_monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scalars.monthly_order_stats(load_table(spark, sf_dir, "orders"))
 
 
-@register(
-    "scalar_math_buckets",
-    """
+register_texts(__name__, {
+    "scalar_math_buckets": """
     SELECT l_orderkey % 8 AS bucket,
            COUNT(*) AS row_count,
            ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS discounted_revenue,
            ROUND(AVG(sqrt(l_extendedprice)), 4) AS avg_sqrt_price
     FROM lineitem GROUP BY bucket
     """,
-)
-def scalar_math_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return scalars.math_buckets(load_table(spark, sf_dir, "lineitem"), 8)
+})
 
 
 @register(
@@ -505,31 +502,9 @@ SCALAR_SQL2023_ORACLE = """
 """
 
 
-@register("scalar_sql2023_aggregates", SCALAR_SQL2023_ORACLE)
-def scalar_sql2023_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] ISO SQL:2023 aggregate breadth in one pass: ``count_if``
-    (conditional count), ``bool_or`` (existence), ``median`` (exact
-    interpolated 50th percentile), ``max_by`` (argmax over the UNIQUE
-    order key, so ties cannot make it nondeterministic), and the
-    ``regr_slope``/``regr_r2`` bivariate regression aggregates — the
-    declarative replacement for `trend_customer_spend`'s hand-built
-    sufficient statistics.
-
-    Scale: all seven accumulate in ONE hash aggregate over a 5-value
-    key — count_if/bool_or/max_by/regr_* are single-pass additive;
-    median is the one non-mergeable member (Spark evaluates it as an
-    exact percentile via sort-based aggregation within the same
-    shuffle), which is why the streaming twins switch to KLL sketches
-    (`events_kll_quantiles`) — the trade this query documents."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderpriority").agg(
-        F.count_if(F.col("o_totalprice") > 300000).alias("n_big"),
-        F.bool_or(F.col("o_orderstatus") == "P").alias("any_pending"),
-        F.round(F.median("o_totalprice"), 4).alias("med_price"),
-        F.max_by("o_custkey", "o_orderkey").alias("latest_cust"),
-        F.round(F.regr_slope("o_totalprice", "o_orderkey"), 4).alias("slope"),
-        F.round(F.regr_r2("o_totalprice", "o_orderkey"), 4).alias("r2"),
-    )
+register_texts(__name__, {
+    "scalar_sql2023_aggregates": SCALAR_SQL2023_ORACLE,
+})
 
 
 # ---------------------------------------------------------------------------

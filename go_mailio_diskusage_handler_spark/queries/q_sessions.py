@@ -13,7 +13,7 @@ from ..functions import scalars
 from ..operators import dq, multimodal, sessions
 from ..sources import compaction
 from ..sources.tables import load_table
-from ._base import ORACLE_SQL, register
+from ._base import ORACLE_SQL, register, register_texts
 
 
 @register(
@@ -845,11 +845,9 @@ EVENTS_ENTROPY_SQL = """
 """
 
 
-@register("events_user_entropy", EVENTS_ENTROPY_SQL)
-def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] Behavioral entropy per user
-    (operators/sessions.py:user_behavior_entropy)."""
-    return sessions.user_behavior_entropy(load_table(spark, sf_dir, "events"))
+register_texts(__name__, {
+    "events_user_entropy": EVENTS_ENTROPY_SQL,
+})
 
 
 # [EXT] Pooled retention curve over the cohort matrix (composes the

@@ -3,11 +3,8 @@ views that ``sources.tables.register_views`` binds: the TPC-H query
 shapes, recursive and lateral SQL, SQL scripting, parameterized SQL
 and ``IDENTIFIER``, and the pipe syntax.
 
-``ONE_TEXT`` maps each query whose Spark text is also its DuckDB
-oracle to that text, and one loop registers them all: one ANSI string,
-two engines.  SQL over lazy temp views compiles to the same Catalyst
-plan as the DataFrame program would (pruning, pushdown and broadcast
-decisions carry over), so these queries need no body of their own.
+The texts in the ``register_texts`` table below are each query's
+Spark text and its DuckDB oracle at once (the rule is in ``_base``).
 The queries after the table keep their own bodies: their Spark text
 uses syntax DuckDB lacks, or the body must set session state.
 """
@@ -20,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, register_views
-from ._base import register
+from ._base import register, register_texts
 
 # Cross-engine float rule: SUM over double products differs between
 # engines in the last ulp (summation order), which can cross a ROUND
@@ -31,7 +28,7 @@ from ._base import register
 # rounded result is cast back to DOUBLE.  Casting the product (double
 # to decimal) would NOT work: the engines round that conversion
 # differently.
-ONE_TEXT: dict[str, str] = {
+register_texts(__name__, {
     # TPC-H Q1: the partial aggregate runs before the shuffle, as in the
     # DataFrame form.
     "sql_pricing_summary": """
@@ -461,19 +458,7 @@ ONE_TEXT: dict[str, str] = {
            ROUND(net + est_tax, 2) AS gross
     FROM lineitem GROUP BY l_returnflag
 """,
-}
-
-
-def _one_text(text: str):
-    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(text)
-
-    return query
-
-
-for _name, _text in ONE_TEXT.items():
-    register(_name, _text)(_one_text(_text))
+})
 
 
 # Plain ANSI join both engines agree on; the runtime-filter story is

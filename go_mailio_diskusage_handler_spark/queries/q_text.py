@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, relational, text
 from ..sources.tables import load_table
-from ._base import register
+from ._base import register, register_texts
 
 
 @register(
@@ -80,9 +80,8 @@ def _ddb_trigram_score(lang: str) -> str:
     )
 
 
-@register(
-    "text_language_ngram",
-    f"""
+register_texts(__name__, {
+    "text_language_ngram": f"""
     WITH s AS (SELECT doc_id, lang,
                       {_ddb_trigram_score('en')} AS score_en,
                       {_ddb_trigram_score('es')} AS score_es,
@@ -98,11 +97,7 @@ def _ddb_trigram_score(lang: str) -> str:
            best AS best_score
     FROM b
     """,
-)
-def text_language_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Char-trigram language ID (text.language_id_ngram) — the n-gram
-    twin of the stopword-profile text_language_id."""
-    return text.language_id_ngram(load_table(spark, sf_dir, "documents"))
+})
 
 
 def _lang_scores_sql() -> str:
@@ -211,9 +206,8 @@ _CAPPED_SHINGLE_CTES = f"""
 """
 
 
-@register(
-    "docs_source_stats",
-    """
+register_texts(__name__, {
+    "docs_source_stats": """
     SELECT source, lang,
            COUNT(*) AS doc_count,
            CAST(SUM(CASE WHEN n_chars = length(text) THEN 1 ELSE 0 END) AS BIGINT)
@@ -222,25 +216,7 @@ _CAPPED_SHINGLE_CTES = f"""
            MAX(n_chars) AS max_chars
     FROM documents GROUP BY source, lang
     """,
-)
-def docs_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(source, lang) corpus profile including a stored-vs-actual
-    length consistency check — the metadata-validation pass a training
-    pipeline runs before trusting catalog columns."""
-    from pyspark.sql import functions as F
-
-    return (
-        load_table(spark, sf_dir, "documents")
-        .groupBy("source", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum(
-                (F.col("n_chars") == F.length("text")).cast("long")
-            ).alias("n_chars_consistent"),
-            F.min("n_chars").alias("min_chars"),
-            F.max("n_chars").alias("max_chars"),
-        )
-    )
+})
 
 
 TOP_NGRAMS_SQL = """

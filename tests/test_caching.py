@@ -14,7 +14,7 @@ import gc
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from go_mailio_diskusage_handler_spark.caching import own_cache, release_caches
+from go_mailio_diskusage_handler_spark.caching import own_cache
 from go_mailio_diskusage_handler_spark.operators import (
     dedup,
     relational,
@@ -93,20 +93,6 @@ def test_composite_absorbs_component_ownership(spark):
     assert _n_persistent(spark) == 0
 
 
-def test_release_caches_is_explicit_and_idempotent(spark):
-    spark.catalog.clearCache()
-    gc.collect()
-    docs = load_table(spark, SF_SMOKE, "documents")
-    df = dedup.minhash_dedup_pairs(docs, 0.8)
-    df.count()
-    assert _n_persistent(spark) > 0
-    release_caches(df)
-    assert _n_persistent(spark) == 0
-    release_caches(df)  # second call is a no-op
-    # the frame itself still computes (uncached) after release
-    assert df.count() >= 0
-
-
 def test_own_cache_transfer_chain(spark):
     """absorb moves ownership: the intermediate owner's death no
     longer releases the cache once a new owner absorbed it."""
@@ -126,36 +112,6 @@ def test_own_cache_transfer_chain(spark):
     final.drop()
     assert _n_persistent(spark) == 0
     del inter
-
-
-def test_derive_transfers_ownership_to_derived_frame(spark):
-    """The advisor-r6 hazard: a consumer keeping ONLY a derived frame
-    (op(...).select(...)) silently loses the cache — derive() is the
-    documented escape hatch and must move ownership to the derived
-    handle."""
-    spark.catalog.clearCache()
-    gc.collect()
-    docs = load_table(spark, SF_SMOKE, "documents")
-    from go_mailio_diskusage_handler_spark.caching import derive
-
-    owner = dedup.minhash_dedup_pairs(docs, 0.8)
-    derived = _Box(derive(owner.select("doc_a"), owner))
-    del owner
-    gc.collect()
-    derived.df.count()
-    # the original owner is gone, but the derived handle keeps the
-    # shingle/signature caches warm
-    assert _n_persistent(spark) > 0
-    derived.drop()
-    assert _n_persistent(spark) == 0
-
-
-def test_derive_is_safe_on_non_owning_sources(spark):
-    from go_mailio_diskusage_handler_spark.caching import derive
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    out = derive(docs.select("doc_id"), docs)  # docs owns nothing
-    assert out.count() > 0
 
 
 def test_ownership_survives_stash_named_column(spark):

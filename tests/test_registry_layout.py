@@ -5,7 +5,8 @@ depends on the query names and the driver's record, not on which
 module registers a query or in what order the modules are imported.
 Every top-level package definition is reachable from the registry, the
 serving handler or a benchmark entry point, and every defaulted
-parameter is set by one of them."""
+parameter is set by one of them.  A query whose oracle text Spark can
+run keeps a body of its own only for a stated reason."""
 from __future__ import annotations
 
 import ast
@@ -15,10 +16,15 @@ import os
 import random
 
 import pytest
+from pyspark.errors import AnalysisException, NumberFormatException
 
 import go_mailio_diskusage_handler_spark as pkg
 from go_mailio_diskusage_handler_spark.queries import FAMILY, freshness
-from go_mailio_diskusage_handler_spark.registry import QUERIES
+from go_mailio_diskusage_handler_spark.queries._base import ONE_TEXT
+from go_mailio_diskusage_handler_spark.registry import ORACLE_SQL, QUERIES
+from go_mailio_diskusage_handler_spark.sources.tables import register_views
+
+from conftest import SF_SMOKE
 
 PKG_DIR = os.path.dirname(os.path.abspath(pkg.__file__))
 QUERIES_DIR = os.path.join(PKG_DIR, "queries")
@@ -120,6 +126,74 @@ def test_driver_order_ignores_registration_order(seed):
     assert freshness.driver_order(shuffled, last, oracle_round) == names
 
 
+_API = "runs a Spark API that its text does not run: "
+_DECIMAL = "its text runs, but Spark returns a decimal where DuckDB returns a double"
+# Registered queries outside ``ONE_TEXT`` whose oracle text passes
+# Spark analysis, each with the reason it keeps a body of its own.
+TEXT_KEPT = {
+    "approx_distinct_customers": _API + "the HyperLogLog++ sketch",
+    "approx_top_event_types": _API + "the approx_top_k sketch",
+    "events_bitmap_users": _API + "the bitmap aggregates",
+    "events_kll_quantiles": _API + "the KLL quantile sketch",
+    "events_sketch_merge": _API + "the HLL sketch merge",
+    "sim_pca_project": _API + "the mapInPandas moment partials",
+    "sql_bloom_probe_revenue": _API + "the runtime bloom-filter join",
+    "sql_function_bands": _API + "SQL functions (CREATE FUNCTION)",
+    "sql_parameterized_revenue": _API + "named parameter binding",
+    "sql_pipe_priority_revenue": _API + "the pipe syntax",
+    "sql_scripting_threshold": _API + "SQL scripting",
+    "sql_recursive_spine": "its text runs only under the recursion limit its body sets",
+    "stat_crosstab_priority": _API + "df.stat.crosstab",
+    "udaf_weighted_avg_price": _API + "a pandas UDAF",
+    "udf_cogroup_arrow_stats": _API + "cogrouped applyInArrow",
+    "udf_grouped_map_zscore": _API + "grouped-map applyInPandas",
+    "udtf_table_arg_changes": _API + "a Python UDTF with a TABLE argument",
+    "join_bucketed_spend": _API + "a bucketed, shuffle-free join",
+    "scalar_transpose_metrics": _API + "DataFrame.transpose",
+    "scalar_xml_orders": _API + "XML parsing, which its text never does",
+    "scalar_null_guards": _API + "nullifzero, zeroifnull, nvl2 and try_divide, "
+    "which its text spells as NULLIF, COALESCE and CASE",
+    "unpivot_lineitem_measures": "its body unpivots one scan; its text is a 4-scan UNION ALL",
+    "range_join_price_bands": "its body is a grid equi-join; its text plans a nested loop",
+    "profile_orders": "its body profiles in 1 shuffle; its text takes 6",
+    "salted_event_totals": "its body salts the skewed key; its text does not",
+    "dq_orders_constraints": "its text moves the plan shape; not yet probed",
+    "events_concentration": "its text moves the plan shape; not yet probed",
+    "setop_lapsed_customers": "its text moves the plan shape; not yet probed",
+    "window_first_last": "its body deduplicates before it rounds; its text was "
+    "1.12x slower at sf0.1",
+    "docs_index_coverage": _DECIMAL,
+    "docs_length_histogram": _DECIMAL,
+    "events_markov_stationary": _DECIMAL,
+    "events_transitions": _DECIMAL,
+    "part_affinity_lift": _DECIMAL,
+    "profile_join_skew": _DECIMAL,
+    "scalar_map_hof_shares": _DECIMAL,
+    "scalar_width_bucket_hist": _DECIMAL,
+}
+
+
+def test_queries_whose_text_runs_on_spark_are_one_text_or_kept(spark):
+    """A body beside an oracle text that Spark can run re-spells that
+    text, unless the query exists to run what the text does not.
+    Analysis only: nothing executes."""
+    register_views(spark, SF_SMOKE)
+    analyzes = set()
+    for name, text in ORACLE_SQL.items():
+        if name in ONE_TEXT:
+            continue
+        try:
+            spark.sql(text).schema
+        except (AnalysisException, NumberFormatException):
+            continue  # DuckDB dialect that Spark does not parse or resolve
+        analyzes.add(name)
+    assert not set(TEXT_KEPT) & set(ONE_TEXT)
+    assert set(TEXT_KEPT) <= analyzes, "stale TEXT_KEPT entries"
+    assert analyzes <= set(TEXT_KEPT), (
+        f"register as one text, or keep with a reason: {sorted(analyzes - set(TEXT_KEPT))}"
+    )
+
+
 # Top-level package definitions that no root reaches, each kept for a
 # reason a test states.
 REACHABILITY_ALLOWED = {
@@ -133,8 +207,6 @@ REACHABILITY_ALLOWED = {
     "sources.tables.invalidate_view_memo": "test fixture: drops the per-session view memo",
     "functions.udfs.per_user_zscores_pandas": "pandas reference the Arrow z-score path is checked against",
     "functions.udfs._zscore_group": "pandas reference the Arrow z-score path is checked against",
-    "caching.derive": "own_cache's documented escape hatch",
-    "caching.release_caches": "own_cache's documented escape hatch",
 }
 
 

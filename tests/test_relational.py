@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 
 from go_mailio_diskusage_handler_spark import plans, registry
+from go_mailio_diskusage_handler_spark.queries import q_sql
+from go_mailio_diskusage_handler_spark.queries._base import ONE_TEXT
 from go_mailio_diskusage_handler_spark.sources.tables import load_table
 
 from conftest import SF_CORRECT, compare_with_oracle
@@ -126,17 +128,17 @@ def test_windows_are_partitioned(spark):
         assert "SinglePartition" not in plan, f"{name} window is unpartitioned:\n{plan}"
 
 
-def test_sql_surface_oracle_parity(spark, ddb):
+# The recursive spine's body only adds session state around its one text.
+SAME_TEXT = {**ONE_TEXT, "sql_recursive_spine": q_sql.RECURSIVE_SPINE_SQL}
+
+
+@pytest.mark.parametrize("name", sorted(SAME_TEXT))
+def test_sql_surface_oracle_parity(spark, ddb, name):
     """The textual spark.sql surface must hash-match DuckDB running the
     SAME SQL string (one query text, two engines): every ``ONE_TEXT``
-    query, plus the recursive spine, whose body only adds session
-    state around its one text."""
-    from go_mailio_diskusage_handler_spark.queries import q_sql
-
-    texts = {**q_sql.ONE_TEXT, "sql_recursive_spine": q_sql.RECURSIVE_SPINE_SQL}
-    for name, text in texts.items():
-        assert registry.ORACLE_SQL[name] == text
-        compare_with_oracle(spark, ddb, name, registry.QUERIES, registry.ORACLE_SQL)
+    query of the registry, plus the recursive spine."""
+    assert registry.ORACLE_SQL[name] == SAME_TEXT[name]
+    compare_with_oracle(spark, ddb, name, registry.QUERIES, registry.ORACLE_SQL)
 
 
 def test_range_join_is_hash_not_nested_loop(spark):
