@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from go_mailio_diskusage_handler_spark.operators.text import tokens
+
 
 def monthly_order_stats(orders: DataFrame) -> DataFrame:
     """Date scalars: month bucketing via date_format (string key keeps
@@ -553,7 +555,7 @@ def collation_distinct_labels(documents: DataFrame) -> DataFrame:
 
     One hash aggregate; distinct pre-aggregates map-side per group.
     """
-    first_word = F.element_at(F.split(F.col("text"), " "), 1)
+    first_word = F.element_at(tokens(), 1)
     label = F.when(
         F.col("doc_id") % 2 == 0, F.upper(first_word)
     ).otherwise(first_word)

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.types import DoubleType
 
+from go_mailio_diskusage_handler_spark.operators.text import tokens
+
 
 def pandas_cosine_to_query(query_vec: list[float]):
     """Build a scalar Pandas UDF computing cosine(embedding, q) for a
@@ -353,7 +355,7 @@ def model_scores(documents: DataFrame) -> DataFrame:
                 lambda t: sum(_token_value(model, w) for w in t.split(" "))
             )
 
-    n_tok = F.size(F.split("text", " "))
+    n_tok = F.size(tokens())
     return documents.select(
         "doc_id",
         score_sum("text").alias("model_sum"),

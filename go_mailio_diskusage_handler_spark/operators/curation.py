@@ -24,25 +24,37 @@ At 100 TB: all three are one scan + ≤ 1 shuffle; the hash bucket is
 also the natural shard key for writing train splits out.
 
 Storage contract: operators that ``persist`` an intermediate (the
-capped shingle table in :func:`contaminated_docs` /
-:func:`curated_corpus`) tie its lifetime to the RETURNED frame via
-:func:`go_mailio_diskusage_handler_spark.caching.own_cache` — when the
-consumer drops the result, the cache blocks release automatically; a
-held handle keeps them warm for re-execution.  No ``clearCache``
-discipline is required of callers (bench.py still clears per query,
-which is harmlessly redundant).
+capped shingle table that :func:`contaminated_docs` and
+:func:`curated_corpus` build) tie its lifetime to the RETURNED frame
+via :func:`go_mailio_diskusage_handler_spark.caching.own_cache` — when
+the consumer drops the result, the cache blocks release automatically;
+a held handle keeps them warm for re-execution.  The cores that take a
+shingle table as an argument (:func:`contamination_of`,
+``dedup.jaccard_pairs_of``) persist nothing: whoever built the table
+owns it.  No ``clearCache`` discipline is required of callers
+(bench.py still clears per query, which is harmlessly redundant).
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
 
 from go_mailio_diskusage_handler_spark.caching import own_cache
 from go_mailio_diskusage_handler_spark.operators.dedup import (
-    MAX_SHINGLE_DF,
     cap_shingle_df,
+    connected_components,
+    duplicate_clusters,
+    jaccard_pairs_of,
+    ngram_jaccard_pairs,
     novelty_fraction,
     shingles,
+)
+from go_mailio_diskusage_handler_spark.operators.text import (
+    quality_scores,
+    tokens,
+    unigram_logprob_scores,
+    word_ngrams,
 )
 from go_mailio_diskusage_handler_spark.sources.tables import widen_for_compute
 
@@ -168,55 +180,53 @@ EVAL_MAX_DOC_ID = 200  # doc_ids below this are the eval set
 MIN_OVERLAP = 3  # shared shingles that mark a training doc contaminated
 
 
-def contaminated_docs(
-    documents: DataFrame,
-    eval_max_doc_id: int = EVAL_MAX_DOC_ID,
-    min_overlap: int = MIN_OVERLAP,
-    *,
-    sh: DataFrame | None = None,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Training docs sharing ≥ ``min_overlap`` distinct shingles with
-    the eval set (doc_id < ``eval_max_doc_id`` stands in for the
-    benchmark corpus).
-
-    Inverted-index join: explode both sides to (shingle, doc), join on
-    shingle, count per (train, eval) pair, keep any train doc crossing
-    the threshold against ANY eval doc.  The eval side is tiny —
-    Spark broadcasts it; the train side is never self-joined.
-
-    ``max_doc_freq`` (off by default — overlap output is linear, not
-    quadratic) drops corpus-boilerplate shingles before the join: a
-    stopword trigram shared with an eval doc is evidence of nothing,
-    and at scale it is also the skew hot key of the shingle join.
-    """
-    owned: list[DataFrame] = []
-    if sh is None:
-        sh = shingles(documents)
-    if max_doc_freq is not None:
-        from pyspark import StorageLevel
-
-        # The capped table feeds BOTH the train and eval sides; persist
-        # or the explode→df-aggregate→anti-join chain runs twice.
-        sh = cap_shingle_df(sh, max_doc_freq).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        owned.append(sh)
-    train = sh.filter(F.col("doc_id") >= eval_max_doc_id)
-    ev = sh.filter(F.col("doc_id") < eval_max_doc_id).select(
-        F.col("doc_id").alias("eval_doc_id"), "shingle"
-    )
+def _eval_overlaps(train: DataFrame, ev: DataFrame, min_overlap: int) -> DataFrame:
+    """Train docs sharing ≥ ``min_overlap`` shingles with some eval doc
+    → (doc_id, max_overlap, n_eval_docs).  Inverted-index join: the
+    shingle-keyed join counts per (train, eval) pair and keeps any
+    train doc crossing the threshold against ANY eval doc.  The eval
+    side (eval_doc_id, shingle) is tiny — it is broadcast; the train
+    side is never self-joined."""
     overlap = (
         train.join(F.broadcast(ev), "shingle")
         .groupBy("doc_id", "eval_doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
         .filter(F.col("n_overlap") >= min_overlap)
     )
-    out = overlap.groupBy("doc_id").agg(
+    return overlap.groupBy("doc_id").agg(
         F.max("n_overlap").alias("max_overlap"),
         F.count(F.lit(1)).alias("n_eval_docs"),
     )
-    return own_cache(out, *owned)
+
+
+def contamination_of(
+    sh: DataFrame, eval_max_doc_id: int, min_overlap: int
+) -> DataFrame:
+    """:func:`_eval_overlaps` with the shingle table ``sh`` split at
+    ``eval_max_doc_id`` into train and eval sides."""
+    ev = sh.filter(F.col("doc_id") < eval_max_doc_id).select(
+        F.col("doc_id").alias("eval_doc_id"), "shingle"
+    )
+    return _eval_overlaps(
+        sh.filter(F.col("doc_id") >= eval_max_doc_id), ev, min_overlap
+    )
+
+
+def contaminated_docs(
+    documents: DataFrame,
+    eval_max_doc_id: int = EVAL_MAX_DOC_ID,
+    min_overlap: int = MIN_OVERLAP,
+) -> DataFrame:
+    """Training docs sharing ≥ ``min_overlap`` distinct shingles with
+    the eval set (doc_id < ``eval_max_doc_id`` stands in for the
+    benchmark corpus), over the df-capped shingle table: a stopword
+    trigram shared with an eval doc is evidence of nothing, and at
+    scale it is also the skew hot key of the shingle join.
+    """
+    # The capped table feeds BOTH the train and eval sides; persist or
+    # the explode→df-aggregate→anti-join chain runs twice.
+    sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
+    return own_cache(contamination_of(sh, eval_max_doc_id, min_overlap), sh)
 
 
 def sample_weighted(
@@ -256,8 +266,6 @@ def pack_sequences(documents: DataFrame, max_tokens: int = 512) -> DataFrame:
     any partition layout, any scale.  Docs longer than the budget
     still get a bin (they'd be split downstream at tensorization).
     """
-    from go_mailio_diskusage_handler_spark.operators.text import tokens
-
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -291,13 +299,6 @@ def curated_corpus(documents: DataFrame) -> DataFrame:
 
     Output: (doc_id, source, split) for the surviving corpus.
     """
-    from go_mailio_diskusage_handler_spark.operators import text
-    from go_mailio_diskusage_handler_spark.operators.dedup import (
-        duplicate_clusters,
-    )
-
-    from pyspark import StorageLevel
-
     # One shingle table feeds decontamination AND pair generation —
     # df-capped ONCE (boilerplate shingles are noise for both consumers
     # and the scale hot key for either join), then persisted so the
@@ -305,25 +306,23 @@ def curated_corpus(documents: DataFrame) -> DataFrame:
     # intermediate, same shape.  Only the capped table is persisted —
     # see ngram_jaccard_pairs: re-running the explode for the cap's two
     # single-pass inputs beats a second storage materialization.
-    sh = cap_shingle_df(shingles(documents), MAX_SHINGLE_DF).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
     quality_ok = (
-        text.quality_scores(documents)
+        quality_scores(documents)
         .filter(
             (F.col("distinct_ratio") >= CURATED_MIN_DISTINCT_RATIO)
             & (F.col("n_tokens") >= CURATED_MIN_TOKENS)
         )
         .select("doc_id")
     )
-    contaminated = contaminated_docs(documents, sh=sh).select("doc_id")
+    contaminated = contamination_of(sh, EVAL_MAX_DOC_ID, MIN_OVERLAP).select(
+        "doc_id"
+    )
+    clusters, _ = connected_components(
+        jaccard_pairs_of(sh, CURATED_DUP_THRESHOLD).select("doc_a", "doc_b")
+    )
     dup_losers = (
-        # sh is already df-capped above; max_doc_freq=None avoids a
-        # second (no-op) cap pass inside the pair generator.
-        duplicate_clusters(
-            documents, CURATED_DUP_THRESHOLD, sh=sh, max_doc_freq=None
-        )
-        .filter(F.col("doc_id") != F.col("cluster_id"))
+        clusters.filter(F.col("doc_id") != F.col("cluster_id"))
         .select("doc_id")
     )
     kept = (
@@ -352,11 +351,7 @@ def keep_best_per_cluster(documents, threshold: float = 0.6):
     ``dedup.duplicate_clusters`` (unconverged clusters raise rather
     than silently electing a wrong keeper).
     """
-    from pyspark.sql import functions as F
-
-    from go_mailio_diskusage_handler_spark.operators import dedup
-
-    clusters = dedup.duplicate_clusters(documents, threshold)
+    clusters = duplicate_clusters(documents, threshold)
     members = clusters.join(
         documents.select("doc_id", "n_chars"), "doc_id"
     )
@@ -521,16 +516,7 @@ def bloom_prefiltered_contamination(
         F.col("doc_id").alias("eval_doc_id"), "shingle"
     )
     train = bloom_shingle_filter(sh.filter(F.col("doc_id") >= eval_max_doc_id), ev)
-    overlap = (
-        train.join(F.broadcast(ev), "shingle")
-        .groupBy("doc_id", "eval_doc_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .filter(F.col("n_overlap") >= min_overlap)
-    )
-    return overlap.groupBy("doc_id").agg(
-        F.max("n_overlap").alias("max_overlap"),
-        F.count(F.lit(1)).alias("n_eval_docs"),
-    )
+    return _eval_overlaps(train, ev, min_overlap)
 
 
 QUALITY_GATE_PCT = 0.25
@@ -564,7 +550,7 @@ def adaptive_quality_gate(documents: DataFrame) -> DataFrame:
     The oracle states the same result as the window form (cume_dist >
     QUALITY_GATE_PCT), asserting the histogram path implements it exactly.
     """
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     q = F.round(F.size(F.array_distinct(toks)) / F.size(toks), 4)
     base = documents.select("doc_id", "source", q.alias("q"))
     hist = base.groupBy("source", "q").agg(F.count(F.lit(1)).alias("n"))
@@ -629,7 +615,7 @@ def shard_manifest(documents: DataFrame) -> DataFrame:
         documents.select(
             (h % N_SHARDS).alias("shard_id"),
             F.expr(doc_sum).cast("long").alias("doc_digest"),
-            F.size(F.split(F.col("text"), " ")).alias("n_toks"),
+            F.size(tokens()).alias("n_toks"),
         )
         .groupBy("shard_id")
         .agg(
@@ -661,12 +647,6 @@ def corpus_dedup_report(documents: DataFrame) -> DataFrame:
     pipeline; its lifetime transfers to the returned frame
     (``own_cache``, same contract as curated_corpus).
     """
-    from pyspark import StorageLevel
-
-    from go_mailio_diskusage_handler_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
     docs = documents.select(*documents.columns).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -938,9 +918,7 @@ def _hashed_gram_buckets():
     split buckets).  At 100 TB you would widen to the public DSIR
     default (10k buckets); the shape is unchanged.
     """
-    from go_mailio_diskusage_handler_spark.operators.text import word_ngrams
-
-    w = F.split(F.col("text"), " ")
+    w = tokens()
     grams = F.concat(w, word_ngrams(w, 2))
     bucket = (
         F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10).cast("long")
@@ -979,8 +957,6 @@ def dsir_importance_weights(documents: DataFrame) -> DataFrame:
     Scores round to 4 digits: group-sum order varies between engines
     at the last ulp (same convention as ``unigram_logprob_scores``).
     """
-    from pyspark import StorageLevel
-
     grams, bucket = _hashed_gram_buckets()
     # md5-per-gram is the dominant cost and sits below the first
     # shuffle — widen a single-split local scan so it parallelizes
@@ -1067,10 +1043,6 @@ def perplexity_buckets(documents: DataFrame) -> DataFrame:
     narrow filter on the same tokenizer expression (no join, no second
     pass over the LM pipeline).
     """
-    from pyspark import StorageLevel
-
-    from .text import tokens as text_tokens, unigram_logprob_scores
-
     # The scored table feeds BOTH the histogram and the final
     # composition join; persist it so the two-shuffle LM pipeline
     # (token explode + freq join) runs once, with lifetime tied to the
@@ -1112,7 +1084,7 @@ def perplexity_buckets(documents: DataFrame) -> DataFrame:
     # tokenizer).  A narrow filter on the same expression — cheaper
     # than an anti-join against the corpus-sized score table, and
     # exact by explode's semantics.
-    toks = text_tokens()
+    toks = tokens()
     unscored = (
         documents.filter(toks.isNull() | (F.size(toks) == 0))
         .groupBy("lang")

@@ -23,7 +23,8 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from go_mailio_diskusage_handler_spark.caching import own_cache
 from go_mailio_diskusage_handler_spark.operators import text
@@ -53,7 +54,7 @@ def shingles(documents: DataFrame) -> DataFrame:
     mirrored by the oracle's ``len(t) >= 3`` guard).  The trigrams are
     ``text.word_ngrams``, linear in tokens per row.
     """
-    toks = F.split(F.col("text"), " ")
+    toks = text.tokens()
     sh = text.word_ngrams(toks, SHINGLE_N)
     return (
         widen_for_compute(documents)
@@ -82,12 +83,70 @@ def cap_shingle_df(sh: DataFrame, max_doc_freq: int = MAX_SHINGLE_DF) -> DataFra
     return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"h{j}")
-        for j in range(N_HASHES)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+def jaccard(inter: Column, n_a: Column, n_b: Column) -> Column:
+    """Set Jaccard from the intersection and the two set sizes, rounded
+    at 4 — the score every Jaccard tier and its oracle compare."""
+    return F.round(inter / (n_a + n_b - inter), 4)
+
+
+def _with_set_sizes(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter) → (doc_a, doc_b, inter, n_a, n_b): each
+    side's shingle-set size joined on."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    return (
+        inter.join(sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id"))
+        .join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "inter",
+            F.col("za.n_shingles").alias("n_a"),
+            F.col("zb.n_shingles").alias("n_b"),
+        )
+    )
+
+
+def shingle_overlaps(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter, n_a, n_b) for every pair (a < b) sharing
+    ≥ 1 shingle of ``sh``.  One shuffle-join + one aggregation:
+    intersection sizes fall out of the shared-shingle join directly (no
+    distinct-pairs + re-join).  The join is quadratic only inside one
+    shingle's document group, which :func:`cap_shingle_df` bounds."""
+    inter = (
+        sh.alias("x")
+        .join(
+            sh.alias("y"),
+            (F.col("x.shingle") == F.col("y.shingle"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .groupBy(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return _with_set_sizes(inter, sh)
+
+
+def _minhash_index(documents: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(shingles, signatures), both persisted MEMORY_AND_DISK (spills,
+    never OOMs) — the front end of every MinHash operator.
+
+    The shingle table feeds four consumers (signatures, both sides of
+    the verification join, set sizes); without persistence Spark
+    re-runs the scan+shingle subplan for each — measured 2× end-to-end
+    at sf0.1.  Signatures feed BOTH sides of the band self-join (no
+    exchange reuse there); persisting the pair computes each once —
+    measured 2.4× end-to-end at sf0.1 on top of the shingle cache.
+    This is also the 100 TB deployment shape: shingles/signatures are
+    written as intermediate tables there, not recomputed per stage.
+    The caller owns both caches (``own_cache``).
+    """
+    sh = shingles(documents).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"h{j}")
+            for j in range(N_HASHES)
+        ]
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return sh, sigs
 
 
 def _band_key(b: int):
@@ -95,9 +154,10 @@ def _band_key(b: int):
     return F.md5(F.concat_ws("|", *cols))
 
 
-def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
-    """Band-bucket self-join → distinct candidate pairs (a < b)."""
-    bands = signatures.select(
+def band_rows(sigs: DataFrame) -> DataFrame:
+    """Signatures → one (doc_id, band_idx, band_key) row per band — the
+    storable LSH index layout."""
+    return sigs.select(
         "doc_id",
         F.explode(
             F.array(
@@ -110,7 +170,13 @@ def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
             )
         ).alias("band"),
     ).select("doc_id", "band.band_idx", "band.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
+
+
+def lsh_candidate_pairs(index: DataFrame, probe: DataFrame) -> DataFrame:
+    """Band-bucket join of two :func:`band_rows` tables → distinct
+    candidate pairs (doc_a from ``index``, doc_b from ``probe``,
+    a < b).  The full-corpus dedup probes the index with itself."""
+    a, b = index.alias("a"), probe.alias("b")
     return (
         a.join(
             b,
@@ -125,7 +191,6 @@ def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
 
 def jaccard_for_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for given (doc_a, doc_b) pairs."""
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
         pairs.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
         .join(
@@ -136,110 +201,50 @@ def jaccard_for_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return (
-        inter.join(sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id"))
-        .join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("inter")
-                / (F.col("za.n_shingles") + F.col("zb.n_shingles") - F.col("inter")),
-                4,
-            ).alias("jaccard"),
-        )
+    return _with_set_sizes(inter, sh).select(
+        "doc_a", "doc_b", jaccard(F.col("inter"), F.col("n_a"), F.col("n_b")).alias("jaccard")
     )
 
 
 def minhash_dedup_pairs(documents: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """MinHash→LSH→exact-verify near-dup pairs with Jaccard ≥ threshold.
-
-    The shingle table feeds four consumers (signatures, both sides of
-    the verification join, set sizes); without persistence Spark
-    re-runs the scan+shingle subplan for each — measured 2× end-to-end
-    at sf0.1.  It is persisted once
-    (MEMORY_AND_DISK — spills, never OOMs), which is also the 100 TB
-    deployment shape: shingles/signatures are written as intermediate
-    tables there, not recomputed per stage.
-    """
-    from pyspark import StorageLevel
-
-    # Signatures feed BOTH sides of the band self-join (no exchange
-    # reuse there), shingles feed signatures + both verification
-    # sides + sizes; persisting the pair computes each once —
-    # measured 2.4× end-to-end at sf0.1 on top of the shingle cache.
-    sh = shingles(documents).persist(StorageLevel.MEMORY_AND_DISK)
-    sigs = _signatures_from_shingles(sh).persist(StorageLevel.MEMORY_AND_DISK)
-    cands = lsh_candidate_pairs(sigs)
+    """MinHash→LSH→exact-verify near-dup pairs with Jaccard ≥ threshold."""
+    sh, sigs = _minhash_index(documents)
+    bands = band_rows(sigs)
+    cands = lsh_candidate_pairs(bands, bands)
     out = jaccard_for_pairs(cands, sh).filter(F.col("jaccard") >= threshold)
     return own_cache(out, sh, sigs)
 
 
-def ngram_jaccard_pairs(
-    documents: DataFrame,
-    threshold: float = 0.6,
-    *,
-    sh: DataFrame | None = None,
-    max_doc_freq: int | None = MAX_SHINGLE_DF,
-) -> DataFrame:
-    """Exact n-gram Jaccard over pairs sharing ≥ 1 shingle.
-
-    The shared-shingle join bounds the pair set far under n² — as long
-    as no single shingle is corpus-frequent, which ``max_doc_freq``
-    enforces (:func:`cap_shingle_df`; ``None`` disables, callers that
-    pre-capped pass ``None``).  The shingle table is persisted as in
-    :func:`minhash_dedup_pairs` (three consumers here).  Callers that
-    already hold a (persisted) shingle table pass it via ``sh`` so
-    composite pipelines explode the corpus once.
-    """
-    from pyspark import StorageLevel
-
-    owned: list[DataFrame] = []
-    if sh is None:
-        sh = shingles(documents)
-        if max_doc_freq is None:
-            sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-            owned.append(sh)
-    if max_doc_freq is not None:
-        # Persist the CAPPED table only — it is the one with three
-        # consumers (sizes + both self-join sides).  Persisting the
-        # raw table as well materializes the corpus explode twice
-        # for no reuse win: the raw table's two consumers (the df
-        # aggregate and the anti-join probe) are each single-pass,
-        # and re-running the explode is cheaper than a second
-        # storage materialization (A/B at sf0.1: 2.1 s vs 2.5-3 s).
-        sh = cap_shingle_df(sh, max_doc_freq).persist(StorageLevel.MEMORY_AND_DISK)
-        owned.append(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    # One shuffle-join + one aggregation: intersection sizes fall out of
-    # the shared-shingle join directly (no distinct-pairs + re-join).
-    inter = (
-        sh.alias("x")
-        .join(
-            sh.alias("y"),
-            (F.col("x.shingle") == F.col("y.shingle"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        inter.join(sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id"))
-        .join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
+def jaccard_pairs_of(sh: DataFrame, threshold: float) -> DataFrame:
+    """Exact n-gram Jaccard ≥ ``threshold`` over the pairs sharing ≥ 1
+    shingle of ``sh``.  The shared-shingle join bounds the pair set far
+    under n² as long as no single shingle is corpus-frequent: pass a
+    :func:`cap_shingle_df` table.  Composite pipelines pass the one
+    shingle table they hold, so the corpus is exploded once."""
+    return (
+        shingle_overlaps(sh)
         .select(
             "doc_a",
             "doc_b",
-            F.round(
-                F.col("inter")
-                / (F.col("za.n_shingles") + F.col("zb.n_shingles") - F.col("inter")),
-                4,
-            ).alias("jaccard"),
+            jaccard(F.col("inter"), F.col("n_a"), F.col("n_b")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return own_cache(out, *owned)
+
+
+def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.6) -> DataFrame:
+    """:func:`jaccard_pairs_of` over the corpus's df-capped shingles.
+
+    Only the CAPPED table is persisted — it is the one with three
+    consumers (sizes + both self-join sides).  Persisting the raw table
+    as well materializes the corpus explode twice for no reuse win: the
+    raw table's two consumers (the df aggregate and the anti-join
+    probe) are each single-pass, and re-running the explode is cheaper
+    than a second storage materialization (A/B at sf0.1: 2.1 s vs
+    2.5-3 s).
+    """
+    sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
+    return own_cache(jaccard_pairs_of(sh, threshold), sh)
 
 
 # ---------------------------------------------------------------------------
@@ -266,7 +271,7 @@ def simhash_values(documents: DataFrame) -> DataFrame:
     aggregation collapses the explode before the shuffle).
     """
     toks = widen_for_compute(documents).select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
+        "doc_id", F.explode(text.tokens()).alias("token")
     )
     nibbles = toks.select(
         "doc_id",
@@ -309,8 +314,6 @@ def simhash_dedup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame
     does NOT reuse the exchange there (different join-key columns per
     side) — persisting computes the 60-bit signatures once.
     """
-    from pyspark import StorageLevel
-
     sims = simhash_values(documents).persist(StorageLevel.MEMORY_AND_DISK)
     blocks = sims.select(
         "doc_id",
@@ -354,25 +357,6 @@ def simhash_dedup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def band_rows(sigs: DataFrame) -> DataFrame:
-    """Signatures → one (doc_id, band_idx, band_key) row per band —
-    the storable LSH index layout shared by the batch incremental
-    dedup and the streaming ingest twin."""
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"), _band_key(b).alias("band_key")
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_idx", "band.band_key")
-
-
 def incremental_minhash_pairs(
     documents: DataFrame,
     batch_min_doc_id: int,
@@ -398,22 +382,10 @@ def incremental_minhash_pairs(
     the full dedup would find nothing new — the invariant the
     incremental form must preserve.
     """
-    from pyspark import StorageLevel
-
-    sh = shingles(documents).persist(StorageLevel.MEMORY_AND_DISK)
-    sigs = _signatures_from_shingles(sh).persist(StorageLevel.MEMORY_AND_DISK)
-    bands = band_rows(sigs)
-    index_side = bands.alias("a")  # full corpus: the stored band index
-    probe_side = bands.filter(F.col("doc_id") >= batch_min_doc_id).alias("b")
-    cands = (
-        index_side.join(
-            probe_side,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    sh, sigs = _minhash_index(documents)
+    bands = band_rows(sigs)  # full corpus: the stored band index
+    cands = lsh_candidate_pairs(
+        bands, bands.filter(F.col("doc_id") >= batch_min_doc_id)
     )
     out = jaccard_for_pairs(cands, sh).filter(F.col("jaccard") >= threshold)
     return own_cache(out, sh, sigs)
@@ -550,13 +522,7 @@ def connected_components(
     )
 
 
-def duplicate_clusters(
-    documents: DataFrame,
-    threshold: float = 0.6,
-    *,
-    sh: DataFrame | None = None,
-    max_doc_freq: int | None = MAX_SHINGLE_DF,
-) -> DataFrame:
+def duplicate_clusters(documents: DataFrame, threshold: float = 0.6) -> DataFrame:
     """Group near-duplicate documents into clusters: connected
     components over the exact-Jaccard pair graph, labeled by the
     smallest doc_id in each component — the step after pair
@@ -576,11 +542,8 @@ def duplicate_clusters(
     # shingle cache lives through the eager CC loop and is released
     # exactly at function exit — the loop's checkpoints make the
     # returned labels independent of it.
-    pair_src = ngram_jaccard_pairs(
-        documents, threshold, sh=sh, max_doc_freq=max_doc_freq
-    )
-    pairs = pair_src.select("doc_a", "doc_b")
-    labels, _ = connected_components(pairs)
+    pair_src = ngram_jaccard_pairs(documents, threshold)
+    labels, _ = connected_components(pair_src.select("doc_a", "doc_b"))
     return labels
 
 
@@ -599,37 +562,21 @@ def ngram_containment_pairs(documents: DataFrame, threshold: float = 0.8) -> Dat
     and emits 0-2 directed rows via an array-filter-explode — no
     second join, no union re-scan.
     """
-    from pyspark import StorageLevel
-
     sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    inter = (
-        sh.alias("x")
-        .join(
-            sh.alias("y"),
-            (F.col("x.shingle") == F.col("y.shingle"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    both = inter.join(
-        sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id")
-    ).join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
     directed = F.array(
         F.struct(
             F.col("doc_a").alias("doc_src"),
             F.col("doc_b").alias("doc_dst"),
-            (F.col("inter") / F.col("za.n_shingles")).alias("c"),
+            (F.col("inter") / F.col("n_a")).alias("c"),
         ),
         F.struct(
             F.col("doc_b").alias("doc_src"),
             F.col("doc_a").alias("doc_dst"),
-            (F.col("inter") / F.col("zb.n_shingles")).alias("c"),
+            (F.col("inter") / F.col("n_b")).alias("c"),
         ),
     )
     out = (
-        both.select(
+        shingle_overlaps(sh).select(
             F.explode(
                 F.filter(directed, lambda s: s["c"] >= F.lit(threshold))
             ).alias("p")
@@ -690,6 +637,62 @@ SPAN_N = 8  # word n-gram length of the exact-span and novelty tiers
 SPAN_MIN_DOCS = 2  # a span is duplicated once this many documents hold it
 
 
+def span_grams(n: int) -> Column:
+    """Space-joined word ``n``-grams of the projected token column
+    ``t``, one per start position — the gram form of the span and
+    novelty tiers and of their oracles.  Callers guard rows with fewer
+    than ``n`` tokens (``sequence`` would count down).
+
+    Deliberately not :func:`text.word_ngrams`: at n = 8 its
+    shifted-slice ``zip_with`` re-concatenates growing prefixes, and it
+    made the span coverage, span trim, incremental novelty and novelty
+    gate queries 8-28% slower at sf0.1 (4-core box).  Here ``t`` is a
+    projected column, so the per-element reference inside the lambda
+    is cheap (unlike a ``split`` expression, which would re-evaluate
+    per element).
+    """
+    return F.expr(
+        f"transform(sequence(1, size(t) - {n - 1}), "
+        f"i -> concat_ws(' ', slice(t, i, {n})))"
+    )
+
+
+def duplicated_span_positions(base: DataFrame, n: int) -> DataFrame:
+    """Distinct (doc_id, p): the 1-based token positions of ``base``
+    (doc_id, t, n_words) covered by a word ``n``-gram that occurs in
+    ≥ ``SPAN_MIN_DOCS`` distinct documents.
+
+    One row per gram occurrence (posexplode — linear in corpus
+    tokens), ONE shuffle on the gram string for the doc-frequency
+    aggregate (partial map-side combine makes the exchange
+    vocabulary×tasks-bounded); the duplicated-gram set joins back on
+    the same key (Catalyst reuses the exchange — at production scale
+    the gram string would be xxhash64-compressed to a fixed 8-byte join
+    key, kept raw here for bit-exact oracle parity); each surviving
+    occurrence explodes into its ``n`` positions, bounded by n× the
+    DUPLICATED occurrences only, not the corpus.
+    """
+    grams = F.when(F.col("n_words") >= n, span_grams(n)).otherwise(
+        F.array().cast("array<string>")
+    )
+    occ = base.select("doc_id", F.posexplode(grams).alias("idx", "g"))
+    dup_grams = (
+        occ.groupBy("g")
+        .agg(F.count_distinct("doc_id").alias("df"))
+        .filter(F.col("df") >= SPAN_MIN_DOCS)
+        .select("g")
+    )
+    return (
+        occ.join(dup_grams, "g")
+        .select(
+            "doc_id",
+            # posexplode idx is 0-based; token positions are 1-based
+            F.explode(F.expr(f"sequence(idx + 1, idx + {n})")).alias("p"),
+        )
+        .distinct()
+    )
+
+
 def duplicated_span_coverage(documents: DataFrame) -> DataFrame:
     """Exact duplicated-substring coverage — the distributed analog of
     suffix-array exact-substring dedup (Lee et al. 2022, "Deduplicating
@@ -701,49 +704,17 @@ def duplicated_span_coverage(documents: DataFrame) -> DataFrame:
     verbatim quotations inside otherwise-unique documents.
 
     Plan shape at 100 TB (suffix arrays don't distribute; n-gram
-    inversion does):
-
-    * one row per n-gram occurrence (posexplode — linear in corpus
-      tokens), ONE shuffle on the gram string for the doc-frequency
-      aggregate (partial map-side combine makes the exchange
-      vocabulary×tasks-bounded);
-    * the duplicated-gram set semi-joins back against occurrences on
-      the same key — Catalyst reuses the exchange, and at production
-      scale the gram string would be xxhash64-compressed to a fixed
-      8-byte join key (kept as the raw string here for bit-exact
-      oracle parity);
-    * coverage union = explode each surviving occurrence into its
-      SPAN_N covered positions, distinct, count — bounded by SPAN_N×
-      the DUPLICATED occurrences only, not the corpus.
+    inversion does): :func:`duplicated_span_positions`, then one count
+    per document.
 
     Output: (doc_id, n_words, covered_tokens, dup_span_frac), one row
     per document including zero-coverage ones.
     """
-    base = documents.select(
-        "doc_id",
-        F.split(F.col("text"), " ").alias("t"),
-    ).select("doc_id", "t", F.size("t").alias("n_words"))
-    gram_arr = F.when(
-        F.col("n_words") >= SPAN_N,
-        F.expr(
-            f"transform(sequence(1, size(t) - {SPAN_N - 1}), "
-            f"i -> concat_ws(' ', slice(t, i, {SPAN_N})))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    occ = base.select("doc_id", F.posexplode(gram_arr).alias("idx", "g"))
-    dup_grams = (
-        occ.groupBy("g")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .filter(F.col("df") >= SPAN_MIN_DOCS)
-        .select("g")
+    base = documents.select("doc_id", text.tokens().alias("t")).select(
+        "doc_id", "t", F.size("t").alias("n_words")
     )
     covered = (
-        occ.join(dup_grams, "g")
-        .select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(idx, idx + {SPAN_N - 1})")).alias("p"),
-        )
-        .distinct()
+        duplicated_span_positions(base, SPAN_N)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("covered"))
     )
@@ -793,8 +764,6 @@ def prefix_filter_jaccard_pairs(
 
     fr = Fraction(str(threshold))
     a, b = fr.numerator, fr.denominator
-    from pyspark import StorageLevel
-
     sh = shingles(documents).persist(StorageLevel.MEMORY_AND_DISK)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy(
@@ -879,10 +848,7 @@ def prefix_filter_jaccard_pairs(
         .select(
             "doc_a",
             "doc_b",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-                4,
-            ).alias("jaccard"),
+            jaccard(F.col("inter"), F.col("n_a"), F.col("n_b")).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -993,11 +959,9 @@ def minhash_estimate_quality(documents: DataFrame) -> DataFrame:
     verify) plus one signature re-join for the agreement count; the
     whole report is candidate-bounded, never all-pairs.
     """
-    from pyspark import StorageLevel
-
-    sh = shingles(documents).persist(StorageLevel.MEMORY_AND_DISK)
-    sigs = _signatures_from_shingles(sh).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = lsh_candidate_pairs(sigs)
+    sh, sigs = _minhash_index(documents)
+    bands = band_rows(sigs)
+    cand = lsh_candidate_pairs(bands, bands)
     agree = None
     for j in range(N_HASHES):
         t = (F.col(f"sa.h{j}") == F.col(f"sb.h{j}")).cast("int")
@@ -1094,13 +1058,8 @@ def trim_duplicated_spans(documents: DataFrame, n: int = SPAN_N) -> DataFrame:
     scan (a ``transform(sequence(...), i -> array_contains(cov, i))``
     flag build is O(len·|cov|) per document, quadratic on long docs):
 
-    * gram inversion identical to the coverage operator: posexplode
-      (corpus-linear) + ONE vocabulary-bounded shuffle for the
-      document-frequency aggregate, exchange reused by the
-      duplicated-gram semi-join;
-    * covered positions = explode surviving occurrences into their
-      ``n`` positions, distinct — bounded by n× the DUPLICATED
-      occurrences only;
+    * covered positions: :func:`duplicated_span_positions`, the
+      coverage operator's gram inversion;
     * the rewrite is a positional LEFT ANTI join of the token table
       against covered positions (both shuffled on (doc_id, p) — AQE
       co-partitions) and one groupBy(doc_id) reassembly via
@@ -1119,29 +1078,7 @@ def trim_duplicated_spans(documents: DataFrame, n: int = SPAN_N) -> DataFrame:
         "doc_id",
         F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("t"),
     ).select("doc_id", "t", F.size("t").alias("n_words"))
-    gram_arr = F.when(
-        F.col("n_words") >= n,
-        F.expr(
-            f"transform(sequence(1, size(t) - {n - 1}), "
-            f"i -> concat_ws(' ', slice(t, i, {n})))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    occ = base.select("doc_id", F.posexplode(gram_arr).alias("idx", "g"))
-    dup_grams = (
-        occ.groupBy("g")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .filter(F.col("df") >= SPAN_MIN_DOCS)
-        .select("g")
-    )
-    covered = (
-        occ.join(dup_grams, "g")
-        .select(
-            "doc_id",
-            # posexplode idx is 0-based; token positions are 1-based
-            F.explode(F.expr(f"sequence(idx + 1, idx + {n})")).alias("p"),
-        )
-        .distinct()
-    )
+    covered = duplicated_span_positions(base, n)
     toks_pos = base.select(
         "doc_id", F.posexplode(F.col("t")).alias("i0", "tok")
     ).select("doc_id", (F.col("i0") + 1).alias("p"), "tok")
@@ -1205,8 +1142,6 @@ def weighted_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> Data
     zero-weight denominator (both docs entirely df=N shingles) is
     filtered, not divided.
     """
-    from pyspark import StorageLevel
-
     # NOT restructured to a single shared df aggregate (r16, verdict
     # item 4 tried and REVERTED): replacing cap_shingle_df's tiny-hot-
     # set broadcast anti-join + cached-table df re-aggregate with ONE
@@ -1275,14 +1210,36 @@ def gram_occurrences(documents: DataFrame, n: int) -> DataFrame:
         "doc_id",
         F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("t"),
     )
-    gram_arr = F.expr(
-        f"transform(sequence(1, size(t) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(t, i, {n})))"
-    )
     return (
         toks.filter(F.size("t") >= n)
-        .select("doc_id", F.explode(gram_arr).alias("g"))
+        .select("doc_id", F.explode(span_grams(n)).alias("g"))
         .distinct()
+    )
+
+
+def _novelty_rollup(owners: DataFrame) -> DataFrame:
+    """Distinct (doc_id, g) occurrences with their gram's ``first_doc``
+    → (doc_id, n_grams, novel_grams, novel_frac): a document owns the
+    grams whose first owner it is.  ``novel_frac`` is an exact int/int
+    double division — bit-identical across engines, no rounding
+    needed."""
+    return (
+        owners.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_grams"),
+            F.sum(
+                F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
+            ).alias("novel_grams"),
+        )
+        .select(
+            "doc_id",
+            F.col("n_grams").cast("bigint").alias("n_grams"),
+            F.col("novel_grams").cast("bigint").alias("novel_grams"),
+            (
+                F.col("novel_grams").cast("double")
+                / F.col("n_grams").cast("double")
+            ).alias("novel_frac"),
+        )
     )
 
 
@@ -1315,8 +1272,6 @@ def novelty_fraction(documents: DataFrame) -> DataFrame:
     int/int double division — bit-identical across engines, no
     rounding needed.
     """
-    from pyspark import StorageLevel
-
     occ = (
         gram_occurrences(documents, SPAN_N)
         # two consumers (the MIN aggregate and the join-back probe)
@@ -1328,26 +1283,7 @@ def novelty_fraction(documents: DataFrame) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     first = occ.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
-    out = (
-        occ.join(first, "g")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(
-                F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
-            ).alias("novel_grams"),
-        )
-        .select(
-            "doc_id",
-            F.col("n_grams").cast("bigint").alias("n_grams"),
-            F.col("novel_grams").cast("bigint").alias("novel_grams"),
-            (
-                F.col("novel_grams").cast("double")
-                / F.col("n_grams").cast("double")
-            ).alias("novel_frac"),
-        )
-    )
-    return own_cache(out, occ)
+    return own_cache(_novelty_rollup(occ.join(first, "g")), occ)
 
 
 HISTORY_FRAC = 0.8
@@ -1382,8 +1318,6 @@ def novelty_fraction_incremental(documents: DataFrame) -> DataFrame:
     DuckDB rounds double→int casts while Spark truncates — FLOOR is
     exact in both).
     """
-    from pyspark import StorageLevel
-
     occ = gram_occurrences(documents, SPAN_N)
     split = documents.agg(
         F.floor(F.lit(HISTORY_FRAC) * F.max("doc_id")).alias("split_id")
@@ -1402,23 +1336,5 @@ def novelty_fraction_incremental(documents: DataFrame) -> DataFrame:
     first_in_batch = fresh.groupBy("g").agg(
         F.min("doc_id").alias("first_doc")
     )
-    out = (
-        batch.join(first_in_batch, "g", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(
-                F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
-            ).alias("novel_grams"),
-        )
-        .select(
-            "doc_id",
-            F.col("n_grams").cast("bigint").alias("n_grams"),
-            F.col("novel_grams").cast("bigint").alias("novel_grams"),
-            (
-                F.col("novel_grams").cast("double")
-                / F.col("n_grams").cast("double")
-            ).alias("novel_frac"),
-        )
-    )
+    out = _novelty_rollup(batch.join(first_in_batch, "g", "left"))
     return own_cache(out, hist_index, batch)

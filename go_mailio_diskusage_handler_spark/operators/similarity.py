@@ -11,10 +11,11 @@ Two tiers, per the large-scale pipeline blueprint:
 * **LSH-bucketed ANN** — the 100 TB path.  Random-hyperplane signs
   (SimHash-for-vectors) bucket each vector once; queries probe only
   their bucket, turning O(N·Q) into O(N/2^p·Q).  Hyperplanes use
-  small-integer components derived from a public formula
-  (``(p*31 + c*17) mod 7 - 3``) so dot-product signs are exactly
-  reproducible in the DuckDB oracle (float×int in double is exact —
-  no libm, no RNG state).
+  small-integer components in [-3, 3] derived from md5 (see
+  :func:`hyperplane`), computed once in Python and embedded as
+  literals in both the Spark plan and the DuckDB oracle, so
+  dot-product signs are exactly reproducible (float×int in double is
+  exact — no libm, no RNG state).
 
 Cross-engine determinism: both engines fold the element-wise product
 list left-to-right in double precision → bitwise-identical cosines;
@@ -32,6 +33,7 @@ analog of the production twin's materialized index table.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from go_mailio_diskusage_handler_spark.caching import own_cache
@@ -146,6 +148,26 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def rounded_cosine(a: Column, a_nrm: Column, b: Column, b_nrm: Column) -> Column:
+    """6-digit-rounded cosine from norms hoisted to one computation per
+    VECTOR, so per pair only the cross dot product remains (3 array
+    folds → 1).  Same expression tree as :func:`cosine` —
+    bitwise-identical doubles, so the round can't diverge."""
+    return F.round(dot(a, b) / (a_nrm * b_nrm), 6)
+
+
+def top_per_query(
+    scored: DataFrame, k: int, *order: Column, rank: str = "rank"
+) -> DataFrame:
+    """The first ``k`` rows of each ``query_id`` in ``order``, numbered
+    from 1 in column ``rank``.  ``row_number`` needs a total order for
+    a stable cut, so every caller ends ``order`` with an id."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.select("*", F.row_number().over(w).alias(rank)).filter(
+        F.col(rank) <= k
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame, n_queries: int = 8, k: int = 10
 ) -> DataFrame:
@@ -166,29 +188,16 @@ def brute_force_topk(
         F.col("embedding").alias("n_emb"),
         l2_norm(F.col("embedding")).alias("n_nrm"),
     )
-    # Norms are hoisted to one computation per VECTOR before the join;
-    # per pair only the cross dot product remains (3 array folds → 1).
-    # dot/(q_nrm*n_nrm) is the same expression tree as cosine() —
-    # bitwise-identical doubles, so the 6-digit round can't diverge.
-    scored = (
-        e.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_emb"), F.col("n_emb"))
-                / (F.col("q_nrm") * F.col("n_nrm")),
-                6,
-            ).alias("cos_sim"),
-        )
+    scored = e.join(
+        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
+    ).select(
+        "query_id",
+        "neighbor_id",
+        rounded_cosine(
+            F.col("q_emb"), F.col("q_nrm"), F.col("n_emb"), F.col("n_nrm")
+        ).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-    )
+    return top_per_query(scored, k, F.desc("cos_sim"), F.asc("neighbor_id"))
 
 
 def filtered_topk(
@@ -231,20 +240,12 @@ def filtered_topk(
             "query_id",
             "neighbor_id",
             "label",
-            F.round(
-                dot(F.col("q_emb"), F.col("n_emb"))
-                / (F.col("q_nrm") * F.col("n_nrm")),
-                6,
+            rounded_cosine(
+                F.col("q_emb"), F.col("q_nrm"), F.col("n_emb"), F.col("n_nrm")
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-    )
+    return top_per_query(scored, k, F.desc("cos_sim"), F.asc("neighbor_id"))
 
 
 def hyperplane(p: int) -> list[float]:
@@ -399,19 +400,13 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 5) -> DataF
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("q_nrm") * F.col("nrm")),
-                6,
+            rounded_cosine(
+                F.col("q_emb"), F.col("q_nrm"), F.col("embedding"), F.col("nrm")
             ).alias("cos_sim"),
         )
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-    )
+    return top_per_query(scored, k, F.desc("cos_sim"), F.asc("neighbor_id"))
 
 
 N_CENTROIDS = 16
@@ -463,7 +458,7 @@ def _best_lists(emb_col: Column, nrm_col: Column, codebook: Column, n: int) -> C
     scored = F.transform(
         codebook,
         lambda c, i: F.struct(
-            F.round(dot(emb_col, c) / (nrm_col * l2_norm(c)), 6).alias("cs"),
+            rounded_cosine(emb_col, nrm_col, c, l2_norm(c)).alias("cs"),
             (-i).alias("ncid"),
         ),
     )
@@ -509,8 +504,6 @@ def ivf_ann_topk(
         nrm.alias("nrm"),
         _best_lists(F.col("embedding"), nrm, cents, N_PROBE).alias("lists"),
     )
-    from pyspark import StorageLevel
-
     # Corpus and probes both execute this subplan; persisting runs the
     # heavy codebook scoring once (3.9× at sf0.1) — and mirrors the
     # production shape, where list assignments are written out with the
@@ -541,18 +534,12 @@ def ivf_ann_topk(
         .select(
             "query_id",
             F.col("c.vec_id").alias("neighbor_id"),
-            F.round(
-                dot(F.col("p.q_emb"), F.col("c.embedding"))
-                / (F.col("p.q_nrm") * F.col("c.nrm")),
-                6,
+            rounded_cosine(
+                F.col("p.q_emb"), F.col("p.q_nrm"), F.col("c.embedding"), F.col("c.nrm")
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    out = (
-        scored.select("*", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= k)
-    )
+    out = top_per_query(scored, k, F.desc("cos_sim"), F.asc("neighbor_id"))
     return own_cache(out, scored_corpus)
 
 
@@ -581,8 +568,6 @@ def embedding_near_dup_pairs(
     per vector) feeds both sides of the self-join and Spark does not
     reuse the exchange — persisting computes it once (measured 9× at
     sf0.1)."""
-    from pyspark import StorageLevel
-
     withb = widen_for_compute(embeddings).select(
         "vec_id",
         "embedding",
@@ -624,10 +609,8 @@ def embedding_near_dup_pairs(
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(
-                dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (F.col("a.nrm") * F.col("b.nrm")),
-                6,
+            rounded_cosine(
+                F.col("a.embedding"), F.col("a.nrm"), F.col("b.embedding"), F.col("b.nrm")
             ).alias("cos_sim"),
         )
         .distinct()
@@ -732,12 +715,7 @@ def pq_ann_topk(embeddings: DataFrame) -> DataFrame:
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.round(F.sum("d"), 4).alias("approx_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_dist"), F.asc("neighbor_id")
-    )
-    return scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= TOP_K
-    )
+    return top_per_query(scored, TOP_K, F.asc("approx_dist"), F.asc("neighbor_id"))
 
 
 def _adc_tables(embeddings: DataFrame, cb: Column | None = None) -> DataFrame:
@@ -780,8 +758,6 @@ def _ivfpq_adc_scored(embeddings: DataFrame) -> DataFrame:
 
     ``N_PROBE`` only widens the QUERY side's probed lists; the corpus
     assignment is always ``lists[0]``."""
-    from pyspark import StorageLevel
-
     cents = _codebook_lit(embeddings)
     cb = const_array_lit(_pq_codebook(embeddings))
     nrm = l2_norm(F.col("embedding"))
@@ -840,12 +816,7 @@ def ivfpq_ann_topk(embeddings: DataFrame) -> DataFrame:
     re-rank tier a deployment runs on top.
     """
     scored = _ivfpq_adc_scored(embeddings)
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_dist"), F.asc("neighbor_id")
-    )
-    out = scored.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= TOP_K
-    )
+    out = top_per_query(scored, TOP_K, F.asc("approx_dist"), F.asc("neighbor_id"))
     # Transfer scored_corpus's cache ownership to the RETURNED frame:
     # without it the owner (``scored``) dies at function exit and the
     # persist is released before the first action — the query then
@@ -877,14 +848,10 @@ def ivfpq_rerank_topk(embeddings: DataFrame) -> DataFrame:
     shortlist moves recall the wrong way.
     """
     scored = _ivfpq_adc_scored(embeddings)
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_dist"), F.asc("neighbor_id")
-    )
-    short = (
-        scored.select("*", F.row_number().over(w_short).alias("srank"))
-        .filter(F.col("srank") <= RERANK_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
+    short = top_per_query(
+        scored, RERANK_SHORTLIST, F.asc("approx_dist"), F.asc("neighbor_id"),
+        rank="srank",
+    ).select("query_id", "neighbor_id")
     q = embeddings.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -903,19 +870,12 @@ def ivfpq_rerank_topk(embeddings: DataFrame) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("q_emb"), F.col("n_emb"))
-                / (F.col("q_nrm") * F.col("n_nrm")),
-                6,
+            rounded_cosine(
+                F.col("q_emb"), F.col("q_nrm"), F.col("n_emb"), F.col("n_nrm")
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    out = exact.select("*", F.row_number().over(w).alias("rank")).filter(
-        F.col("rank") <= TOP_K
-    )
+    out = top_per_query(exact, TOP_K, F.desc("cos_sim"), F.asc("neighbor_id"))
     # Same ownership transfer as ivfpq_ann_topk (see the note there).
     return own_cache(out, absorb=[scored])
 
@@ -1038,10 +998,8 @@ def mmr_rerank_topk(
             "cand_id",
             "rel",
             "other_id",
-            F.round(
-                dot(F.col("c_emb"), F.col("o_emb"))
-                / (F.col("c_nrm") * F.col("o_nrm")),
-                6,
+            rounded_cosine(
+                F.col("c_emb"), F.col("c_nrm"), F.col("o_emb"), F.col("o_nrm")
             ).alias("pair_sim"),
         )
     )
@@ -1107,8 +1065,6 @@ def rrf_hybrid_topk(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
 
     docs = widen_for_compute(documents)
     sh = dedup.cap_shingle_df(dedup.shingles(docs))
-    from pyspark import StorageLevel
-
     sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     probe = sh.filter(F.col("doc_id") < RRF_QUERIES)
@@ -1137,14 +1093,9 @@ def rrf_hybrid_topk(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    w_t = Window.partitionBy("query_id").orderBy(
-        F.desc("jaccard"), F.asc("cand_id")
-    )
-    text_ranks = (
-        jac.select("*", F.row_number().over(w_t).alias("rank_t"))
-        .filter(F.col("rank_t") <= RRF_POOL)
-        .select("query_id", "cand_id", "rank_t")
-    )
+    text_ranks = top_per_query(
+        jac, RRF_POOL, F.desc("jaccard"), F.asc("cand_id"), rank="rank_t"
+    ).select("query_id", "cand_id", "rank_t")
     vec_ranks = (
         brute_force_topk(embeddings, RRF_QUERIES, RRF_POOL)
         .select(
@@ -1176,12 +1127,8 @@ def rrf_hybrid_topk(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
             ).alias("rrf_score"),
         )
     )
-    w_f = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_score"), F.asc("cand_id")
-    )
-    out = (
-        fused.select("*", F.row_number().over(w_f).alias("fused_rank"))
-        .filter(F.col("fused_rank") <= RRF_TOPK)
+    out = top_per_query(
+        fused, RRF_TOPK, F.desc("rrf_score"), F.asc("cand_id"), rank="fused_rank"
     )
     return own_cache(out, sh)
 
@@ -1273,8 +1220,6 @@ def _km_fit(
             f"k-means init found no vectors with vec_id < {k}: "
             "cannot seed centroids from an empty/renumbered corpus"
         )
-    from pyspark import StorageLevel
-
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
     for _ in range(iters):
         # The assignment keeps the vector column inline — no join back
@@ -1349,13 +1294,8 @@ def kmeans_ivf_topk(embeddings: DataFrame) -> DataFrame:
             F.round(_l2sq(F.col("qv"), F.col("v")), 6).alias("dist_sq"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_sq").asc(), F.col("neighbor_id").asc()
-    )
-    out = (
-        ranked.select(
-            "*", F.row_number().over(w).cast("int").alias("rank")
-        ).filter(F.col("rank") <= TOP_K)
+    out = top_per_query(
+        ranked, TOP_K, F.col("dist_sq").asc(), F.col("neighbor_id").asc()
     )
     return own_cache(out, e)
 
@@ -1389,10 +1329,8 @@ def range_search(embeddings: DataFrame) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                dot(F.col("q_emb"), F.col("n_emb"))
-                / (F.col("q_nrm") * F.col("n_nrm")),
-                6,
+            rounded_cosine(
+                F.col("q_emb"), F.col("q_nrm"), F.col("n_emb"), F.col("n_nrm")
             ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= RANGE_MIN_COS)
@@ -1629,26 +1567,15 @@ def matryoshka_topk(embeddings: DataFrame) -> DataFrame:
             ).alias("coarse_sim"),
         )
     )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.desc("coarse_sim"), F.asc("neighbor_id")
+    short = top_per_query(
+        coarse, MRL_SHORTLIST, F.desc("coarse_sim"), F.asc("neighbor_id"),
+        rank="crk",
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("embedding"), F.col("q_emb")), 6).alias("cos_sim"),
     )
-    short = coarse.select(
-        "*", F.row_number().over(w_c).alias("crk")
-    ).filter(F.col("crk") <= MRL_SHORTLIST)
-    w_r = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        short.select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("embedding"), F.col("q_emb")), 6).alias(
-                "cos_sim"
-            ),
-        )
-        .select("*", F.row_number().over(w_r).cast("int").alias("rank"))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return top_per_query(short, TOP_K, F.desc("cos_sim"), F.asc("neighbor_id"))
 
 
 DECONTAM_EVAL_VECS = 8

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from go_mailio_diskusage_handler_spark.operators.similarity import top_per_query
 from go_mailio_diskusage_handler_spark.sources.tables import widen_for_compute
 
 # Tiny per-language stopword profiles for the n-gram/stopword
@@ -434,7 +435,7 @@ def chunk_documents(
     )
     return (
         documents.select(
-            "doc_id", F.split(F.col("text"), " ").alias("t")
+            "doc_id", tokens().alias("t")
         )
         .select("doc_id", F.size("t").alias("n_words"), F.posexplode(chunks))
         .select(
@@ -475,7 +476,7 @@ def tfidf_cosine_pairs(documents: DataFrame, threshold: float = 0.9) -> DataFram
     """
     n_docs = documents.count()
     toks = documents.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
+        "doc_id", F.explode(tokens()).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = (
@@ -647,15 +648,7 @@ def bm25_topk(documents: DataFrame) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(idf * tf_part), 6).alias("score"))
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return scored.select(
-        "query_id",
-        "doc_id",
-        "score",
-        F.row_number().over(w_rank).cast("int").alias("rank"),
-    ).filter(F.col("rank") <= BM25_TOPK)
+    return top_per_query(scored, BM25_TOPK, F.desc("score"), F.asc("doc_id"))
 
 
 def corpus_datacard(documents: DataFrame) -> DataFrame:

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import curation, dedup, similarity
+from ..operators import curation, similarity
 from ..operators.curation import DSIR_BUCKETS
 from ..sources.tables import load_table
 from ._base import register
@@ -123,12 +123,7 @@ def curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def curation_contaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curation.contaminated_docs(
-        load_table(spark, sf_dir, "documents"),
-        200,
-        3,
-        max_doc_freq=dedup.MAX_SHINGLE_DF,
-    )
+    return curation.contaminated_docs(load_table(spark, sf_dir, "documents"), 200, 3)
 
 
 @register(

@@ -705,7 +705,7 @@ def text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     final top-k is TakeOrderedAndProject, no global sort."""
     docs = load_table(spark, sf_dir, "documents")
     wf = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        docs.select(F.explode(text.tokens()).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -793,7 +793,7 @@ def text_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = (F.sum(F.expr(wgt)) / (30.0 * F.count(F.lit(1)))) * 8.0
     prob_raw = 0.5 + (x / (2.0 * (1.0 + F.abs(x))))
     return (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+        docs.select("doc_id", F.explode(text.tokens()).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("doc_id")
         .agg(

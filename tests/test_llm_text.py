@@ -190,7 +190,9 @@ def test_incremental_minhash_matches_full_restriction(spark):
     """The incremental invariant: probing the stored band index with
     only the new batch must yield exactly the full-corpus pair set
     restricted to pairs whose newer side is in the batch — re-running
-    the full dedup after an incremental ingest finds nothing new."""
+    the full dedup after an incremental ingest finds nothing new.  A
+    batch that starts at doc 0 is the whole corpus, so its pairs are
+    exactly the full dedup's: both run the one band join."""
     docs = load_table(spark, SF_CORRECT, "documents")
     full = {
         (r.doc_a, r.doc_b)
@@ -202,6 +204,11 @@ def test_incremental_minhash_matches_full_restriction(spark):
     }
     assert incr == {(a, b) for a, b in full if b >= 400}
     assert incr, "batch boundary produced an empty incremental set"
+    whole = {
+        (r.doc_a, r.doc_b)
+        for r in dedup.incremental_minhash_pairs(docs, 0, 0.8).collect()
+    }
+    assert whole == full
 
 
 def test_minhash_lsh_recall_vs_exact(spark):
@@ -396,7 +403,9 @@ def test_shingle_df_cap_drops_heavy_hitter(spark):
     )
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in dedup.ngram_jaccard_pairs(docs, 0.5, max_doc_freq=3).collect()
+        for r in dedup.jaccard_pairs_of(
+            dedup.cap_shingle_df(dedup.shingles(docs), 3), 0.5
+        ).collect()
     }
     assert (1, 4) in pairs, "rare-shingle duplicate lost by the cap"
     assert all(p == (1, 4) for p in pairs), (
@@ -639,7 +648,7 @@ def test_prefix_filter_is_lossless_and_prunes_candidates(spark):
     docs = load_table(spark, SF_CORRECT, "documents")
     full = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in D.ngram_jaccard_pairs(docs, 0.6, max_doc_freq=None).collect()
+        for r in D.jaccard_pairs_of(D.shingles(docs), 0.6).collect()
     }
     got = {
         (r.doc_a, r.doc_b, r.jaccard)

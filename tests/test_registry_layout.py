@@ -6,7 +6,8 @@ module registers a query or in what order the modules are imported.
 Every top-level package definition is reachable from the registry, the
 serving handler or a benchmark entry point, and every defaulted
 parameter is set by one of them.  A query whose oracle text Spark can
-run keeps a body of its own only for a stated reason."""
+run keeps a body of its own only for a stated reason.  The operator
+modules spell each shared ranking and n-gram rule in one helper."""
 from __future__ import annotations
 
 import ast
@@ -578,3 +579,73 @@ def test_defaulted_parameters_selected_by_a_root():
     assert set(DEFAULTED_PARAMETERS_ALLOWED) <= set(unselected), "stale allow-list entries"
     offenders = [p for p in unselected if p not in DEFAULTED_PARAMETERS_ALLOWED]
     assert not offenders, f"defaulted parameters that no root sets: {offenders}"
+
+
+def _is_query_window(node: ast.AST) -> bool:
+    """``Window.partitionBy("query_id")``"""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "partitionBy"
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "Window"
+        and [getattr(a, "value", None) for a in node.args] == ["query_id"]
+    )
+
+
+def _is_span_gram_text(node: ast.AST) -> bool:
+    """A string constant that spells the span-gram expression."""
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "transform(sequence(1, size(t)" in node.value
+    )
+
+
+# Rule -> (its matcher, the one operator helper allowed to spell it).
+ONE_DEFINITION = {
+    "per-query top-k window": (_is_query_window, "top_per_query"),
+    "span-gram expression": (_is_span_gram_text, "span_grams"),
+}
+
+
+def _docstrings(tree: ast.Module) -> set[int]:
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            body = node.body
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+                out.add(id(body[0].value))
+    return out
+
+
+def test_shared_rules_are_spelled_only_in_their_helper():
+    """A copy of a shared rule drifts from its oracle mirror on its own:
+    each rule is spelled once, in its helper, and every operator calls
+    that.  Docstrings may name a rule; code may not copy it."""
+    copies: dict[str, list[str]] = {}
+    for path in sorted(glob.glob(os.path.join(PKG_DIR, "operators", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        skip = _docstrings(tree)
+        scopes = [(None, tree.body)] + [
+            (node.name, [node]) for node in tree.body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        ]
+        for owner, body in scopes:
+            nodes = [
+                sub for stmt in body
+                if owner is not None or not isinstance(
+                    stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+                for sub in ast.walk(stmt)
+                if id(sub) not in skip
+            ]
+            for rule, (matches, helper) in ONE_DEFINITION.items():
+                if owner != helper:
+                    copies.setdefault(rule, []).extend(
+                        f"{os.path.basename(path)}:{n.lineno} ({owner})"
+                        for n in nodes if matches(n)
+                    )
+    offenders = {rule: where for rule, where in copies.items() if where}
+    assert not offenders, f"rules spelled outside their helper: {offenders}"

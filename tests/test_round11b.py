@@ -60,20 +60,37 @@ def test_hash_classifier_score_is_bounded_and_jvm_side(spark):
 
 
 def test_except_all_preserves_multiplicity(spark):
-    """exceptAll is multiset difference: a key occurring 5× early and
-    2× late must surface with n_excess == 3 — and the distinct-EXCEPT
-    twin would drop it entirely.  Checked on a constructed frame, not
-    the fixture, so the property is explicit."""
-    early = spark.createDataFrame(
-        [(1,)] * 5 + [(2,)] * 2, "o_custkey bigint"
-    )
-    late = spark.createDataFrame([(1,)] * 2 + [(2,)] * 2, "o_custkey bigint")
-    out = {
-        r.o_custkey: r.n
-        for r in early.exceptAll(late).groupBy("o_custkey").count()
-        .withColumnRenamed("count", "n").collect()
+    """EXCEPT ALL is multiset difference.  Per key: n_excess == early
+    multiplicity − late multiplicity where that is positive, and the
+    key is absent otherwise, cross-checked against plain per-side
+    counts.  A key with orders on both sides still surfaces with its
+    excess, where the distinct EXCEPT would drop it."""
+    from pyspark.sql import functions as F
+
+    from go_mailio_diskusage_handler_spark.sources.tables import load_table
+
+    res = {
+        r.o_custkey: r.n_excess
+        for r in registry.QUERIES["setop_churned_buyers_except_all"](
+            spark, SF_CORRECT
+        ).collect()
     }
-    assert out == {1: 3}
+    orders = load_table(spark, SF_CORRECT, "orders")
+    early = {
+        r.o_custkey: r.n
+        for r in orders.filter(F.year("o_orderdate") <= 1997)
+        .groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    late = {
+        r.o_custkey: r.n
+        for r in orders.filter(F.year("o_orderdate") >= 1998)
+        .groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    expected = {
+        k: n - late.get(k, 0) for k, n in early.items() if n > late.get(k, 0)
+    }
+    assert res == expected
+    assert expected.keys() & late.keys(), "no key has orders on both sides"
 
 
 def test_paged_orders_is_collect_limit_not_global_sort(spark):
