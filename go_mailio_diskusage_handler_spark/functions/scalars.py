@@ -89,17 +89,19 @@ def embedding_array_stats(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def sliding_event_windows(
-    events: DataFrame, size_minutes: int = 10, slide_minutes: int = 5
-) -> DataFrame:
+SLIDING_WINDOW = "10 minutes"
+SLIDING_SLIDE = "5 minutes"
+DISTINCT_USERS_WINDOW = "60 minutes"
+TUMBLING_WINDOW = "10 minutes"
+
+
+def sliding_event_windows(events: DataFrame) -> DataFrame:
     """Sliding (hopping) event-time windows: each event lands in
     size/slide overlapping windows.  ``F.window`` generates the
     overlap internally (no join, no explode in user code)."""
     return (
         events.groupBy(
-            F.window("ts", f"{size_minutes} minutes", f"{slide_minutes} minutes").alias(
-                "w"
-            ),
+            F.window("ts", SLIDING_WINDOW, SLIDING_SLIDE).alias("w"),
             "event_type",
         )
         .agg(F.count(F.lit(1)).alias("event_count"))
@@ -111,7 +113,7 @@ def sliding_event_windows(
     )
 
 
-def windowed_distinct_users(events: DataFrame, minutes: int = 60) -> DataFrame:
+def windowed_distinct_users(events: DataFrame) -> DataFrame:
     """Distinct users per event-time tumbling window — exact count +
     HLL++ sketch in ONE grouped aggregate (two partial buffers, one
     shuffle), emitted as the deterministic invariant pattern of the
@@ -127,7 +129,7 @@ def windowed_distinct_users(events: DataFrame, minutes: int = 60) -> DataFrame:
     """
     rsd = 0.01
     return (
-        events.groupBy(F.window("ts", f"{minutes} minutes").alias("w"))
+        events.groupBy(F.window("ts", DISTINCT_USERS_WINDOW).alias("w"))
         .agg(
             F.countDistinct("user_id").alias("distinct_users"),
             F.approx_count_distinct("user_id", rsd).alias("approx"),
@@ -153,7 +155,7 @@ def windowed_distinct_users(events: DataFrame, minutes: int = 60) -> DataFrame:
     )
 
 
-def tumbling_event_windows(events: DataFrame, minutes: int = 10) -> DataFrame:
+def tumbling_event_windows(events: DataFrame) -> DataFrame:
     """Event-time tumbling window aggregation (batch form).
 
     ``F.window`` is the same expression Structured Streaming uses; a
@@ -162,7 +164,7 @@ def tumbling_event_windows(events: DataFrame, minutes: int = 10) -> DataFrame:
     comparison.
     """
     return (
-        events.groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "event_type")
+        events.groupBy(F.window("ts", TUMBLING_WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("event_count"),
             F.round(F.sum("value"), 2).alias("total_value"),

@@ -189,11 +189,14 @@ class SplitPathUDTF:
             yield i, part
 
 
-def path_segments(inventory: DataFrame, limit_keys: int = 100) -> DataFrame:
+PATH_SEGMENT_KEYS = 100
+
+
+def path_segments(inventory: DataFrame) -> DataFrame:
     """Lateral-join the UDTF over inventory keys (bounded, determinate
-    subset: the lexicographically-first ``limit_keys`` keys)."""
+    subset: the lexicographically-first ``PATH_SEGMENT_KEYS`` keys)."""
     keys = (
-        inventory.select("key").orderBy("key").limit(limit_keys)
+        inventory.select("key").orderBy("key").limit(PATH_SEGMENT_KEYS)
     )
     return keys.lateralJoin(
         SplitPathUDTF(F.col("key").outer())
@@ -240,7 +243,7 @@ WidenPathUDTF = udtf(_WidenPathUDTF, useArrow=True)
 
 
 def widen_path_segments(
-    inventory: DataFrame, depth: int = 2, limit_keys: int = 100
+    inventory: DataFrame, depth: int = 2, limit_keys: int = PATH_SEGMENT_KEYS
 ) -> DataFrame:
     """Lateral-join the polymorphic UDTF over the bounded key subset:
     one output ROW per key (the widening is horizontal), with the

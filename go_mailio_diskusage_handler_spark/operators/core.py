@@ -111,8 +111,8 @@ def inventory_quality(inventory: DataFrame) -> DataFrame:
     )
 
 
-def disk_usage_observed(inventory: DataFrame, *, round_to: int | None = 2):
-    """:func:`disk_usage` instrumented with ``df.observe`` counters.
+def disk_usage_observed(inventory: DataFrame):
+    """:func:`disk_usage` (raw sums) instrumented with ``df.observe`` counters.
 
     Returns ``(aggregate_df, Observation)``.  The quality counters
     (total rows seen, malformed keys dropped by the O7 guard) are
@@ -141,7 +141,7 @@ def disk_usage_observed(inventory: DataFrame, *, round_to: int | None = 2):
         F.sum(F.col("size").isNull().cast("long")).alias("null_size_rows"),
         F.sum((F.col("size") < 0).cast("long")).alias("negative_size_rows"),
     )
-    return disk_usage(observed, round_to=round_to), obs
+    return disk_usage(observed, round_to=None), obs
 
 
 def inventory_diff(inv_old: DataFrame, inv_new: DataFrame) -> DataFrame:
@@ -222,11 +222,14 @@ def disk_usage_lookup(disk_usage_df: DataFrame, address: str) -> DataFrame:
     return disk_usage_df.filter(F.col("address") == address)
 
 
-def heavy_users(disk_usage_df: DataFrame, multiple: float = 3.0) -> DataFrame:
+HEAVY_USER_MULTIPLE = 3.0
+
+
+def heavy_users(disk_usage_df: DataFrame) -> DataFrame:
     """Capacity triage over the O8 aggregate: addresses holding at
-    least ``multiple``× the average per-address bytes, with their share
-    of the total — the "which users dominate the bucket" question the
-    reference's map can only answer by a full client-side scan.
+    least ``HEAVY_USER_MULTIPLE``× the average per-address bytes, with
+    their share of the total — the "which users dominate the bucket"
+    question the reference's map answers only by a full client scan.
 
     Plan at scale: one global aggregate (avg + sum — a single 1-row
     result) broadcast back over the per-address table, then a pure
@@ -240,7 +243,7 @@ def heavy_users(disk_usage_df: DataFrame, multiple: float = 3.0) -> DataFrame:
     )
     return (
         disk_usage_df.crossJoin(F.broadcast(stats))
-        .filter(F.col("size_bytes") >= multiple * F.col("_avg_bytes"))
+        .filter(F.col("size_bytes") >= HEAVY_USER_MULTIPLE * F.col("_avg_bytes"))
         .select(
             "address",
             "size_bytes",

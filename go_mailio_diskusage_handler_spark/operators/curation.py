@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from go_mailio_diskusage_handler_spark.caching import own_cache
 from go_mailio_diskusage_handler_spark.operators.dedup import (
-    cap_shingle_df,
+    capped_shingles,
     connected_components,
     duplicate_clusters,
     jaccard_pairs_of,
@@ -180,8 +180,8 @@ EVAL_MAX_DOC_ID = 200  # doc_ids below this are the eval set
 MIN_OVERLAP = 3  # shared shingles that mark a training doc contaminated
 
 
-def _eval_overlaps(train: DataFrame, ev: DataFrame, min_overlap: int) -> DataFrame:
-    """Train docs sharing ≥ ``min_overlap`` shingles with some eval doc
+def _eval_overlaps(train: DataFrame, ev: DataFrame) -> DataFrame:
+    """Train docs sharing ≥ ``MIN_OVERLAP`` shingles with some eval doc
     → (doc_id, max_overlap, n_eval_docs).  Inverted-index join: the
     shingle-keyed join counts per (train, eval) pair and keeps any
     train doc crossing the threshold against ANY eval doc.  The eval
@@ -191,7 +191,7 @@ def _eval_overlaps(train: DataFrame, ev: DataFrame, min_overlap: int) -> DataFra
         train.join(F.broadcast(ev), "shingle")
         .groupBy("doc_id", "eval_doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .filter(F.col("n_overlap") >= min_overlap)
+        .filter(F.col("n_overlap") >= MIN_OVERLAP)
     )
     return overlap.groupBy("doc_id").agg(
         F.max("n_overlap").alias("max_overlap"),
@@ -199,34 +199,26 @@ def _eval_overlaps(train: DataFrame, ev: DataFrame, min_overlap: int) -> DataFra
     )
 
 
-def contamination_of(
-    sh: DataFrame, eval_max_doc_id: int, min_overlap: int
-) -> DataFrame:
+def contamination_of(sh: DataFrame) -> DataFrame:
     """:func:`_eval_overlaps` with the shingle table ``sh`` split at
-    ``eval_max_doc_id`` into train and eval sides."""
-    ev = sh.filter(F.col("doc_id") < eval_max_doc_id).select(
+    ``EVAL_MAX_DOC_ID`` into train and eval sides."""
+    ev = sh.filter(F.col("doc_id") < EVAL_MAX_DOC_ID).select(
         F.col("doc_id").alias("eval_doc_id"), "shingle"
     )
-    return _eval_overlaps(
-        sh.filter(F.col("doc_id") >= eval_max_doc_id), ev, min_overlap
-    )
+    return _eval_overlaps(sh.filter(F.col("doc_id") >= EVAL_MAX_DOC_ID), ev)
 
 
-def contaminated_docs(
-    documents: DataFrame,
-    eval_max_doc_id: int = EVAL_MAX_DOC_ID,
-    min_overlap: int = MIN_OVERLAP,
-) -> DataFrame:
-    """Training docs sharing ≥ ``min_overlap`` distinct shingles with
-    the eval set (doc_id < ``eval_max_doc_id`` stands in for the
+def contaminated_docs(documents: DataFrame) -> DataFrame:
+    """Training docs sharing ≥ ``MIN_OVERLAP`` distinct shingles with
+    the eval set (doc_id < ``EVAL_MAX_DOC_ID`` stands in for the
     benchmark corpus), over the df-capped shingle table: a stopword
     trigram shared with an eval doc is evidence of nothing, and at
     scale it is also the skew hot key of the shingle join.
     """
     # The capped table feeds BOTH the train and eval sides; persist or
     # the explode→df-aggregate→anti-join chain runs twice.
-    sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
-    return own_cache(contamination_of(sh, eval_max_doc_id, min_overlap), sh)
+    sh = capped_shingles(documents)
+    return own_cache(contamination_of(sh), sh)
 
 
 def sample_weighted(
@@ -303,10 +295,8 @@ def curated_corpus(documents: DataFrame) -> DataFrame:
     # df-capped ONCE (boilerplate shingles are noise for both consumers
     # and the scale hot key for either join), then persisted so the
     # corpus is exploded/hashed once; at 100 TB this is a written
-    # intermediate, same shape.  Only the capped table is persisted —
-    # see ngram_jaccard_pairs: re-running the explode for the cap's two
-    # single-pass inputs beats a second storage materialization.
-    sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
+    # intermediate, same shape.
+    sh = capped_shingles(documents)
     quality_ok = (
         quality_scores(documents)
         .filter(
@@ -315,9 +305,7 @@ def curated_corpus(documents: DataFrame) -> DataFrame:
         )
         .select("doc_id")
     )
-    contaminated = contamination_of(sh, EVAL_MAX_DOC_ID, MIN_OVERLAP).select(
-        "doc_id"
-    )
+    contaminated = contamination_of(sh).select("doc_id")
     clusters, _ = connected_components(
         jaccard_pairs_of(sh, CURATED_DUP_THRESHOLD).select("doc_a", "doc_b")
     )
@@ -482,11 +470,7 @@ def bloom_shingle_filter(probe_side: DataFrame, build_side: DataFrame) -> DataFr
     )
 
 
-def bloom_prefiltered_contamination(
-    documents: DataFrame,
-    eval_max_doc_id: int = EVAL_MAX_DOC_ID,
-    min_overlap: int = MIN_OVERLAP,
-) -> DataFrame:
+def bloom_prefiltered_contamination(documents: DataFrame) -> DataFrame:
     """:func:`contaminated_docs` with a broadcast BLOOM FILTER
     pre-filter on the train side — identical output, different plan.
 
@@ -512,11 +496,11 @@ def bloom_prefiltered_contamination(
     engine-portable anyway.)
     """
     sh = shingles(documents)
-    ev = sh.filter(F.col("doc_id") < eval_max_doc_id).select(
+    ev = sh.filter(F.col("doc_id") < EVAL_MAX_DOC_ID).select(
         F.col("doc_id").alias("eval_doc_id"), "shingle"
     )
-    train = bloom_shingle_filter(sh.filter(F.col("doc_id") >= eval_max_doc_id), ev)
-    return _eval_overlaps(train, ev, min_overlap)
+    train = bloom_shingle_filter(sh.filter(F.col("doc_id") >= EVAL_MAX_DOC_ID), ev)
+    return _eval_overlaps(train, ev)
 
 
 QUALITY_GATE_PCT = 0.25

@@ -34,6 +34,7 @@ SHINGLE_N = 3  # word trigrams
 N_HASHES = 12
 BAND_ROWS = 3
 N_BANDS = N_HASHES // BAND_ROWS  # 4
+MINHASH_JACCARD = 0.8  # the MinHash tiers' near-dup threshold
 
 # Document-frequency cap for the inverted-index (shared-shingle) joins:
 # a shingle present in more than this many documents is treated as
@@ -81,6 +82,18 @@ def cap_shingle_df(sh: DataFrame, max_doc_freq: int = MAX_SHINGLE_DF) -> DataFra
         .select("shingle")
     )
     return sh.join(F.broadcast(hot), "shingle", "left_anti")
+
+
+def capped_shingles(documents: DataFrame) -> DataFrame:
+    """The persisted df-capped shingle table that the shared-shingle
+    joins read; the caller owns its cache.  Only the CAPPED table is
+    persisted — it is the one with several consumers (set sizes and
+    both self-join sides).  Persisting the raw table as well
+    materializes the corpus explode twice for no reuse win: the raw
+    table's two consumers (the df aggregate and the anti-join probe)
+    are each single-pass, and re-running the explode is cheaper than a
+    second storage materialization (A/B at sf0.1: 2.1 s vs 2.5-3 s)."""
+    return cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def jaccard(inter: Column, n_a: Column, n_b: Column) -> Column:
@@ -206,7 +219,9 @@ def jaccard_for_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_dedup_pairs(documents: DataFrame, threshold: float = 0.8) -> DataFrame:
+def minhash_dedup_pairs(
+    documents: DataFrame, threshold: float = MINHASH_JACCARD
+) -> DataFrame:
     """MinHash→LSH→exact-verify near-dup pairs with Jaccard ≥ threshold."""
     sh, sigs = _minhash_index(documents)
     bands = band_rows(sigs)
@@ -233,17 +248,8 @@ def jaccard_pairs_of(sh: DataFrame, threshold: float) -> DataFrame:
 
 
 def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """:func:`jaccard_pairs_of` over the corpus's df-capped shingles.
-
-    Only the CAPPED table is persisted — it is the one with three
-    consumers (sizes + both self-join sides).  Persisting the raw table
-    as well materializes the corpus explode twice for no reuse win: the
-    raw table's two consumers (the df aggregate and the anti-join
-    probe) are each single-pass, and re-running the explode is cheaper
-    than a second storage materialization (A/B at sf0.1: 2.1 s vs
-    2.5-3 s).
-    """
-    sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
+    """:func:`jaccard_pairs_of` over :func:`capped_shingles`."""
+    sh = capped_shingles(documents)
     return own_cache(jaccard_pairs_of(sh, threshold), sh)
 
 
@@ -256,6 +262,11 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.6) -> DataFra
 SIMHASH_BITS = 60
 SIMHASH_BLOCKS = 4
 SIMHASH_BLOCK_BITS = SIMHASH_BITS // SIMHASH_BLOCKS  # 15
+# Pairs within this Hamming distance are near-dups.  The block banding
+# has full recall only while SIMHASH_MAX_HAMMING < SIMHASH_BLOCKS: at
+# SIMHASH_BLOCKS flipped bits, one per block, no block matches and the
+# pair is silently never a candidate.
+SIMHASH_MAX_HAMMING = 3
 _BLOCK_MASK = (1 << SIMHASH_BLOCK_BITS) - 1
 _HEX = "0123456789abcdef"
 
@@ -303,8 +314,9 @@ def simhash_values(documents: DataFrame) -> DataFrame:
     return packed
 
 
-def simhash_dedup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs via 4-block banding.
+def simhash_dedup_pairs(documents: DataFrame) -> DataFrame:
+    """SimHash near-dup pairs within ``SIMHASH_MAX_HAMMING`` bits via
+    ``SIMHASH_BLOCKS``-block banding.
 
     Pigeonhole: hamming(a,b) ≤ 3 over 4 15-bit blocks ⇒ at least one
     block is identical, so joining on (block_idx, block_value) has
@@ -347,7 +359,7 @@ def simhash_dedup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame
             F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
     return own_cache(out, sims)
 
@@ -357,15 +369,11 @@ def simhash_dedup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def incremental_minhash_pairs(
-    documents: DataFrame,
-    batch_min_doc_id: int,
-    threshold: float = 0.8,
-) -> DataFrame:
+def incremental_minhash_pairs(documents: DataFrame, batch_min_doc_id: int) -> DataFrame:
     """Incremental fuzzy dedup: near-dup pairs involving at least one
     NEW document (doc_id ≥ ``batch_min_doc_id``), i.e. every
-    :func:`minhash_dedup_pairs` pair EXCEPT old×old — those were
-    already adjudicated when the old batch landed.
+    :func:`minhash_dedup_pairs` pair (at ``MINHASH_JACCARD``) EXCEPT
+    old×old — those were already adjudicated when the old batch landed.
 
     This is how a 100 TB corpus actually deduplicates day over day:
     the banded signature index of the existing corpus is a stored
@@ -387,7 +395,7 @@ def incremental_minhash_pairs(
     cands = lsh_candidate_pairs(
         bands, bands.filter(F.col("doc_id") >= batch_min_doc_id)
     )
-    out = jaccard_for_pairs(cands, sh).filter(F.col("jaccard") >= threshold)
+    out = jaccard_for_pairs(cands, sh).filter(F.col("jaccard") >= MINHASH_JACCARD)
     return own_cache(out, sh, sigs)
 
 
@@ -562,7 +570,7 @@ def ngram_containment_pairs(documents: DataFrame, threshold: float = 0.8) -> Dat
     and emits 0-2 directed rows via an array-filter-explode — no
     second join, no union re-scan.
     """
-    sh = cap_shingle_df(shingles(documents)).persist(StorageLevel.MEMORY_AND_DISK)
+    sh = capped_shingles(documents)
     directed = F.array(
         F.struct(
             F.col("doc_a").alias("doc_src"),
@@ -855,14 +863,15 @@ def prefix_filter_jaccard_pairs(
     return own_cache(out, sh)
 
 
-def near_dup_triangles(
-    documents: DataFrame, threshold: float = 0.8
-) -> DataFrame:
-    """Triangles in the near-duplicate graph — the cluster-density
-    signal dedup QA uses: a pair-heavy but triangle-free graph means
-    chained borderline matches (A~B~C with A̸~C, the transitive-
-    closure trap), while triangle-rich components are genuine
-    duplicate groups.  Output: one row per triangle, canonically
+TRIANGLE_MIN_JACCARD = 0.8
+
+
+def near_dup_triangles(documents: DataFrame) -> DataFrame:
+    """Triangles in the n-gram Jaccard ≥ ``TRIANGLE_MIN_JACCARD``
+    near-duplicate graph — the cluster-density signal dedup QA uses: a
+    pair-heavy but triangle-free graph means chained borderline matches
+    (A~B~C with A̸~C, the transitive-closure trap), while triangle-rich
+    components are genuine duplicate groups.  Output: one row per triangle, canonically
     ordered (doc_a < doc_b < doc_c).
 
     Distributed shape (node-iterator++ / degree orientation): edges
@@ -886,7 +895,7 @@ def near_dup_triangles(
     # checkpoint truncates every branch to a LogicalRDD scan; the pair
     # generator's shingle cache is released at function exit (pair_src
     # dies here) because nothing downstream can re-derive from it.
-    pair_src = ngram_jaccard_pairs(documents, threshold)
+    pair_src = ngram_jaccard_pairs(documents, TRIANGLE_MIN_JACCARD)
     edges = pair_src.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).localCheckpoint(eager=True)
@@ -1153,9 +1162,7 @@ def weighted_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> Data
     # Three consumers of the capped table (N aggregate, df aggregate,
     # the weighted-join build) — persist it or the corpus explode and
     # cap join run three times (measured 7.9 s vs 2.5 s at sf0.1).
-    sh = cap_shingle_df(shingles(documents), MAX_SHINGLE_DF).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = capped_shingles(documents)
     n_docs = sh.select(F.count_distinct("doc_id").alias("n_docs"))
     dfw = (
         sh.groupBy("shingle")
@@ -1200,8 +1207,8 @@ def weighted_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> Data
     return own_cache(out, sh, sw)
 
 
-def gram_occurrences(documents: DataFrame, n: int) -> DataFrame:
-    """Distinct (doc_id, g) word-n-gram occurrences — the shared
+def gram_occurrences(documents: DataFrame) -> DataFrame:
+    """Distinct (doc_id, g) word-``SPAN_N``-gram occurrences — the shared
     subplan of the novelty family (batch, incremental, AND the
     streaming ingest).  One definition keeps the three paths
     row-for-row comparable: the stream≡batch equivalence tests depend
@@ -1211,8 +1218,8 @@ def gram_occurrences(documents: DataFrame, n: int) -> DataFrame:
         F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("t"),
     )
     return (
-        toks.filter(F.size("t") >= n)
-        .select("doc_id", F.explode(span_grams(n)).alias("g"))
+        toks.filter(F.size("t") >= SPAN_N)
+        .select("doc_id", F.explode(span_grams(SPAN_N)).alias("g"))
         .distinct()
     )
 
@@ -1273,7 +1280,7 @@ def novelty_fraction(documents: DataFrame) -> DataFrame:
     rounding needed.
     """
     occ = (
-        gram_occurrences(documents, SPAN_N)
+        gram_occurrences(documents)
         # two consumers (the MIN aggregate and the join-back probe)
         # shuffle on DIFFERENT keys, so the exchange can't be reused —
         # persist the gram table once instead of re-running the
@@ -1318,7 +1325,7 @@ def novelty_fraction_incremental(documents: DataFrame) -> DataFrame:
     DuckDB rounds double→int casts while Spark truncates — FLOOR is
     exact in both).
     """
-    occ = gram_occurrences(documents, SPAN_N)
+    occ = gram_occurrences(documents)
     split = documents.agg(
         F.floor(F.lit(HISTORY_FRAC) * F.max("doc_id")).alias("split_id")
     )

@@ -130,14 +130,17 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_images(documents: DataFrame, max_side: int = 128) -> DataFrame:
+RESIZE_MAX_SIDE = 128
+
+
+def resize_images(documents: DataFrame) -> DataFrame:
     """Resize planning/execution for image rows over Arrow batches.
 
     The aspect-preserving target-dimension math runs vectorized in
     numpy exactly as a real thumbnailer would (the pixel resample
     itself would sit behind the same kernel — codecs absent here, so
     the geometry IS the deterministic output, fully oracle-checked):
-        scale     = max_side / max(width, height)   (never upscale)
+        scale     = RESIZE_MAX_SIDE / max(width, height)   (never upscale)
         out_side  = max(1, floor(side * scale))
     Spark shape: decode → filter images → mapInPandas, still zero
     shuffles end-to-end.
@@ -151,7 +154,7 @@ def resize_images(documents: DataFrame, max_side: int = 128) -> DataFrame:
             w = pdf["width"].to_numpy(dtype="int64")
             h = pdf["height"].to_numpy(dtype="int64")
             longest = np.maximum(w, h)
-            scale = np.minimum(1.0, max_side / longest)
+            scale = np.minimum(1.0, RESIZE_MAX_SIDE / longest)
             ow = np.maximum(1, np.floor(w * scale)).astype("int32")
             oh = np.maximum(1, np.floor(h * scale)).astype("int32")
             yield pd.DataFrame(
@@ -170,11 +173,14 @@ def resize_images(documents: DataFrame, max_side: int = 128) -> DataFrame:
 
 
 SAMPLE_RATE = 16_000
+# 5 ms at 16 kHz = 80-sample chunks, so the fixtures' short payloads
+# span several chunks each.
+AUDIO_CHUNK_MS = 5
 
 
-def audio_chunks(documents: DataFrame, chunk_ms: int = 250) -> DataFrame:
-    """Fixed-duration chunk boundaries for audio rows — the audio twin
-    of :func:`frame_sample`.
+def audio_chunks(documents: DataFrame) -> DataFrame:
+    """Fixed-duration (``AUDIO_CHUNK_MS``) chunk boundaries for audio
+    rows — the audio twin of :func:`frame_sample`.
 
     Payload bytes are treated as 16-bit mono PCM at ``SAMPLE_RATE``
     (n_samples = n_bytes/2); each row explodes into its chunk windows
@@ -184,7 +190,7 @@ def audio_chunks(documents: DataFrame, chunk_ms: int = 250) -> DataFrame:
     these (doc_id, start, length) windows to the codec kernel so each
     Arrow batch decodes bounded audio, not whole files.
     """
-    spc = SAMPLE_RATE * chunk_ms // 1000  # samples per chunk
+    spc = SAMPLE_RATE * AUDIO_CHUNK_MS // 1000  # samples per chunk
     m = media_table(documents).filter(F.col("media_type") == "audio")
     n_samples = F.floor(F.octet_length("payload") / 2).cast("bigint")
     withn = m.select("doc_id", n_samples.alias("n_samples")).filter(
@@ -209,15 +215,18 @@ def audio_chunks(documents: DataFrame, chunk_ms: int = 250) -> DataFrame:
     )
 
 
-def frame_sample(documents: DataFrame, every: int = 8) -> DataFrame:
-    """Frame sampling for video rows: explode every-k-th frame index
-    from the decoded frame count — built-in ``sequence``+``explode``
+FRAME_EVERY = 8
+
+
+def frame_sample(documents: DataFrame) -> DataFrame:
+    """Frame sampling for video rows: explode every ``FRAME_EVERY``-th
+    frame index from the decoded frame count — built-in sequence+explode
     after the Pandas-UDF decode (mixed-runtime pipeline)."""
     decoded = decode_features(documents).filter(F.col("media_type") == "video")
     return decoded.select(
         "doc_id",
         F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every))
+            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(FRAME_EVERY))
         ).alias("frame_idx"),
     )
 

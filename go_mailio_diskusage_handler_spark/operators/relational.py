@@ -23,12 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def top_k_addresses(disk_usage_df: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k users by total size — TakeOrderedAndProject, not a global
-    sort.  Deterministic tie-break on address."""
+TOP_ADDRESSES_K = 10
+
+
+def top_k_addresses(disk_usage_df: DataFrame) -> DataFrame:
+    """Top-``TOP_ADDRESSES_K`` users by total size — TakeOrderedAndProject,
+    not a global sort.  Deterministic tie-break on address."""
     return disk_usage_df.orderBy(
         F.desc("size_bytes"), F.asc("address")
-    ).limit(k)
+    ).limit(TOP_ADDRESSES_K)
 
 
 def lapsed_customers(orders: DataFrame, split_date: str) -> DataFrame:

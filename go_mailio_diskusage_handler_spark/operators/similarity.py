@@ -200,13 +200,12 @@ def brute_force_topk(
     return top_per_query(scored, k, F.desc("cos_sim"), F.asc("neighbor_id"))
 
 
-def filtered_topk(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 5
-) -> DataFrame:
-    """Metadata-filtered vector search: per query, exact top-k cosine
-    among corpus vectors sharing the query's ``label`` — the
-    class-conditional neighbor query every curation pipeline runs
-    ("nearest docs of the same domain/language/cluster").
+def filtered_topk(embeddings: DataFrame) -> DataFrame:
+    """Metadata-filtered vector search: per query (``vec_id <
+    N_QUERIES``), exact top-``TOP_K`` cosine among corpus vectors
+    sharing the query's ``label`` — the class-conditional neighbor
+    query every curation pipeline runs ("nearest docs of the same
+    domain/language/cluster").
 
     The filter composes as a JOIN KEY, not a post-filter: label
     equality joins the broadcast query set against the corpus scan, so
@@ -214,11 +213,11 @@ def filtered_topk(
     corpus written partitioned by the filter column, partition pruning
     makes this touch ~1/|labels| of the data, where post-filtering the
     unfiltered top-k would both over-read and UNDER-RETURN (fewer than
-    k survivors).  Same broadcast + window shape as
+    TOP_K survivors).  Same broadcast + window shape as
     :func:`brute_force_topk` otherwise.
     """
     embeddings = widen_for_compute(embeddings)
-    q = embeddings.filter(F.col("vec_id") < n_queries).select(
+    q = embeddings.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
         F.col("embedding").alias("q_emb"),
@@ -245,7 +244,7 @@ def filtered_topk(
             ).alias("cos_sim"),
         )
     )
-    return top_per_query(scored, k, F.desc("cos_sim"), F.asc("neighbor_id"))
+    return top_per_query(scored, TOP_K, F.desc("cos_sim"), F.asc("neighbor_id"))
 
 
 def hyperplane(p: int) -> list[float]:
@@ -298,11 +297,11 @@ def lsh_buckets(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
-    """ANN: independent hash tables (one per PROBE_MASKS_BY_TABLE
-    entry) probed with an asymmetric budget — Hamming-≤3 in table 0,
-    Hamming-≤2 in table 1; candidates are the UNION over tables,
-    exact-cosine re-ranked.
+def lsh_ann_topk(embeddings: DataFrame) -> DataFrame:
+    """ANN top-``TOP_K`` of the ``N_QUERIES`` queries: independent hash
+    tables (one per PROBE_MASKS_BY_TABLE entry) probed with an
+    asymmetric budget — Hamming-≤3 in table 0, Hamming-≤2 in table 1;
+    candidates are the UNION over tables, exact-cosine re-ranked.
 
     Two recall levers compose here.  Multi-probe: a near neighbor on
     the other side of up to h hyperplanes lands ≤ h bits away, so
@@ -314,7 +313,7 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 5) -> DataF
     tables × wide radius (see PROBE_MASKS_BY_TABLE's measured sweep).
 
     Execution shape: the PROBE side is built on the driver — the
-    n_queries query vectors are point-looked-up (same tiny-collect
+    N_QUERIES query vectors are point-looked-up (same tiny-collect
     pattern as the IVF codebook), their buckets computed in Python
     with the identical left-fold summation the JVM expression uses
     (bit-identical sign decisions), and the (table, bucket⊕mask)
@@ -337,7 +336,7 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 5) -> DataF
     n_tables = len(PROBE_MASKS_BY_TABLE)
     spark = embeddings.sparkSession
     qrows = (
-        embeddings.filter(F.col("vec_id") < n_queries)
+        embeddings.filter(F.col("vec_id") < N_QUERIES)
         .select("vec_id", "embedding")
         .collect()
     )
@@ -406,7 +405,7 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 8, k: int = 5) -> DataF
         )
         .distinct()
     )
-    return top_per_query(scored, k, F.desc("cos_sim"), F.asc("neighbor_id"))
+    return top_per_query(scored, TOP_K, F.desc("cos_sim"), F.asc("neighbor_id"))
 
 
 N_CENTROIDS = 16
@@ -421,7 +420,7 @@ N_PROBE = 2
 # ceiling at shortlist=20 was shortlist truncation, not the coarse
 # quantizer (n_probe=2 reaches 0.925 untouched once the shortlist
 # admits rank-21..60 ADC candidates).  Cost of the wider shortlist is
-# only n_queries×shortlist exact point lookups — corpus-independent.
+# only N_QUERIES×shortlist exact point lookups — corpus-independent.
 RERANK_SHORTLIST = 60
 
 
@@ -479,11 +478,9 @@ def ivf_assignments(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ivf_ann_topk(
-    embeddings: DataFrame, n_queries: int = 8, k: int = 5
-) -> DataFrame:
-    """IVF-flat ANN: probe the N_PROBE nearest inverted lists per
-    query, exact-cosine rerank within candidates.
+def ivf_ann_topk(embeddings: DataFrame) -> DataFrame:
+    """IVF-flat ANN: probe the N_PROBE nearest inverted lists of each of
+    the ``N_QUERIES`` queries, exact-cosine rerank to the top ``TOP_K``.
 
     Complements the hyperplane-LSH path: buckets follow the data
     distribution (codebook) instead of random projections.  Probe
@@ -513,7 +510,7 @@ def ivf_ann_topk(
         "vec_id", "embedding", "nrm", F.col("lists")[0].alias("list_id")
     )
     probes = (
-        scored_corpus.filter(F.col("vec_id") < n_queries)
+        scored_corpus.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
@@ -539,15 +536,16 @@ def ivf_ann_topk(
             ).alias("cos_sim"),
         )
     )
-    out = top_per_query(scored, k, F.desc("cos_sim"), F.asc("neighbor_id"))
+    out = top_per_query(scored, TOP_K, F.desc("cos_sim"), F.asc("neighbor_id"))
     return own_cache(out, scored_corpus)
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame, threshold: float = 0.4
-) -> DataFrame:
+NEAR_DUP_MIN_COS = 0.4
+
+
+def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup: multi-table multi-probe bucket join
-    (LSH) then exact-cosine verify ≥ threshold.  The n² risk is
+    (LSH) then exact-cosine verify ≥ ``NEAR_DUP_MIN_COS``.  The n² risk is
     confined to Hamming-≤2 bucket pairs per table; at scale, raise
     N_PLANES to shrink buckets.
 
@@ -614,7 +612,7 @@ def embedding_near_dup_pairs(
             ).alias("cos_sim"),
         )
         .distinct()
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= NEAR_DUP_MIN_COS)
     )
     return own_cache(out, withb)
 
@@ -1064,8 +1062,7 @@ def rrf_hybrid_topk(documents: DataFrame, embeddings: DataFrame) -> DataFrame:
     from go_mailio_diskusage_handler_spark.operators import dedup
 
     docs = widen_for_compute(documents)
-    sh = dedup.cap_shingle_df(dedup.shingles(docs))
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = dedup.capped_shingles(docs)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     probe = sh.filter(F.col("doc_id") < RRF_QUERIES)
     inter = (
@@ -1141,27 +1138,34 @@ KM_ITERS = 2
 KM_N_PROBE = 2
 
 
-def _km_assign(
-    e: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    *,
-    keep_vec: bool = False,
-) -> DataFrame:
-    """One Lloyd assignment pass: argmin squared-L2 over the broadcast
-    centroid literals, cid tie-break.  Distances are 6-digit-rounded
-    BEFORE the argmin in both engines, so a cross-engine fp divergence
-    at an assignment boundary would need two centroids within 1e-6 of
-    exactly equidistant."""
+def _km_cells(cents: list[tuple[int, list[float]]]) -> Column:
+    """Per row, one ``(d, cid)`` struct per centroid: the 6-digit-rounded
+    squared L2 from column ``v`` to the centroid, over the broadcast
+    centroid literals.  Sorting the array orders cells by distance,
+    cid tie-break."""
     cid_lit = const_array_lit([c for c, _ in cents], "int")
     vec_lit = const_array_lit([v for _, v in cents])
-    scored = F.transform(
+    return F.transform(
         vec_lit,
         lambda c, i: F.struct(
             F.round(_l2sq(F.col("v"), c), 6).alias("d"),
             F.element_at(cid_lit, i + 1).alias("cid"),
         ),
     )
-    best = F.array_min(scored)
+
+
+def _km_assign(
+    e: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    *,
+    keep_vec: bool = False,
+) -> DataFrame:
+    """One Lloyd assignment pass: argmin squared-L2 over
+    :func:`_km_cells`, cid tie-break.  Distances are 6-digit-rounded
+    BEFORE the argmin in both engines, so a cross-engine fp divergence
+    at an assignment boundary would need two centroids within 1e-6 of
+    exactly equidistant."""
+    best = F.array_min(_km_cells(cents))
     cols = [
         F.col("vec_id"),
         best["cid"].alias("cluster_id"),
@@ -1263,22 +1267,13 @@ def kmeans_ivf_topk(embeddings: DataFrame) -> DataFrame:
     """
     e, cents = _km_fit(embeddings, KM_K, KM_ITERS)
     assign = _km_assign(e, cents).select("vec_id", "cluster_id")
-    cid_lit = const_array_lit([c for c, _ in cents], "int")
-    vec_lit = const_array_lit([v for _, v in cents])
-    scored_cells = F.transform(
-        vec_lit,
-        lambda c, i: F.struct(
-            F.round(_l2sq(F.col("v"), c), 6).alias("d"),
-            F.element_at(cid_lit, i + 1).alias("cid"),
-        ),
-    )
     probes = (
         e.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("qv"),
             F.explode(
-                F.slice(F.array_sort(scored_cells), 1, KM_N_PROBE)
+                F.slice(F.array_sort(_km_cells(cents)), 1, KM_N_PROBE)
             ).alias("cell"),
         )
         .select("query_id", "qv", F.col("cell.cid").alias("cluster_id"))
@@ -1661,10 +1656,8 @@ def embedding_stats(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _recall_report(
-    truth_src: DataFrame, pred_src: DataFrame, k: int
-) -> DataFrame:
-    """Per-query recall@k + top-1 reciprocal rank of ``pred_src``
+def _recall_report(truth_src: DataFrame, pred_src: DataFrame) -> DataFrame:
+    """Per-query recall@``TOP_K`` + top-1 reciprocal rank of ``pred_src``
     against ``truth_src`` (both (query_id, neighbor_id, rank) lists).
     Shared by the LSH and IVF-PQ harnesses so the two tiers are scored
     by literally the same expression; absorbs the component searches'
@@ -1678,7 +1671,7 @@ def _recall_report(
     j = truth.join(pred, ["query_id", "neighbor_id"], "left")
     out = j.groupBy("query_id").agg(
         F.count("p_rank").alias("n_hit"),
-        F.round(F.count("p_rank") / F.lit(float(k)), 4).alias("recall"),
+        F.round(F.count("p_rank") / F.lit(float(TOP_K)), 4).alias("recall"),
         F.round(
             F.max(
                 F.when(
@@ -1708,8 +1701,7 @@ def ann_recall_eval(embeddings: DataFrame) -> DataFrame:
     """
     return _recall_report(
         brute_force_topk(embeddings, N_QUERIES, TOP_K),
-        lsh_ann_topk(embeddings, N_QUERIES, TOP_K),
-        TOP_K,
+        lsh_ann_topk(embeddings),
     )
 
 
@@ -1724,5 +1716,4 @@ def ivfpq_recall_eval(embeddings: DataFrame) -> DataFrame:
     return _recall_report(
         brute_force_topk(embeddings, N_QUERIES, TOP_K),
         ivfpq_rerank_topk(embeddings),
-        TOP_K,
     )

@@ -261,9 +261,12 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def top_ngrams(documents: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
-    """Corpus-wide top-k word n-grams with occurrence counts — the
-    heavy-hitter vocabulary scan every corpus audit starts with
+TOP_NGRAMS_N = 2  # bigrams
+
+
+def top_ngrams(documents: DataFrame, k: int = 20) -> DataFrame:
+    """Corpus-wide top-k word ``TOP_NGRAMS_N``-grams with occurrence
+    counts — the heavy-hitter vocabulary scan every corpus audit starts with
     (boilerplate discovery, contamination triage, tokenizer QA).
 
     Plan shape at 100 TB: the explode materializes one row per n-gram
@@ -278,7 +281,7 @@ def top_ngrams(documents: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     # widen_for_compute parallelizes the explode+partial-agg over the
     # fixtures' single-row-group scan exactly as the shingle family
     # does (no-op at scale where the scan yields many splits).
-    grams = word_ngrams(tokens(), n)
+    grams = word_ngrams(tokens(), TOP_NGRAMS_N)
     return (
         widen_for_compute(documents)
         .select(F.explode(grams).alias("ngram"))

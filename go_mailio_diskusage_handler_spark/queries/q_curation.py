@@ -123,7 +123,7 @@ def curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def curation_contaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curation.contaminated_docs(load_table(spark, sf_dir, "documents"), 200, 3)
+    return curation.contaminated_docs(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -266,9 +266,7 @@ CURATION_BLOOM_SQL = f"""
 def curation_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] Bloom-prefiltered decontamination
     (operators/curation.py:bloom_prefiltered_contamination)."""
-    return curation.bloom_prefiltered_contamination(
-        load_table(spark, sf_dir, "documents"), 200, 3
-    )
+    return curation.bloom_prefiltered_contamination(load_table(spark, sf_dir, "documents"))
 
 
 # [EXT] Adaptive per-source quality gate: drop each source's worst 25%

@@ -105,7 +105,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup.incremental_minhash_pairs) — the band index of the existing
     corpus is probed, never re-self-joined."""
     return dedup.incremental_minhash_pairs(
-        load_table(spark, sf_dir, "documents"), _INCR_BATCH_MIN, 0.8
+        load_table(spark, sf_dir, "documents"), _INCR_BATCH_MIN
     )
 
 
@@ -222,7 +222,7 @@ _SIM_BLOCKS = " UNION ALL ".join(
     """,
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.simhash_dedup_pairs(load_table(spark, sf_dir, "documents"), 3)
+    return dedup.simhash_dedup_pairs(load_table(spark, sf_dir, "documents"))
 
 
 _DDB_TBUCKET = "CASE " + " ".join(
@@ -265,9 +265,7 @@ _DDB_TBUCKET = "CASE " + " ".join(
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.embedding_near_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), 0.4
-    )
+    return similarity.embedding_near_dup_pairs(load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -414,7 +412,7 @@ def dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] Near-dup graph triangles, degree-oriented enumeration
     (operators/dedup.py:near_dup_triangles)."""
-    return dedup.near_dup_triangles(load_table(spark, sf_dir, "documents"), 0.8)
+    return dedup.near_dup_triangles(load_table(spark, sf_dir, "documents"))
 
 
 # [EXT] MinHash estimator calibration: signature-agreement Jaccard

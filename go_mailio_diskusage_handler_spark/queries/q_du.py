@@ -182,7 +182,7 @@ def du_heavy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Addresses ≥3× the average usage with share-of-total — broadcast
     scalar comparison, no sort/window (core.heavy_users)."""
     inv = core.inventory_from_lineitem(load_table(spark, sf_dir, "lineitem"))
-    return core.heavy_users(core.disk_usage(inv), 3.0)
+    return core.heavy_users(core.disk_usage(inv))
 
 
 # [EXT] Top-k usage growth between snapshot slices (capacity

@@ -27,7 +27,7 @@ from .q_udf import DIRECTION_CHANGES_SQL
 def topk_addresses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k users by usage → TakeOrderedAndProject (no global sort)."""
     inv = core.inventory_from_lineitem(load_table(spark, sf_dir, "lineitem"))
-    return relational.top_k_addresses(core.disk_usage(inv), 10)
+    return relational.top_k_addresses(core.disk_usage(inv))
 
 
 register_texts(__name__, {

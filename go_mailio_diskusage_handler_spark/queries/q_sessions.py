@@ -27,7 +27,7 @@ from ._base import ORACLE_SQL, register, register_texts
     """,
 )
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return scalars.tumbling_event_windows(load_table(spark, sf_dir, "events"), 10)
+    return scalars.tumbling_event_windows(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -44,7 +44,7 @@ def events_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event-time window: exact + HLL sketch
     invariant in one grouped aggregate (scalars.windowed_distinct_users
     — the streaming-feasible form of the metric)."""
-    return scalars.windowed_distinct_users(load_table(spark, sf_dir, "events"), 60)
+    return scalars.windowed_distinct_users(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -131,7 +131,7 @@ def media_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.frame_sample(load_table(spark, sf_dir, "documents"), 8)
+    return multimodal.frame_sample(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -209,7 +209,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return scalars.sliding_event_windows(load_table(spark, sf_dir, "events"), 10, 5)
+    return scalars.sliding_event_windows(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -261,7 +261,7 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aspect-preserving thumbnail geometry over mapInPandas (the
     missing 'resize' stage of the multimodal quartet)."""
-    return multimodal.resize_images(load_table(spark, sf_dir, "documents"), 128)
+    return multimodal.resize_images(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -281,11 +281,8 @@ def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def media_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-duration audio chunk windows (multimodal.audio_chunks;
-    5 ms at 16 kHz = 80-sample chunks so fixtures span several)."""
-    return multimodal.audio_chunks(
-        load_table(spark, sf_dir, "documents"), chunk_ms=5
-    )
+    """Fixed-duration audio chunk windows (multimodal.audio_chunks)."""
+    return multimodal.audio_chunks(load_table(spark, sf_dir, "documents"))
 
 
 @register(

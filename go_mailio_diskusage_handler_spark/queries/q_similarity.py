@@ -86,7 +86,7 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered vector search: exact top-k within the query's
     label class (similarity.filtered_topk) — the filter is a join key,
     not a post-filter, so off-class vectors are never scored."""
-    return similarity.filtered_topk(load_table(spark, sf_dir, "embeddings"), 8, 5)
+    return similarity.filtered_topk(load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -138,7 +138,7 @@ _DDB_ANN_TBUCKET = "CASE " + " ".join(
     """,
 )
 def sim_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity.lsh_ann_topk(load_table(spark, sf_dir, "embeddings"), 8, 5)
+    return similarity.lsh_ann_topk(load_table(spark, sf_dir, "embeddings"))
 
 
 _IVF_ASSIGN_CTES = f"""
@@ -191,7 +191,7 @@ def sim_ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat ANN: probe the 2 nearest inverted lists per query,
     exact cosine rerank within candidates."""
-    return similarity.ivf_ann_topk(load_table(spark, sf_dir, "embeddings"), 8, 5)
+    return similarity.ivf_ann_topk(load_table(spark, sf_dir, "embeddings"))
 
 
 @register(

@@ -59,7 +59,7 @@ def udtf_path_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF under a lateral join over the synthesized inventory
     keys (bounded deterministic subset)."""
     inv = core.inventory_from_lineitem(load_table(spark, sf_dir, "lineitem"))
-    return udfs.path_segments(inv, 100)
+    return udfs.path_segments(inv)
 
 
 _HEX3 = " + ".join(

@@ -192,7 +192,7 @@ class DiskUsageHandler:
         # observed metrics, and only a passing candidate is published
         # (a failing one is discarded, keeping the previous snapshot —
         # the Deequ-posture upgrade of the reference's log.Fatalf).
-        agg, obs = disk_usage_observed(inv, round_to=None)
+        agg, obs = disk_usage_observed(inv)
         if self._serving == "map":
             # collect(), not toLocalIterator(): the serving map is
             # driver-resident either way (same memory envelope), and

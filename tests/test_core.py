@@ -122,7 +122,7 @@ def test_heavy_users_no_sort_no_window(spark):
     from go_mailio_diskusage_handler_spark import plans
 
     inv = core.inventory_from_lineitem(load_table(spark, SF_SMOKE, "lineitem"))
-    df = core.heavy_users(core.disk_usage(inv), 3.0)
+    df = core.heavy_users(core.disk_usage(inv))
     plan = plans.executed_plan(df)
     assert "Window" not in plan, plan
     assert "Broadcast" in plan, plan

@@ -200,13 +200,13 @@ def test_incremental_minhash_matches_full_restriction(spark):
     }
     incr = {
         (r.doc_a, r.doc_b)
-        for r in dedup.incremental_minhash_pairs(docs, 400, 0.8).collect()
+        for r in dedup.incremental_minhash_pairs(docs, 400).collect()
     }
     assert incr == {(a, b) for a, b in full if b >= 400}
     assert incr, "batch boundary produced an empty incremental set"
     whole = {
         (r.doc_a, r.doc_b)
-        for r in dedup.incremental_minhash_pairs(docs, 0, 0.8).collect()
+        for r in dedup.incremental_minhash_pairs(docs, 0).collect()
     }
     assert whole == full
 
@@ -320,7 +320,7 @@ def test_curation_plan_shapes(spark):
         plans.shuffle_count(curation.mixture_rebalance(docs, 10, skew_guard=False))
         == 1
     )
-    assert plans.has_broadcast_join(curation.contaminated_docs(docs, 200, 3))
+    assert plans.has_broadcast_join(curation.contaminated_docs(docs))
 
 
 def test_shingle_df_cap_is_broadcast_anti_join(spark):
@@ -559,11 +559,11 @@ def test_bloom_prefilter_is_lossless_and_selective(spark):
     docs = load_table(spark, SF_CORRECT, "documents")
     exact = {
         (r.doc_id, r.max_overlap, r.n_eval_docs)
-        for r in C.contaminated_docs(docs, 200, 3).collect()
+        for r in C.contaminated_docs(docs).collect()
     }
     bloom = {
         (r.doc_id, r.max_overlap, r.n_eval_docs)
-        for r in C.bloom_prefiltered_contamination(docs, 200, 3).collect()
+        for r in C.bloom_prefiltered_contamination(docs).collect()
     }
     assert bloom == exact and exact
     # Selectivity, measured at the prefilter stage itself: with a
@@ -787,7 +787,7 @@ def test_triangles_find_cliques_not_pairs(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     tri = sorted(
         (r.doc_a, r.doc_b, r.doc_c)
-        for r in D.near_dup_triangles(docs, 0.8).collect()
+        for r in D.near_dup_triangles(docs).collect()
     )
     assert tri == [
         (1, 2, 3),

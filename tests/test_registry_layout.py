@@ -5,9 +5,10 @@ depends on the query names and the driver's record, not on which
 module registers a query or in what order the modules are imported.
 Every top-level package definition is reachable from the registry, the
 serving handler or a benchmark entry point, and every defaulted
-parameter is set by one of them.  A query whose oracle text Spark can
-run keeps a body of its own only for a stated reason.  The operator
-modules spell each shared ranking and n-gram rule in one helper."""
+parameter takes two or more values among them.  A query whose oracle
+text Spark can run keeps a body of its own only for a stated reason.  The operator
+modules spell each shared ranking and n-gram rule, and the df-capped
+shingle front end, in one helper."""
 from __future__ import annotations
 
 import ast
@@ -383,10 +384,19 @@ def test_package_definitions_reachable_from_roots():
     )
 
 
-# Defaulted parameters (see `_unselected_defaulted_parameters`) that no
-# root sets, each kept for a reason a test states.
+# Defaulted parameters (see `_unselected_defaulted_parameters`) with
+# fewer than two values among the roots, each kept for a reason a test
+# states.
 _SKEW = "tests use the unguarded path as the reference the skew guard is checked against"
 _S3A = "a deployment setting of the reference's real S3 I/O; the S3 integration test covers it"
+_HANDLER = (
+    "a deployment setting or test seam of the reference constructor "
+    "(handler.go:39-60): a deployment runs the default, perfbench's "
+    "handler and test_ingest.py's handlers other values"
+)
+_POINT_AS_OVERLAP = (
+    "test_point_join_is_degenerate_overlap joins point intervals on columns s/e and ps/pe"
+)
 DEFAULTED_PARAMETERS_ALLOWED = {
     "operators.curation.mixture_rebalance.skew_guard": _SKEW,
     "operators.curation.stratified_split.skew_guard": _SKEW,
@@ -426,19 +436,57 @@ DEFAULTED_PARAMETERS_ALLOWED = {
         "test_chunking_known_values hand-checks window=4, stride=3",
     "operators.text.tfidf_cosine_pairs.threshold":
         "test_tfidf_cosine_weights_rare_terms checks cosines below the default",
+    "functions.udfs.asof_attribution_cogrouped.max_user_id":
+        "test_cogroup_asof_semantics runs every user (the default None)",
+    "operators.sessions.watermark_delay_plan.arrival":
+        "test_watermark_plan_measures_reordering orders arrival by the default event_id",
+    "functions.udfs.widen_path_segments.depth":
+        "test_widen_udtf_schema_follows_constant_depth compares depth 2 and 4",
+    "functions.udfs.widen_path_segments.limit_keys":
+        "test_widen_udtf_schema_follows_constant_depth reads 10 keys",
+    "operators.curation.keep_best_per_cluster.threshold":
+        "test_keep_best_prefers_longest_member clusters its docs at 0.5",
+    "operators.dedup.duplicate_clusters.threshold":
+        "keep_best_per_cluster forwards its threshold, which a test sets to 0.5",
+    "operators.curation.mixture_rebalance.per_source_cap":
+        "test_mixture_rebalance_caps_every_source caps at 7",
+    "operators.curation.pack_sequences.max_tokens":
+        "test_pack_sequences_matches_prefix_sum_reference draws the budget",
+    "operators.dedup.cap_shingle_df.max_doc_freq":
+        "test_shingle_df_cap_matches_python_reference draws the cap; "
+        "test_shingle_df_cap_drops_heavy_hitter needs 3",
+    "operators.curation.sample_weighted.default_rate":
+        "test_weighted_sample_is_monotone_in_rate samples unlisted sources at the default 1.0",
+    "operators.dedup.minhash_dedup_pairs.threshold":
+        "test_minhash_lsh_recall_vs_exact measures recall at 0.9",
+    "operators.dedup.prefix_filter_jaccard_pairs.threshold":
+        "test_prefix_filter_is_lossless_and_prunes_candidates checks losslessness at 0.6",
+    "operators.dedup.weighted_jaccard_pairs.threshold":
+        "test_weighted_jaccard_matches_manual_math needs 0.01 to keep its low-score pairs",
+    "operators.text.top_ngrams.k":
+        "test_top_ngrams_counts_unchanged reads the top 10",
+    "operators.intervals.interval_join.bin_width":
+        "test_interval_join_operator_bin_width_invariance sweeps the widths",
+    "operators.intervals.overlap_join.bin_width":
+        "test_overlap_join_bin_width_invariance sweeps the widths",
+    "operators.intervals.overlap_join.left_start": _POINT_AS_OVERLAP,
+    "operators.intervals.overlap_join.left_end": _POINT_AS_OVERLAP,
+    "operators.intervals.overlap_join.right_start": _POINT_AS_OVERLAP,
+    "operators.intervals.overlap_join.right_end": _POINT_AS_OVERLAP,
+    "streaming.refresh.DiskUsageHandler.__init__.autostart": _HANDLER,
+    "streaming.refresh.DiskUsageHandler.__init__.clock": _HANDLER,
+    "streaming.refresh.DiskUsageHandler.__init__.eager": _HANDLER,
+    "streaming.refresh.DiskUsageHandler.__init__.path_scheme": _HANDLER,
+    "streaming.refresh.DiskUsageHandler.__init__.serving": _HANDLER,
 }
 
 
-def _defaulted(fn: ast.FunctionDef) -> dict[str, int | None]:
-    """Defaulted parameter -> its position, ``None`` if keyword-only."""
-    pos = fn.args.posonlyargs + fn.args.args
-    out = {
-        a.arg: i for i, a in enumerate(pos) if i >= len(pos) - len(fn.args.defaults)
-    }
+def _defaults(fn: ast.FunctionDef) -> dict[str, ast.expr]:
+    """Defaulted parameter -> its default's node."""
+    pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    out = dict(zip(pos[len(pos) - len(fn.args.defaults):], fn.args.defaults))
     out.update(
-        (a.arg, None)
-        for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
-        if d is not None
+        (a.arg, d) for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None
     )
     return out
 
@@ -478,14 +526,20 @@ def _passed(call: ast.Call, param: str, position: int | None, skip: int):
     return None
 
 
+_ANY = "any value"  # an argument whose value the scan cannot tell
+
+
 def _unselected_defaulted_parameters() -> list[str]:
     """``module.function.parameter`` of every defaulted parameter of a
     package function or method that no root selects.
 
-    A root selects it when a call site reached from the roots of
-    :func:`_reach` passes it, by keyword or by position; a forward of
-    the caller's own defaulted parameter (``k=k``) counts only if a
-    root selects that one."""
+    A root selects it when the call sites reached from the roots of
+    :func:`_reach` use two or more distinct values for it.  A call that
+    leaves it out uses the default; a name bound to a module constant
+    is that constant's literal (``TOP_K`` is ``5``); a lambda is one
+    value; a forward of the caller's own parameter (``k=k``) uses that
+    parameter's values.  Any other argument, or a splat, may hold any
+    value, so it selects."""
     mods, _, walked, resolve = _reach()
     functions: dict[tuple[str, str], ast.FunctionDef] = {}
     for name, m in mods.items():
@@ -535,50 +589,87 @@ def _unselected_defaulted_parameters() -> list[str]:
             ]
         return out
 
-    # (callee, parameter) -> one entry per reached call site passing
-    # it: the caller's forwarded (function, parameter), or None
-    passes: dict[tuple, list] = {}
+    def literal(m: _Module, node: ast.expr, seen=frozenset()) -> str:
+        """A literal's value, the value of the module constant a name is
+        bound to, or a lambda; ``_ANY`` for anything else."""
+        try:
+            value = ast.literal_eval(node)
+            return f"{type(value).__name__}:{value!r}"
+        except ValueError:
+            pass
+        if isinstance(node, ast.Name):
+            for found in filter(None, map(definition, resolve(m, node.id))):
+                bound = mods[found[0]].defs[found[1]]
+                if (
+                    found not in seen
+                    and isinstance(bound, ast.Assign)
+                    and [getattr(t, "id", None) for t in bound.targets] == [found[1]]
+                ):
+                    return literal(mods[found[0]], bound.value, seen | {found})
+        if isinstance(node, ast.Lambda):  # one function per spelling
+            return f"lambda at {m.name}:{node.lineno}:{node.col_offset}"
+        return _ANY
+
+    # (callee, parameter) -> one entry per reached call site: the value
+    # it uses, or the caller's forwarded (function, parameter)
+    uses: dict[tuple, list] = {}
     for m, node in walked:
         for call, scope in _calls(node):
             for key, skip in callees(m, call.func):
-                for param, position in _defaulted(functions[key]).items():
+                fn = functions[key]
+                positional = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+                defaults = _defaults(fn)
+                for param in _params(fn):
+                    position = positional.index(param) if param in positional else None
                     value = _passed(call, param, position, skip)
-                    if value is None:
+                    if value is None and param in defaults:
+                        use = literal(mods[key[0]], defaults[param])
+                    elif value is None:
                         continue
-                    source = None
-                    if isinstance(value, ast.Name):
-                        owner = next(
-                            (f for f in reversed(scope) if value.id in _params(f)), None
-                        )
-                        if id(owner) in key_of and value.id in _defaulted(owner):
-                            source = (key_of[id(owner)], value.id)
-                    passes.setdefault((key, param), []).append(source)
-    memo: dict[tuple, bool] = {}
+                    elif value is True:
+                        use = _ANY
+                    elif isinstance(value, ast.Name) and any(
+                        value.id in _params(f) for f in scope
+                    ):
+                        owner = next(f for f in reversed(scope) if value.id in _params(f))
+                        use = (key_of[id(owner)], value.id) if id(owner) in key_of else _ANY
+                    else:
+                        use = literal(m, value)
+                    uses.setdefault((key, param), []).append(use)
+    memo: dict[tuple, set[str]] = {}
 
-    def selected(target) -> bool:
+    def values(target) -> set[str]:
         if target not in memo:
-            memo[target] = False  # a forwarding cycle selects nothing
-            memo[target] = any(
-                source is None or selected(source) for source in passes.get(target, ())
-            )
+            memo[target] = set()  # a forwarding cycle adds no value
+            if target in uses:
+                memo[target] = set().union(
+                    *(values(u) if isinstance(u, tuple) else {u} for u in uses[target])
+                )
+            else:  # reached by reference only: called with its default
+                key, param = target
+                default = _defaults(functions[key]).get(param)
+                memo[target] = {_ANY if default is None else literal(mods[key[0]], default)}
         return memo[target]
 
     return sorted(
         f"{mod[len(pkg.__name__) + 1:]}.{name}.{param}"
         for (mod, name), fn in functions.items()
-        for param in _defaulted(fn)
-        if not selected(((mod, name), param))
+        for param in _defaults(fn)
+        if len(v := values(((mod, name), param))) < 2 and _ANY not in v
     )
 
 
 def test_defaulted_parameters_selected_by_a_root():
-    """A defaulted parameter that no root sets is configuration that no
-    workload exercises: its value becomes a module constant, or the
-    allow-list says why it stays."""
+    """A defaulted parameter that the roots use at one value or none is
+    configuration that no workload varies: its value becomes a module
+    constant, or the allow-list says why it stays."""
     unselected = _unselected_defaulted_parameters()
     assert set(DEFAULTED_PARAMETERS_ALLOWED) <= set(unselected), "stale allow-list entries"
     offenders = [p for p in unselected if p not in DEFAULTED_PARAMETERS_ALLOWED]
-    assert not offenders, f"defaulted parameters that no root sets: {offenders}"
+    assert not offenders, (
+        f"{len(offenders)} defaulted parameters that the roots use at fewer "
+        f"than two values: {offenders}"
+    )
 
 
 def _is_query_window(node: ast.AST) -> bool:
@@ -602,10 +693,27 @@ def _is_span_gram_text(node: ast.AST) -> bool:
     )
 
 
+def _called(node: ast.AST, name: str) -> bool:
+    """A call of ``name`` or of ``module.name``."""
+    return isinstance(node, ast.Call) and name in (
+        getattr(node.func, "id", None), getattr(node.func, "attr", None)
+    )
+
+
+def _is_capped_shingles(node: ast.AST) -> bool:
+    """``cap_shingle_df(shingles(...))``"""
+    return (
+        _called(node, "cap_shingle_df")
+        and bool(node.args)
+        and _called(node.args[0], "shingles")
+    )
+
+
 # Rule -> (its matcher, the one operator helper allowed to spell it).
 ONE_DEFINITION = {
     "per-query top-k window": (_is_query_window, "top_per_query"),
     "span-gram expression": (_is_span_gram_text, "span_grams"),
+    "df-capped shingle front end": (_is_capped_shingles, "capped_shingles"),
 }
 
 

@@ -67,7 +67,7 @@ def test_ann_results_are_subset_quality(spark):
         (r.query_id, r.neighbor_id): r.cos_sim
         for r in similarity.brute_force_topk(emb, 8, 500).collect()
     }
-    ann = similarity.lsh_ann_topk(emb, 8, 5).collect()
+    ann = similarity.lsh_ann_topk(emb).collect()
     assert ann, "ANN returned nothing"
     for r in ann:
         assert brute[(r.query_id, r.neighbor_id)] == r.cos_sim
@@ -84,7 +84,7 @@ def test_filtered_topk_respects_label_and_cosine(spark):
         for r in similarity.brute_force_topk(emb, 8, 500).collect()
     }
     hits: dict[int, list] = {}
-    for r in similarity.filtered_topk(emb, 8, 5).collect():
+    for r in similarity.filtered_topk(emb).collect():
         assert labels[r.neighbor_id] == labels[r.query_id]
         assert r.label == labels[r.query_id]
         assert brute[(r.query_id, r.neighbor_id)] == r.cos_sim
@@ -130,7 +130,7 @@ def test_ivf_rerank_is_exact(spark):
         (r.query_id, r.neighbor_id): r.cos_sim
         for r in similarity.brute_force_topk(emb, 8, 500).collect()
     }
-    hits = similarity.ivf_ann_topk(emb, 8, 5).collect()
+    hits = similarity.ivf_ann_topk(emb).collect()
     assert hits, "IVF ANN returned nothing"
     for r in hits:
         assert brute[(r.query_id, r.neighbor_id)] == r.cos_sim
@@ -203,7 +203,7 @@ def test_embedding_near_dup_recall_floor(spark):
         .filter(F.round(cos, 6) >= 0.4)
         .count()
     )
-    found = similarity.embedding_near_dup_pairs(emb, 0.4).count()
+    found = similarity.embedding_near_dup_pairs(emb).count()
     assert n_true > 0
     assert found / n_true >= 0.2, (found, n_true)
 
