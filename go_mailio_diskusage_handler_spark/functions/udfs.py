@@ -242,13 +242,11 @@ class _WidenPathUDTF:
 WidenPathUDTF = udtf(_WidenPathUDTF, useArrow=True)
 
 
-def widen_path_segments(
-    inventory: DataFrame, depth: int = 2, limit_keys: int = PATH_SEGMENT_KEYS
-) -> DataFrame:
-    """Lateral-join the polymorphic UDTF over the bounded key subset:
-    one output ROW per key (the widening is horizontal), with the
-    column count chosen by ``depth`` at plan time."""
-    keys = inventory.select("key").orderBy("key").limit(limit_keys)
+def widen_path_segments(inventory: DataFrame, depth: int = 2) -> DataFrame:
+    """Lateral-join the polymorphic UDTF over the first
+    ``PATH_SEGMENT_KEYS`` keys: one output ROW per key (the widening is
+    horizontal), with the column count chosen by ``depth`` at plan time."""
+    keys = inventory.select("key").orderBy("key").limit(PATH_SEGMENT_KEYS)
     return keys.lateralJoin(
         WidenPathUDTF(F.col("key").outer(), F.lit(depth))
     ).select(
@@ -450,9 +448,10 @@ def _asof_attribute(purchases: pd.DataFrame, clicks: pd.DataFrame) -> pd.DataFra
     return out
 
 
-def asof_attribution_cogrouped(
-    events: DataFrame, max_user_id: int | None = None
-) -> DataFrame:
+ASOF_MAX_USER_ID = 200
+
+
+def asof_attribution_cogrouped(events: DataFrame) -> DataFrame:
     """``cogroup(...).applyInPandas`` as-of join: purchases and clicks
     are cogrouped PER USER and merged with ``pd.merge_asof`` inside one
     Arrow batch pair — the API for custom two-sided per-key logic that
@@ -466,14 +465,13 @@ def asof_attribution_cogrouped(
     honest against the SQL oracle.  Purchases with no prior click
     report the -1 sentinel, not NULL.
 
-    ``max_user_id`` bounds the demo subset (same policy as
-    ``path_segments``'s 100-key cap): per-GROUP Python dispatch is the
-    linear term (measured 1.5 s → 10 s for 10× the users), so the
-    registered query pins a determinate user slice and leaves the
-    full-corpus path to the JVM interval join.
+    Users below ``ASOF_MAX_USER_ID`` form the demo subset (same policy
+    as ``path_segments``'s ``PATH_SEGMENT_KEYS`` cap): per-GROUP Python
+    dispatch is the linear term (measured 1.5 s → 10 s for 10× the
+    users), so the registered query pins a determinate user slice and
+    leaves the full-corpus path to the JVM interval join.
     """
-    if max_user_id is not None:
-        events = events.where(F.col("user_id") < max_user_id)
+    events = events.where(F.col("user_id") < ASOF_MAX_USER_ID)
     purchases = events.where(F.col("event_type") == "purchase").select(
         "user_id", "event_id", "ts"
     )

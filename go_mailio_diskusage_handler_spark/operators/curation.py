@@ -199,13 +199,18 @@ def _eval_overlaps(train: DataFrame, ev: DataFrame) -> DataFrame:
     )
 
 
-def contamination_of(sh: DataFrame) -> DataFrame:
-    """:func:`_eval_overlaps` with the shingle table ``sh`` split at
-    ``EVAL_MAX_DOC_ID`` into train and eval sides."""
+def _eval_split(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The shingle table ``sh`` split at ``EVAL_MAX_DOC_ID`` into its
+    train side and its (eval_doc_id, shingle) eval side."""
     ev = sh.filter(F.col("doc_id") < EVAL_MAX_DOC_ID).select(
         F.col("doc_id").alias("eval_doc_id"), "shingle"
     )
-    return _eval_overlaps(sh.filter(F.col("doc_id") >= EVAL_MAX_DOC_ID), ev)
+    return sh.filter(F.col("doc_id") >= EVAL_MAX_DOC_ID), ev
+
+
+def contamination_of(sh: DataFrame) -> DataFrame:
+    """:func:`_eval_overlaps` over the :func:`_eval_split` of ``sh``."""
+    return _eval_overlaps(*_eval_split(sh))
 
 
 def contaminated_docs(documents: DataFrame) -> DataFrame:
@@ -221,13 +226,13 @@ def contaminated_docs(documents: DataFrame) -> DataFrame:
     return own_cache(contamination_of(sh), sh)
 
 
-def sample_weighted(
-    documents: DataFrame,
-    rates: dict[str, float],
-    default_rate: float = 1.0,
-) -> DataFrame:
+SAMPLE_DEFAULT_RATE = 0.9
+
+
+def sample_weighted(documents: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Deterministic per-source Bernoulli sampling: keep a document
-    iff ``bucket(doc_id)/65536 < rate[source]`` — mixture WEIGHTS as
+    iff ``bucket(doc_id)/65536 < rate[source]``, with sources missing
+    from ``rates`` sampled at ``SAMPLE_DEFAULT_RATE`` — mixture WEIGHTS as
     probabilities, complementing :func:`mixture_rebalance`'s hard
     per-source caps.
 
@@ -239,7 +244,7 @@ def sample_weighted(
     zero shuffles, no RNG state; at 100 TB this is a map-side filter
     the Parquet scan streams through.
     """
-    rate = F.lit(float(default_rate))
+    rate = F.lit(SAMPLE_DEFAULT_RATE)
     for src, r in sorted(rates.items()):
         rate = F.when(F.col("source") == src, F.lit(float(r))).otherwise(rate)
     frac = F.expr(_BUCKET_SQL) / F.lit(65536.0)
@@ -326,7 +331,7 @@ def curated_corpus(documents: DataFrame) -> DataFrame:
     return own_cache(out, sh)
 
 
-def keep_best_per_cluster(documents, threshold: float = 0.6):
+def keep_best_per_cluster(documents):
     """Representative selection for near-dup clusters: within each
     duplicate cluster keep the LONGEST document (n_chars, ties to the
     smallest doc_id) — the standard curation heuristic (the longest
@@ -339,7 +344,7 @@ def keep_best_per_cluster(documents, threshold: float = 0.6):
     ``dedup.duplicate_clusters`` (unconverged clusters raise rather
     than silently electing a wrong keeper).
     """
-    clusters = duplicate_clusters(documents, threshold)
+    clusters = duplicate_clusters(documents)
     members = clusters.join(
         documents.select("doc_id", "n_chars"), "doc_id"
     )
@@ -495,12 +500,8 @@ def bloom_prefiltered_contamination(documents: DataFrame) -> DataFrame:
     in this build — and a hand-rolled bitmap keeps the layout
     engine-portable anyway.)
     """
-    sh = shingles(documents)
-    ev = sh.filter(F.col("doc_id") < EVAL_MAX_DOC_ID).select(
-        F.col("doc_id").alias("eval_doc_id"), "shingle"
-    )
-    train = bloom_shingle_filter(sh.filter(F.col("doc_id") >= EVAL_MAX_DOC_ID), ev)
-    return _eval_overlaps(train, ev)
+    train, ev = _eval_split(shingles(documents))
+    return _eval_overlaps(bloom_shingle_filter(train, ev), ev)
 
 
 QUALITY_GATE_PCT = 0.25

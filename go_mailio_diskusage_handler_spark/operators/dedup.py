@@ -530,12 +530,15 @@ def connected_components(
     )
 
 
-def duplicate_clusters(documents: DataFrame, threshold: float = 0.6) -> DataFrame:
+CLUSTER_JACCARD = 0.6  # exact-Jaccard edge threshold of the cluster graph
+
+
+def duplicate_clusters(documents: DataFrame) -> DataFrame:
     """Group near-duplicate documents into clusters: connected
-    components over the exact-Jaccard pair graph, labeled by the
-    smallest doc_id in each component — the step after pair
-    generation in a training-data pipeline (keep ``doc_id ==
-    cluster_id``, drop the rest).
+    components over the exact-Jaccard ≥ ``CLUSTER_JACCARD`` pair
+    graph, labeled by the smallest doc_id in each component — the
+    step after pair generation in a training-data pipeline (keep
+    ``doc_id == cluster_id``, drop the rest).
 
     Delegates to :func:`connected_components` (min-label propagation
     with pointer-doubling, O(log diameter) rounds).  Non-convergence
@@ -550,7 +553,7 @@ def duplicate_clusters(documents: DataFrame, threshold: float = 0.6) -> DataFram
     # shingle cache lives through the eager CC loop and is released
     # exactly at function exit — the loop's checkpoints make the
     # returned labels independent of it.
-    pair_src = ngram_jaccard_pairs(documents, threshold)
+    pair_src = ngram_jaccard_pairs(documents, CLUSTER_JACCARD)
     labels, _ = connected_components(pair_src.select("doc_a", "doc_b"))
     return labels
 

@@ -262,12 +262,14 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 TOP_NGRAMS_N = 2  # bigrams
+TOP_NGRAMS_K = 20
 
 
-def top_ngrams(documents: DataFrame, k: int = 20) -> DataFrame:
-    """Corpus-wide top-k word ``TOP_NGRAMS_N``-grams with occurrence
-    counts — the heavy-hitter vocabulary scan every corpus audit starts with
-    (boilerplate discovery, contamination triage, tokenizer QA).
+def top_ngrams(documents: DataFrame) -> DataFrame:
+    """Corpus-wide top-``TOP_NGRAMS_K`` word ``TOP_NGRAMS_N``-grams with
+    occurrence counts — the heavy-hitter vocabulary scan every corpus
+    audit starts with (boilerplate discovery, contamination triage,
+    tokenizer QA).
 
     Plan shape at 100 TB: the explode materializes one row per n-gram
     OCCURRENCE, but the aggregation's partial phase combines them
@@ -288,7 +290,7 @@ def top_ngrams(documents: DataFrame, k: int = 20) -> DataFrame:
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("occurrences"))
         .orderBy(F.desc("occurrences"), F.asc("ngram"))
-        .limit(k)
+        .limit(TOP_NGRAMS_K)
     )
 
 

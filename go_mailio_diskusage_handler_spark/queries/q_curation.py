@@ -45,9 +45,6 @@ def curation_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SAMPLE_RATES = {"src0": 0.5, "src1": 0.25, "src2": 0.0}
 
 
-_SAMPLE_DEFAULT = 0.9
-
-
 @register(
     "curation_sample_weighted",
     f"""
@@ -63,7 +60,7 @@ def curation_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-source Bernoulli sampling (mixture weights as
     probabilities; curation.sample_weighted)."""
     return curation.sample_weighted(
-        load_table(spark, sf_dir, "documents"), _SAMPLE_RATES, _SAMPLE_DEFAULT
+        load_table(spark, sf_dir, "documents"), _SAMPLE_RATES
     )
 
 
@@ -195,9 +192,7 @@ def curation_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest-document representative per duplicate cluster — one
     argmax aggregation, no per-cluster sort
     (curation.keep_best_per_cluster)."""
-    return curation.keep_best_per_cluster(
-        load_table(spark, sf_dir, "documents"), 0.6
-    )
+    return curation.keep_best_per_cluster(load_table(spark, sf_dir, "documents"))
 
 
 # [EXT] Temperature-based source rebalancing: keep rate sqrt(n_min/n_s)

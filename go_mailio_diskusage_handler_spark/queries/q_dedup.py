@@ -162,7 +162,7 @@ _CLUSTERS_CTES = f"""
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component duplicate clusters (iterative label
     propagation vs the oracle's recursive-CTE transitive closure)."""
-    return dedup.duplicate_clusters(load_table(spark, sf_dir, "documents"), 0.6)
+    return dedup.duplicate_clusters(load_table(spark, sf_dir, "documents"))
 
 
 _NIBBLES = ", ".join(

@@ -236,7 +236,7 @@ TOP_NGRAMS_SQL = """
 def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 bigrams (text.top_ngrams) — map-side-combined
     aggregation + TakeOrderedAndProject, vocabulary-bounded shuffle."""
-    return text.top_ngrams(load_table(spark, sf_dir, "documents"), k=20)
+    return text.top_ngrams(load_table(spark, sf_dir, "documents"))
 
 
 TFIDF_SQL = """

@@ -144,7 +144,7 @@ def udtf_widen_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth argument — Spark 4's polymorphic-output table-function
     surface (functions/udfs.py:_WidenPathUDTF)."""
     inv = core.inventory_from_lineitem(load_table(spark, sf_dir, "lineitem"))
-    return udfs.widen_path_segments(inv, depth=2, limit_keys=100)
+    return udfs.widen_path_segments(inv, depth=2)
 
 
 # DuckDB mirror of DirectionChangesUDTF: zero diffs extend the current
@@ -224,9 +224,7 @@ def udf_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair (functions/udfs.py:asof_attribution_cogrouped)."""
     from ..functions import udfs
 
-    return udfs.asof_attribution_cogrouped(
-        load_table(spark, sf_dir, "events"), max_user_id=200
-    )
+    return udfs.asof_attribution_cogrouped(load_table(spark, sf_dir, "events"))
 
 
 # DuckDB mirror of udfs.embedding_norms_arrow: float32 -> double

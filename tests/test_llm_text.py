@@ -374,7 +374,7 @@ def test_duplicate_clusters_are_consistent_with_pairs(spark):
     ]
     label = {
         r.doc_id: r.cluster_id
-        for r in dedup.duplicate_clusters(docs, 0.6).collect()
+        for r in dedup.duplicate_clusters(docs).collect()
     }
     assert pairs and label
     for a, b in pairs:
@@ -504,7 +504,7 @@ def test_keep_best_prefers_longest_member(spark):
     )
     got = {
         r.cluster_id: (r.keep_doc_id, r.n_members)
-        for r in curation.keep_best_per_cluster(docs, 0.5).collect()
+        for r in curation.keep_best_per_cluster(docs).collect()
     }
     assert got == {1: (2, 2)}, got  # doc 2 is longer → keeper, despite id 1
 

@@ -114,7 +114,7 @@ def test_top_ngrams_counts_unchanged(spark):
         "doc_id long, text string",
     )
     got = {
-        (r["ngram"], r["occurrences"]) for r in top_ngrams(docs, k=10).collect()
+        (r["ngram"], r["occurrences"]) for r in top_ngrams(docs).collect()
     }
     assert got == {("a b", 3), ("b a", 1), ("b c", 1)}
 

@@ -436,18 +436,10 @@ DEFAULTED_PARAMETERS_ALLOWED = {
         "test_chunking_known_values hand-checks window=4, stride=3",
     "operators.text.tfidf_cosine_pairs.threshold":
         "test_tfidf_cosine_weights_rare_terms checks cosines below the default",
-    "functions.udfs.asof_attribution_cogrouped.max_user_id":
-        "test_cogroup_asof_semantics runs every user (the default None)",
     "operators.sessions.watermark_delay_plan.arrival":
         "test_watermark_plan_measures_reordering orders arrival by the default event_id",
     "functions.udfs.widen_path_segments.depth":
         "test_widen_udtf_schema_follows_constant_depth compares depth 2 and 4",
-    "functions.udfs.widen_path_segments.limit_keys":
-        "test_widen_udtf_schema_follows_constant_depth reads 10 keys",
-    "operators.curation.keep_best_per_cluster.threshold":
-        "test_keep_best_prefers_longest_member clusters its docs at 0.5",
-    "operators.dedup.duplicate_clusters.threshold":
-        "keep_best_per_cluster forwards its threshold, which a test sets to 0.5",
     "operators.curation.mixture_rebalance.per_source_cap":
         "test_mixture_rebalance_caps_every_source caps at 7",
     "operators.curation.pack_sequences.max_tokens":
@@ -455,16 +447,12 @@ DEFAULTED_PARAMETERS_ALLOWED = {
     "operators.dedup.cap_shingle_df.max_doc_freq":
         "test_shingle_df_cap_matches_python_reference draws the cap; "
         "test_shingle_df_cap_drops_heavy_hitter needs 3",
-    "operators.curation.sample_weighted.default_rate":
-        "test_weighted_sample_is_monotone_in_rate samples unlisted sources at the default 1.0",
     "operators.dedup.minhash_dedup_pairs.threshold":
         "test_minhash_lsh_recall_vs_exact measures recall at 0.9",
     "operators.dedup.prefix_filter_jaccard_pairs.threshold":
         "test_prefix_filter_is_lossless_and_prunes_candidates checks losslessness at 0.6",
     "operators.dedup.weighted_jaccard_pairs.threshold":
         "test_weighted_jaccard_matches_manual_math needs 0.01 to keep its low-score pairs",
-    "operators.text.top_ngrams.k":
-        "test_top_ngrams_counts_unchanged reads the top 10",
     "operators.intervals.interval_join.bin_width":
         "test_interval_join_operator_bin_width_invariance sweeps the widths",
     "operators.intervals.overlap_join.bin_width":

@@ -65,8 +65,8 @@ def test_widen_udtf_schema_follows_constant_depth(spark):
     inv = spark.createDataFrame(
         [("a/b/c",), ("a",)], "key string"
     )
-    d2 = udfs.widen_path_segments(inv, depth=2, limit_keys=10)
-    d4 = udfs.widen_path_segments(inv, depth=4, limit_keys=10)
+    d2 = udfs.widen_path_segments(inv, depth=2)
+    d4 = udfs.widen_path_segments(inv, depth=4)
     assert d2.columns == ["key", "seg_1", "seg_2", "n_segs"]
     assert d4.columns == ["key", "seg_1", "seg_2", "seg_3", "seg_4", "n_segs"]
     rows = {r["key"]: r for r in d4.collect()}
